@@ -1,26 +1,28 @@
 """The repository's benchmark: one workload per process, one client.
 
-    python3 perfbench/run.py --workload etl --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --workload etl --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. Each run:
 
 1. generates the workload's input tables from ``--seed`` under
-   ``.perfbench/<workload>/data`` (untimed; digests recorded);
+   ``.perfbench/<workload>/data`` (untimed; digests recorded), and
+   starts the calibration JVM (``Calib.java``, see :meth:`Run.calibrate`);
 2. sets up: imports the package, starts ``get_spark`` on
-   ``local[nproc]`` and runs one warm-up pass, which is also the output
-   check: every query is collected with ``toPandas()`` and compared
-   with its DuckDB oracle (``check.py``). ``setup_s`` covers this step,
-   less the time spent in the oracles and the comparison;
-3. runs a closed loop for ``--seconds`` of calibrated time (see
-   :meth:`Run.calibrate`): whole passes over the workload's queries,
-   each pass in an order drawn from the seed, every query built through
-   ``registry.catalog()`` and drained to the ``noop`` sink;
-4. stops Spark and waits for the JVM to exit.
+   ``local[nproc]``, runs the checking pass, where every query is
+   collected with ``toPandas()`` and compared with its DuckDB oracle
+   (``check.py``), then :data:`WARMUP_PASSES` untimed warm-up passes.
+   ``setup_s`` covers this step, less the time spent in the oracles and
+   the comparison;
+3. runs a closed loop of a fixed number of whole passes over the
+   workload's queries (:func:`schedule`), each pass in an order drawn
+   from the seed, every query built through ``registry.catalog()`` and
+   drained to the ``noop`` sink;
+4. stops Spark and the calibration JVM and waits for both to exit.
 
 Every metric is printed by name and unit on a summary line; the last
-line of stdout is the JSON result. With ``--trace 1`` the run alternates
-untraced and traced passes and reports the per-layer metrics of the
-traced ones (``trace.py``) plus the tracing overhead.
+line of stdout is the JSON result. With ``--trace 1`` the run makes
+pairs of untraced and traced passes and reports the per-layer metrics
+of the traced ones (``trace.py``) plus the tracing overhead.
 """
 
 from __future__ import annotations
@@ -30,12 +32,14 @@ import contextlib
 import hashlib
 import importlib.util
 import json
+import math
 import os
 import platform
 import random
 import resource
 import shutil
 import signal
+import subprocess
 import sys
 import tempfile
 import time
@@ -53,13 +57,30 @@ DRIVER_MEMORY = "3g"
 #: A query running longer than this fails the run.
 QUERY_TIMEOUT_S = 60
 #: No new pass starts after this many seconds in the process, so a run
-#: always ends well inside three minutes.
+#: always ends well inside three minutes. A run cut short this way
+#: says so in its env block (``truncated``).
 RUN_BUDGET_S = 150
-#: Calibration job repetitions per sample, and the reference time the
-#: gated times are scaled to (see :meth:`Run.calibrate`). The reference
-#: only fixes the unit: both sides of any comparison use the same one.
+#: Untimed noop passes after the checking pass, inside ``setup_s``. The
+#: first pass after the checking pass still costs 23-49% more CPU than
+#: the third (see README, Warm-up).
+WARMUP_PASSES = 2
+#: Fewest timed passes an untraced run makes, and the number of
+#: (untraced, traced) pass pairs a traced run makes.
+MIN_PASSES = 2
+TRACE_PAIRS = 2
+#: Calibrated seconds of one warm pass of either workload on the
+#: baseline machine; ``--seconds`` divided by it gives the number of
+#: timed passes.
+NOMINAL_PASS_S = 5.0
+#: Calibration job repetitions per sample, the untimed repetitions that
+#: warm the calibration JVM first, and the reference time the gated
+#: times are scaled to (see :meth:`Run.calibrate`). The reference only
+#: fixes the unit: both sides of any comparison use the same one.
 CAL_REPS = 5
+CAL_WARMUP_REPS = 5
 CAL_REF_S = 0.1
+#: Fixed settings of the calibration JVM.
+CAL_JVM = ["java", "-Xms256m", "-Xmx256m", "-XX:+UseG1GC"]
 
 #: Gated metrics: wall times scaled by the calibration (see
 #: :meth:`Run.calibrate`).
@@ -125,6 +146,19 @@ def deadline(seconds: float):
     finally:
         signal.setitimer(signal.ITIMER_REAL, 0)
         signal.signal(signal.SIGALRM, previous)
+
+
+def schedule(seconds: float, trace: bool) -> list[bool]:
+    """Which timed passes are traced, in order. The count depends only
+    on the arguments, never on how fast the passes run: an untraced run
+    makes ``seconds / NOMINAL_PASS_S`` passes, at least
+    :data:`MIN_PASSES`; a traced run makes :data:`TRACE_PAIRS` pairs in
+    the order untraced-traced, traced-untraced, ... so that a trend
+    across the passes cancels in the difference."""
+    if trace:
+        pairs = [[False, True], [True, False]]
+        return [t for i in range(TRACE_PAIRS) for t in pairs[i % 2]]
+    return [False] * max(MIN_PASSES, math.ceil(seconds / NOMINAL_PASS_S - 1e-9))
 
 
 def parse_args(argv):
@@ -245,19 +279,19 @@ class Run:
         self.probe = None
         self.cat = None
         self.drain = None
-        self.cal_session = None
+        self.calibrator: subprocess.Popen | None = None
         self.cal_samples: list[float] = []
         self.pass_log: list[dict] = []
+        self.truncated = False
 
     # ---------------------------------------------------------- set-up
 
     def prepare_inputs(self) -> dict:
+        """Generate the inputs. The calibration JVM starts first, so
+        that it loads while the tables are written."""
         shutil.rmtree(self.scratch, ignore_errors=True)
-        digests = gen.generate(self.data_dir, self.seed, self.w.shape)
-        self.digest = hashlib.sha256(
-            json.dumps(digests, sort_keys=True).encode()
-        ).hexdigest()[:16]
-        # Everything the program and Spark write goes inside the checkout.
+        # Everything the program, Spark and the calibration JVM write
+        # goes inside the checkout.
         for sub in ("py", "spark-local", "jvm", "ckpt"):
             os.makedirs(os.path.join(self.tmp_dir, sub), exist_ok=True)
         os.environ["TMPDIR"] = tempfile.tempdir = os.path.join(self.tmp_dir, "py")
@@ -267,6 +301,16 @@ class Run:
             f"-Djava.io.tmpdir={os.path.join(self.tmp_dir, 'jvm')} -XX:-UsePerfData"
         )
         os.environ["SPARK_DRIVER_MEM"] = DRIVER_MEMORY
+        self.calibrator = subprocess.Popen(
+            [*CAL_JVM, os.path.join(ROOT, "perfbench", "Calib.java"), str(nproc())],
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+        )
+        digests = gen.generate(self.data_dir, self.seed, self.w.shape)
+        self.digest = hashlib.sha256(
+            json.dumps(digests, sort_keys=True).encode()
+        ).hexdigest()[:16]
+        # Untimed: warm the calibration job's JIT.
+        self.calibrate(CAL_WARMUP_REPS)
         return digests
 
     def setup(self) -> dict:
@@ -301,15 +345,16 @@ class Run:
         if self.trace:
             self.probe = trace.SparkProbe(self.spark)
         verify_s, self.collect_s = self.check_pass()
+        if self.probe is not None:
+            compiles, compile_s = self.probe.codegen()
+        for _ in range(WARMUP_PASSES):
+            self.run_pass(False, lambda name, secs, work: None)
         out = {
             "setup_s": time.perf_counter() - t0 - verify_s,
             "session.start_s": session_s,
         }
         if self.probe is not None:
-            out["codegen.compiles"], out["codegen.compile_s"] = self.probe.codegen()
-        # Untimed: let the calibration job's own compiles and JIT settle.
-        for _ in range(2):
-            self.calibrate()
+            out["codegen.compiles"], out["codegen.compile_s"] = compiles, compile_s
         return out
 
     def verify_parallelism(self) -> None:
@@ -381,28 +426,23 @@ class Run:
             self.tracer.enabled = False
         return time.perf_counter() - t_pass
 
-    def scale(self) -> float:
-        """Factor from wall seconds to calibrated seconds."""
-        return CAL_REF_S / stats.median(self.cal_samples)
-
     def measure(self) -> dict:
-        """Closed loop of whole passes for ``seconds`` of calibrated
-        time, so a slow spell of the machine does not change how many
-        passes a run makes (pass times still fall from pass to pass as
-        the JIT warms). Traced runs alternate untraced and traced
-        passes; odd seeds start traced, so that drift between the two
-        kinds cancels across seeds."""
+        """Closed loop of the fixed passes of :func:`schedule`, with a
+        calibration sample before each pass and one after the last."""
         samples: list[float] = []
         per_query: dict[str, list[float]] = {q: [] for q in self.w.queries}
         plain: list[float] = []
         cpu: list[float] = []
         traced_passes: list[tuple[float, dict]] = []
-        elapsed = 0.0
-        while not self.aborted:
-            traced = self.trace and (len(plain) + len(traced_passes) + self.seed) % 2 == 1
+        for traced in schedule(self.seconds, self.trace):
+            if self.aborted or self.remaining() <= 0:
+                self.truncated = True
+                break
             works: list[dict] = []
+            times: dict[str, float] = {}
 
-            def record(name, secs, work, traced=traced, works=works):
+            def record(name, secs, work, traced=traced, works=works, times=times):
+                times[name] = round(secs, 4)
                 if traced:
                     works.append(work)
                 else:
@@ -418,47 +458,41 @@ class Run:
             cpu_s = cpu_seconds(self.cpu_roots) - cpu0
             self.pass_log.append({
                 "traced": traced, "wall_s": round(wall, 4), "cpu_s": round(cpu_s, 2),
-                "steal_s": round(cpu_steal_s() - steal0, 2),
+                "steal_s": round(cpu_steal_s() - steal0, 2), "query_s": times,
             })
             if traced:
                 traced_passes.append((wall, self.layer_metrics(works)))
             else:
                 plain.append(wall)
                 cpu.append(cpu_s)
-            elapsed += wall * self.scale()
-            done = elapsed >= self.seconds
-            balanced = not self.trace or (plain and traced_passes)
-            if (done and balanced) or self.remaining() <= 0:
-                break
         self.cal_samples += self.calibrate()
         return {
             "samples": samples, "per_query": per_query,
             "plain": plain, "cpu": cpu, "traced": traced_passes,
         }
 
-    def calibrate(self) -> list[float]:
-        """Wall times of :data:`CAL_REPS` runs of a fixed Spark job that
-        runs no package code, in a session with its own SQL settings.
+    def calibrate(self, reps: int = CAL_REPS) -> list[float]:
+        """Wall times of ``reps`` runs of the fixed job of
+        ``Calib.java``, run in its own JVM while the benchmarked session
+        is idle.
 
         The machine's speed drifts: on the shared 4-core host that
         measured the baseline, the same runs took twice as long in one
-        half hour as in the next, and the ratio of pass time to this
-        job's time stayed put. The gated times are therefore scaled by
-        ``CAL_REF_S / median(calibration)``; the raw times are printed
-        alongside."""
-        if self.cal_session is None:
-            self.cal_session = self.spark.newSession()
-            self.cal_session.conf.set("spark.sql.shuffle.partitions", str(nproc()))
-            self.cal_session.conf.set("spark.sql.adaptive.enabled", "false")
-        times = []
-        for _ in range(CAL_REPS):
-            t0 = time.perf_counter()
-            (self.cal_session.range(0, 2_000_000, 1, nproc())
-             .selectExpr("id % 977 AS k", "hash(id) AS h")
-             .groupBy("k").agg({"h": "sum"})
-             .write.format("noop").mode("overwrite").save())
-            times.append(time.perf_counter() - t0)
-        return times
+        half hour as in the next. The gated times are therefore scaled
+        by ``CAL_REF_S`` over the lower quartile of the run's samples;
+        the raw times are printed alongside. Interference from other
+        work on the machine only ever adds time to a sample, and a
+        quarter to a third of the samples carry some, so the lower
+        quartile follows the machine's speed where the median follows
+        the interference.
+        The job shares no heap, GC, JIT or settings with the program,
+        so a change to the program cannot move it."""
+        self.calibrator.stdin.write(f"{reps}\n")
+        self.calibrator.stdin.flush()
+        line = self.calibrator.stdout.readline()
+        if not line:
+            raise RuntimeError("calibration JVM exited")
+        return [float(x) for x in line.split()]
 
     def layer_metrics(self, works: list[dict]) -> dict:
         """Per-layer metrics of one traced pass."""
@@ -505,7 +539,7 @@ class Run:
     # ---------------------------------------------------------- checks
 
     def check_pass(self) -> tuple[float, float]:
-        """The warm-up pass: build every query in a seeded order,
+        """The checking pass: build every query in a seeded order,
         collect it with ``toPandas()`` as the driver contract does, and
         compare it with its oracle. Returns (seconds spent fetching
         oracles and comparing, which set-up time excludes; seconds spent
@@ -559,7 +593,8 @@ class Run:
         return vm_hwm_mb(jvm_pid) + resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
 
     def stop(self) -> None:
-        """Stop Spark and wait for the JVM (and its Python workers) to exit."""
+        """Stop Spark and the calibration JVM, and wait for both JVMs
+        (and Spark's Python workers) to exit."""
         from pyspark import SparkContext
 
         if self.spark is not None:
@@ -574,6 +609,11 @@ class Run:
                 proc.wait(timeout=60)
             SparkContext._gateway = None
             SparkContext._jvm = None
+        if self.calibrator is not None:
+            # The calibration JVM exits when its stdin closes.
+            with contextlib.suppress(OSError):
+                self.calibrator.stdin.close()
+            self.calibrator.wait(timeout=60)
         shutil.rmtree(self.tmp_dir, ignore_errors=True)
 
 
@@ -623,6 +663,7 @@ def main(argv=None) -> int:
     try:
         env["input_digests"] = run.prepare_inputs()
         env["input_shape"] = vars(w.shape)
+        run.cal_samples += run.calibrate()
         phase("inputs")
         setup = run.setup()
         phase("setup")
@@ -639,6 +680,8 @@ def main(argv=None) -> int:
         phase("stop")
     env["load_after"] = os.getloadavg()
     env["errors"] = run.errors
+    env["truncated"] = run.truncated
+    env["calibration_samples_s"] = [round(x, 4) for x in run.cal_samples]
     env["passes"] = run.pass_log
     env["query_median_s"] = {
         q: round(stats.median(v), 4) for q, v in m["per_query"].items() if v
@@ -646,10 +689,11 @@ def main(argv=None) -> int:
     print(json.dumps({"env": env}))
 
     samples = m["samples"]
-    cal_s = stats.median(run.cal_samples) if run.cal_samples else float("nan")
+    cal_s = stats.lower_quartile(run.cal_samples)
     scale = CAL_REF_S / cal_s
     summary: dict = {
         "passes": len(m["plain"]),
+        "traced_passes": len(m["traced"]),
         "query_samples": len(samples),
         "failed_frac": run.failed / max(run.attempted, 1),
         "calibration_s": cal_s,

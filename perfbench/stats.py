@@ -5,6 +5,7 @@ and span self times. No Spark, no I/O — unit-tested in
 from __future__ import annotations
 
 import math
+import statistics
 from collections import defaultdict
 from collections.abc import Iterable, Sequence
 from dataclasses import dataclass
@@ -48,6 +49,13 @@ def median(values: Sequence[float]) -> float:
     if len(ordered) % 2:
         return ordered[mid]
     return (ordered[mid - 1] + ordered[mid]) / 2
+
+
+def lower_quartile(values: Sequence[float]) -> float:
+    """First quartile as ``statistics.quantiles(values, n=4)`` gives it."""
+    if len(values) < 2:
+        raise ValueError("lower quartile needs two samples")
+    return statistics.quantiles(values, n=4)[0]
 
 
 @dataclass(frozen=True)

@@ -7,11 +7,12 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 
 import pytest
 
 from perfbench import gen, stats, trace
-from perfbench.run import END_TO_END, PER_LAYER
+from perfbench.run import CAL_JVM, END_TO_END, MIN_PASSES, PER_LAYER, TRACE_PAIRS, schedule
 from perfbench.workloads import WORKLOADS
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -52,6 +53,7 @@ def test_percentile_nearest_rank():
     assert stats.median([4.0, 1.0, 3.0, 2.0]) == 2.5
     with pytest.raises(ValueError):
         stats.percentile([], 0.5)
+    assert stats.lower_quartile([1.0, 2.0, 3.0, 4.0, 5.0]) == 1.5
 
 
 def test_tail_needs_ten_samples_beyond():
@@ -133,3 +135,23 @@ def test_benchmark_json_matches_the_runner():
     assert [w["name"] for w in spec["workloads"]] == list(WORKLOADS)
     assert {m["name"]: m["unit"] for m in spec["end_to_end"]} == END_TO_END
     assert {m["name"]: m["unit"] for m in spec["per_layer"]} == PER_LAYER
+
+
+def test_schedule_is_a_fixed_pass_count():
+    assert schedule(10, False) == [False] * 2
+    assert schedule(16, False) == [False] * 4
+    assert schedule(1, False) == [False] * MIN_PASSES
+    traced = schedule(10, True)
+    assert traced == [False, True, True, False][: 2 * TRACE_PAIRS]
+    assert traced.count(True) == traced.count(False) == TRACE_PAIRS
+
+
+def test_calibrator_serves_samples():
+    proc = subprocess.run(
+        [*CAL_JVM, os.path.join(ROOT, "perfbench", "Calib.java"), "2"],
+        input="3\n2\n", capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    lines = [[float(x) for x in line.split()] for line in proc.stdout.splitlines()]
+    assert [len(x) for x in lines] == [3, 2]
+    assert all(t > 0 for x in lines for t in x)

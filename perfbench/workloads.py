@@ -21,8 +21,8 @@ WORKLOADS: dict[str, Workload] = {
         Workload(
             name="etl",
             why=(
-                "warm relational batch: parquet scan, shuffle, join, aggregate, "
-                "window, pandas UDF, streaming and a partitioned write; no dedup operators"
+                "warm relational batch at sf0.01, dominated by per-query overhead: "
+                "construction, planning, stream start, scheduling; no dedup operators"
             ),
             queries=(
                 "q1_pricing_summary",
