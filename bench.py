@@ -129,7 +129,7 @@ def main() -> None:
     # at fixture scale).
     env["master"] = spark.conf.get("spark.master")
     env["shuffle_partitions"] = spark.conf.get("spark.sql.shuffle.partitions")
-    env["cpus"] = DEFAULT_CPUS
+    env["cpus"] = spark.sparkContext.defaultParallelism
     cat = catalog()
     suite = [n for n in HEADLINE if n in cat]
 

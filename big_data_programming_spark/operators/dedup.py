@@ -40,38 +40,141 @@ def exact_dedup_keys(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 #: Default hot-token document-frequency cap for :func:`jaccard_pairs`.
-#: JACCARD_ORACLE_SQL bakes in the SAME constant, so the Spark result
-#: and the DuckDB twin drop identical tokens at ANY scale — the cap
-#: can trigger without a silent hash divergence (ADVICE r4 item 2).
+#: :func:`tokens_sql` applies the same cap by default, so the Spark
+#: result and its DuckDB twin drop identical tokens at any scale — the
+#: cap can trigger without a silent hash divergence.
 MAX_TOKEN_DF = 100_000
 
 
 def spread_fanout_input(docs: DataFrame, id_col: str) -> DataFrame:
-    """Guarantee cluster-wide parallelism before a quadratic fan-out
-    (r12 optimization, guide §2.5 — "one huge unsplittable file …
+    """Hash-repartition the doc rows on the id to ``defaultParallelism``
+    before a quadratic fan-out ("one huge unsplittable file …
     repartition immediately after the read").
 
     The exact pairwise ops below explode each doc into shingles and
-    fan every shingle out to its f join matches; ALL of that work runs
-    in the *scan task* (the verify join broadcasts one side, so there
-    is no exchange to redistribute it). When the input yields fewer
-    scan partitions than the cluster has slots — one small/unsplittable
-    file; the sf0.1 fixture is ONE 594 KB parquet = ONE task — the
-    entire fan-out serializes on one core while the rest idle: measured
-    l2g at sf0.1 = 236 s single-task vs 8 s spread over 32 cores (the
-    769M-row intersection count behind it is the same either way).
-
-    A deterministic hash repartition on the doc id (not round-robin:
-    no sort-before-repartition, retry-stable — §2.5) costs one exchange
-    of the PRE-explode doc rows, negligible beside the fan-out, and is
-    skipped entirely whenever the scan already carries >= cluster
-    parallelism — every real-scale table — so 100 TB plans are
-    unchanged."""
-    spark = docs.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() >= target:
-        return docs
+    fan every shingle out to its join matches; without an exchange all
+    of that runs in the scan task, so a single-file input (the sf0.1
+    fixture is ONE 594 KB parquet = ONE task) serializes the fan-out
+    on one core: measured l2g at sf0.1 = 236 s single-task vs 8 s
+    spread over 32 cores. The partition count is explicit because
+    without it AQE may coalesce the exchange back into one task. The
+    trade at scale: one linear exchange of the pre-explode doc rows."""
+    target = docs.sparkSession.sparkContext.defaultParallelism
     return docs.repartition(target, F.col(id_col))
+
+
+#: Pair score -> (Spark expression over n_shared/n_a/n_b, DuckDB
+#: spelling over n_shared/sa.n/sb.n): the same integer operands and the
+#: same one IEEE division in both engines.
+_SCORES = {
+    "jaccard": (
+        lambda: F.col("n_shared").cast("double")
+        / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
+        "CAST(n_shared AS DOUBLE) / (sa.n + sb.n - n_shared)",
+    ),
+    "containment": (
+        lambda: F.col("n_shared").cast("double") / F.least("n_a", "n_b"),
+        "CAST(n_shared AS DOUBLE) / LEAST(sa.n, sb.n)",
+    ),
+}
+
+
+def _scored(pairs: DataFrame, threshold: float, score: str) -> DataFrame:
+    return (
+        pairs.withColumn(score, _SCORES[score][0]())
+        .filter(F.col(score) >= threshold)
+        .select("doc_a", "doc_b", "n_shared", score)
+    )
+
+
+def overlap_pairs(elems: DataFrame, threshold: float, score: str = "jaccard") -> DataFrame:
+    """Exact set-overlap pairs over a ``(doc, e)`` relation of each
+    doc's DISTINCT elements — the inverted-index kernel behind
+    :func:`jaccard_pairs` and the ``ngram_*_pairs``: self-join on
+    ``e`` (an equi-join shuffled on the element, never a cross join),
+    count shared elements per ``doc_a < doc_b`` pair, attach both set
+    sizes and score — ``"jaccard"`` |A∩B| / |A∪B| or ``"containment"``
+    |A∩B| / min(|A|,|B|). Only pairs sharing an element exist, so even
+    threshold 0 emits no disjoint pair. Output ``(doc_a, doc_b,
+    n_shared, <score>)``; DuckDB twin :func:`overlap_oracle_sql`."""
+    sizes = elems.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
+    a, b = elems.alias("a"), elems.alias("b")
+    inter = (
+        a.join(b, (F.col("a.e") == F.col("b.e")) & (F.col("a.doc") < F.col("b.doc")))
+        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n").alias("n_a"))
+    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n").alias("n_b"))
+    return _scored(inter.join(sa, "doc_a").join(sb, "doc_b"), threshold, score)
+
+
+def verify_pairs(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard verify of candidate ``(doc_a, doc_b)`` pairs
+    against ``(doc, elems)`` rows of DISTINCT-element arrays, the verify
+    step of both MinHash pipelines; same output as :func:`overlap_pairs`.
+    Each side's array is attached and intersected in-row
+    (``size(array_intersect(..))``, whole-stage codegen; no explode
+    before the join): exploding would push l2i's 11.65M
+    sf0.1 candidates × ~40 tokens ≈ 470M rows through two joins
+    (measured 29 s of its 61) for the same integer count."""
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col("doc").alias(f"doc_{s}"),
+            F.col("elems").alias(f"elems_{s}"),
+            F.size("elems").alias(f"n_{s}"),
+        )
+
+    pairs = cand.join(side("a"), "doc_a").join(side("b"), "doc_b").withColumn(
+        "n_shared", F.size(F.array_intersect("elems_a", "elems_b")).cast("long")
+    )
+    return _scored(pairs, threshold, "jaccard")
+
+
+def overlap_oracle_sql(elems_sql: str, threshold: float, score: str = "jaccard") -> str:
+    """DuckDB twin of :func:`overlap_pairs` over ``elems_sql``, a SELECT
+    of ``(doc, e)`` rows (:func:`tokens_sql`, :func:`ngrams_sql`)."""
+    expr = _SCORES[score][1]
+    return f"""
+WITH elems AS (
+  {elems_sql}
+), sizes AS (
+  SELECT doc, COUNT(*) AS n FROM elems GROUP BY doc
+), inter AS (
+  SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_shared
+  FROM elems a JOIN elems b ON a.e = b.e AND a.doc < b.doc
+  GROUP BY 1, 2
+)
+SELECT doc_a, doc_b, n_shared, {expr} AS {score}
+FROM inter
+JOIN sizes sa ON sa.doc = doc_a
+JOIN sizes sb ON sb.doc = doc_b
+WHERE {expr} >= {threshold}
+"""
+
+
+def tokens_sql(shard: str | None = None, max_df: int | None = MAX_TOKEN_DF) -> str:
+    """DuckDB twin of :func:`jaccard_pairs`'s ``(doc, e)`` tokens, over
+    the rows matching ``shard`` if given; ``max_df=None`` drops the df
+    cap (the uncapped sets of the MinHash verify step)."""
+    sql = "SELECT doc_id AS doc, UNNEST(list_distinct(string_split(text, ' '))) AS e"
+    sql += " FROM documents" + (f" WHERE {shard}" if shard else "")
+    if max_df is not None:
+        sql = f"SELECT doc, e FROM ({sql}) QUALIFY COUNT(*) OVER (PARTITION BY e) <= {max_df}"
+    return sql
+
+
+def ngrams_sql(n: int, shard: str | None = None) -> str:
+    """DuckDB twin of :func:`_ngram_elems`, over the rows matching
+    ``shard`` if given: same substrings, same md5 hex-prefix parse."""
+    shard_and = f" AND {shard}" if shard else ""
+    return f"""SELECT doc_id AS doc,
+         CAST(CONCAT('0x', SUBSTRING(md5(g.gram), 1, 15)) AS BIGINT) AS e
+  FROM documents,
+       UNNEST(list_distinct(list_transform(
+         generate_series(1, length(text) - {n - 1}),
+         i -> substr(text, i, {n})))) AS g(gram)
+  WHERE length(text) >= {n}{shard_and}"""
 
 
 def jaccard_pairs(
@@ -81,84 +184,44 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     max_token_df: int | None = MAX_TOKEN_DF,
 ) -> DataFrame:
-    """Exact token-set Jaccard similarity for all pairs sharing ≥1 token.
-
-    Inverted-index formulation: explode distinct tokens, self-join on
-    token (equi-join — shuffles on token, never a cross join), count
-    shared tokens per pair, then |A∩B| / (|A|+|B|-|A∩B|). The
-    production path at scale is MinHash-LSH banding
-    (minhash_lsh_candidates below); this operator is its ground-truth
-    twin for recall testing (SURVEY.md §7 hard-part 4).
+    """Exact token-set Jaccard similarity for all pairs sharing ≥1 token:
+    each doc's distinct whitespace tokens through :func:`overlap_pairs`.
+    The production path at scale is MinHash-LSH banding
+    (:func:`minhash_banded_pairs`); this operator is its ground-truth
+    twin for recall testing. DuckDB twin:
+    ``overlap_oracle_sql(tokens_sql(), threshold)``.
 
     ``max_token_df`` bounds the quadratic blow-up a single hot token
     would cause (a token in k docs emits k² join rows): tokens whose
     document frequency exceeds the cap are dropped from the inverted
     index via a broadcast anti-join (hot tokens are by definition few).
-    JACCARD_ORACLE_SQL applies the SAME cap (the shared MAX_TOKEN_DF
-    constant), so the two engines drop identical tokens and stay
-    hash-identical even when the cap triggers; pass a non-default cap
-    only on non-oracle paths. Dropping a >100k-df token barely moves
-    Jaccard for near-dup purposes: such tokens are stopwords shared by
-    essentially every candidate pair."""
-    docs = spread_fanout_input(docs, id_col)
-    toks = docs.select(
+    :func:`tokens_sql` applies the same MAX_TOKEN_DF cap by default, so
+    the two engines drop identical tokens and stay hash-identical even
+    when the cap triggers; pass a non-default cap only on non-oracle
+    paths. Dropping a >100k-df token barely moves Jaccard for near-dup
+    purposes: such tokens are stopwords shared by essentially every
+    candidate pair."""
+    toks = spread_fanout_input(docs, id_col).select(
         F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("token"),
+        F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("e"),
     )
     if max_token_df is not None:  # None = caller vouches, skip the df pass
         hot = (
-            toks.groupBy("token")
+            toks.groupBy("e")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > max_token_df)
-            .select("token")
+            .select("e")
         )
-        toks = toks.join(F.broadcast(hot), "token", "left_anti")
-    sizes = toks.groupBy("doc").agg(F.count(F.lit(1)).alias("n_tokens"))
-    a, b = toks.alias("a"), toks.alias("b")
-    inter = (
-        a.join(b, (F.col("a.token") == F.col("b.token")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_tokens").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_tokens").alias("n_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_shared", "jaccard")
-    )
+        toks = toks.join(F.broadcast(hot), "e", "left_anti")
+    return overlap_pairs(toks, threshold, "jaccard")
 
 
-JACCARD_ORACLE_SQL = f"""
-WITH toks0 AS (
-  SELECT doc_id AS doc, UNNEST(list_distinct(string_split(text, ' '))) AS token
-  FROM documents
-), toks AS (
-  -- same hot-token df cap as jaccard_pairs(max_token_df=MAX_TOKEN_DF):
-  -- both engines drop identical tokens, so the cap triggering at a
-  -- larger SF cannot silently diverge the hash
-  SELECT doc, token FROM toks0
-  QUALIFY COUNT(*) OVER (PARTITION BY token) <= {MAX_TOKEN_DF}
-), sizes AS (
-  SELECT doc, COUNT(*) AS n_tokens FROM toks GROUP BY doc
-), inter AS (
-  SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_shared
-  FROM toks a JOIN toks b ON a.token = b.token AND a.doc < b.doc
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_shared,
-       CAST(n_shared AS DOUBLE) / (sa.n_tokens + sb.n_tokens - n_shared) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc = doc_a
-JOIN sizes sb ON sb.doc = doc_b
-WHERE CAST(n_shared AS DOUBLE) / (sa.n_tokens + sb.n_tokens - n_shared) >= {{threshold}}
-"""
+def _token_sets(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(doc, elems)`` distinct-token arrays for :func:`verify_pairs`."""
+    return docs.select(
+        F.col(id_col).alias("doc"),
+        F.array_distinct(tokenize(F.col(text_col))).alias("elems"),
+    )
 
 
 def _token_hash60(token: Column) -> Column:
@@ -282,32 +345,7 @@ def minhash_dedup_pairs(
     candidate-miss probability for a true ≥0.5 pair below 1e-9, so the
     result is oracle-checkable against the exact formulation."""
     cand = minhash_lsh_candidates(docs, text_col, id_col, jaccard_threshold=threshold)
-    toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("token"),
-    )
-    sizes = toks.groupBy("doc").agg(F.count(F.lit(1)).alias("n_tokens"))
-    ta = toks.select(F.col("doc").alias("doc_a"), "token")
-    tb = toks.select(F.col("doc").alias("doc_b"), "token")
-    shared = (
-        cand.join(ta, "doc_a")
-        .join(tb, ["doc_b", "token"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_tokens").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_tokens").alias("n_b"))
-    return (
-        shared.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_shared", "jaccard")
-    )
+    return verify_pairs(cand, _token_sets(docs, text_col, id_col), threshold)
 
 
 #: Mersenne prime 2^31-1 for the universal-hash family below. Token
@@ -420,11 +458,17 @@ def minhash_band_candidates(
     exact-Jaccard ground truth): distinct ``(doc_a, doc_b)`` pairs
     agreeing on all slots of >= 1 LSH band — before any exact
     verification. Twin of :func:`minhash_band_candidates_sql`."""
-    docs = spread_fanout_input(docs, id_col)
-    sig = minhash_signatures(
-        docs, num_hashes=num_hashes, text_col=text_col, id_col=id_col
+    return _band_candidates(
+        spread_fanout_input(docs, id_col), num_hashes, rows_per_band, text_col, id_col
     )
-    bands = minhash_bands(sig, num_hashes=num_hashes, rows_per_band=rows_per_band)
+
+
+def _band_candidates(
+    docs: DataFrame, num_hashes: int, rows_per_band: int, text_col: str, id_col: str
+) -> DataFrame:
+    """:func:`minhash_band_candidates` over an already-spread input."""
+    sig = minhash_signatures(docs, num_hashes, text_col, id_col)
+    bands = minhash_bands(sig, num_hashes, rows_per_band)
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -452,67 +496,19 @@ def minhash_banded_pairs(
 
     Per doc, IN-ROW (no explode, no shuffle): distinct tokens →
     28-bit md5 base hashes → k=``num_hashes`` universal-hash minima =
-    the MinHash signature — one array HOF chain inside whole-stage
-    codegen. Banding: k/r bands of r signature slots each; docs
-    agreeing on ALL slots of some band become candidates via a
+    the MinHash signature, one array HOF chain in whole-stage codegen
+    (O(tokens × k) multiply-mods as a pure map). Docs agreeing on ALL
+    r slots of one of the k/r bands become candidates via a
     (band_idx, band_key) equi-join — the only shuffle moves
-    (doc, band_key) rows, never token lists. Candidates are then
-    exact-verified against true token Jaccard (candidates-only join).
-
-    The signature step costs O(tokens × k) multiply-mods as a pure
-    map; at 100 TB this is the canonical dedup shape (the GPL-free
-    rewrite of every web-dedup pipeline). Banding recall for a true
-    pair at similarity J is 1-(1-J^r)^(k/r): r=2, k=24 → 97% at
-    J=0.5, >99.9% at J=0.7; missed borderline pairs are missed
-    IDENTICALLY by the oracle, because the hash constants are shared
-    literals — the oracle certifies cross-engine determinism of the
-    full pipeline (recall vs ground truth is l2n's audit).
-
-    Verify stage (r12 optimization, guide §2.3/§3.3 — do not explode
-    before a join): the old shape exploded every candidate doc's
-    tokens and re-joined on (doc, token) — at sf0.1 that is 11.65M
-    candidate pairs × ~40 tokens ≈ 470M skinny rows through TWO hash
-    joins (measured 29 s of the query's 61). Attaching each side's
-    distinct-token ARRAY instead and intersecting in-row
-    (``size(array_intersect(..))``, whole-stage codegen — the l2f
-    banded-verify idiom) computes the identical |A∩B|: both arrays are
-    array_distinct outputs, so the intersection cardinality IS the
-    shared-token count, and |A| rides along as ``size(ts)`` with no
-    separate sizes aggregate. Two joins carrying 11.65M array-bearing
-    rows replace two joins carrying 470M exploded rows; output values
-    are bit-identical (integer count, same ratio arithmetic)."""
+    (doc, band_key) rows, never token lists — and :func:`verify_pairs`
+    scores only those candidates. Recall for a true pair at similarity
+    J is 1-(1-J^r)^(k/r): r=2, k=24 → 97% at J=0.5, >99.9% at J=0.7;
+    borderline misses are missed IDENTICALLY by the oracle, whose hash
+    constants are shared literals (recall vs ground truth is l2n's
+    audit). The doc rows are spread once and feed both stages."""
     docs = spread_fanout_input(docs, id_col)
-    cand = minhash_band_candidates(
-        docs, num_hashes=num_hashes, rows_per_band=rows_per_band,
-        text_col=text_col, id_col=id_col,
-    )
-    tok_sets = docs.select(
-        F.col(id_col).alias("doc"),
-        F.array_distinct(tokenize(F.col(text_col))).alias("ts"),
-    )
-    sa = tok_sets.select(
-        F.col("doc").alias("doc_a"), F.col("ts").alias("ts_a"),
-        F.size("ts").alias("n_a"),
-    )
-    sb = tok_sets.select(
-        F.col("doc").alias("doc_b"), F.col("ts").alias("ts_b"),
-        F.size("ts").alias("n_b"),
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "n_shared",
-            F.size(F.array_intersect("ts_a", "ts_b")).cast("long"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_shared", "jaccard")
-    )
+    cand = _band_candidates(docs, num_hashes, rows_per_band, text_col, id_col)
+    return verify_pairs(cand, _token_sets(docs, text_col, id_col), threshold)
 
 
 def minhash_signatures_sql(num_hashes: int = 24) -> str:
@@ -570,30 +566,17 @@ def minhash_banded_oracle_sql(
     threshold: float = 0.5, num_hashes: int = 24, rows_per_band: int = 2
 ) -> str:
     """DuckDB identical-arithmetic twin of :func:`minhash_banded_pairs`
-    — same md5 base hashes, same (a, b) literals, same banding, same
-    exact-verify arithmetic, so the output (including any banding
-    misses) matches value-for-value."""
+    — same md5 base hashes, same (a, b) literals, same banding, so the
+    output (including any banding misses) matches value-for-value. The
+    verify half is the uncapped exact token overlap restricted to the
+    candidates: for ``threshold > 0`` a verified candidate shares a
+    token, so it is exactly an overlap pair that is also a candidate."""
+    exact = overlap_oracle_sql(tokens_sql(max_df=None), threshold)
+    cand = minhash_band_candidates_sql(num_hashes, rows_per_band)
     return f"""
-WITH cand AS (
-  SELECT * FROM ({minhash_band_candidates_sql(num_hashes, rows_per_band)})
-), toks AS (
-  SELECT doc_id AS doc, UNNEST(list_distinct(string_split(text, ' '))) AS token
-  FROM documents
-), sizes AS (
-  SELECT doc, COUNT(*) AS n_tokens FROM toks GROUP BY doc
-), inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_shared
-  FROM cand c
-  JOIN toks a ON a.doc = c.doc_a
-  JOIN toks b ON b.doc = c.doc_b AND b.token = a.token
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_shared,
-       CAST(n_shared AS DOUBLE) / (sa.n_tokens + sb.n_tokens - n_shared) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc = doc_a
-JOIN sizes sb ON sb.doc = doc_b
-WHERE CAST(n_shared AS DOUBLE) / (sa.n_tokens + sb.n_tokens - n_shared) >= {threshold}
+SELECT p.doc_a, p.doc_b, p.n_shared, p.jaccard
+FROM ({exact}) p
+JOIN ({cand}) c ON c.doc_a = p.doc_a AND c.doc_b = p.doc_b
 """
 
 
@@ -610,6 +593,18 @@ def char_ngrams(text: Column, n: int = 5) -> Column:
     )
 
 
+def _ngram_elems(docs: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
+    """``(doc, e)``: the distinct char-``n``-grams of every doc at least
+    ``n`` chars long, md5-hashed to 60-bit ints BEFORE the shuffle, so
+    the inverted-index exchange moves 8-byte keys instead of n-char
+    strings. DuckDB twin: :func:`ngrams_sql`."""
+    grams = spread_fanout_input(docs, id_col).filter(F.length(F.col(text_col)) >= n).select(
+        F.col(id_col).alias("doc"),
+        F.explode(char_ngrams(F.col(text_col), n)).alias("gram"),
+    )
+    return grams.select("doc", _token_hash60(F.col("gram")).alias("e"))
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float,
@@ -623,66 +618,11 @@ def ngram_jaccard_pairs(
     :func:`jaccard_pairs`) is order-sensitive: shared vocabulary in a
     different arrangement scores near zero, while true edits/rewrites
     of the same passage keep most of their shingles — the standard
-    near-dup signal for web-scale corpora. Shape is the same
-    inverted-index equi-join (shuffle on the shingle, never a cross
-    join), with one extra scale lever: shingles are md5-hashed to
-    60-bit ints BEFORE the shuffle, so the exchange moves 8-byte keys
-    instead of n-char strings. The hash is portable (same md5 bytes,
-    same hex-prefix parse in DuckDB), so the oracle replays it
-    bit-for-bit. Exact-but-quadratic worst case, like jaccard_pairs:
-    the 100 TB production path is MinHash-LSH banding; this is the
-    n-gram ground truth it is recall-tested against."""
-    docs = spread_fanout_input(docs, id_col)
-    grams = docs.filter(F.length(F.col(text_col)) >= n).select(
-        F.col(id_col).alias("doc"),
-        F.explode(char_ngrams(F.col(text_col), n)).alias("gram"),
-    )
-    hashed = grams.select("doc", _token_hash60(F.col("gram")).alias("h"))
-    sizes = hashed.groupBy("doc").agg(F.count(F.lit(1)).alias("n_grams"))
-    a, b = hashed.alias("a"), hashed.alias("b")
-    inter = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_grams").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_grams").alias("n_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_shared", "jaccard")
-    )
-
-
-NGRAM_JACCARD_ORACLE_SQL = """
-WITH grams AS (
-  SELECT doc_id AS doc,
-         CAST(CONCAT('0x', SUBSTRING(md5(g.gram), 1, 15)) AS BIGINT) AS h
-  FROM documents,
-       UNNEST(list_distinct(list_transform(
-         generate_series(1, length(text) - {nm1}),
-         i -> substr(text, i, {n})))) AS g(gram)
-  WHERE length(text) >= {n}
-), sizes AS (
-  SELECT doc, COUNT(*) AS n_grams FROM grams GROUP BY doc
-), inter AS (
-  SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_shared
-  FROM grams a JOIN grams b ON a.h = b.h AND a.doc < b.doc
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_shared,
-       CAST(n_shared AS DOUBLE) / (sa.n_grams + sb.n_grams - n_shared) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc = doc_a
-JOIN sizes sb ON sb.doc = doc_b
-WHERE CAST(n_shared AS DOUBLE) / (sa.n_grams + sb.n_grams - n_shared) >= {threshold}
-"""
+    near-dup signal for web-scale corpora. The hashed shingles
+    (:func:`_ngram_elems`) go through :func:`overlap_pairs`; the hash
+    is portable, so ``overlap_oracle_sql(ngrams_sql(n), threshold)``
+    replays it bit-for-bit."""
+    return overlap_pairs(_ngram_elems(docs, n, text_col, id_col), threshold, "jaccard")
 
 
 def ngram_containment_pairs(
@@ -698,62 +638,13 @@ def ngram_containment_pairs(
     when a short document is embedded inside a much longer one (quote
     farms, boilerplate wrappers, concatenated crawls), Jaccard
     collapses toward |A|/|B| and misses the pair, while containment
-    stays ~1. Same scale shape — in-row shingling, 60-bit hashed
-    shingles, inverted-index equi-join, never a cross join; only the
-    final scoring arithmetic differs (min() instead of union size),
-    so the two measures share one candidate pass in a fused
-    deployment. Exact-but-quadratic ground truth like its Jaccard
-    twin; the LSH-banded path is the production route."""
-    docs = spread_fanout_input(docs, id_col)
-    grams = docs.filter(F.length(F.col(text_col)) >= n).select(
-        F.col(id_col).alias("doc"),
-        F.explode(char_ngrams(F.col(text_col), n)).alias("gram"),
+    stays ~1. Same hashed shingles, same :func:`overlap_pairs` kernel
+    with ``score="containment"``: only the final scoring denominator
+    differs (min() instead of union size). DuckDB twin:
+    ``overlap_oracle_sql(ngrams_sql(n), threshold, "containment")``."""
+    return overlap_pairs(
+        _ngram_elems(docs, n, text_col, id_col), threshold, "containment"
     )
-    hashed = grams.select("doc", _token_hash60(F.col("gram")).alias("h"))
-    sizes = hashed.groupBy("doc").agg(F.count(F.lit(1)).alias("n_grams"))
-    a, b = hashed.alias("a"), hashed.alias("b")
-    inter = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_grams").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_grams").alias("n_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "containment",
-            F.col("n_shared").cast("double") / F.least("n_a", "n_b"),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("doc_a", "doc_b", "n_shared", "containment")
-    )
-
-
-NGRAM_CONTAINMENT_ORACLE_SQL = """
-WITH grams AS (
-  SELECT doc_id AS doc,
-         CAST(CONCAT('0x', SUBSTRING(md5(g.gram), 1, 15)) AS BIGINT) AS h
-  FROM documents,
-       UNNEST(list_distinct(list_transform(
-         generate_series(1, length(text) - {nm1}),
-         i -> substr(text, i, {n})))) AS g(gram)
-  WHERE length(text) >= {n}
-), sizes AS (
-  SELECT doc, COUNT(*) AS n_grams FROM grams GROUP BY doc
-), inter AS (
-  SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_shared
-  FROM grams a JOIN grams b ON a.h = b.h AND a.doc < b.doc
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_shared,
-       CAST(n_shared AS DOUBLE) / LEAST(sa.n_grams, sb.n_grams) AS containment
-FROM inter
-JOIN sizes sa ON sa.doc = doc_a
-JOIN sizes sb ON sb.doc = doc_b
-WHERE CAST(n_shared AS DOUBLE) / LEAST(sa.n_grams, sb.n_grams) >= {threshold}
-"""
 
 
 def winnowed_span_stats(

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.operators.dedup import JACCARD_ORACLE_SQL, jaccard_pairs
+from big_data_programming_spark.operators.dedup import jaccard_pairs, overlap_oracle_sql, tokens_sql
 from big_data_programming_spark.operators.graph import (
     TRIANGLES_ORACLE_SQL,
     kcore_peel,
@@ -28,7 +28,7 @@ from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
 _NEARDUP_EDGES_SQL = (
-    "SELECT doc_a, doc_b FROM (" + JACCARD_ORACLE_SQL.format(threshold=0.8) + ")"
+    "SELECT doc_a, doc_b FROM (" + overlap_oracle_sql(tokens_sql(), 0.8) + ")"
 )
 
 _FULFILL_EDGES_SQL = """
@@ -155,9 +155,7 @@ def _kcore_oracle_sql(k: int, rounds: int) -> str:
     graph converges in 1-2 rounds, and tests pin convergence <= the
     unroll depth)."""
     parts = [
-        "WITH edges AS MATERIALIZED (SELECT doc_a, doc_b FROM ("
-        + JACCARD_ORACLE_SQL.format(threshold=0.8)
-        + ")), deg0 AS ("
+        "WITH edges AS MATERIALIZED (" + _NEARDUP_EDGES_SQL + "), deg0 AS ("
         "  SELECT node, COUNT(*) AS degree FROM ("
         "    SELECT doc_a AS node, doc_b AS other FROM edges"
         "    UNION ALL SELECT doc_b, doc_a FROM edges) GROUP BY 1)"
@@ -211,9 +209,7 @@ def g4_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=(
         "SELECT label AS community, CAST(COUNT(*) AS BIGINT) AS n_docs FROM ("
         + label_propagation_oracle_sql(
-            "SELECT doc_a AS src, doc_b AS dst FROM ("
-            + JACCARD_ORACLE_SQL.format(threshold=0.8)
-            + ")"
+            "SELECT doc_a AS src, doc_b AS dst FROM (" + _NEARDUP_EDGES_SQL + ")"
         )
         + ") GROUP BY label"
     ),

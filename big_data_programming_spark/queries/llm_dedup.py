@@ -12,9 +12,6 @@ from big_data_programming_spark.operators.clustering import (
     dedup_clusters,
 )
 from big_data_programming_spark.operators.dedup import (
-    JACCARD_ORACLE_SQL,
-    NGRAM_CONTAINMENT_ORACLE_SQL,
-    NGRAM_JACCARD_ORACLE_SQL,
     SIMHASH_ORACLE_SQL,
     exact_dedup_keys,
     jaccard_pairs,
@@ -25,8 +22,11 @@ from big_data_programming_spark.operators.dedup import (
     minhash_dedup_pairs,
     ngram_containment_pairs,
     ngram_jaccard_pairs,
+    ngrams_sql,
     normalize_text,
+    overlap_oracle_sql,
     simhash,
+    tokens_sql,
     winnowed_extents_oracle_sql,
     winnowed_span_extents,
     winnowed_span_oracle_sql,
@@ -87,7 +87,7 @@ def l1b_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l2_jaccard_near_dup",
-    oracle=JACCARD_ORACLE_SQL.format(threshold=0.5),
+    oracle=overlap_oracle_sql(tokens_sql(), 0.5),
     tags=("L2", "J9", "A1"),
 )
 def l2_jaccard_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,25 +124,7 @@ _L2C_SHARD_SQL = (
 
 @register(
     "l2c_minhash_lsh",
-    oracle=f"""
-WITH toks AS (
-  SELECT doc_id AS doc, UNNEST(list_distinct(string_split(text, ' '))) AS token
-  FROM documents
-  WHERE {_L2C_SHARD_SQL}
-), sizes AS (
-  SELECT doc, COUNT(*) AS n_tokens FROM toks GROUP BY doc
-), inter AS (
-  SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_shared
-  FROM toks a JOIN toks b ON a.token = b.token AND a.doc < b.doc
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_shared,
-       CAST(n_shared AS DOUBLE) / (sa.n_tokens + sb.n_tokens - n_shared) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc = doc_a
-JOIN sizes sb ON sb.doc = doc_b
-WHERE CAST(n_shared AS DOUBLE) / (sa.n_tokens + sb.n_tokens - n_shared) >= 0.5
-""",
+    oracle=overlap_oracle_sql(tokens_sql(shard=_L2C_SHARD_SQL, max_df=None), 0.5),
     tags=("L2",),
 )
 def l2c_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,7 +158,7 @@ def l2c_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: pairs feeding the cluster step — high threshold keeps the graph
 #: sparse enough to be interesting (the fixture corpus is ~40%
 #: near-dup at 0.5, which collapses to one giant component).
-_CLUSTER_PAIRS_SQL = JACCARD_ORACLE_SQL.format(threshold=0.8)
+_CLUSTER_PAIRS_SQL = overlap_oracle_sql(tokens_sql(), 0.8)
 
 
 @register(
@@ -298,7 +280,7 @@ def l2f_blocked_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l2g_ngram_jaccard",
-    oracle=NGRAM_JACCARD_ORACLE_SQL.format(n=5, nm1=4, threshold=0.4),
+    oracle=overlap_oracle_sql(ngrams_sql(5), 0.4),
     tags=("L2", "F1", "F7", "J1", "A1"),
 )
 def l2g_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,34 +308,9 @@ _L2G2_SHARD_SQL = (
     "IN ('0', '1', '2', '3', '4', '5', '6', '7')"
 )
 
-_L2G2_ORACLE_SQL = """
-WITH grams AS (
-  SELECT doc_id AS doc,
-         CAST(CONCAT('0x', SUBSTRING(md5(g.gram), 1, 15)) AS BIGINT) AS h
-  FROM documents,
-       UNNEST(list_distinct(list_transform(
-         generate_series(1, length(text) - {nm1}),
-         i -> substr(text, i, {n})))) AS g(gram)
-  WHERE length(text) >= {n} AND {shard}
-), sizes AS (
-  SELECT doc, COUNT(*) AS n_grams FROM grams GROUP BY doc
-), inter AS (
-  SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_shared
-  FROM grams a JOIN grams b ON a.h = b.h AND a.doc < b.doc
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_shared,
-       CAST(n_shared AS DOUBLE) / (sa.n_grams + sb.n_grams - n_shared) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc = doc_a
-JOIN sizes sb ON sb.doc = doc_b
-WHERE CAST(n_shared AS DOUBLE) / (sa.n_grams + sb.n_grams - n_shared) >= {threshold}
-"""
-
-
 @register(
     "l2g2_ngram_jaccard_shard",
-    oracle=_L2G2_ORACLE_SQL.format(n=5, nm1=4, threshold=0.4, shard=_L2G2_SHARD_SQL),
+    oracle=overlap_oracle_sql(ngrams_sql(5, shard=_L2G2_SHARD_SQL), 0.4),
     tags=("L2", "F1", "F7", "J1", "A1"),
 )
 def l2g2_ngram_jaccard_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -422,7 +379,7 @@ def l2i_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l2h_ngram_containment",
-    oracle=NGRAM_CONTAINMENT_ORACLE_SQL.format(n=5, nm1=4, threshold=0.6),
+    oracle=overlap_oracle_sql(ngrams_sql(5), 0.6, "containment"),
     tags=("L2", "F1", "F7", "J1", "A1"),
 )
 def l2h_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -430,9 +387,11 @@ def l2h_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset-detection complement of l2g: a short doc embedded in a
     long one keeps containment ~1 while its Jaccard collapses toward
     the length ratio, so this is the measure that catches boilerplate
-    wrappers and quote-farm inclusion. Shares l2g's inverted-index
-    candidate pass (operators/dedup.py:ngram_containment_pairs); only
-    the scoring denominator differs (min instead of union)."""
+    wrappers and quote-farm inclusion. Runs l2g's inverted-index pass
+    itself: ngram_containment_pairs and ngram_jaccard_pairs feed the
+    same hashed 5-gram elements to one kernel (operators/dedup.py:
+    overlap_pairs), and only its ``score`` argument differs, which
+    swaps the denominator (min instead of union)."""
     return ngram_containment_pairs(
         load(spark, sf_dir, "documents"), threshold=0.6, n=5
     )
@@ -571,7 +530,7 @@ def l2k_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "l2n_banding_recall_audit",
     oracle=f"""
 WITH truth AS (
-  SELECT doc_a, doc_b FROM ({JACCARD_ORACLE_SQL.format(threshold=0.5)})
+  SELECT doc_a, doc_b FROM ({overlap_oracle_sql(tokens_sql(), 0.5)})
 ), cand AS (
   SELECT * FROM ({minhash_band_candidates_sql()})
 ), m AS (

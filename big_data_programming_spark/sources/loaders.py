@@ -30,6 +30,7 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """S1 — parquet scan of one fixture table at a scale-factor dir.
 

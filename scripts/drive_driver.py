@@ -109,10 +109,11 @@ SF01_QUADRATIC_TIER = {
     # 282.6 s at sf0.1, match — same inverted-index shape as l2/l2n).
     # l2n_banding_recall_audit was REMOVED from this tier (round-9
     # spot-run: 158.7 s total at sf0.1, match): its truth side is
-    # JACCARD_ORACLE_SQL's hot-token-capped inverted-index join (pairs
-    # only share-a-token docs, MAX_TOKEN_DF bounds the fan-out), not a
-    # brute all-pairs loop — so the routine sweep now re-certifies
-    # banding recall at sf0.1 every round for ~2.6 min.
+    # overlap_oracle_sql(tokens_sql(), 0.5), the hot-token-capped
+    # inverted-index join (pairs only share-a-token docs, MAX_TOKEN_DF
+    # bounds the fan-out), not a brute all-pairs loop — so the routine
+    # sweep now re-certifies banding recall at sf0.1 every round for
+    # ~2.6 min.
     # lm6_negative_pair_audit was REMOVED from this tier (round-9
     # spot-run: 5.8 s at sf0.1, match — its LCG partner sampling is
     # O(n) pairs, never all-pairs; original tier placement was a

@@ -89,13 +89,14 @@ def test_jaccard_df_cap_inactive_on_fixture_but_bounds_hot_tokens(docs, spark):
     must not silently diverge the hash), pinned below via the shared
     MAX_TOKEN_DF constant."""
     from big_data_programming_spark.operators.dedup import (
-        JACCARD_ORACLE_SQL,
         MAX_TOKEN_DF,
+        overlap_oracle_sql,
         tokenize,
+        tokens_sql,
     )
 
     # oracle lockstep: the SQL twin carries the exact default cap
-    assert f"<= {MAX_TOKEN_DF}" in JACCARD_ORACLE_SQL
+    assert f"<= {MAX_TOKEN_DF}" in overlap_oracle_sql(tokens_sql(), 0.5)
     import inspect
 
     sig = inspect.signature(jaccard_pairs)

@@ -1078,3 +1078,41 @@ def test_grouped_map_boundaries_prune_columns():
     assert set(scan_read_columns(ud4)) == {"o_custkey", "o_orderkey", "o_totalprice"}
     ud6 = catalog()["ud6_map_in_pandas"].fn(spark, SF_DIR)
     assert set(scan_read_columns(ud6)) == {"event_id", "user_id", "value", "props"}
+
+
+def test_dedup_pair_queries_build_without_jobs():
+    """Building the exact-pair and MinHash dedup queries runs no Spark
+    job: every action belongs to the caller. A partition-count probe
+    (``.rdd.getNumPartitions()``) on an already repartitioned frame
+    makes AQE materialize that shuffle while the query is still being
+    built, which is what l2i's second spread_fanout_input call did."""
+    import big_data_programming_spark.session as S
+    from big_data_programming_spark.plans.explain import _drain_listener_bus
+    from big_data_programming_spark.registry import catalog
+
+    spark = S.get_spark("plan-tests", cpus=8)
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def last_job_id() -> int:
+        # watermark on the newest job id, not jobsList().size(): the
+        # store prunes retained jobs once a long session passes the cap
+        _drain_listener_bus(spark)
+        jobs = store.jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    cat = catalog()
+    eager = {}
+    for name in (
+        "l2_jaccard_near_dup",
+        "l2c_minhash_lsh",
+        "l2g_ngram_jaccard",
+        "l2g2_ngram_jaccard_shard",
+        "l2h_ngram_containment",
+        "l2i_minhash_banded",
+        "l2n_banding_recall_audit",
+    ):
+        before = last_job_id()
+        cat[name].fn(spark, SF_DIR)
+        if last_job_id() != before:
+            eager[name] = last_job_id() - before
+    assert not eager, f"jobs started while building: {eager}"

@@ -7,6 +7,7 @@ single-node graphs, all-identical docs, adversarial gaps)."""
 from __future__ import annotations
 
 import datetime
+from itertools import combinations
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -14,7 +15,11 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from big_data_programming_spark.operators.clustering import connected_components
-from big_data_programming_spark.operators.dedup import jaccard_pairs
+from big_data_programming_spark.operators.dedup import (
+    jaccard_pairs,
+    ngram_containment_pairs,
+    ngram_jaccard_pairs,
+)
 from big_data_programming_spark.operators.sessions import sessionize
 from big_data_programming_spark.operators.skew import salted_sum_count
 
@@ -79,7 +84,7 @@ def test_sessionize_matches_reference(spark, trace):
     assert got == _sessions_ref(trace, gap_s=30 * 60)
 
 
-# ---------- jaccard vs Python reference ----------
+# ---------- set-overlap pairs vs Python reference ----------
 
 
 @given(
@@ -89,24 +94,37 @@ def test_sessionize_matches_reference(spark, trace):
         ),
         min_size=2,
         max_size=6,
-    )
+    ),
+    n=st.integers(2, 5),
 )
 @settings(**SETTINGS)
-def test_jaccard_pairs_match_reference(spark, docs):
+def test_jaccard_pairs_match_reference(spark, docs, n):
+    """Token-set Jaccard and char-n-gram Jaccard and containment
+    against Python set references: exactly the pairs sharing >= 1
+    element, with the exact score. A text shorter than ``n`` has no
+    n-grams, so it must be in no n-gram pair (``sequence(1, 0)`` counts
+    down, so a missing length filter would invent grams for it)."""
     df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_pairs(df, threshold=0.0).collect()
-    }
-    sets = [set(d.split(" ")) for d in docs]
-    for i in range(len(docs)):
-        for j in range(i + 1, len(docs)):
+    tokens = [set(d.split(" ")) for d in docs]
+    grams = [{d[i : i + n] for i in range(len(d) - n + 1)} for d in docs]
+    cases = (
+        (jaccard_pairs(df, threshold=0.0), tokens, "jaccard"),
+        (ngram_jaccard_pairs(df, threshold=0.0, n=n), grams, "jaccard"),
+        (ngram_containment_pairs(df, threshold=0.0, n=n), grams, "containment"),
+    )
+    for pairs, sets, score in cases:
+        got = {(r.doc_a, r.doc_b): r[score] for r in pairs.collect()}
+        want = {}
+        for i, j in combinations(range(len(docs)), 2):
             inter = len(sets[i] & sets[j])
-            if inter == 0:
-                assert (i, j) not in got  # no shared token -> no pair emitted
-                continue
-            want = inter / len(sets[i] | sets[j])
-            assert got[(i, j)] == pytest.approx(want, abs=1e-12)
+            if inter:
+                if score == "jaccard":
+                    want[(i, j)] = inter / len(sets[i] | sets[j])
+                else:
+                    want[(i, j)] = inter / min(len(sets[i]), len(sets[j]))
+        assert got.keys() == want.keys(), (score, n, docs)
+        for pair, v in want.items():
+            assert got[pair] == pytest.approx(v, abs=1e-12), (score, n, docs, pair)
 
 
 # ---------- connected components vs union-find ----------
