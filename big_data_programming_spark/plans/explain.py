@@ -85,7 +85,7 @@ def executed_parquet_scan_count(df: DataFrame) -> int:
     """How many parquet scans a query EXECUTES, post runtime reuse —
     fully evaluates ``df`` (noop sink, see :func:`evaluate_fully`) and
     reads the SQL status store (available with the UI disabled) for
-    that execution's final plan graph.
+    the final plan graph of every execution that evaluation starts.
 
     Why this exists (round-9 audit): the plan STRING massively
     overcounts scans — ``InMemoryTableScan`` nodes re-print their
@@ -96,32 +96,18 @@ def executed_parquet_scan_count(df: DataFrame) -> int:
     actually run (the cached featurize + two skinny label/count
     passes). Runtime truth is the 100 TB number that matters, so the
     scan-bound tests pin this alongside the static upper bounds."""
-    store = df.sparkSession._jsparkSession.sharedState().statusStore()
-    _drain_listener_bus(df.sparkSession)
-    before = store.executionsList()
-    watermark = (
-        before.apply(before.size() - 1).executionId() if before.size() else -1
-    )
-    evaluate_fully(df)
-    _drain_listener_bus(df.sparkSession)
-    scans: set[int] = set()
-    execs = store.executionsList()
-    for i in range(execs.size()):
-        eid = execs.apply(i).executionId()
-        if eid > watermark:
-            scans |= _executed_scans_of(store, eid)
-    return len(scans)
+    return executed_parquet_scan_count_during(df.sparkSession, lambda: evaluate_fully(df))
 
 
 def executed_parquet_scan_count_during(spark, thunk) -> int:
-    """Like :func:`executed_parquet_scan_count`, but sums over EVERY
-    SQL execution ``thunk()`` triggers — queries that materialize a
-    persist or cut lineage with ``localCheckpoint`` during
-    CONSTRUCTION run those scans in separate executions, which the
-    last-execution helper misses (round-9 audit: l5j read 0 under it
-    because its verdict lineage materialized before the final count's
-    execution). Watermarks on executionId, not list position, because
-    the status store prunes retained executions from the head."""
+    """Distinct executed parquet scans over EVERY SQL execution
+    ``thunk()`` triggers. Pass a thunk that also BUILDS the query when
+    it materializes a persist or cuts lineage with ``localCheckpoint``
+    during construction: those scans run while ``df`` is built, before
+    :func:`executed_parquet_scan_count` sets its watermark, so that
+    helper misses them (round-9 audit: l5j read 0 under it). Watermarks
+    on executionId, not list position, because the status store prunes
+    retained executions from the head."""
     store = spark._jsparkSession.sharedState().statusStore()
     _drain_listener_bus(spark)
     execs = store.executionsList()

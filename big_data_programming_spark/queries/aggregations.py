@@ -22,7 +22,7 @@ from big_data_programming_spark.functions.canonical import (
     oracle_davg,
     oracle_dsum,
 )
-from big_data_programming_spark.registry import PROMOTE, register
+from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
 

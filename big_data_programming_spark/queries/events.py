@@ -14,7 +14,7 @@ from pyspark.sql.window import Window
 
 from big_data_programming_spark.functions.canonical import DEC, oracle_dsum
 from big_data_programming_spark.operators.sessions import SESSIONIZE_ORACLE_SQL, sessionize
-from big_data_programming_spark.registry import PROMOTE, register
+from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_programming_spark.functions.canonical import DEC, oracle_dsum
-from big_data_programming_spark.registry import PROMOTE, register
+from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
 

@@ -38,7 +38,7 @@ from big_data_programming_spark.operators.text import (
     canonicalize_url_sql,
     synthetic_url_sql,
 )
-from big_data_programming_spark.registry import PROMOTE, register
+from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
 

@@ -22,7 +22,7 @@ from big_data_programming_spark.operators.similarity import (
     topk_cosine,
 )
 from big_data_programming_spark.functions.canonical import COS64_SQL
-from big_data_programming_spark.registry import DEFER, register
+from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load, register_views
 
 #: The shared 64-dim cosine oracle fragment (functions/canonical.py:
@@ -32,8 +32,6 @@ _COS = COS64_SQL
 
 @register(
     "l3_cosine_topk",
-    # driver-green in r4; DEFER frees the r5 window slot (registry.py)
-    window_rank=DEFER,
     oracle=f"""
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
 SELECT e.vec_id,
@@ -57,8 +55,6 @@ def l3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l3b_bucketed_near_pairs",
-    # driver-green in r4; DEFER frees the r5 window slot (registry.py)
-    window_rank=DEFER,
     oracle=f"""
 WITH b AS (
   SELECT vec_id, embedding,
@@ -85,8 +81,6 @@ def l3b_bucketed_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l3c_label_centroid_sim",
-    # driver-green in r4; DEFER frees the r5 window slot (registry.py)
-    window_rank=DEFER,
     oracle=f"""
 WITH flat AS (
   SELECT label, g.pos AS pos, CAST(embedding[g.pos] AS DOUBLE) AS x

@@ -28,7 +28,7 @@ from big_data_programming_spark.operators.dedup import (
     normalize_text,
     simhash,
 )
-from big_data_programming_spark.registry import PROMOTE, register
+from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
 

@@ -3,11 +3,6 @@ Spark 4 SQL-language features a reference user would expect from a
 current engine — pipe syntax, SQL-defined UDFs/UDTFs, GROUP BY ALL /
 lateral column aliases, collation-aware comparison, approx_top_k, the
 Arrow-native grouped map, and a deterministic train/val/test split.
-
-Registered at the END of the catalog on purpose: the driver's
-correctness pass covers the first 50 entries and the round-3 window
-(events/aggregations/windows/setops) is tuned to exactly 50 — new
-entries must not displace it (registry.py module-order note).
 """
 
 from __future__ import annotations

@@ -1,10 +1,4 @@
-"""Relational extensions added in round 3 (SURVEY.md §2.12).
-
-Registered at the END of the catalog on purpose: the driver's
-correctness pass covers the first 50 entries, and the round-3 window
-(events/aggregations/windows/setops) is tuned to exactly 50 — new
-entries must not displace it (registry.py module-order note).
-"""
+"""Relational extensions added in round 3 (SURVEY.md §2.12)."""
 
 from __future__ import annotations
 

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_programming_spark.registry import PROMOTE, register
+from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
 

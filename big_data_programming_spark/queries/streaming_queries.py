@@ -38,7 +38,7 @@ from big_data_programming_spark.queries.pipeline_ops import (
     hll_rho,
 )
 from big_data_programming_spark.queries.events import E2_SLIDING_ORACLE
-from big_data_programming_spark.registry import DEFER, register
+from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 from big_data_programming_spark.streaming.harness import (
     documents_stream,
@@ -54,7 +54,6 @@ _WM_US = "(EPOCH_MS(MAX(ts)) - {delay_ms}) * 1000"
 
 @register(
     "st1_watermark_tumbling",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle=f"""
 WITH w AS (
   SELECT make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600 * 3600) * 1000000) AS window_start,
@@ -98,7 +97,6 @@ def st1_watermark_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st2_tumbling_complete",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle=f"""
 SELECT make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600 * 3600) * 1000000) AS window_start,
        event_type,
@@ -133,7 +131,6 @@ def st2_tumbling_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st3_sliding_complete",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle=E2_SLIDING_ORACLE,
     tags=("ST3", "S8"),
 )
@@ -159,7 +156,6 @@ def st3_sliding_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st4_session_window",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle=f"""
 WITH gaps AS (
   SELECT user_id, ts, event_id, value,
@@ -218,7 +214,6 @@ def st4_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st5_stream_dedup",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle="""
 SELECT event_id, user_id, event_type, value
 FROM events
@@ -243,7 +238,6 @@ def st5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st6_stateful_user_totals",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle="""
 SELECT user_id,
        COUNT(*) AS n_events,
@@ -287,7 +281,6 @@ def st6_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st7_stream_static_join",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle=f"""
 SELECT c.c_nationkey,
        COUNT(*) AS n_events,
@@ -315,7 +308,6 @@ def st7_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st9_foreach_batch_sink",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle="""
 SELECT event_id, user_id, event_type, value
 FROM events
@@ -347,7 +339,6 @@ def st9_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st10_stream_stream_join",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle="""
 SELECT v.user_id,
        v.event_id AS view_id,
@@ -409,7 +400,6 @@ def st10_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st11_incremental_upsert",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle="""
 SELECT user_id,
        event_id AS last_event_id,
@@ -581,7 +571,6 @@ GROUP BY 1, 2
 
 @register(
     "st13_dedup_within_watermark",
-    window_rank=DEFER,  # driver-green r5 (CORRECTNESS_r05)
     oracle="""
 SELECT event_id, user_id, event_type, value
 FROM events

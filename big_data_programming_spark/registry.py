@@ -17,39 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-#: queries/ modules that register themselves on import (order = catalog order).
-#:
-#: Order matters operationally: the driver's correctness pass checks the
-#: FIRST 50 catalog entries only, so the window is rotated each round to
-#: give never-verified operators a driver row. ROUND 10 window
-#: (current): the 2 queries whose semantics changed this round (g1
-#: degree-oriented triangles, l5k2 prior-corrected keep gate — the
-#: standing invariant gives changed queries a same-round driver row)
-#: + the 48 stalest re-checks (r3-era w7/setops, r4-era scalar
-#: functions f1-f13, r4-era llm text/curation/dedup) — check_window's
-#: suggested r10 rotation minus its two newest-stale tail entries
-#: (l2d/l2e, rolled to r11) to make room.
-#: STANDING INVARIANT from round 7 on: every NEW query enters the NEXT
-#: round's window at the latest — no exceptions; a query never ships
-#: un-driver-checked for more than one round (round-9 additions made
-#: it into round 9's own window since slots were free).
-#: History: r9 window = the 6 r8/r9 additions + 44 stalest (r2-era
-#: joins, r3-era events/aggregations/windows) — 48 green + 2 justified
-#: no-oracle, CORRECTNESS_r09. r8 window = 11 never-checked (r7
-#: rollovers + r7 additions)
-#: + 39 stalest (tpch 22, r2-era sources, projection) — 50/50 green,
-#: CORRECTNESS_r08; never-checked hit 0 for the first time at r8 close.
-#: r7 window = 35 planned never-checked + 15 reclaimed stale
-#: slots (50/50 green, CORRECTNESS_r07; len(catalog())==304 at close).
-#: r6 window = 11 stale-red PROMOTE pins + st14-st28 +
-#: modern_sql + relational_extras (50/50 green, CORRECTNESS_r06).
-#: r5 = llm_similarity remainder + multimodal + graph + data_quality +
-#: udfs + skew + st1-st11/st13. r4 = scalar_functions + llm_text +
-#: llm_curation + llm_dedup + l3/l3b/l3c. r3 = events/aggregations/
-#: windows/setops. r2 = sources/projection/joins/tpch. All green.
-#: Counts drift as queries land: verify against len(catalog()) before
-#: each rotation, then regenerate CATALOG.md (scripts/gen_catalog.py)
-#: and run scripts/dtype_guard.py + a full scripts/drive_driver.py.
+#: queries/ modules that register themselves on import, in catalog order.
 _QUERY_MODULES = (
     "streaming_queries",
     "modern_sql",
@@ -72,74 +40,9 @@ _QUERY_MODULES = (
     "sources_queries",
     "projection",
     "joins",
-    # added in round 4 — MUST stay after the modules forming the live
-    # driver window so new entries don't displace it mid-round:
     "llm_mixing",
     "pipeline_ops",
 )
-
-#: Per-query window placement overrides (see :func:`register`'s
-#: ``window_rank``). PROMOTE sorts before every module (use to pin a
-#: specific stale query into the next driver window without dragging
-#: its whole module forward); DEFER sorts after every module (use to
-#: keep an already-driver-green query from re-occupying a window slot).
-PROMOTE = -1
-DEFER = 10_000
-
-#: ROUND 12 driver window — the central rotation list. Names here sort
-#: before every module (rank PROMOTE), overriding any per-query
-#: ``window_rank``; within the set, order is (module rank, seq), so the
-#: window composition is still a pure function of the source tree.
-#: Edit THIS set (only) when rotating; keep len == 50 == the driver's
-#: correctness-window size. Names must be copied exactly from
-#: ``list(catalog())`` — scripts/check_window.py asserts membership.
-#: Composition (optimization round 2): FIRST every query whose plan was
-#: rewritten in the r11 or r12 optimization rounds (the standing
-#: same-round-slot invariant, ordered by the r11 verdict's item 2) —
-#: the r11 simhash/tfidf rewrites l2b/l4c/l5c/l5j/lm5 that sat outside
-#: the r11 rotation, the r12 spread_fanout_input consumers (jaccard/
-#: ngram/minhash pair ops and their graph/cluster consumers), the r12
-#: l2i in-row verify, the pruned grouped-map boundaries ud4/ud6, and
-#: the NEW l2g2 bench scaling probe (new queries always enter the
-#: same-round window) — THEN the stalest re-checks from check_window's
-#: suggested r12 rotation (sk2 rolled from r11, the r5/r6-era
-#: streaming family, and the r6-era SQL-surface head). l3e_ivf_topk
-#: rotates OUT this round: its no_oracle adjudication (spark.ml
-#: k-means, rows-only by design, deterministic twin l3f) was
-#: re-affirmed in r11's verdict and OPTIMIZATION_r12.md records the
-#: dated re-adjudication; its semantics are unchanged since r5.
-_WINDOW_PROMOTE: frozenset[str] = frozenset({
-    # --- r11-rewritten, verdict item 2 (same-round driver rows) ---
-    "l2b_simhash", "l4c_tfidf_top_terms", "l5c_curation_funnel",
-    "l5j_curation_pipeline", "lm5_incremental_simhash_dedup",
-    # --- r12-rewritten: spread_fanout_input consumers ---
-    "l2_jaccard_near_dup", "l2d_dedup_clusters", "l2d2_cc_two_phase",
-    "l2n_banding_recall_audit", "l2g_ngram_jaccard",
-    "l2h_ngram_containment", "l2i_minhash_banded",
-    "l4i_decontamination",
-    "g1_triangle_counts", "g3_recursive_bfs", "g4_kcore",
-    "g5_label_propagation",
-    # --- r12-rewritten: Python-boundary column pruning ---
-    "ud4_grouped_map", "ud6_map_in_pandas",
-    # --- NEW in r12: the bench core-scaling probe ---
-    "l2g2_ngram_jaccard_shard",
-    # --- the 30 stalest re-checks (check_window r12 suggestion) ---
-    "sk2_salted_join",
-    "st1_watermark_tumbling", "st2_tumbling_complete",
-    "st3_sliding_complete", "st4_session_window", "st5_stream_dedup",
-    "st6_stateful_user_totals", "st7_stream_static_join",
-    "st9_foreach_batch_sink", "st10_stream_stream_join",
-    "st11_incremental_upsert", "st13_dedup_within_watermark",
-    "st14_checkpoint_recovery", "st16_incremental_agg_maintenance",
-    "st17_python_stream_source", "st18_rocksdb_state_store",
-    "st19_state_store_reader", "st20_update_mode",
-    "st21_dynamic_gap_session", "st22_chained_stateful",
-    "st23_foreach_row_sink", "st24_outer_stream_stream_join",
-    "st25_partitioned_stream_sink", "st26_union_of_streams",
-    "st27_streaming_hll_daily", "st28_streaming_cm_daily",
-    "s21_pipe_syntax", "s22_sql_sugar",
-    "ud12_sql_scalar_udf", "ud13_sql_table_udf",
-})
 
 
 @dataclass(frozen=True)
@@ -163,19 +66,9 @@ class Query:
     #: infeasible and which test pins the semantics instead — so the
     #: driver's ``no_oracle`` row reads as intent, not omission.
     rows_only_reason: str | None = None
-    #: None = sort by module position (the default). PROMOTE/DEFER (or
-    #: any int) override the module rank for window composition — the
-    #: query's semantics and oracle are unaffected, only catalog order.
-    window_rank: int | None = None
-    #: Registration index WITHIN the defining module (decorators run
-    #: top-to-bottom, so this is a pure function of the source file —
-    #: it breaks ties deterministically even when an early test import
-    #: registers some module before _ensure_loaded gets to it).
-    seq: int = 0
 
 
 _REGISTRY: dict[str, Query] = {}
-_MODULE_SEQ: dict[str, int] = {}
 _loaded = False
 
 
@@ -185,7 +78,6 @@ def register(
     tags: tuple[str, ...] = (),
     doc: str = "",
     rows_only_reason: str | None = None,
-    window_rank: int | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query to the catalog."""
     if oracle is None and not rows_only_reason:
@@ -196,8 +88,6 @@ def register(
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        seq = _MODULE_SEQ.get(fn.__module__, 0)
-        _MODULE_SEQ[fn.__module__] = seq + 1
         _REGISTRY[name] = Query(
             name=name,
             fn=fn,
@@ -205,8 +95,6 @@ def register(
             doc=doc or (fn.__doc__ or ""),
             tags=tags,
             rows_only_reason=rows_only_reason,
-            window_rank=window_rank,
-            seq=seq,
         )
         return fn
 
@@ -225,30 +113,17 @@ def _ensure_loaded() -> None:
 def catalog() -> dict[str, Query]:
     """The full named-query catalog (loads query modules on first use).
 
-    Order is STRUCTURAL, not import-incidental: entries sort by
-    (effective rank, module position, in-module registration index),
-    where effective rank is the module's ``_QUERY_MODULES`` position
-    unless the entry carries an explicit ``window_rank``
-    (PROMOTE/DEFER). All three key parts are pure functions of the
-    source tree, so the driver's 50-entry correctness window cannot be
-    rotated by an early ``import queries.some_module`` elsewhere (as
-    test files legitimately do)."""
+    Order is a function of the source tree alone: module position in
+    ``_QUERY_MODULES``, then registration order within the module. Each
+    module registers its queries top to bottom and ``sorted`` is stable,
+    so an early ``import queries.<late_module>`` (as test files do)
+    cannot reorder the catalog."""
     _ensure_loaded()
     mod_rank = {
         f"big_data_programming_spark.queries.{m}": i
         for i, m in enumerate(_QUERY_MODULES)
     }
-
-    def rank(n: str) -> tuple[int, int, int]:
-        q = _REGISTRY[n]
-        m = mod_rank.get(q.fn.__module__, len(mod_rank))
-        if n in _WINDOW_PROMOTE:  # central rotation list wins
-            eff = PROMOTE
-        else:
-            eff = q.window_rank if q.window_rank is not None else m
-        return (eff, m, q.seq)
-
-    names = sorted(_REGISTRY, key=rank)
+    names = sorted(_REGISTRY, key=lambda n: mod_rank[_REGISTRY[n].fn.__module__])
     return {n: _REGISTRY[n] for n in names}
 
 

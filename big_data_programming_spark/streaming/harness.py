@@ -110,11 +110,11 @@ def drain(df: DataFrame, output_mode: str) -> DataFrame:
     micro-batch that lets event-time watermarks flush final state
     (append-mode windowed aggs would otherwise under-emit). The memory
     sink holds the result table; tests and the driver read it like any
-    DataFrame. Checkpoints go to a throwaway tmpdir — a durable path is
-    a production concern, not a semantics one.
+    DataFrame. Checkpoints go to a throwaway tmpdir, removed once the
+    drain ends — a durable path is a production concern, not a
+    semantics one.
     """
     name = f"bdps_stream_sink_{next(_sink_ids)}"
-    ckpt = tempfile.mkdtemp(prefix="bdps_ckpt_", dir=_ckpt_base())
     spark = df.sparkSession
     # State-store partition count is fixed per query at first start from
     # spark.sql.shuffle.partitions. The fixture state (thousands of
@@ -128,30 +128,31 @@ def drain(df: DataFrame, output_mode: str) -> DataFrame:
     # stream sizes this to state volume/throughput, not to the bounded
     # fixture drain.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="bdps_ckpt_", dir=_ckpt_base()) as ckpt:
+        spark.conf.set("spark.sql.shuffle.partitions", "2")
+        try:
+            q = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q.awaitTermination()
     return spark.table(name)
 
 
 def drain_foreach_batch(df: DataFrame, batch_fn) -> None:
     """ST9 — drain a stream through ``foreachBatch`` (arbitrary-sink
     escape hatch: upserts, multi-sink fanout, JDBC, ...)."""
-    ckpt = tempfile.mkdtemp(prefix="bdps_ckpt_", dir=_ckpt_base())
-    q = (
-        df.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="bdps_ckpt_", dir=_ckpt_base()) as ckpt:
+        q = (
+            df.writeStream.foreachBatch(batch_fn)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()

@@ -159,10 +159,9 @@ SF01_QUADRATIC_TIER = {
 
 
 def main() -> int:
-    # --only name1,name2 restricts the drive to the given queries — the
-    # r6 advisor's process fix: run the cross-engine comparison for NEW
-    # queries in the same commit that lands their oracles, instead of
-    # deferring to the next driver window.
+    # --only name1,name2 restricts the drive to the given queries — run
+    # the cross-engine comparison for NEW queries in the same commit
+    # that lands their oracles.
     # --skip name1,name2 excludes queries; --tier sf01 is shorthand for
     # skipping SF01_QUADRATIC_TIER (the routine sf0.1 sweep).
     # --timing prints per-query wall seconds (Spark+oracle+compare).

@@ -16,8 +16,8 @@ This script scans the FULL catalog and flags, per query:
     pandas dtypes column-by-column after normalizing datetime units
     (datetime unit drift is proven safe: e1 passed r3 with ns-vs-us).
 
-Exit 0 iff no offenders.  Run before every rotation / commit that adds
-or edits a query.  tests/test_dtype_guard.py wraps the static parts.
+Exit 0 iff no offenders.  Run before every commit that adds or edits a
+query.  tests/test_dtype_guard.py wraps the static parts.
 """
 
 from __future__ import annotations

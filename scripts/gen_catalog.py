@@ -21,7 +21,13 @@ module the implementation lives in.
 """
 
 
-def main() -> None:
+CATALOG_MD = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "CATALOG.md"
+)
+
+
+def render() -> str:
+    """CATALOG.md's text for the live catalog, rows in catalog() order."""
     rows = []
     for i, (name, q) in enumerate(catalog().items(), 1):
         mod = q.fn.__module__.rsplit(".", 1)[-1]
@@ -30,10 +36,14 @@ def main() -> None:
         else:
             oracle = f"➖ rows-only: {q.rows_only_reason}"
         rows.append(f"| {i} | `{name}` | {' '.join(q.tags)} | {oracle} | {mod} |")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "CATALOG.md")
-    with open(out, "w") as f:
-        f.write(HEADER + "\n".join(rows) + "\n")
-    print(f"wrote {out}: {len(rows)} queries")
+    return HEADER + "\n".join(rows) + "\n"
+
+
+def main() -> None:
+    text = render()
+    with open(CATALOG_MD, "w") as f:
+        f.write(text)
+    print(f"wrote {CATALOG_MD}: {len(catalog())} queries")
 
 
 if __name__ == "__main__":

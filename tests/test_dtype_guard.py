@@ -16,7 +16,7 @@ and fail on the whole class before a round is lost:
 
 The heavier empirical twin (``scripts/dtype_guard.py --execute``) runs
 both sides at sf0.001 and compares actual pandas dtypes — run it when
-rotating the driver window or adding a new output-type shape.
+adding a new output-type shape.
 """
 
 from __future__ import annotations

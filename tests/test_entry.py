@@ -43,3 +43,12 @@ def test_fixture_schemas_match(spark):
         from_file = {f.name: f.dataType.simpleString() for f in inferred.schema.fields}
         assert via_load == declared, f"{t}: {via_load} != {declared}"
         assert from_file == declared, f"{t}: inferred {from_file} != declared {declared}"
+
+
+def test_catalog_md_is_current():
+    """CATALOG.md is generated; it must match the live catalog (run
+    ``python scripts/gen_catalog.py`` after adding or reordering queries)."""
+    from scripts.gen_catalog import CATALOG_MD, render
+
+    with open(CATALOG_MD) as f:
+        assert f.read() == render()

@@ -6,18 +6,34 @@ test_oracle_parity.py."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 from pyspark.sql import functions as F
 
 from big_data_programming_spark.functions.canonical import DEC
 from big_data_programming_spark.sources.loaders import load
-from big_data_programming_spark.streaming.harness import drain, events_stream
+from big_data_programming_spark.streaming.harness import (
+    _ckpt_base,
+    drain,
+    events_stream,
+)
 from tests.conftest import SMOKE_SF_DIR, spark_result
+
+
+def _ckpt_dirs() -> set[str]:
+    base = _ckpt_base() or tempfile.gettempdir()
+    return set(glob.glob(os.path.join(base, "bdps_ckpt_*")))
 
 
 def test_stream_replays_batch_rows(spark):
     """S8 smoke: the stream sees exactly the batch table (ids, µs
-    timestamps, values) after ns→µs truncation."""
+    timestamps, values) after ns→µs truncation, and the drain leaves
+    no checkpoint directory behind."""
+    before = _ckpt_dirs()
     got = drain(events_stream(spark, SMOKE_SF_DIR), "append")
+    assert _ckpt_dirs() - before == set()
     want = load(spark, SMOKE_SF_DIR, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
