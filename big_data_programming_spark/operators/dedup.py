@@ -7,6 +7,9 @@ sharing a token (inverted-index join, not cross join); SimHash reduces
 each doc to 64 bits groupable by band; MinHash-LSH (spark.ml) buckets
 by band hashes so candidate generation is equi-join shaped. At 100 TB
 the pairwise step only ever sees same-bucket candidates.
+
+Every operator reads the documents schema's ``doc_id`` and ``text``
+columns.
 """
 
 from __future__ import annotations
@@ -23,12 +26,12 @@ def normalize_text(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
-def exact_dedup_keys(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup_keys(docs: DataFrame) -> DataFrame:
     """One row per distinct normalized text: md5 key, surviving doc_id
     (deterministically the smallest), duplicate count."""
     return (
         docs.select(
-            F.md5(normalize_text(F.col(text_col)).cast("binary")).alias("content_hash"),
+            F.md5(normalize_text(F.col("text")).cast("binary")).alias("content_hash"),
             "doc_id",
         )
         .groupBy("content_hash")
@@ -46,8 +49,8 @@ def exact_dedup_keys(docs: DataFrame, text_col: str = "text") -> DataFrame:
 MAX_TOKEN_DF = 100_000
 
 
-def spread_fanout_input(docs: DataFrame, id_col: str) -> DataFrame:
-    """Hash-repartition the doc rows on the id to ``defaultParallelism``
+def spread_fanout_input(docs: DataFrame) -> DataFrame:
+    """Hash-repartition the doc rows on ``doc_id`` to ``defaultParallelism``
     before a quadratic fan-out ("one huge unsplittable file …
     repartition immediately after the read").
 
@@ -60,7 +63,7 @@ def spread_fanout_input(docs: DataFrame, id_col: str) -> DataFrame:
     without it AQE may coalesce the exchange back into one task. The
     trade at scale: one linear exchange of the pre-explode doc rows."""
     target = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.repartition(target, F.col(id_col))
+    return docs.repartition(target, F.col("doc_id"))
 
 
 #: Pair score -> (Spark expression over n_shared/n_a/n_b, DuckDB
@@ -180,8 +183,6 @@ def ngrams_sql(n: int, shard: str | None = None) -> str:
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_token_df: int | None = MAX_TOKEN_DF,
 ) -> DataFrame:
     """Exact token-set Jaccard similarity for all pairs sharing ≥1 token:
@@ -201,9 +202,9 @@ def jaccard_pairs(
     paths. Dropping a >100k-df token barely moves Jaccard for near-dup
     purposes: such tokens are stopwords shared by essentially every
     candidate pair."""
-    toks = spread_fanout_input(docs, id_col).select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("e"),
+    toks = spread_fanout_input(docs).select(
+        F.col("doc_id").alias("doc"),
+        F.explode(F.array_distinct(tokenize(F.col("text")))).alias("e"),
     )
     if max_token_df is not None:  # None = caller vouches, skip the df pass
         hot = (
@@ -216,11 +217,11 @@ def jaccard_pairs(
     return overlap_pairs(toks, threshold, "jaccard")
 
 
-def _token_sets(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _token_sets(docs: DataFrame) -> DataFrame:
     """``(doc, elems)`` distinct-token arrays for :func:`verify_pairs`."""
     return docs.select(
-        F.col(id_col).alias("doc"),
-        F.array_distinct(tokenize(F.col(text_col))).alias("elems"),
+        F.col("doc_id").alias("doc"),
+        F.array_distinct(tokenize(F.col("text"))).alias("elems"),
     )
 
 
@@ -231,7 +232,7 @@ def _token_hash60(token: Column) -> Column:
     return F.conv(F.substring(F.md5(token.cast("binary")), 1, 15), 16, 10).cast("long")
 
 
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     """SimHash signature over token hashes: for each bit position, sum
     +1/-1 votes across the document's distinct tokens; the sign vector
     is the signature (emitted as a bit string — near-duplicate docs
@@ -246,9 +247,9 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bit
     (2 Exchange → 1, ObjectHashAggregate → none). Votes are exact
     integer sums either way, so the signature is bit-identical."""
     toks = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("token"),
-    ).select(id_col, _token_hash60(F.col("token")).alias("h"))
+        F.col("doc_id"),
+        F.explode(F.array_distinct(tokenize(F.col("text")))).alias("token"),
+    ).select("doc_id", _token_hash60(F.col("token")).alias("h"))
     bit_cols = [
         F.when(
             F.sum(
@@ -262,10 +263,10 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bit
         for b in range(bits)
     ]
     return (
-        toks.groupBy(id_col)
+        toks.groupBy("doc_id")
         .agg(*bit_cols)
         .select(
-            id_col,
+            "doc_id",
             F.concat(*[F.col(f"_b{b}") for b in range(bits)]).alias("simhash_bits"),
         )
     )
@@ -291,8 +292,6 @@ FROM signs GROUP BY doc_id
 
 def minhash_lsh_candidates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     jaccard_threshold: float = 0.5,
     num_hashes: int = 32,
     margin: float = 0.1,
@@ -312,7 +311,7 @@ def minhash_lsh_candidates(
     the standard over-fetch-then-verify shape of production dedup."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    toks = docs.select(F.col(id_col), tokenize(F.col(text_col)).alias("tokens")).filter(
+    toks = docs.select(F.col("doc_id"), tokenize(F.col("text")).alias("tokens")).filter(
         F.size(F.array_distinct("tokens")) > 0
     )
     tf = HashingTF(inputCol="tokens", outputCol="features", numFeatures=1 << 18, binary=True)
@@ -323,29 +322,24 @@ def minhash_lsh_candidates(
         feat, feat, 1.0 - jaccard_threshold + margin, distCol="dist"
     )
     return (
-        pairs.filter(F.col(f"datasetA.{id_col}") < F.col(f"datasetB.{id_col}"))
+        pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
         .select(
-            F.col(f"datasetA.{id_col}").alias("doc_a"),
-            F.col(f"datasetB.{id_col}").alias("doc_b"),
+            F.col("datasetA.doc_id").alias("doc_a"),
+            F.col("datasetB.doc_id").alias("doc_b"),
             (1.0 - F.col("dist")).alias("est_jaccard"),
         )
     )
 
 
-def minhash_dedup_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """LSH candidates exact-verified against true token Jaccard — the
     full production near-dedup pipeline (generate ∪ verify), whose
     output equals the ground-truth all-pairs computation while only
     ever scoring same-bucket candidates. 32 hash tables put the
     candidate-miss probability for a true ≥0.5 pair below 1e-9, so the
     result is oracle-checkable against the exact formulation."""
-    cand = minhash_lsh_candidates(docs, text_col, id_col, jaccard_threshold=threshold)
-    return verify_pairs(cand, _token_sets(docs, text_col, id_col), threshold)
+    cand = minhash_lsh_candidates(docs, jaccard_threshold=threshold)
+    return verify_pairs(cand, _token_sets(docs), threshold)
 
 
 #: Mersenne prime 2^31-1 for the universal-hash family below. Token
@@ -353,8 +347,15 @@ def minhash_dedup_pairs(
 #: so a*h + b < 2^60 — no 64-bit overflow in either engine.
 _MINHASH_PRIME = 2147483647
 
+#: Geometry of the hand-rolled MinHash operators (l2i, l2n, lm8, lm8b,
+#: lm10): 24 universal-hash slots per signature, banded 2 rows per
+#: band into 12 bands. Recall for a true pair at similarity J is
+#: 1-(1-J^2)^12: 97% at J=0.5, >99.9% at J=0.7 (l2n audits it).
+MINHASH_HASHES = 24
+MINHASH_ROWS = 2
 
-def _minhash_constants(num_hashes: int) -> list[tuple[int, int]]:
+
+def _minhash_constants() -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the k universal hash functions
     h_s(x) = (a_s * x + b_s) mod P, derived from md5 of the seed index
     so the SAME literals are embedded in the Spark plan and the DuckDB
@@ -362,7 +363,7 @@ def _minhash_constants(num_hashes: int) -> list[tuple[int, int]]:
     import hashlib
 
     out = []
-    for s in range(num_hashes):
+    for s in range(MINHASH_HASHES):
         d = hashlib.md5(f"bdps-minhash-{s}".encode()).hexdigest()
         a = int(d[:7], 16) % (_MINHASH_PRIME - 1) + 1
         b = int(d[7:14], 16) % _MINHASH_PRIME
@@ -370,12 +371,7 @@ def _minhash_constants(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 24,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """The MinHash SIGNATURE relation ``(doc, sig: array<long>)`` —
     computed IN-ROW (distinct tokens -> 28-bit md5 base hashes -> k
     universal-hash minima, one array-HOF chain in whole-stage
@@ -383,9 +379,8 @@ def minhash_signatures(
     the persistence artifact of an incremental dedup pipeline (lm8):
     k longs per doc, never the text. Twin of the ``sigs`` CTE in
     :func:`minhash_signatures_sql`."""
-    consts = _minhash_constants(num_hashes)
-    toks_arr = F.array_distinct(tokenize(F.col(text_col)))
-    base = docs.select(F.col(id_col).alias("doc"), toks_arr.alias("ts")).filter(
+    toks_arr = F.array_distinct(tokenize(F.col("text")))
+    base = docs.select(F.col("doc_id").alias("doc"), toks_arr.alias("ts")).filter(
         F.size("ts") > 0
     )
     hv = base.select(
@@ -408,20 +403,18 @@ def minhash_signatures(
         F.array(
             *[
                 F.array_min(F.transform(F.col("h"), _uhash(a, b)))
-                for (a, b) in consts
+                for (a, b) in _minhash_constants()
             ]
         ).alias("sig"),
     )
 
 
-def minhash_bands(
-    sig: DataFrame, num_hashes: int = 24, rows_per_band: int = 2
-) -> DataFrame:
+def minhash_bands(sig: DataFrame) -> DataFrame:
     """LSH banding of a signature relation: ``(doc, band, key)`` rows,
     one per band, key = the band's signature slots joined as a string.
-    Exposed separately so the incremental path (lm8) can band the
-    history and the new batch independently of candidate generation."""
-    n_bands = num_hashes // rows_per_band
+    Exposed separately so the incremental screen
+    (:func:`incremental_minhash_matches`) can band the history and the
+    new batch independently. Twin of :func:`minhash_bands_sql`."""
     return sig.select(
         "doc",
         F.explode(
@@ -432,43 +425,32 @@ def minhash_bands(
                         F.concat_ws(
                             "-",
                             *[
-                                F.element_at("sig", j * rows_per_band + i + 1).cast(
+                                F.element_at("sig", j * MINHASH_ROWS + i + 1).cast(
                                     "string"
                                 )
-                                for i in range(rows_per_band)
+                                for i in range(MINHASH_ROWS)
                             ],
                         ).alias("key"),
                     )
-                    for j in range(n_bands)
+                    for j in range(MINHASH_HASHES // MINHASH_ROWS)
                 ]
             )
         ).alias("bk"),
     ).select("doc", "bk.band", "bk.key")
 
 
-def minhash_band_candidates(
-    docs: DataFrame,
-    num_hashes: int = 24,
-    rows_per_band: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_band_candidates(docs: DataFrame) -> DataFrame:
     """The CANDIDATE stage of :func:`minhash_banded_pairs`, exposed so
     the banding itself is auditable (l2n measures its recall against
     exact-Jaccard ground truth): distinct ``(doc_a, doc_b)`` pairs
     agreeing on all slots of >= 1 LSH band — before any exact
     verification. Twin of :func:`minhash_band_candidates_sql`."""
-    return _band_candidates(
-        spread_fanout_input(docs, id_col), num_hashes, rows_per_band, text_col, id_col
-    )
+    return _band_candidates(spread_fanout_input(docs))
 
 
-def _band_candidates(
-    docs: DataFrame, num_hashes: int, rows_per_band: int, text_col: str, id_col: str
-) -> DataFrame:
+def _band_candidates(docs: DataFrame) -> DataFrame:
     """:func:`minhash_band_candidates` over an already-spread input."""
-    sig = minhash_signatures(docs, num_hashes, text_col, id_col)
-    bands = minhash_bands(sig, num_hashes, rows_per_band)
+    bands = minhash_bands(minhash_signatures(docs))
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -482,44 +464,78 @@ def _band_candidates(
     )
 
 
-def minhash_banded_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 24,
-    rows_per_band: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_banded_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Near-dup pairs via hand-rolled MinHash + LSH banding, pure SQL
     expressions end to end (no spark.ml) — the from-first-principles
     twin of :func:`minhash_dedup_pairs`.
 
     Per doc, IN-ROW (no explode, no shuffle): distinct tokens →
-    28-bit md5 base hashes → k=``num_hashes`` universal-hash minima =
+    28-bit md5 base hashes → k=MINHASH_HASHES universal-hash minima =
     the MinHash signature, one array HOF chain in whole-stage codegen
     (O(tokens × k) multiply-mods as a pure map). Docs agreeing on ALL
-    r slots of one of the k/r bands become candidates via a
-    (band_idx, band_key) equi-join — the only shuffle moves
+    r=MINHASH_ROWS slots of one of the k/r bands become candidates via
+    a (band_idx, band_key) equi-join — the only shuffle moves
     (doc, band_key) rows, never token lists — and :func:`verify_pairs`
-    scores only those candidates. Recall for a true pair at similarity
-    J is 1-(1-J^r)^(k/r): r=2, k=24 → 97% at J=0.5, >99.9% at J=0.7;
-    borderline misses are missed IDENTICALLY by the oracle, whose hash
-    constants are shared literals (recall vs ground truth is l2n's
-    audit). The doc rows are spread once and feed both stages."""
-    docs = spread_fanout_input(docs, id_col)
-    cand = _band_candidates(docs, num_hashes, rows_per_band, text_col, id_col)
-    return verify_pairs(cand, _token_sets(docs, text_col, id_col), threshold)
+    scores only those candidates. Borderline misses (recall: see
+    MINHASH_HASHES) are missed IDENTICALLY by the oracle, whose hash
+    constants are shared literals (recall vs ground truth is
+    l2n's audit). The doc rows are spread once and feed both stages."""
+    docs = spread_fanout_input(docs)
+    return verify_pairs(_band_candidates(docs), _token_sets(docs), threshold)
 
 
-def minhash_signatures_sql(num_hashes: int = 24) -> str:
+def incremental_minhash_matches(
+    hist: DataFrame, new: DataFrame, cap: int | None
+) -> DataFrame:
+    """The incremental MinHash screen of lm8, lm8b and lm10: arrival
+    signatures ``new`` against persisted history signatures ``hist``
+    (both ``(doc, sig)``, :func:`minhash_signatures`). Both sides are
+    banded; history (band, key) buckets holding more than ``cap`` docs
+    are skipped (``None`` = no cap) by ONE key-sized grouped aggregate
+    BEFORE the candidate join, so a boilerplate bucket cannot turn the
+    cost into O(batch × hottest bucket); each distinct candidate pair
+    then counts its equal signature slots with an in-row zip-compare
+    of the two arrays (the text never participates). Output
+    ``(new_doc, hist_doc, m)``, one row per candidate; the caller
+    applies its acceptance on ``m``. DuckDB twin:
+    :func:`incremental_minhash_matches_sql`."""
+    hb = minhash_bands(hist).select(F.col("doc").alias("hist_doc"), "band", "key")
+    nb = minhash_bands(new).select(F.col("doc").alias("new_doc"), "band", "key")
+    if cap is not None:
+        cool = (
+            hb.groupBy("band", "key")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") <= cap)
+            .select("band", "key")
+        )
+        nb = nb.join(cool, ["band", "key"])
+    cand = nb.join(hb, ["band", "key"]).select("new_doc", "hist_doc").distinct()
+    ns = new.select(F.col("doc").alias("new_doc"), F.col("sig").alias("sig_n"))
+    hs = hist.select(F.col("doc").alias("hist_doc"), F.col("sig").alias("sig_h"))
+    m = F.aggregate(
+        F.zip_with(
+            F.col("sig_n"),
+            F.col("sig_h"),
+            lambda a, b: F.when(a == b, 1).otherwise(0),
+        ),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+    return (
+        cand.join(ns, "new_doc")
+        .join(hs, "hist_doc")
+        .select("new_doc", "hist_doc", m.alias("m"))
+    )
+
+
+def minhash_signatures_sql() -> str:
     """DuckDB twin of :func:`minhash_signatures` — the base/hv/sigs
     CTE fragment (``sigs`` ends the chain with columns (doc, sig)),
-    exposed so lm8's incremental oracle composes the identical
+    exposed so the incremental oracles compose the identical
     signature arithmetic."""
-    consts = _minhash_constants(num_hashes)
     sig_items = ",\n           ".join(
         f"list_min(list_transform(h, x -> ({a} * x + {b}) % {_MINHASH_PRIME}))"
-        for (a, b) in consts
+        for (a, b) in _minhash_constants()
     )
     return f"""base AS (
   SELECT doc_id AS doc, list_distinct(string_split(text, ' ')) AS ts
@@ -535,26 +551,24 @@ def minhash_signatures_sql(num_hashes: int = 24) -> str:
 )"""
 
 
-def minhash_band_key_sql(rows_per_band: int = 2) -> str:
-    """DuckDB spelling of one band's key over ``sig`` with band index
-    ``j`` in scope — twin of the key construction in
-    :func:`minhash_bands`."""
-    return " || '-' || ".join(
-        f"CAST(sig[j * {rows_per_band} + {i + 1}] AS VARCHAR)"
-        for i in range(rows_per_band)
+def minhash_bands_sql(rel: str) -> str:
+    """DuckDB twin of :func:`minhash_bands`: a SELECT of ``(doc, band,
+    key)`` rows over ``rel``, a relation with columns (doc, sig)."""
+    key = " || '-' || ".join(
+        f"CAST(sig[j * {MINHASH_ROWS} + {i + 1}] AS VARCHAR)"
+        for i in range(MINHASH_ROWS)
     )
+    n_bands = MINHASH_HASHES // MINHASH_ROWS
+    return f"""SELECT doc, g.j AS band, {key} AS key
+  FROM {rel}, (SELECT UNNEST(generate_series(0, {n_bands - 1})) AS j) g"""
 
 
-def minhash_band_candidates_sql(
-    num_hashes: int = 24, rows_per_band: int = 2
-) -> str:
+def minhash_band_candidates_sql() -> str:
     """DuckDB twin of :func:`minhash_band_candidates` — the candidate
     CTE of the banded oracle, exposed for l2n's recall audit."""
-    n_bands = num_hashes // rows_per_band
     return f"""
-WITH {minhash_signatures_sql(num_hashes)}, bands AS (
-  SELECT doc, g.j AS band, {minhash_band_key_sql(rows_per_band)} AS key
-  FROM sigs, (SELECT UNNEST(generate_series(0, {n_bands - 1})) AS j) g
+WITH {minhash_signatures_sql()}, bands AS (
+  {minhash_bands_sql("sigs")}
 )
 SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
 FROM bands a JOIN bands b
@@ -562,9 +576,36 @@ FROM bands a JOIN bands b
 """
 
 
-def minhash_banded_oracle_sql(
-    threshold: float = 0.5, num_hashes: int = 24, rows_per_band: int = 2
-) -> str:
+def incremental_minhash_matches_sql(cap: int | None) -> str:
+    """DuckDB twin of :func:`incremental_minhash_matches`: CTEs over
+    the caller's ``hist`` and ``new`` relations (doc, sig), ending in
+    ``scored(new_doc, hist_doc, m)``. The caller writes ``WITH`` and
+    defines ``hist`` and ``new`` first."""
+    sz, sz_join = "", ""
+    if cap is not None:
+        sz = f"""sz AS (
+  SELECT band, key FROM hb GROUP BY 1, 2 HAVING COUNT(*) <= {cap}
+), """
+        sz_join = "\n  JOIN sz ON nb.band = sz.band AND nb.key = sz.key"
+    return f"""hb AS (
+  {minhash_bands_sql("hist")}
+), nb AS (
+  {minhash_bands_sql("new")}
+), {sz}cand AS (
+  SELECT DISTINCT nb.doc AS new_doc, hb.doc AS hist_doc
+  FROM nb{sz_join}
+  JOIN hb ON nb.band = hb.band AND nb.key = hb.key
+), scored AS (
+  SELECT c.new_doc, c.hist_doc,
+         list_sum(list_transform(generate_series(1, {MINHASH_HASHES}),
+           i -> CASE WHEN ns.sig[i] = hs.sig[i] THEN 1 ELSE 0 END)) AS m
+  FROM cand c
+  JOIN new ns ON ns.doc = c.new_doc
+  JOIN hist hs ON hs.doc = c.hist_doc
+)"""
+
+
+def minhash_banded_oracle_sql(threshold: float = 0.5) -> str:
     """DuckDB identical-arithmetic twin of :func:`minhash_banded_pairs`
     — same md5 base hashes, same (a, b) literals, same banding, so the
     output (including any banding misses) matches value-for-value. The
@@ -572,11 +613,10 @@ def minhash_banded_oracle_sql(
     candidates: for ``threshold > 0`` a verified candidate shares a
     token, so it is exactly an overlap pair that is also a candidate."""
     exact = overlap_oracle_sql(tokens_sql(max_df=None), threshold)
-    cand = minhash_band_candidates_sql(num_hashes, rows_per_band)
     return f"""
 SELECT p.doc_a, p.doc_b, p.n_shared, p.jaccard
 FROM ({exact}) p
-JOIN ({cand}) c ON c.doc_a = p.doc_a AND c.doc_b = p.doc_b
+JOIN ({minhash_band_candidates_sql()}) c ON c.doc_a = p.doc_a AND c.doc_b = p.doc_b
 """
 
 
@@ -593,25 +633,19 @@ def char_ngrams(text: Column, n: int = 5) -> Column:
     )
 
 
-def _ngram_elems(docs: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
+def _ngram_elems(docs: DataFrame, n: int) -> DataFrame:
     """``(doc, e)``: the distinct char-``n``-grams of every doc at least
     ``n`` chars long, md5-hashed to 60-bit ints BEFORE the shuffle, so
     the inverted-index exchange moves 8-byte keys instead of n-char
     strings. DuckDB twin: :func:`ngrams_sql`."""
-    grams = spread_fanout_input(docs, id_col).filter(F.length(F.col(text_col)) >= n).select(
-        F.col(id_col).alias("doc"),
-        F.explode(char_ngrams(F.col(text_col), n)).alias("gram"),
+    grams = spread_fanout_input(docs).filter(F.length(F.col("text")) >= n).select(
+        F.col("doc_id").alias("doc"),
+        F.explode(char_ngrams(F.col("text"), n)).alias("gram"),
     )
     return grams.select("doc", _token_hash60(F.col("gram")).alias("e"))
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float,
-    n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float, n: int = 5) -> DataFrame:
     """Exact character-n-gram Jaccard near-duplicate pairs.
 
     Shingling on character n-grams (vs whitespace tokens in
@@ -622,16 +656,10 @@ def ngram_jaccard_pairs(
     (:func:`_ngram_elems`) go through :func:`overlap_pairs`; the hash
     is portable, so ``overlap_oracle_sql(ngrams_sql(n), threshold)``
     replays it bit-for-bit."""
-    return overlap_pairs(_ngram_elems(docs, n, text_col, id_col), threshold, "jaccard")
+    return overlap_pairs(_ngram_elems(docs, n), threshold, "jaccard")
 
 
-def ngram_containment_pairs(
-    docs: DataFrame,
-    threshold: float,
-    n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ngram_containment_pairs(docs: DataFrame, threshold: float, n: int = 5) -> DataFrame:
     """Character-n-gram CONTAINMENT near-dup pairs: |A∩B| / min(|A|,|B|).
 
     The subset-detection complement of :func:`ngram_jaccard_pairs`:
@@ -642,39 +670,68 @@ def ngram_containment_pairs(
     with ``score="containment"``: only the final scoring denominator
     differs (min() instead of union size). DuckDB twin:
     ``overlap_oracle_sql(ngrams_sql(n), threshold, "containment")``."""
-    return overlap_pairs(
-        _ngram_elems(docs, n, text_col, id_col), threshold, "containment"
+    return overlap_pairs(_ngram_elems(docs, n), threshold, "containment")
+
+
+#: Winnowing geometry (Schleimer, Wilkerson & Aiken 2003): 8-token
+#: grams, windows of 4 gram hashes. Guarantee: any cross-doc shared run
+#: of >= WINNOW_W + WINNOW_K - 1 = 11 tokens shares a fingerprint
+#: (winnowing detects all matches of length >= w+k-1), independent of
+#: alignment.
+WINNOW_K = 8
+WINNOW_W = 4
+
+
+def _winnow(docs: DataFrame, pick) -> tuple[DataFrame, Column]:
+    """The winnowing selection shared by :func:`winnowed_span_stats`
+    and :func:`winnowed_span_extents`: ``(doc_id, n_toks, grams)`` rows
+    (the md5 of every WINNOW_K-token gram, in row) plus the array of
+    ``pick(window, j)`` over every window of WINNOW_W consecutive gram
+    hashes, ``j`` being the window's 1-based start. The caller must
+    explode that array in the same ``select`` that builds it: projected
+    as a column first, it lets Catalyst infer a ``size(..) > 0``
+    Filter that recomputes every gram's md5. Twin of
+    :func:`_winnow_sql`."""
+    n = F.size("toks")
+    grams = F.transform(
+        F.sequence(F.lit(1), F.greatest(n - (WINNOW_K - 1), F.lit(1))),
+        lambda i: F.md5(
+            F.concat_ws(" ", F.slice(F.col("toks"), i, WINNOW_K)).cast("binary")
+        ),
     )
+    t = docs.select(
+        "doc_id", F.split(F.col("text"), " ").alias("toks")
+    ).select("doc_id", n.alias("n_toks"), grams.alias("grams"))
+    m = F.size("grams")
+    picks = F.transform(
+        F.sequence(F.lit(1), F.greatest(m - (WINNOW_W - 1), F.lit(1))),
+        lambda j: pick(F.slice(F.col("grams"), j, WINNOW_W), j),
+    )
+    return t, picks
 
 
-def winnowed_span_stats(
-    docs: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnowed_span_stats(docs: DataFrame) -> DataFrame:
     """Per-document cross-corpus duplicated-span statistics via
     winnowing fingerprints (Schleimer, Wilkerson & Aiken 2003, the
     MOSS algorithm), the distributed stand-in for Lee et al. 2022's
     suffix-array ExactSubstr dedup; l2k is the catalog wrapper.
 
-    Construction (all in-row, per document): md5 every k-token gram,
-    then in each sliding window of w consecutive gram hashes keep the
-    minimum — the winnowed fingerprint set. Selection is CONTENT-
-    DEFINED: a gram's hash decides whether it is kept, so two
-    documents sharing a token run select the same fingerprints from
-    it regardless of where the run sits in each document (a fixed
-    stride grid does not have this property — runs at different
-    alignments mod stride would hash disjoint window sets and be
-    missed). Winnowing theorem: any shared run of >= w+k-1 tokens
-    shares at least one fingerprint, so both documents are flagged —
-    a worst-case guarantee, not an expectation. A fingerprint is
-    "duplicated" when it occurs in >= 2 DISTINCT documents, so a
-    document's internal repetition (l4h's signal) does not count as
-    corpus duplication.
+    Construction (all in-row, per document, :func:`_winnow`): md5
+    every k-token gram, then in each sliding window of w consecutive
+    gram hashes keep the minimum — the winnowed fingerprint set.
+    Selection is CONTENT-DEFINED: a gram's hash decides whether it is
+    kept, so two documents sharing a token run select the same
+    fingerprints from it regardless of where the run sits in each
+    document (a fixed stride grid does not have this property — runs
+    at different alignments mod stride would hash disjoint window sets
+    and be missed). Winnowing theorem: any shared run of >= w+k-1
+    tokens shares at least one fingerprint, so both documents are
+    flagged — a worst-case guarantee, not an expectation. A
+    fingerprint is "duplicated" when it occurs in >= 2 DISTINCT
+    documents, so a document's internal repetition (l4h's signal) does
+    not count as corpus duplication.
 
-    Output: ``(id, n_fingerprints, n_dup_fingerprints, dup_frac)``.
+    Output: ``(doc_id, n_fingerprints, n_dup_fingerprints, dup_frac)``.
 
     Scale shape: fingerprinting is a pure map (array HOFs, ~2/(w+1)
     of gram positions survive); the dup-set aggregate and the join
@@ -682,37 +739,23 @@ def winnowed_span_stats(
     the per-doc rollup is one hash aggregate. No all-pairs, no suffix
     array — linear in corpus tokens, which is what runs at 100 TB.
     """
-    n = F.size("toks")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.md5(
-            F.concat_ws(" ", F.slice(F.col("toks"), i, k)).cast("binary")
-        ),
-    )
-    t = docs.select(id_col, F.split(F.col(text_col), " ").alias("toks")).select(
-        id_col, grams.alias("grams")
-    )
-    m = F.size("grams")
-    mins = F.transform(
-        F.sequence(F.lit(1), F.greatest(m - (w - 1), F.lit(1))),
-        lambda j: F.array_min(F.slice(F.col("grams"), j, w)),
-    )
-    fps = t.select(id_col, F.explode(F.array_distinct(mins)).alias("h"))
+    t, mins = _winnow(docs, lambda win, j: F.array_min(win))
+    fps = t.select("doc_id", F.explode(F.array_distinct(mins)).alias("h"))
     dup = (
         fps.groupBy("h")
-        .agg(F.count_distinct(id_col).alias("nd"))
+        .agg(F.count_distinct("doc_id").alias("nd"))
         .filter(F.col("nd") >= 2)
         .select("h", F.lit(1).alias("is_dup"))
     )
     return (
         fps.join(dup, "h", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_fingerprints"),
             F.sum(F.coalesce(F.col("is_dup"), F.lit(0))).alias("n_dup_fingerprints"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_fingerprints",
             "n_dup_fingerprints",
             (
@@ -722,14 +765,7 @@ def winnowed_span_stats(
     )
 
 
-def winnowed_span_extents(
-    docs: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    materialize: bool = True,
-) -> DataFrame:
+def winnowed_span_extents(docs: DataFrame) -> DataFrame:
     """Duplicated-span EXTENTS — the actual removal artifact of Lee et
     al. 2022's ExactSubstr dedup: per document, the merged
     ``[span_start, span_end]`` token ranges (1-based, inclusive)
@@ -766,81 +802,65 @@ def winnowed_span_extents(
     Materialization (the semdedup/l5e4 discipline, r6 advisor
     finding): the selected-fingerprint relation feeds TWO consumers —
     the duplicated-fingerprint aggregate and the semi-join mark probe
-    — so an unmaterialized run tokenizes and winnows the corpus
-    twice. ``materialize=True`` (the default, and what the registered
-    l2k2/l2k3 queries use) persists it (spill-safe MEMORY_AND_DISK)
-    at exactly the point a production ExactSubstr pipeline writes its
-    fingerprint table out between the select and dedup stages;
-    ``materialize=False`` exposes the raw lineage for plan tests and
-    tiny-input property tests. Same lifetime note as semdedup: no
-    in-function release point (the return is lazy); callers that loop
-    can release via session.release_caches(spark)."""
+    — so an unmaterialized run would tokenize and winnow the corpus
+    twice. It is persisted (spill-safe MEMORY_AND_DISK) at exactly the
+    point a production ExactSubstr pipeline writes its fingerprint
+    table out between the select and dedup stages. Same lifetime note
+    as semdedup: no in-function release point (the return is lazy);
+    callers that loop can release via session.release_caches(spark)."""
     from pyspark.sql import Window
+    from pyspark.storagelevel import StorageLevel
 
-    n = F.size("toks")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.md5(
-            F.concat_ws(" ", F.slice(F.col("toks"), i, k)).cast("binary")
-        ),
+    k = WINNOW_K
+    t, min_pos = _winnow(
+        docs,
+        lambda win, j: j.cast("bigint") - 1 + F.array_position(win, F.array_min(win)),
     )
-    t = docs.select(
-        id_col, F.split(F.col(text_col), " ").alias("toks")
-    ).select(id_col, n.alias("n_toks"), grams.alias("grams"))
-    m = F.size("grams")
-    min_pos = F.transform(
-        F.sequence(F.lit(1), F.greatest(m - (w - 1), F.lit(1))),
-        lambda j: (
-            j.cast("bigint")
-            - 1
-            + F.array_position(
-                F.slice(F.col("grams"), j, w),
-                F.array_min(F.slice(F.col("grams"), j, w)),
-            )
-        ),
+    sel = (
+        t.select(
+            "doc_id",
+            "n_toks",
+            "grams",
+            F.explode(F.array_distinct(min_pos)).alias("pos"),
+        )
+        .select(
+            "doc_id",
+            "n_toks",
+            "pos",
+            F.element_at("grams", F.col("pos").cast("int")).alias("h"),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sel = t.select(
-        id_col,
-        "n_toks",
-        "grams",
-        F.explode(F.array_distinct(min_pos)).alias("pos"),
-    ).select(
-        id_col, "n_toks", "pos", F.element_at("grams", F.col("pos").cast("int")).alias("h")
-    )
-    if materialize:
-        from pyspark.storagelevel import StorageLevel
-
-        sel = sel.persist(StorageLevel.MEMORY_AND_DISK)
     dup = (
         sel.groupBy("h")
-        .agg(F.count_distinct(id_col).alias("nd"))
+        .agg(F.count_distinct("doc_id").alias("nd"))
         .filter(F.col("nd") >= 2)
         .select("h")
     )
-    marked = sel.join(dup, "h", "semi").select(id_col, "n_toks", "pos")
-    wdoc = Window.partitionBy(id_col).orderBy("pos")
+    marked = sel.join(dup, "h", "semi").select("doc_id", "n_toks", "pos")
+    wdoc = Window.partitionBy("doc_id").orderBy("pos")
     brk = F.when(
         F.lag("pos").over(wdoc).isNull()
         | (F.col("pos") > F.lag("pos").over(wdoc) + k),
         1,
     ).otherwise(0)
-    grp = marked.select(id_col, "n_toks", "pos", brk.alias("brk")).select(
-        id_col, "n_toks", "pos", F.sum("brk").over(wdoc).alias("grp")
+    grp = marked.select("doc_id", "n_toks", "pos", brk.alias("brk")).select(
+        "doc_id", "n_toks", "pos", F.sum("brk").over(wdoc).alias("grp")
     )
     span_end = F.least(F.max("pos") + (k - 1), F.max("n_toks"))
-    return grp.groupBy(id_col, "grp").agg(
+    return grp.groupBy("doc_id", "grp").agg(
         F.min("pos").alias("span_start"),
         span_end.alias("span_end"),
         (span_end - F.min("pos") + 1).alias("span_tokens"),
-    ).select(id_col, "span_start", "span_end", "span_tokens")
+    ).select("doc_id", "span_start", "span_end", "span_tokens")
 
 
-def winnowed_extents_oracle_sql(k: int = 8, w: int = 4) -> str:
-    """DuckDB twin of :func:`winnowed_span_extents` — identical gram
-    hashing, identical first-index argmin selection, identical merge
-    rule and clamping."""
-    return f"""
-WITH t AS (
+def _winnow_sql() -> str:
+    """DuckDB twin of :func:`_winnow`: the t/g/sel CTE fragment ending
+    in ``sel(doc_id, n_toks, pos, h)``, one row per distinct selected
+    position with its gram hash (first-index argmin of each window)."""
+    k, w = WINNOW_K, WINNOW_W
+    return f"""t AS (
   SELECT doc_id, string_split(text, ' ') AS toks FROM documents
 ), g AS (
   SELECT doc_id, LEN(toks) AS n_toks,
@@ -855,7 +875,16 @@ WITH t AS (
                                                          list_min(list_slice(grams, j, j + {w - 1})))) AS mins
         FROM g),
        UNNEST(mins) AS u(pos)
-), dup AS (
+)"""
+
+
+def winnowed_extents_oracle_sql() -> str:
+    """DuckDB twin of :func:`winnowed_span_extents` — identical gram
+    hashing, identical first-index argmin selection, identical merge
+    rule and clamping."""
+    k = WINNOW_K
+    return f"""
+WITH {_winnow_sql()}, dup AS (
   SELECT h FROM sel GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
 ), marked AS (
   SELECT doc_id, n_toks, pos FROM sel WHERE h IN (SELECT h FROM dup)
@@ -879,24 +908,14 @@ GROUP BY doc_id, grp
 """
 
 
-def winnowed_span_oracle_sql(k: int = 8, w: int = 4) -> str:
+def winnowed_span_oracle_sql() -> str:
     """DuckDB twin of :func:`winnowed_span_stats` — identical gram
-    hashing, identical window-min selection, identical dup rule."""
+    hashing, identical window-min selection (the hashes at the
+    selected argmin positions ARE the window minima), identical dup
+    rule."""
     return f"""
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), g AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, GREATEST(LEN(toks) - {k - 1}, 1)),
-                        i -> md5(array_to_string(list_slice(toks, i, i + {k - 1}), ' '))) AS grams
-  FROM t
-), fp AS (
-  SELECT DISTINCT doc_id, u.h
-  FROM (SELECT doc_id,
-               list_transform(generate_series(1, GREATEST(LEN(grams) - {w - 1}, 1)),
-                              j -> list_min(list_slice(grams, j, j + {w - 1}))) AS mins
-        FROM g),
-       UNNEST(mins) AS u(h)
+WITH {_winnow_sql()}, fp AS (
+  SELECT DISTINCT doc_id, h FROM sel
 ), dup AS (
   SELECT h FROM fp GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
 )

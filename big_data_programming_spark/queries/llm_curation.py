@@ -242,7 +242,7 @@ def l4i_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1); a no-op at real scale."""
     from big_data_programming_spark.operators.dedup import spread_fanout_input
 
-    d = spread_fanout_input(load(spark, sf_dir, "documents"), "doc_id")
+    d = spread_fanout_input(load(spark, sf_dir, "documents"))
     toks = tokenize(F.col("text"))
     shingles = F.array_distinct(shingle_hashes(toks, _DECON_K))
     shingled = d.select("doc_id", shingles.alias("sh"))

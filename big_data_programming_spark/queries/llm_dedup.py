@@ -359,7 +359,7 @@ def l2d2_cc_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l2i_minhash_banded",
-    oracle=minhash_banded_oracle_sql(threshold=0.5, num_hashes=24, rows_per_band=2),
+    oracle=minhash_banded_oracle_sql(threshold=0.5),
     tags=("L2", "L7", "F7", "F4", "J1"),
 )
 def l2i_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,9 +372,7 @@ def l2i_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures, banding, misses and all — value-for-value. Banding
     recall math and the 100 TB cost shape are in the operator
     docstring."""
-    return minhash_banded_pairs(
-        load(spark, sf_dir, "documents"), threshold=0.5, num_hashes=24, rows_per_band=2
-    )
+    return minhash_banded_pairs(load(spark, sf_dir, "documents"), threshold=0.5)
 
 
 @register(
@@ -496,17 +494,9 @@ def l1c_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Winnowing geometry: 8-token grams, window of 4 gram hashes —
-#: guarantee: any cross-doc shared run of >= 4+8-1 = 11 tokens shares
-#: a fingerprint (Schleimer et al. 2003, Theorem: winnowing detects
-#: all matches of length >= w+k-1), independent of alignment.
-_WIN_K = 8
-_WIN_W = 4
-
-
 @register(
     "l2k_duplicate_ngram_spans",
-    oracle=winnowed_span_oracle_sql(_WIN_K, _WIN_W),
+    oracle=winnowed_span_oracle_sql(),
     tags=("L2", "L1", "A1", "F4"),
 )
 def l2k_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,7 +513,7 @@ def l2k_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     no all-pairs, no suffix array — see the operator docstring for
     the 100 TB plan shape. Raw IEEE integer division, no rounding."""
     d = load(spark, sf_dir, "documents")
-    return winnowed_span_stats(d, k=_WIN_K, w=_WIN_W)
+    return winnowed_span_stats(d)
 
 
 @register(
@@ -605,7 +595,7 @@ def l2n_banding_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l2k2_duplicate_span_extents",
-    oracle=winnowed_extents_oracle_sql(_WIN_K, _WIN_W),
+    oracle=winnowed_extents_oracle_sql(),
     tags=("L2", "L1", "W4", "F4"),
 )
 def l2k2_duplicate_span_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -625,13 +615,13 @@ def l2k2_duplicate_span_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
     over MARKED positions only — bounded by duplication volume, not
     corpus size."""
     d = load(spark, sf_dir, "documents")
-    return winnowed_span_extents(d, k=_WIN_K, w=_WIN_W)
+    return winnowed_span_extents(d)
 
 
 @register(
     "l2k3_exactsubstr_strip",
     oracle=f"""
-WITH ext AS (SELECT * FROM ({winnowed_extents_oracle_sql(_WIN_K, _WIN_W)})),
+WITH ext AS (SELECT * FROM ({winnowed_extents_oracle_sql()})),
 sp AS (
   SELECT doc_id, list({{'s': span_start, 'e': span_end}} ORDER BY span_start) AS spans
   FROM ext GROUP BY doc_id
@@ -681,7 +671,7 @@ def l2k3_exactsubstr_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests; the re-expanded fragments are in-row maps over the scan,
     not corpus-wide joins."""
     d = load(spark, sf_dir, "documents")
-    spans = winnowed_span_extents(d, k=_WIN_K, w=_WIN_W)
+    spans = winnowed_span_extents(d)
     sp = spans.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(

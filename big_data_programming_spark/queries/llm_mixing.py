@@ -22,6 +22,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_programming_spark.functions.canonical import DEC, davg
+from big_data_programming_spark.operators.dedup import (
+    MINHASH_HASHES,
+    incremental_minhash_matches,
+    incremental_minhash_matches_sql,
+    minhash_signatures,
+    minhash_signatures_sql,
+)
 from big_data_programming_spark.operators.similarity import (
     as_double_array,
     cosine_similarity_col,
@@ -668,48 +675,25 @@ def lm7_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: lm8 incremental-MinHash geometry: the lm5 history/new-batch split
-#: (doc_id % 10 = 9 plays the arrivals), l2i's 24-hash / 2-rows-per-
-#: band signatures, and a >= 12-of-24 matching-component acceptance
-#: (estimated Jaccard >= 0.5 — the l2n-audited operating point).
-_LM8_K = 24
-_LM8_R = 2
+#: lm8 incremental-MinHash acceptance: the lm5 history/new-batch split
+#: (doc_id % 10 = 9 plays the arrivals), l2i's MinHash geometry
+#: (operators/dedup.py MINHASH_*), and a >= 12-of-24 matching-component
+#: acceptance (estimated Jaccard >= 0.5 — the l2n-audited operating
+#: point).
 _LM8_MIN_MATCH = 12
 
 
-def _lm8_oracle() -> str:
-    from big_data_programming_spark.operators.dedup import (
-        minhash_band_key_sql,
-        minhash_signatures_sql,
-    )
-
-    n_bands = _LM8_K // _LM8_R
+def _lm8_oracle(cap: int | None) -> str:
     return f"""
-WITH {minhash_signatures_sql(_LM8_K)},
+WITH {minhash_signatures_sql()},
 hist AS (SELECT * FROM sigs WHERE doc % 10 <> 9),
 new AS (SELECT * FROM sigs WHERE doc % 10 = 9),
-hb AS (
-  SELECT doc, g.j AS band, {minhash_band_key_sql(_LM8_R)} AS key
-  FROM hist, (SELECT UNNEST(generate_series(0, {n_bands - 1})) AS j) g
-), nb AS (
-  SELECT doc, g.j AS band, {minhash_band_key_sql(_LM8_R)} AS key
-  FROM new, (SELECT UNNEST(generate_series(0, {n_bands - 1})) AS j) g
-), cand AS (
-  SELECT DISTINCT nb.doc AS new_doc, hb.doc AS hist_doc
-  FROM nb JOIN hb ON nb.band = hb.band AND nb.key = hb.key
-), scored AS (
-  SELECT c.new_doc, c.hist_doc,
-         list_sum(list_transform(generate_series(1, {_LM8_K}),
-           i -> CASE WHEN ns.sig[i] = hs.sig[i] THEN 1 ELSE 0 END)) AS m
-  FROM cand c
-  JOIN new ns ON ns.doc = c.new_doc
-  JOIN hist hs ON hs.doc = c.hist_doc
-)
+{incremental_minhash_matches_sql(cap)}
 SELECT new_doc AS new_doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_near_dups,
        CAST(MAX(m) AS BIGINT) AS best_matching,
-       ROUND(CAST(MAX(m) AS DOUBLE) / {_LM8_K}, 6) AS best_est_jaccard,
-       (MIN(struct_pack(k := {_LM8_K} - m, id := hist_doc))).id AS dup_of
+       ROUND(CAST(MAX(m) AS DOUBLE) / {MINHASH_HASHES}, 6) AS best_est_jaccard,
+       (MIN(struct_pack(k := {MINHASH_HASHES} - m, id := hist_doc))).id AS dup_of
 FROM scored
 WHERE m >= {_LM8_MIN_MATCH}
 GROUP BY 1
@@ -718,7 +702,7 @@ GROUP BY 1
 
 @register(
     "lm8_incremental_minhash_dedup",
-    oracle=_lm8_oracle(),
+    oracle=_lm8_oracle(None),
     tags=("L2", "L1", "J1", "F10"),
 )
 def lm8_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -740,50 +724,30 @@ def lm8_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     Plan shape: signatures are in-row array-HOF chains
     (operators/dedup.py:minhash_signatures — the SAME stage the batch
     l2i pipeline runs, so history and arrivals provably share
-    arithmetic); the band join shuffles only (doc, band_key) rows of
-    the NEW batch against band-bucketed history; the match count is
-    an in-row zip-compare of two 24-long arrays per CANDIDATE (no
-    token re-read — the text never participates). At 100 TB the
-    history side is 192 bytes/doc and the incremental cost is bounded
-    by the arrival batch times its candidate fan-out, exactly why
-    production web dedup persists signatures, not shingles.
+    arithmetic); the screen is operators/dedup.py:
+    incremental_minhash_matches (uncapped here): the band join
+    shuffles only (doc, band_key) rows of the NEW batch against
+    band-bucketed history, and the match count is an in-row
+    zip-compare of two 24-long arrays per CANDIDATE (no token re-read
+    — the text never participates). At 100 TB the history side is
+    192 bytes/doc and the incremental cost is bounded by the arrival
+    batch times its candidate fan-out, exactly why production web
+    dedup persists signatures, not shingles.
     Determinism: integer match counts, ROUND only at the reported
     estimate; the (highest-match, lowest-id) tie-break is a structural
     MIN over a (24-m, id) struct — lexicographic in both engines, so
     it holds at ANY doc-id magnitude (an arithmetic key like
     (24-m)*1e6+id would silently stop encoding the priority once ids
     pass the multiplier — the 100 TB corpora this docstring targets)."""
-    from big_data_programming_spark.operators.dedup import (
-        minhash_bands,
-        minhash_signatures,
-    )
+    return _lm8(spark, sf_dir, None)
 
-    docs = load(spark, sf_dir, "documents")
-    sig = minhash_signatures(docs, num_hashes=_LM8_K)
-    hist = sig.filter(F.col("doc") % 10 != 9)
-    new = sig.filter(F.col("doc") % 10 == 9)
-    hb = minhash_bands(hist, num_hashes=_LM8_K, rows_per_band=_LM8_R).select(
-        F.col("doc").alias("hist_doc"), "band", "key"
-    )
-    nb = minhash_bands(new, num_hashes=_LM8_K, rows_per_band=_LM8_R).select(
-        F.col("doc").alias("new_doc"), "band", "key"
-    )
-    cand = nb.join(hb, ["band", "key"]).select("new_doc", "hist_doc").distinct()
-    ns = new.select(F.col("doc").alias("new_doc"), F.col("sig").alias("sig_n"))
-    hs = hist.select(F.col("doc").alias("hist_doc"), F.col("sig").alias("sig_h"))
-    m = F.aggregate(
-        F.zip_with(
-            F.col("sig_n"),
-            F.col("sig_h"),
-            lambda a, b: F.when(a == b, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        cand.join(ns, "new_doc")
-        .join(hs, "hist_doc")
-        .select("new_doc", "hist_doc", m.alias("m"))
+
+def _lm8(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame:
+    """lm8/lm8b body with the hot-bucket ceiling as a parameter (lm8
+    passes None, lm8b _LM8B_CAP); twin of :func:`_lm8_oracle`."""
+    sig = minhash_signatures(load(spark, sf_dir, "documents"))
+    scored = incremental_minhash_matches(
+        sig.filter(F.col("doc") % 10 != 9), sig.filter(F.col("doc") % 10 == 9), cap
     )
     return (
         scored.filter(F.col("m") >= _LM8_MIN_MATCH)
@@ -791,12 +755,12 @@ def lm8_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_near_dups"),
             F.max("m").cast("bigint").alias("best_matching"),
-            F.round(F.max("m").cast("double") / _LM8_K, 6).alias(
+            F.round(F.max("m").cast("double") / MINHASH_HASHES, 6).alias(
                 "best_est_jaccard"
             ),
             F.min(
                 F.struct(
-                    (F.lit(_LM8_K) - F.col("m")).cast("long").alias("k"),
+                    (F.lit(MINHASH_HASHES) - F.col("m")).cast("long").alias("k"),
                     F.col("hist_doc").alias("id"),
                 )
             )
@@ -934,10 +898,6 @@ _LM10_STAGES = (
 
 
 def _lm10_oracle() -> str:
-    from big_data_programming_spark.operators.dedup import (
-        minhash_band_key_sql,
-        minhash_signatures_sql,
-    )
     from big_data_programming_spark.operators.text import (
         STOPWORDS,
         l5i_weights_sql,
@@ -945,40 +905,20 @@ def _lm10_oracle() -> str:
     )
     from big_data_programming_spark.queries.llm_curation import funnel_tail_sql
 
-    n_bands = _LM8_K // _LM8_R
     stop = ", ".join(f"'{w}'" for w in STOPWORDS)
     first_fail = " ".join(f"WHEN {s} THEN '{s}'" for s in _LM10_STAGES)
     return f"""
-WITH {minhash_signatures_sql(_LM8_K)},
+WITH {minhash_signatures_sql()},
 w AS (SELECT {l5i_weights_sql()} AS wv),
 hist_h AS (
   SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 10 <> 9
-), new AS (
+), arrivals AS (
   SELECT doc_id, source, md5(text) AS h, string_split(text, ' ') AS toks
   FROM documents WHERE doc_id % 10 = 9
-), hb AS (
-  SELECT doc, g.j AS band, {minhash_band_key_sql(_LM8_R)} AS key
-  FROM (SELECT * FROM sigs WHERE doc % 10 <> 9) sig_h,
-       (SELECT UNNEST(generate_series(0, {n_bands - 1})) AS j) g
-), nb AS (
-  SELECT doc, g.j AS band, {minhash_band_key_sql(_LM8_R)} AS key
-  FROM (SELECT * FROM sigs WHERE doc % 10 = 9) sig_n,
-       (SELECT UNNEST(generate_series(0, {n_bands - 1})) AS j) g
-), sz AS (
-  SELECT band, key FROM hb GROUP BY 1, 2 HAVING COUNT(*) <= {_LM8B_CAP}
-), cand AS (
-  SELECT DISTINCT nb.doc AS new_doc, hb.doc AS hist_doc
-  FROM nb
-  JOIN sz ON nb.band = sz.band AND nb.key = sz.key
-  JOIN hb ON nb.band = hb.band AND nb.key = hb.key
-), nd AS (
-  SELECT DISTINCT c.new_doc AS doc_id
-  FROM cand c
-  JOIN sigs ns ON ns.doc = c.new_doc
-  JOIN sigs hs ON hs.doc = c.hist_doc
-  WHERE list_sum(list_transform(generate_series(1, {_LM8_K}),
-          i -> CASE WHEN ns.sig[i] = hs.sig[i] THEN 1 ELSE 0 END))
-        >= {_LM8_MIN_MATCH}
+), hist AS (SELECT * FROM sigs WHERE doc % 10 <> 9),
+new AS (SELECT * FROM sigs WHERE doc % 10 = 9),
+{incremental_minhash_matches_sql(_LM8B_CAP)}, nd AS (
+  SELECT DISTINCT new_doc AS doc_id FROM scored WHERE m >= {_LM8_MIN_MATCH}
 ), flags AS (
   SELECT n.source, CAST(LEN(n.toks) AS BIGINT) AS n_tokens,
          hh.h IS NOT NULL AS exact_dup_hist,
@@ -986,7 +926,7 @@ hist_h AS (
          LEN(list_filter(n.toks, x -> x IN ({stop}))) < 2 AS low_stopword,
          {quality_logit_sql('n.toks', 'wv')} <= 0 AS low_quality,
          nd.doc_id IS NOT NULL AS near_dup_minhash_hist
-  FROM new n
+  FROM arrivals n
   CROSS JOIN w
   LEFT JOIN hist_h hh ON hh.h = n.h
   LEFT JOIN nd ON nd.doc_id = n.doc_id
@@ -1019,12 +959,14 @@ def lm10_incremental_curation_funnel(
     Plan shape: the exact screen is a hash-keyed left join of the
     arrival batch against the persisted hash set (16-byte keys, no
     text); the gates ride the arrival scan in-row (the wv model is
-    one broadcast row); the fuzzy screen is lm8b's CAPPED banded
-    equi-join of arrival band keys against history band keys with the
-    in-row 24-slot signature compare — history (band, key) buckets
-    larger than _LM8B_CAP are skipped BEFORE the signature join (one
-    key-sized grouped aggregate + HAVING, incrementally maintainable
-    as a per-key count at 100 TB), so a boilerplate bucket can no
+    one broadcast row); the fuzzy screen is lm8b's CAPPED screen
+    (operators/dedup.py:incremental_minhash_matches with cap
+    _LM8B_CAP): a banded equi-join of arrival band keys against
+    history band keys with the in-row 24-slot signature compare —
+    history (band, key) buckets larger than the cap are skipped
+    BEFORE the signature join (one key-sized grouped aggregate +
+    HAVING, incrementally maintainable as a per-key count at
+    100 TB), so a boilerplate bucket can no
     longer turn the daily cost into O(batch x hottest-bucket) — the
     r8 verdict's remaining seam, closed. Every history-sized
     structure is keyed state, every shuffle moves hashes. At 100 TB
@@ -1039,10 +981,6 @@ def _lm10_funnel(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
     """lm10 body with the hot-bucket ceiling as a parameter, so the
     property test can diff the capped funnel against the uncapped one
     (cap=None) — same discipline as the lm8/lm8b pair."""
-    from big_data_programming_spark.operators.dedup import (
-        minhash_bands,
-        minhash_signatures,
-    )
     from big_data_programming_spark.operators.text import (
         L5I_WEIGHTS,
         STOPWORDS,
@@ -1064,45 +1002,12 @@ def _lm10_funnel(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
         F.md5(F.col("text").cast("binary")).alias("h"),
         tokenize(F.col("text")).alias("toks"),
     )
-    sig = minhash_signatures(d, num_hashes=_LM8_K)
-    hist_sig = sig.filter(F.col("doc") % 10 != 9)
-    new_sig = sig.filter(F.col("doc") % 10 == 9)
-    hb = minhash_bands(hist_sig, num_hashes=_LM8_K, rows_per_band=_LM8_R).select(
-        F.col("doc").alias("hist_doc"), "band", "key"
-    )
-    nb = minhash_bands(new_sig, num_hashes=_LM8_K, rows_per_band=_LM8_R).select(
-        F.col("doc").alias("new_doc"), "band", "key"
-    )
-    if cap is not None:
-        cool = (
-            hb.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") <= cap)
-            .select("band", "key")
-        )
-        nb = nb.join(cool, ["band", "key"])
-    cand = nb.join(hb, ["band", "key"]).select("new_doc", "hist_doc").distinct()
-    m = F.aggregate(
-        F.zip_with(
-            F.col("sig_n"),
-            F.col("sig_h"),
-            lambda a, b: F.when(a == b, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
+    sig = minhash_signatures(d)
     nd = (
-        cand.join(
-            new_sig.select(F.col("doc").alias("new_doc"), F.col("sig").alias("sig_n")),
-            "new_doc",
+        incremental_minhash_matches(
+            sig.filter(F.col("doc") % 10 != 9), sig.filter(F.col("doc") % 10 == 9), cap
         )
-        .join(
-            hist_sig.select(
-                F.col("doc").alias("hist_doc"), F.col("sig").alias("sig_h")
-            ),
-            "hist_doc",
-        )
-        .filter(m >= _LM8_MIN_MATCH)
+        .filter(F.col("m") >= _LM8_MIN_MATCH)
         .select(F.col("new_doc").alias("doc_id"))
         .distinct()
         .select("doc_id", F.lit(True).alias("_nd"))
@@ -1135,52 +1040,9 @@ def _lm10_funnel(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
     return verdict_funnel(spark, v, _LM10_STAGES)
 
 
-def _lm8b_oracle() -> str:
-    from big_data_programming_spark.operators.dedup import (
-        minhash_band_key_sql,
-        minhash_signatures_sql,
-    )
-
-    n_bands = _LM8_K // _LM8_R
-    return f"""
-WITH {minhash_signatures_sql(_LM8_K)},
-hist AS (SELECT * FROM sigs WHERE doc % 10 <> 9),
-new AS (SELECT * FROM sigs WHERE doc % 10 = 9),
-hb AS (
-  SELECT doc, g.j AS band, {minhash_band_key_sql(_LM8_R)} AS key
-  FROM hist, (SELECT UNNEST(generate_series(0, {n_bands - 1})) AS j) g
-), nb AS (
-  SELECT doc, g.j AS band, {minhash_band_key_sql(_LM8_R)} AS key
-  FROM new, (SELECT UNNEST(generate_series(0, {n_bands - 1})) AS j) g
-), sz AS (
-  SELECT band, key FROM hb GROUP BY 1, 2 HAVING COUNT(*) <= {_LM8B_CAP}
-), cand AS (
-  SELECT DISTINCT nb.doc AS new_doc, hb.doc AS hist_doc
-  FROM nb
-  JOIN sz ON nb.band = sz.band AND nb.key = sz.key
-  JOIN hb ON nb.band = hb.band AND nb.key = hb.key
-), scored AS (
-  SELECT c.new_doc, c.hist_doc,
-         list_sum(list_transform(generate_series(1, {_LM8_K}),
-           i -> CASE WHEN ns.sig[i] = hs.sig[i] THEN 1 ELSE 0 END)) AS m
-  FROM cand c
-  JOIN new ns ON ns.doc = c.new_doc
-  JOIN hist hs ON hs.doc = c.hist_doc
-)
-SELECT new_doc AS new_doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_near_dups,
-       CAST(MAX(m) AS BIGINT) AS best_matching,
-       ROUND(CAST(MAX(m) AS DOUBLE) / {_LM8_K}, 6) AS best_est_jaccard,
-       (MIN(struct_pack(k := {_LM8_K} - m, id := hist_doc))).id AS dup_of
-FROM scored
-WHERE m >= {_LM8_MIN_MATCH}
-GROUP BY 1
-"""
-
-
 @register(
     "lm8b_capped_minhash_dedup",
-    oracle=_lm8b_oracle(),
+    oracle=_lm8_oracle(_LM8B_CAP),
     tags=("L2", "L1", "J1", "F10"),
 )
 def lm8b_capped_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1202,65 +1064,8 @@ def lm8b_capped_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING on that aggregate, and candidates join arrivals against
     surviving buckets only, so the cap bounds BOTH the shuffle volume
     and the per-arrival compare count BEFORE the expensive signature
-    join. Everything else is lm8 verbatim (shared signature/banding
-    fragments, structural (rank, id) tie-break)."""
-    from big_data_programming_spark.operators.dedup import (
-        minhash_bands,
-        minhash_signatures,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    sig = minhash_signatures(docs, num_hashes=_LM8_K)
-    hist = sig.filter(F.col("doc") % 10 != 9)
-    new = sig.filter(F.col("doc") % 10 == 9)
-    hb = minhash_bands(hist, num_hashes=_LM8_K, rows_per_band=_LM8_R).select(
-        F.col("doc").alias("hist_doc"), "band", "key"
-    )
-    nb = minhash_bands(new, num_hashes=_LM8_K, rows_per_band=_LM8_R).select(
-        F.col("doc").alias("new_doc"), "band", "key"
-    )
-    cool = (
-        hb.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") <= _LM8B_CAP)
-        .select("band", "key")
-    )
-    cand = (
-        nb.join(cool, ["band", "key"])
-        .join(hb, ["band", "key"])
-        .select("new_doc", "hist_doc")
-        .distinct()
-    )
-    ns = new.select(F.col("doc").alias("new_doc"), F.col("sig").alias("sig_n"))
-    hs = hist.select(F.col("doc").alias("hist_doc"), F.col("sig").alias("sig_h"))
-    m = F.aggregate(
-        F.zip_with(
-            F.col("sig_n"),
-            F.col("sig_h"),
-            lambda a, b: F.when(a == b, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        cand.join(ns, "new_doc")
-        .join(hs, "hist_doc")
-        .withColumn("m", m)
-        .filter(F.col("m") >= _LM8_MIN_MATCH)
-        .groupBy(F.col("new_doc").alias("new_doc_id"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_near_dups"),
-            F.max("m").cast("bigint").alias("best_matching"),
-            F.round(F.max("m").cast("double") / _LM8_K, 6).alias(
-                "best_est_jaccard"
-            ),
-            F.min(
-                F.struct(
-                    (F.lit(_LM8_K) - F.col("m")).cast("long").alias("k"),
-                    F.col("hist_doc").alias("id"),
-                )
-            )
-            .getField("id")
-            .alias("dup_of"),
-        )
-    )
+    join. The screen is operators/dedup.py:incremental_minhash_matches
+    with cap _LM8B_CAP, sharing lm8's body (_lm8) and oracle
+    (_lm8_oracle) — signatures, banding, the slot-match count and the
+    structural (rank, id) tie-break are lm8's."""
+    return _lm8(spark, sf_dir, _LM8B_CAP)

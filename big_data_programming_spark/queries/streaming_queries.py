@@ -634,7 +634,6 @@ def st14_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = tempfile.mkdtemp(prefix="bdps_st14_")
     indir, outdir = f"{base}/in", f"{base}/out"
-    ckpt = tempfile.mkdtemp(prefix="bdps_ckpt_", dir=_ckpt_base())
     e = load(spark, sf_dir, "events")
 
     def run_to_completion() -> None:
@@ -649,10 +648,11 @@ def st14_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    e.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(indir)
-    run_to_completion()
-    e.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(indir)
-    run_to_completion()
+    with tempfile.TemporaryDirectory(prefix="bdps_ckpt_", dir=_ckpt_base()) as ckpt:
+        e.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(indir)
+        run_to_completion()
+        e.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(indir)
+        run_to_completion()
 
     return (
         spark.read.parquet(outdir)
@@ -779,7 +779,6 @@ def st17_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_stream_source(spark)
     outdir = tempfile.mkdtemp(prefix="bdps_st17_out_")
-    ckpt = tempfile.mkdtemp(prefix="bdps_ckpt_", dir=_ckpt_base())
 
     def run_once() -> None:
         s = spark.readStream.format("stream_telemetry").load()
@@ -793,12 +792,13 @@ def st17_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
 
     prev = -1
-    for _ in range(6):  # 2000/700 -> 3 productive runs, then no growth
-        run_once()
-        n = spark.read.parquet(outdir).count()
-        if n == prev:
-            break
-        prev = n
+    with tempfile.TemporaryDirectory(prefix="bdps_ckpt_", dir=_ckpt_base()) as ckpt:
+        for _ in range(6):  # 2000/700 -> 3 productive runs, then no growth
+            run_once()
+            n = spark.read.parquet(outdir).count()
+            if n == prev:
+                break
+            prev = n
 
     return (
         spark.read.parquet(outdir)
@@ -1119,14 +1119,14 @@ def st23_foreach_row_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = events_stream(spark, sf_dir)
     hot = s.filter(F.col("value") >= 95.0).select("event_id", "value")
-    ckpt = tempfile.mkdtemp(prefix="bdps_ckpt_")
-    q = (
-        hot.writeStream.foreach(CentsWriter())
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="bdps_ckpt_") as ckpt:
+        q = (
+            hot.writeStream.foreach(CentsWriter())
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.read.schema("event_id long, cents long").csv(out_dir)
 
 
@@ -1228,7 +1228,6 @@ def st25_partitioned_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     out_dir = tempfile.mkdtemp(prefix="bdps_st25_out_")
-    ckpt = tempfile.mkdtemp(prefix="bdps_ckpt_")
     s = events_stream(spark, sf_dir)
     hot = s.filter(F.col("value") >= 80.0).select(
         "event_id",
@@ -1236,15 +1235,16 @@ def st25_partitioned_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
     )
-    q = (
-        hot.writeStream.format("parquet")
-        .partitionBy("event_type")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="bdps_ckpt_") as ckpt:
+        q = (
+            hot.writeStream.format("parquet")
+            .partitionBy("event_type")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     back = spark.read.schema("event_id long, user_id long, cents long, event_type string").parquet(out_dir)
     return back.select(
         "event_id",

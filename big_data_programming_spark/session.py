@@ -93,9 +93,10 @@ def get_spark(
 
 def release_caches(spark: SparkSession) -> None:
     """Release every DataFrame cache in the session (the r6 advisor's
-    unpersist hook): the materialize=True operators (semdedup's
-    assignment table, l5e4's bigram stream, winnowed_span_extents'
-    fingerprint table) persist at their documented pipeline write-out
+    unpersist hook): the persisting operators (semdedup's assignment
+    table and l5e4's bigram stream under materialize=True,
+    winnowed_span_extents' fingerprint table always) persist at their
+    documented pipeline write-out
     points and deliberately have NO in-function release — the return
     is lazy, so an eager unpersist would recompute the very lineage
     the persist avoids. A long-lived session that loops over such

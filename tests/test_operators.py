@@ -705,7 +705,7 @@ def test_winnowing_detects_misaligned_shared_run(spark):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     out = {
         r["doc_id"]: r["n_dup_fingerprints"]
-        for r in winnowed_span_stats(docs, k=8, w=4).collect()
+        for r in winnowed_span_stats(docs).collect()
     }
     assert out[1] >= 1 and out[2] >= 1, out
     assert out[3] == 0, out
@@ -723,7 +723,7 @@ def test_winnowing_short_shared_run_not_required(spark):
         (2, shared + " " + " ".join(f"b{i}" for i in range(10))),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = winnowed_span_stats(docs, k=8, w=4)
+    out = winnowed_span_stats(docs)
     assert out.agg(F.sum("n_dup_fingerprints")).collect()[0][0] == 0
 
 
@@ -733,7 +733,7 @@ def test_winnowing_density_bound(spark, docs):
     count (sanity on the corpus, not just planted rows)."""
     from big_data_programming_spark.operators.dedup import winnowed_span_stats
 
-    out = winnowed_span_stats(docs, k=8, w=4)
+    out = winnowed_span_stats(docs)
     tok = docs.select(F.size(F.split("text", " ")).alias("n"))
     max_grams = tok.agg(F.max("n")).collect()[0][0]
     mx = out.agg(F.max("n_fingerprints")).collect()[0][0]
@@ -1204,6 +1204,73 @@ def test_incremental_minhash_screen(spark):
             if a == b
         )
         assert m == r["best_matching"], (r, m)
+
+
+@pytest.mark.parametrize("cap", [None, 50])
+def test_incremental_minhash_matches_complete(spark, cap):
+    """The incremental screen's whole candidate set, in both engines,
+    against a Python reference over the collected signatures: every
+    (arrival, history) pair sharing a band key, minus history buckets
+    holding more than ``cap`` docs, with ``m`` = the number of equal
+    signature slots."""
+    from collections import defaultdict
+
+    import duckdb
+
+    from big_data_programming_spark.operators.dedup import (
+        MINHASH_HASHES,
+        MINHASH_ROWS,
+        incremental_minhash_matches,
+        incremental_minhash_matches_sql,
+        minhash_signatures,
+        minhash_signatures_sql,
+    )
+
+    sig = minhash_signatures(load(spark, SMOKE_SF_DIR, "documents"))
+    sigs = {r["doc"]: list(r["sig"]) for r in sig.collect()}
+    bands = range(MINHASH_HASHES // MINHASH_ROWS)
+
+    def key(s, j):
+        return j, tuple(s[j * MINHASH_ROWS:(j + 1) * MINHASH_ROWS])
+
+    buckets = defaultdict(set)  # (band, key) -> history docs
+    for d, s in sigs.items():
+        if d % 10 != 9:
+            for j in bands:
+                buckets[key(s, j)].add(d)
+
+    def reference(cap):
+        out = set()
+        for d, s in sigs.items():
+            if d % 10 != 9:
+                continue
+            for j in bands:
+                bucket = buckets.get(key(s, j), set())
+                if cap is None or len(bucket) <= cap:
+                    out |= {(d, h, sum(a == b for a, b in zip(s, sigs[h]))) for h in bucket}
+        return out
+
+    want = reference(cap)
+    assert want
+    if cap is not None:  # the fixture is dense enough for the cap to bite
+        assert want < reference(None)
+    want = sorted(want)  # one row per candidate pair: duplicates must show
+    got = incremental_minhash_matches(
+        sig.filter(F.col("doc") % 10 != 9), sig.filter(F.col("doc") % 10 == 9), cap
+    ).collect()
+    assert sorted(map(tuple, got)) == want
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{SMOKE_SF_DIR}/documents.parquet')"
+    )
+    sql = f"""
+WITH {minhash_signatures_sql()},
+hist AS (SELECT * FROM sigs WHERE doc % 10 <> 9),
+new AS (SELECT * FROM sigs WHERE doc % 10 = 9),
+{incremental_minhash_matches_sql(cap)}
+SELECT new_doc, hist_doc, m FROM scored"""
+    assert sorted(con.execute(sql).fetchall()) == want
 
 
 def test_contamination_drift_days_partition_corpus(spark):

@@ -319,7 +319,7 @@ def test_winnowing_guarantee_any_alignment(spark, docs):
     df = spark.createDataFrame([(1, t1), (2, t2)], ["doc_id", "text"])
     out = {
         r["doc_id"]: r["n_dup_fingerprints"]
-        for r in winnowed_span_stats(df, k=8, w=4).collect()
+        for r in winnowed_span_stats(df).collect()
     }
     assert out[1] >= 1 and out[2] >= 1, (out, t1, t2)
 
@@ -333,9 +333,12 @@ def test_winnowed_extents_cover_shared_run(spark, docs):
     filler vocabularies mean nothing else can be marked), that span
     overlaps the planted run, and it never overshoots the run by more
     than w+k-2 tokens on either side (the documented edge slack)."""
-    from big_data_programming_spark.operators.dedup import winnowed_span_extents
+    from big_data_programming_spark.operators.dedup import (
+        WINNOW_K as k,
+        WINNOW_W as w,
+        winnowed_span_extents,
+    )
 
-    k, w = 8, 4
     t1, t2 = docs
     run_len = sum(1 for tok in t1.split(" ") if tok.startswith("r"))
     starts = {  # 1-based planted-run start per doc
@@ -344,7 +347,7 @@ def test_winnowed_extents_cover_shared_run(spark, docs):
     }
     df = spark.createDataFrame([(1, t1), (2, t2)], ["doc_id", "text"])
     spans = {}
-    for r in winnowed_span_extents(df, k=k, w=w).collect():
+    for r in winnowed_span_extents(df).collect():
         spans.setdefault(r["doc_id"], []).append((r["span_start"], r["span_end"]))
     for doc in (1, 2):
         assert len(spans.get(doc, [])) == 1, (spans, t1, t2)

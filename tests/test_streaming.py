@@ -23,8 +23,8 @@ from tests.conftest import SMOKE_SF_DIR, spark_result
 
 
 def _ckpt_dirs() -> set[str]:
-    base = _ckpt_base() or tempfile.gettempdir()
-    return set(glob.glob(os.path.join(base, "bdps_ckpt_*")))
+    bases = {_ckpt_base(), tempfile.gettempdir()} - {None}
+    return {p for b in bases for p in glob.glob(os.path.join(b, "bdps_ckpt_*"))}
 
 
 def test_stream_replays_batch_rows(spark):
@@ -38,6 +38,25 @@ def test_stream_replays_batch_rows(spark):
         "ts", F.col("ts").cast("timestamp")
     )
     assert spark_result(got) == spark_result(want)
+
+
+def test_checkpointed_queries_remove_their_checkpoints(spark):
+    """st14 and st17 restart a query on one checkpoint, st23 and st25
+    drain with their own: each removes that checkpoint once its runs
+    end. Their output dirs stay, and the returned frames still read
+    them after the checkpoint is gone."""
+    from big_data_programming_spark.registry import queries
+
+    q = queries()
+    before = _ckpt_dirs()
+    for name in (
+        "st14_checkpoint_recovery",
+        "st17_python_stream_source",
+        "st23_foreach_row_sink",
+        "st25_partitioned_stream_sink",
+    ):
+        assert q[name](spark, SMOKE_SF_DIR).count() > 0, name
+    assert _ckpt_dirs() - before == set()
 
 
 def test_tumbling_complete_equals_batch_twin(spark):
