@@ -232,47 +232,55 @@ def _token_hash60(token: Column) -> Column:
     return F.conv(F.substring(F.md5(token.cast("binary")), 1, 15), 16, 10).cast("long")
 
 
-def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
-    """SimHash signature over token hashes: for each bit position, sum
-    +1/-1 votes across the document's distinct tokens; the sign vector
-    is the signature (emitted as a bit string — near-duplicate docs
-    differ in few positions).
+#: Width of the SimHash signatures (l2b, l5c, l5j, lm5): 16 vote bits.
+SIMHASH_BITS = 16
 
-    Plan shape (r11 optimization): ``bits`` conditional integer sums in
-    ONE per-doc hash aggregate — explode(token) → groupBy(doc). The
-    previous shape exploded a second time (×bits rows), aggregated by
-    (doc, bit), and needed a second exchange plus an ObjectHashAggregate
-    (collect_list + array_sort) to assemble the signature; measured at
-    sf0.1 the rewrite removes that exchange and the ×16 row fan-out
-    (2 Exchange → 1, ObjectHashAggregate → none). Votes are exact
-    integer sums either way, so the signature is bit-identical."""
+
+def simhash_sql(one: str, zero: str, sep: str) -> str:
+    """Spark SQL aggregate text of the SimHash votes over the token
+    hashes ``h``: bit b's +1/-1 vote sum over the doc's distinct tokens
+    yields ``one`` (a template over the bit's value ``{v}`` = 1 << b)
+    when positive and ``zero`` otherwise; the :data:`SIMHASH_BITS`
+    results are joined by ``sep``. Rendered as text so the whole
+    signature is one ``F.expr`` parse instead of one py4j round trip
+    per Column node."""
+    return sep.join(
+        f"CASE WHEN sum(CASE WHEN shiftright(h, {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
+        f"THEN {one.format(v=1 << b)} ELSE {zero} END"
+        for b in range(SIMHASH_BITS)
+    )
+
+
+_SIMHASH_BITS_SQL = "concat(" + simhash_sql("'1'", "'0'", ", ") + ")"
+
+
+def simhash_packed(docs: DataFrame, packed_sql: str, name: str) -> DataFrame:
+    """``(doc_id, <name>)``: ``packed_sql`` (:func:`simhash_sql`) as ONE
+    per-doc hash aggregate over the doc's distinct token hashes —
+    explode(token) → groupBy(doc), one conditional integer sum per bit.
+    The r11 rewrite replaced a second explode (×bits rows), a (doc,
+    bit) aggregate and a second exchange plus an ObjectHashAggregate
+    with this shape (measured at sf0.1: 2 Exchange → 1,
+    ObjectHashAggregate → none); the votes are exact integer sums
+    either way, so the signature is bit-identical. The packing sits
+    inside the aggregate expression, where Catalyst's CollapseProject
+    would move a separate packing projection anyway."""
     toks = docs.select(
         F.col("doc_id"),
         F.explode(F.array_distinct(tokenize(F.col("text")))).alias("token"),
     ).select("doc_id", _token_hash60(F.col("token")).alias("h"))
-    bit_cols = [
-        F.when(
-            F.sum(
-                F.when((F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1))) == 1, 1).otherwise(-1)
-            )
-            > 0,
-            F.lit("1"),
-        )
-        .otherwise(F.lit("0"))
-        .alias(f"_b{b}")
-        for b in range(bits)
-    ]
-    return (
-        toks.groupBy("doc_id")
-        .agg(*bit_cols)
-        .select(
-            "doc_id",
-            F.concat(*[F.col(f"_b{b}") for b in range(bits)]).alias("simhash_bits"),
-        )
-    )
+    return toks.groupBy("doc_id").agg(F.expr(packed_sql).alias(name))
 
 
-SIMHASH_ORACLE_SQL = """
+def simhash(docs: DataFrame) -> DataFrame:
+    """SimHash signature over token hashes: for each bit position, sum
+    +1/-1 votes across the document's distinct tokens; the sign vector
+    is the signature, emitted as a :data:`SIMHASH_BITS`-char bit string
+    ``simhash_bits`` (near-duplicate docs differ in few positions)."""
+    return simhash_packed(docs, _SIMHASH_BITS_SQL, "simhash_bits")
+
+
+SIMHASH_ORACLE_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
          CAST(CONCAT('0x', SUBSTRING(md5(t.token), 1, 15)) AS BIGINT) AS h
@@ -280,7 +288,7 @@ WITH toks AS (
 ), votes AS (
   SELECT doc_id, b.bit,
          CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END AS vote
-  FROM toks, (SELECT UNNEST(generate_series(0, {maxbit})) AS bit) b
+  FROM toks, (SELECT UNNEST(generate_series(0, {SIMHASH_BITS - 1})) AS bit) b
 ), signs AS (
   SELECT doc_id, bit, CASE WHEN SUM(vote) > 0 THEN '1' ELSE '0' END AS s
   FROM votes GROUP BY doc_id, bit
@@ -371,13 +379,61 @@ def _minhash_constants() -> list[tuple[int, int]]:
     return out
 
 
+def _minhash_sig_sql(listlit: str, lmin: str, transform: str) -> str:
+    """The :data:`MINHASH_HASHES`-slot signature over the base-hash
+    array ``h``, rendered for either SQL dialect (the ``_pq_sql``
+    pattern of queries/llm_similarity.py): ``listlit`` is the
+    list-literal template ('array({items})' / '[{items}]'), ``lmin``
+    and ``transform`` the list-min and list-map function names. Both
+    engines get the same (a, b) literals and the same arithmetic."""
+    return listlit.format(
+        items=",\n           ".join(
+            f"{lmin}({transform}(h, x -> ({a} * x + {b}) % {_MINHASH_PRIME}))"
+            for (a, b) in _minhash_constants()
+        )
+    )
+
+
+def _minhash_band_key_sql(elem: str, string: str, band: int | str) -> str:
+    """Key of LSH band ``band``: its :data:`MINHASH_ROWS` signature
+    slots cast to the dialect's ``string`` type and joined by '-'.
+    ``band`` is a band number (Spark enumerates the bands) or the name
+    of a band-number column (DuckDB joins a band series); ``elem`` is
+    the dialect's element-access template over the 1-based slot
+    ``{i}``."""
+    slots = [
+        band * MINHASH_ROWS + i + 1
+        if isinstance(band, int)
+        else f"{band} * {MINHASH_ROWS} + {i + 1}"
+        for i in range(MINHASH_ROWS)
+    ]
+    cast = ", ".join(f"CAST({elem.format(i=s)} AS {string})" for s in slots)
+    return f"concat_ws('-', {cast})"
+
+
+#: Spark SQL text of the signature and of the exploded band rows, built
+#: once at import. Each is one ``F.expr`` parse per build; the Column
+#: API costs a py4j round trip per node, ~80 for one slot's
+#: ``transform`` lambda alone.
+_MINHASH_SIG_SQL = _minhash_sig_sql("array({items})", "array_min", "transform")
+_MINHASH_BANDS_SQL = "explode(array({}))".format(
+    ", ".join(
+        f"struct({j} AS band, "
+        f"{_minhash_band_key_sql('element_at(sig, {i})', 'STRING', j)} AS key)"
+        for j in range(MINHASH_HASHES // MINHASH_ROWS)
+    )
+)
+
+
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """The MinHash SIGNATURE relation ``(doc, sig: array<long>)`` —
-    computed IN-ROW (distinct tokens -> 28-bit md5 base hashes -> k
-    universal-hash minima, one array-HOF chain in whole-stage
-    codegen). Exposed as its own stage because the signature table IS
-    the persistence artifact of an incremental dedup pipeline (lm8):
-    k longs per doc, never the text. Twin of the ``sigs`` CTE in
+    computed IN-ROW: distinct tokens -> 28-bit md5 base hashes -> k
+    universal-hash minima, one array-HOF chain per row. ``transform``
+    is ``CodegenFallback`` in Spark 4.1, so the chain is interpreted
+    inside the generated stage code, not compiled into it. Exposed as
+    its own stage because the signature table IS the persistence
+    artifact of an incremental dedup pipeline (lm8): k longs per doc,
+    never the text. Twin of the ``sigs`` CTE in
     :func:`minhash_signatures_sql`."""
     toks_arr = F.array_distinct(tokenize(F.col("text")))
     base = docs.select(F.col("doc_id").alias("doc"), toks_arr.alias("ts")).filter(
@@ -392,21 +448,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
             ),
         ).alias("h"),
     )
-
-    def _uhash(a: int, b: int):
-        # closure factory: Spark infers HOF arity from the lambda
-        # signature, so the constants must be captured, not defaulted
-        return lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(_MINHASH_PRIME)
-
-    return hv.select(
-        "doc",
-        F.array(
-            *[
-                F.array_min(F.transform(F.col("h"), _uhash(a, b)))
-                for (a, b) in _minhash_constants()
-            ]
-        ).alias("sig"),
-    )
+    return hv.select("doc", F.expr(_MINHASH_SIG_SQL).alias("sig"))
 
 
 def minhash_bands(sig: DataFrame) -> DataFrame:
@@ -415,28 +457,9 @@ def minhash_bands(sig: DataFrame) -> DataFrame:
     Exposed separately so the incremental screen
     (:func:`incremental_minhash_matches`) can band the history and the
     new batch independently. Twin of :func:`minhash_bands_sql`."""
-    return sig.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.concat_ws(
-                            "-",
-                            *[
-                                F.element_at("sig", j * MINHASH_ROWS + i + 1).cast(
-                                    "string"
-                                )
-                                for i in range(MINHASH_ROWS)
-                            ],
-                        ).alias("key"),
-                    )
-                    for j in range(MINHASH_HASHES // MINHASH_ROWS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "bk.band", "bk.key")
+    return sig.select("doc", F.expr(_MINHASH_BANDS_SQL).alias("bk")).select(
+        "doc", "bk.band", "bk.key"
+    )
 
 
 def minhash_band_candidates(docs: DataFrame) -> DataFrame:
@@ -471,8 +494,9 @@ def minhash_banded_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
 
     Per doc, IN-ROW (no explode, no shuffle): distinct tokens →
     28-bit md5 base hashes → k=MINHASH_HASHES universal-hash minima =
-    the MinHash signature, one array HOF chain in whole-stage codegen
-    (O(tokens × k) multiply-mods as a pure map). Docs agreeing on ALL
+    the MinHash signature, one array HOF chain per row (O(tokens × k)
+    multiply-mods as a pure map; see :func:`minhash_signatures` on
+    why the chain is interpreted, not compiled). Docs agreeing on ALL
     r=MINHASH_ROWS slots of one of the k/r bands become candidates via
     a (band_idx, band_key) equi-join — the only shuffle moves
     (doc, band_key) rows, never token lists — and :func:`verify_pairs`
@@ -533,10 +557,6 @@ def minhash_signatures_sql() -> str:
     CTE fragment (``sigs`` ends the chain with columns (doc, sig)),
     exposed so the incremental oracles compose the identical
     signature arithmetic."""
-    sig_items = ",\n           ".join(
-        f"list_min(list_transform(h, x -> ({a} * x + {b}) % {_MINHASH_PRIME}))"
-        for (a, b) in _minhash_constants()
-    )
     return f"""base AS (
   SELECT doc_id AS doc, list_distinct(string_split(text, ' ')) AS ts
   FROM documents
@@ -546,7 +566,7 @@ def minhash_signatures_sql() -> str:
   FROM base WHERE len(ts) > 0
 ), sigs AS (
   SELECT doc,
-         [{sig_items}] AS sig
+         {_minhash_sig_sql("[{items}]", "list_min", "list_transform")} AS sig
   FROM hv
 )"""
 
@@ -554,10 +574,7 @@ def minhash_signatures_sql() -> str:
 def minhash_bands_sql(rel: str) -> str:
     """DuckDB twin of :func:`minhash_bands`: a SELECT of ``(doc, band,
     key)`` rows over ``rel``, a relation with columns (doc, sig)."""
-    key = " || '-' || ".join(
-        f"CAST(sig[j * {MINHASH_ROWS} + {i + 1}] AS VARCHAR)"
-        for i in range(MINHASH_ROWS)
-    )
+    key = _minhash_band_key_sql("sig[{i}]", "VARCHAR", "j")
     n_bands = MINHASH_HASHES // MINHASH_ROWS
     return f"""SELECT doc, g.j AS band, {key} AS key
   FROM {rel}, (SELECT UNNEST(generate_series(0, {n_bands - 1})) AS j) g"""

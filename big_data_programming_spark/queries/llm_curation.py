@@ -1038,7 +1038,7 @@ urls AS (
 ), url_keep AS (
   SELECT cu, MIN(doc_id) AS ukeeper FROM urls GROUP BY 1
 ), sig AS (
-  {SIMHASH_ORACLE_SQL.format(maxbit=15)}
+  {SIMHASH_ORACLE_SQL}
 ), sig_keep AS (
   SELECT sg.simhash_bits, MIN(sg.doc_id) AS skeeper
   FROM sig sg JOIN train t ON t.doc_id = sg.doc_id
@@ -1170,7 +1170,7 @@ def l5j_doc_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     url_keep = urls.groupBy("cu").agg(F.min("doc_id").alias("ukeeper"))
     hashes = train.select("doc_id", "h")
     firsts = hashes.groupBy("h").agg(F.min("doc_id").alias("keeper"))
-    sig = simhash(d, bits=16)
+    sig = simhash(d)
     sig_keep = (
         sig.join(train.select("doc_id"), "doc_id")
         .groupBy("simhash_bits")

@@ -98,14 +98,14 @@ def l2_jaccard_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l2b_simhash",
-    oracle=SIMHASH_ORACLE_SQL.format(maxbit=15),
+    oracle=SIMHASH_ORACLE_SQL,
     tags=("L2", "F7"),
 )
 def l2b_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 16-bit SimHash signatures (operators/dedup.py) —
     near-dups differ in few bits; grouping by signature bands is the
     constant-cost blocking pass."""
-    return simhash(load(spark, sf_dir, "documents"), bits=16)
+    return simhash(load(spark, sf_dir, "documents"))
 
 
 #: Deterministic ¼ document shard for l2c's Spark-ML comparison twin

@@ -24,10 +24,13 @@ from pyspark.sql.window import Window
 from big_data_programming_spark.functions.canonical import DEC, davg
 from big_data_programming_spark.operators.dedup import (
     MINHASH_HASHES,
+    SIMHASH_BITS,
     incremental_minhash_matches,
     incremental_minhash_matches_sql,
     minhash_signatures,
     minhash_signatures_sql,
+    simhash_packed,
+    simhash_sql,
 )
 from big_data_programming_spark.operators.similarity import (
     as_double_array,
@@ -220,7 +223,7 @@ def lm4_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: SimHash-as-integer: 16 bit-position sign votes over md5 token
 #: hashes, packed into one BIGINT (operators/dedup.py simhash emits the
 #: bit STRING; the int form enables bit_count hamming in both engines).
-_SIG_SQL = """
+_SIG_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
          CAST(CONCAT('0x', SUBSTRING(md5(t.token), 1, 15)) AS BIGINT) AS h
@@ -228,7 +231,7 @@ WITH toks AS (
 ), votes AS (
   SELECT doc_id, b.bit,
          CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END AS vote
-  FROM toks, (SELECT UNNEST(generate_series(0, 15)) AS bit) b
+  FROM toks, (SELECT UNNEST(generate_series(0, {SIMHASH_BITS - 1})) AS bit) b
 ), signs AS (
   SELECT doc_id, bit,
          CASE WHEN SUM(vote) > 0 THEN (CAST(1 AS BIGINT) << bit)
@@ -239,42 +242,15 @@ WITH toks AS (
   FROM signs GROUP BY doc_id
 )
 """
+_SIG_SPARK_SQL = simhash_sql("CAST({v} AS BIGINT)", "CAST(0 AS BIGINT)", " + ")
 
 
-def _simhash_int(docs: DataFrame, bits: int = 16) -> DataFrame:
-    """(doc_id, sig BIGINT) — int-packed SimHash (twin of _SIG_SQL).
-
-    Same r11 plan shape as operators/dedup.py:simhash: ``bits``
-    conditional integer sums in ONE per-doc hash aggregate, signature
-    packed by a plain projection — instead of the old explode(bit)
-    fan-out with a second (doc, bit)→doc exchange. Votes are exact
-    integer sums either way, so signatures are bit-identical."""
-    from big_data_programming_spark.operators.dedup import _token_hash60, tokenize
-
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(tokenize(F.col("text")))).alias("token"),
-    ).select("doc_id", _token_hash60(F.col("token")).alias("h"))
-    bit_cols = [
-        F.when(
-            F.sum(
-                F.when((F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1))) == 1, 1).otherwise(-1)
-            )
-            > 0,
-            F.lit(1 << b).cast("long"),
-        )
-        .otherwise(F.lit(0).cast("long"))
-        .alias(f"_v{b}")
-        for b in range(bits)
-    ]
-    packed = toks.groupBy("doc_id").agg(*bit_cols)
-    # Sum the explicit _v{b} columns (not positional slices of
-    # packed.columns — the r11 advisor's fragility catch); bit values
-    # are disjoint powers of two, so + is exact OR.
-    expr = F.col("_v0")
-    for b in range(1, bits):
-        expr = expr + F.col(f"_v{b}")
-    return packed.select("doc_id", expr.cast("long").alias("sig"))
+def _simhash_int(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig BIGINT) — int-packed SimHash (twin of _SIG_SQL):
+    operators/dedup.py:simhash's per-doc vote aggregate, bit b worth
+    ``1 << b`` when its vote sum is positive; the bit values are
+    disjoint powers of two, so their sum is exact OR."""
+    return simhash_packed(docs, _SIG_SPARK_SQL, "sig")
 
 
 @register(

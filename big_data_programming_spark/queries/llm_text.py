@@ -573,14 +573,11 @@ def l4q_vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SIMHASH_ORACLE_SQL_FOR_FUNNEL = SIMHASH_ORACLE_SQL.format(maxbit=15)
-
-
 @register(
     "l5c_curation_funnel",
     oracle=f"""
 WITH feats AS ({QUALITY_ORACLE_SQL}),
-sig AS ({{simhash_sql}}),
+sig AS ({SIMHASH_ORACLE_SQL}),
 base AS (
   SELECT d.doc_id,
          md5(TRIM(regexp_replace(LOWER(d.text), '\\s+', ' ', 'g'))) AS content_hash,
@@ -596,7 +593,7 @@ SELECT COUNT(*) AS n_total,
        COUNT(DISTINCT CASE WHEN quality_score >= 0.7 AND n_tokens >= 20
                            THEN simhash_bits END) AS n_simhash_unique
 FROM base
-""".replace("{simhash_sql}", SIMHASH_ORACLE_SQL_FOR_FUNNEL),
+""",
     tags=("L5", "L1", "L2", "A3"),
 )
 def l5c_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -613,7 +610,7 @@ def l5c_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the a23 FILTER-clause discipline applied to pipeline metrics)."""
     d = load(spark, sf_dir, "documents")
     flags = quality_features(d).select("doc_id", "quality_score", "n_tokens")
-    sig = simhash(d, bits=16)
+    sig = simhash(d)
     base = (
         d.select(
             "doc_id",

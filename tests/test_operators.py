@@ -1180,6 +1180,51 @@ def test_trigram_backoff_branch_accounting(spark):
     assert tot3 > 0 and tot2 > 0, (tot3, tot2)
 
 
+def test_minhash_and_simhash_match_python_reference(docs):
+    """The MinHash and SimHash arithmetic against pure Python at
+    sf0.001, not against its own DuckDB twin: per doc, the distinct
+    space-split tokens -> md5 -> 7-hex-digit base hashes -> the
+    MINHASH_HASHES minima of (a * h + b) mod 2^31-1 over
+    ``_minhash_constants()``; each band's key is its MINHASH_ROWS
+    slots joined by '-'; SimHash bit b (first char = bit 0) is 1 iff
+    the +1/-1 votes of bit b of the 60-bit (15-hex-digit) token hashes
+    sum above zero."""
+    import hashlib
+
+    from big_data_programming_spark.operators.dedup import (
+        _MINHASH_PRIME,
+        MINHASH_HASHES,
+        MINHASH_ROWS,
+        _minhash_constants,
+        minhash_bands,
+        minhash_signatures,
+        simhash,
+    )
+
+    consts = _minhash_constants()
+    want_sig, want_bands, want_bits = {}, set(), {}
+    for r in docs.select("doc_id", "text").collect():
+        hexes = [hashlib.md5(t.encode()).hexdigest() for t in set(r["text"].split(" "))]
+        base = [int(x[:7], 16) for x in hexes]
+        sig = [min((a * h + b) % _MINHASH_PRIME for h in base) for a, b in consts]
+        want_sig[r["doc_id"]] = sig
+        for j in range(MINHASH_HASHES // MINHASH_ROWS):
+            key = "-".join(str(v) for v in sig[j * MINHASH_ROWS:(j + 1) * MINHASH_ROWS])
+            want_bands.add((r["doc_id"], j, key))
+        h60 = [int(x[:15], 16) for x in hexes]
+        want_bits[r["doc_id"]] = "".join(
+            "1" if sum(1 if (h >> b) & 1 else -1 for h in h60) > 0 else "0"
+            for b in range(16)  # l2b's 16-bit signatures
+        )
+    assert len(set(map(tuple, want_sig.values()))) > 1  # not a constant signature
+    sig = minhash_signatures(docs)
+    assert {r["doc"]: list(r["sig"]) for r in sig.collect()} == want_sig
+    bands = minhash_bands(sig).collect()
+    assert len(bands) == len(want_bands)
+    assert set(map(tuple, bands)) == want_bands
+    assert {r["doc_id"]: r["simhash_bits"] for r in simhash(docs).collect()} == want_bits
+
+
 def test_incremental_minhash_screen(spark):
     """lm8: every screened doc is from the new batch, every reported
     match is historical, the match count clears the 12/24 acceptance,

@@ -1127,3 +1127,39 @@ def test_dedup_pair_queries_build_without_jobs():
         if last_job_id() != before:
             eager[name] = last_job_id() - before
     assert not eager, f"jobs started while building: {eager}"
+
+
+def test_dedup_builds_stay_within_py4j_budget(monkeypatch):
+    """Building l2i and l2b stays cheap on the driver: the wide MinHash
+    signature, band and SimHash vote expressions are each one parsed
+    SQL string, not one py4j round trip per Column node. Gateway
+    commands are counted per build (minimum over 3 builds); building
+    those expressions Column by Column took >= 4,300 commands for l2i
+    and >= 2,000 for l2b."""
+    import py4j.clientserver as cs
+
+    import big_data_programming_spark.session as S
+    from big_data_programming_spark.registry import catalog
+
+    spark = S.get_spark("plan-tests", cpus=8)
+    sent = [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    cat = catalog()
+
+    def fewest_commands(name: str) -> int:
+        counts = []
+        for _ in range(3):
+            sent[0] = 0
+            cat[name].fn(spark, SF_DIR)
+            counts.append(sent[0])
+        return min(counts)
+
+    got = {n: fewest_commands(n) for n in ("l2i_minhash_banded", "l2b_simhash")}
+    assert all(got.values()), f"no gateway command counted: {got}"
+    assert got["l2i_minhash_banded"] <= 1500 and got["l2b_simhash"] <= 1000, got
