@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from big_data_programming_spark.functions.canonical import DEC, oracle_dsum
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
+from big_data_programming_spark.streaming.harness import scratch_dir
 
 
 @register(
@@ -423,9 +424,7 @@ def j12_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
     fact at file-listing time, reading 40% (here) or 0.1% (a date-dim
     month filter in production) of the table without the query author
     repeating the predicate on the fact side."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="bdps_j12_")
+    out = scratch_dir("bdps_j12_")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from big_data_programming_spark.functions.canonical import oracle_dsum
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load, register_views
+from big_data_programming_spark.streaming.harness import scratch_dir
 
 
 @register(
@@ -515,11 +516,10 @@ def s26_zstd_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     was lossless. Codec metadata is per-column-chunk, so mixed-codec
     tables stay readable — rewriting history is optional, not forced."""
     import os
-    import tempfile
 
     import pyarrow.parquet as pq
 
-    out = tempfile.mkdtemp(prefix="bdps_s26_")
+    out = scratch_dir("bdps_s26_")
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp_ntz")
     )

@@ -9,8 +9,6 @@ round trip must preserve exactly.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -34,6 +32,7 @@ from big_data_programming_spark.sources.loaders import (
     write_json,
     write_parquet,
 )
+from big_data_programming_spark.streaming.harness import scratch_dir
 
 
 @register(
@@ -53,7 +52,7 @@ def s2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(load(spark, sf_dir, "region"), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("n_nationkey", "n_name", F.col("r_name").alias("region_name"))
     )
-    out = tempfile.mkdtemp(prefix="bdps_s2_")
+    out = scratch_dir("bdps_s2_")
     write_csv(joined, out)
     schema = StructType(
         [
@@ -83,7 +82,7 @@ def s3_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("p_size") <= 10)
         .select("p_partkey", "p_name", "p_retailprice")
     )
-    out = tempfile.mkdtemp(prefix="bdps_s3_")
+    out = scratch_dir("bdps_s3_")
     write_json(small, out)
     schema = StructType(
         [
@@ -230,7 +229,7 @@ def s6_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     time (PartitionFilters, asserted in tests/test_plans.py) — at
     100 TB the difference between scanning 2/5ths of the data and
     scanning none of it but the matching directories."""
-    out = tempfile.mkdtemp(prefix="bdps_s6_")
+    out = scratch_dir("bdps_s6_")
     write_parquet(
         load(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
@@ -260,7 +259,7 @@ def o5_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-location strategy for 100 TB fact-fact joins — pay one shuffle
     at write time, never again; the aggregate's own exchange over 5
     mktsegment groups is trivially small."""
-    base = tempfile.mkdtemp(prefix="bdps_o5_")
+    base = scratch_dir("bdps_o5_")
     write_bucketed(
         load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
         "bdps_o5_customer",
@@ -347,7 +346,7 @@ def s2b_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     would turn each into a full-job retry. The query flags (not drops)
     bad rows, keeping the quarantine decision downstream. Input is a
     fixed literal, so the oracle is the expected literal output."""
-    out = tempfile.mkdtemp(prefix="bdps_s2b_")
+    out = scratch_dir("bdps_s2b_")
     with open(f"{out}/dirty.csv", "w") as f:
         f.write(_DIRTY_CSV)
     schema = StructType(
@@ -441,7 +440,7 @@ def s10_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_totalprice") > 300000.0)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     )
-    out = tempfile.mkdtemp(prefix="bdps_s10_")
+    out = scratch_dir("bdps_s10_")
     big.write.mode("overwrite").orc(out)
     return spark.read.orc(out)
 
@@ -466,7 +465,7 @@ def s11_text_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = docs.select(
         F.concat_ws("|", F.col("doc_id"), F.col("lang"), F.col("n_chars")).alias("value")
     )
-    out = tempfile.mkdtemp(prefix="bdps_s11_")
+    out = scratch_dir("bdps_s11_")
     lines.write.mode("overwrite").text(out)
     parts = F.split(F.col("value"), r"\|")
     return (
@@ -503,7 +502,7 @@ def s12_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     storage — the READ path under test is identical either way). The
     query verifies payload integrity end-to-end: byte length and md5
     of the binary content against the source-of-truth text."""
-    out = tempfile.mkdtemp(prefix="bdps_s12_")
+    out = scratch_dir("bdps_s12_")
 
     def _write_files(rows) -> None:
         import os
@@ -548,7 +547,7 @@ def s13_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate proves NULL-fill and type union: rows from both
     batches, prices only from the new one."""
     p = load(spark, sf_dir, "part")
-    out = tempfile.mkdtemp(prefix="bdps_s13_")
+    out = scratch_dir("bdps_s13_")
     old = p.filter(F.col("p_size") <= 5).select("p_partkey", "p_name")
     new = p.filter(F.col("p_size") > 5).select("p_partkey", "p_name", "p_retailprice")
     old.write.mode("overwrite").parquet(out + "/batch=1")
@@ -587,8 +586,8 @@ def s15_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite lost nothing. In production the same job targets
     ``spark.sql.files.maxPartitionBytes``-sized outputs per partition
     directory and runs table-incrementally."""
-    frag_dir = tempfile.mkdtemp(prefix="bdps_s15_frag_")
-    comp_dir = tempfile.mkdtemp(prefix="bdps_s15_comp_")
+    frag_dir = scratch_dir("bdps_s15_frag_")
+    comp_dir = scratch_dir("bdps_s15_comp_")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     li.repartition(48).write.mode("overwrite").parquet(frag_dir)
     frag = spark.read.parquet(frag_dir)
@@ -721,7 +720,7 @@ def s18_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") >= 0.0)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
     )
-    out = tempfile.mkdtemp(prefix="bdps_s18_")
+    out = scratch_dir("bdps_s18_")
     sup.write.format("xml").option("rootTag", "suppliers").option(
         "rowTag", "supplier"
     ).mode("overwrite").save(out)
@@ -758,7 +757,7 @@ def s19_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_tsv_sink(spark)
-    out = tempfile.mkdtemp(prefix="bdps_s19_")
+    out = scratch_dir("bdps_s19_")
     sup = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey", "s_acctbal"
     )
@@ -834,9 +833,7 @@ def o9_file_size_targeting(spark: SparkSession, sf_dir: str) -> DataFrame:
     audits actual per-file row counts against the cap and checksums
     the payload. On a cluster the same option rides on every
     partitioned/bucketed sink (s6/o5) unchanged."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="bdps_o9_")
+    out = scratch_dir("bdps_o9_")
     li = (
         load(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))

@@ -18,8 +18,9 @@ holds one fixed-width tuple per user. Nothing here buffers raw events.
 
 from __future__ import annotations
 
+import contextlib
 import importlib.util
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +46,8 @@ from big_data_programming_spark.streaming.harness import (
     drain,
     drain_foreach_batch,
     events_stream,
+    run_bounded,
+    scratch_dir,
 )
 
 #: DuckDB fragment: Spark's final watermark in epoch-µs for a given
@@ -320,9 +323,7 @@ def st9_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     a parquet directory, then read back — the arbitrary-sink escape
     hatch (multi-sink fanout, JDBC upserts). Filter runs inside the
     stream, so the sink only ever sees matching rows."""
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="bdps_st9_out_")
+    out_dir = scratch_dir("bdps_st9_out_")
     s = events_stream(spark, sf_dir)
     hot = s.filter(F.col("value") >= 90.0).select(
         "event_id", "user_id", "event_type", "value"
@@ -334,6 +335,45 @@ def st9_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain_foreach_batch(hot, write_batch)
     return spark.read.schema("event_id long, user_id long, event_type string, value double").parquet(
         out_dir
+    )
+
+
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """view→purchase conversions within 30 minutes per user, as a
+    stream-stream join of two watermarked ``events`` streams (st10
+    inner, st24 left outer)."""
+    views = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "view")
+        .select(
+            F.col("user_id").alias("v_user"),
+            F.col("event_id").alias("view_id"),
+            F.col("ts").alias("view_ts"),
+        )
+        .withWatermark("view_ts", "1 hour")
+    )
+    purchases = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    return views.join(
+        purchases,
+        (F.col("p_user") == F.col("v_user"))
+        & (F.col("purchase_ts") > F.col("view_ts"))
+        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
+    ).select(
+        F.col("v_user").alias("user_id"),
+        "view_id",
+        "purchase_id",
+        F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
+        F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
     )
 
 
@@ -362,40 +402,41 @@ def st10_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded-input join (an un-ranged stream-stream join would buffer
     forever). Inner join + availableNow drains the complete result, so
     the batch self-join (J9) is the exact oracle."""
-    s = events_stream(spark, sf_dir)
-    views = (
-        s.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
+    return drain(_view_purchase_join(spark, sf_dir, "inner"), "append")
+
+
+def _snapshot_fold(
+    spark: SparkSession,
+    ev: DataFrame,
+    snap_schema: str,
+    fold: Callable[[DataFrame, DataFrame | None], DataFrame],
+) -> DataFrame:
+    """Copy-on-write snapshot maintenance (st11, st16): stage ``ev`` as
+    4 files, stream them one file per micro-batch (its schema is the
+    stream's), and write ``fold(batch, previous snapshot or None)`` to a
+    NEW ``v{batch_id}`` directory each batch — never overwriting the
+    one being read. Returns the last snapshot, read with
+    ``snap_schema``."""
+    base = scratch_dir("bdps_snapshot_")
+    stage = f"{base}/stage"
+    ev.repartition(4).write.mode("overwrite").parquet(stage)
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(stage)
     )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("purchase_ts") > F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner",
-    ).select(
-        F.col("v_user").alias("user_id"),
-        "view_id",
-        "purchase_id",
-        F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
-        F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
-    )
-    return drain(joined, "append")
+    current: dict[str, str] = {}
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        prev = None
+        if "path" in current:
+            prev = spark.read.schema(snap_schema).parquet(current["path"])
+        current["path"] = f"{base}/v{batch_id}"
+        fold(batch_df, prev).write.mode("overwrite").parquet(current["path"])
+
+    drain_foreach_batch(stream, step)
+    return spark.read.schema(snap_schema).parquet(current["path"])
 
 
 @register(
@@ -426,48 +467,22 @@ def st11_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the oracle. Because ``latest_per_key`` is associative and
     idempotent, the result is independent of how files land in batches
     — the property that makes the pipeline restartable at scale."""
-    import tempfile
-
     ev = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    stage = tempfile.mkdtemp(prefix="bdps_st11_stage_")
-    ev.repartition(4).write.mode("overwrite").parquet(stage)
 
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long, "
-        "event_type string, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage)
-    )
-
-    base = tempfile.mkdtemp(prefix="bdps_st11_snap_")
-    current: dict[str, str] = {}
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+    def upsert(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         latest = latest_per_key(batch_df, ["user_id"], ["ts", "event_id"])
-        if "path" in current:
-            prev = spark.read.schema(
-                "user_id long, event_id long, ts timestamp_ntz, "
-                "event_type string, value double"
-            ).parquet(current["path"])
-            latest = latest_per_key(
-                prev.unionByName(latest), ["user_id"], ["ts", "event_id"]
-            )
-        new_path = f"{base}/v{batch_id}"
-        latest.write.mode("overwrite").parquet(new_path)
-        current["path"] = new_path
+        if prev is None:
+            return latest
+        return latest_per_key(prev.unionByName(latest), ["user_id"], ["ts", "event_id"])
 
-    drain_foreach_batch(stream, upsert)
-
-    snap = spark.read.schema(
-        "user_id long, event_id long, ts timestamp_ntz, "
-        "event_type string, value double"
-    ).parquet(current["path"])
+    snap = _snapshot_fold(
+        spark,
+        ev,
+        "user_id long, event_id long, ts timestamp_ntz, event_type string, value double",
+        upsert,
+    )
     return snap.select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
@@ -475,6 +490,24 @@ def st11_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("last_type"),
         F.col("value").alias("last_value"),
     )
+
+
+@contextlib.contextmanager
+def _rocksdb_state_store(spark: SparkSession) -> Iterator[None]:
+    """Start the queries inside on the RocksDB state store provider
+    (st12, st18), then restore the session's provider setting."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(
+        key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def st12_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -522,12 +555,7 @@ def st12_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     s = events_stream(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with _rocksdb_state_store(spark):
         out = s.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=PerTypeTotals(),
             outputStructType=(
@@ -537,11 +565,6 @@ def st12_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
         return drain(out, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 # transformWithState's control plane speaks protobuf between the JVM and
@@ -625,34 +648,15 @@ def st14_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest pipeline leans on daily; at scale the checkpoint lives on
     durable shared storage and the restart is a new cluster, not a
     new query object."""
-    import tempfile
-
-    from big_data_programming_spark.streaming.harness import (
-        _EVENTS_RAW_SCHEMA,
-        _ckpt_base,
-    )
-
-    base = tempfile.mkdtemp(prefix="bdps_st14_")
-    indir, outdir = f"{base}/in", f"{base}/out"
+    base = scratch_dir("bdps_st14_")
+    indir, outdir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
     e = load(spark, sf_dir, "events")
 
-    def run_to_completion() -> None:
-        s = spark.readStream.schema(_EVENTS_RAW_SCHEMA).parquet(indir)
-        q = (
-            s.filter(F.col("value") >= 10.0)
-            .writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    with tempfile.TemporaryDirectory(prefix="bdps_ckpt_", dir=_ckpt_base()) as ckpt:
-        e.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(indir)
-        run_to_completion()
-        e.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(indir)
-        run_to_completion()
+    for parity in (0, 1):
+        e.filter(F.col("event_id") % 2 == parity).write.mode("append").parquet(indir)
+        s = spark.readStream.schema(e.schema).parquet(indir)
+        writer = s.filter(F.col("value") >= 10.0).writeStream.format("parquet")
+        run_bounded(writer.option("path", outdir), ckpt)
 
     return (
         spark.read.parquet(outdir)
@@ -692,32 +696,16 @@ def st16_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     this is how a daily dashboard table absorbs a day's events
     without ever rescanning history — merge cost is O(|batch| +
     |dirty keys|), not O(|table|)."""
-    import tempfile
-
     ev = load(spark, sf_dir, "events").select("ts", "event_type", "value")
-    stage = tempfile.mkdtemp(prefix="bdps_st16_stage_")
-    ev.repartition(4).write.mode("overwrite").parquet(stage)
 
-    stream = (
-        spark.readStream.schema("ts timestamp_ntz, event_type string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage)
-    )
-
-    base = tempfile.mkdtemp(prefix="bdps_st16_snap_")
-    snap_schema = "event_type string, day date, n_events long, sv decimal(38,10)"
-    current: dict[str, str] = {}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = batch_df.groupBy(
             "event_type", F.col("ts").cast("date").alias("day")
         ).agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast(DEC)).alias("sv"),
         )
-        if "path" in current:
-            prev = spark.read.schema(snap_schema).parquet(current["path"])
+        if prev is not None:
             part = (
                 prev.unionByName(part)
                 .groupBy("event_type", "day")
@@ -726,15 +714,16 @@ def st16_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
                     F.sum("sv").cast(DEC).alias("sv"),
                 )
             )
-        new_path = f"{base}/v{batch_id}"
-        part.select(
+        return part.select(
             "event_type", "day", "n_events", F.col("sv").cast(DEC).alias("sv")
-        ).write.mode("overwrite").parquet(new_path)
-        current["path"] = new_path
+        )
 
-    drain_foreach_batch(stream, merge)
-
-    snap = spark.read.schema(snap_schema).parquet(current["path"])
+    snap = _snapshot_fold(
+        spark,
+        ev,
+        "event_type string, day date, n_events long, sv decimal(38,10)",
+        merge,
+    )
     return snap.select(
         "event_type",
         "day",
@@ -770,35 +759,22 @@ def st17_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form oracle. This is the contract a Python queue/API
     connector must honor at 100 TB/day; only the row generator is
     fixture-specific."""
-    import tempfile
-
     from big_data_programming_spark.sources.python_datasource import (
         register_stream_source,
     )
-    from big_data_programming_spark.streaming.harness import _ckpt_base
 
     register_stream_source(spark)
-    outdir = tempfile.mkdtemp(prefix="bdps_st17_out_")
-
-    def run_once() -> None:
-        s = spark.readStream.format("stream_telemetry").load()
-        q = (
-            s.writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    base = scratch_dir("bdps_st17_")
+    outdir, ckpt = f"{base}/out", f"{base}/ckpt"
 
     prev = -1
-    with tempfile.TemporaryDirectory(prefix="bdps_ckpt_", dir=_ckpt_base()) as ckpt:
-        for _ in range(6):  # 2000/700 -> 3 productive runs, then no growth
-            run_once()
-            n = spark.read.parquet(outdir).count()
-            if n == prev:
-                break
-            prev = n
+    for _ in range(6):  # 2000/700 -> 3 productive runs, then no growth
+        s = spark.readStream.format("stream_telemetry").load()
+        run_bounded(s.writeStream.format("parquet").option("path", outdir), ckpt)
+        n = spark.read.parquet(outdir).count()
+        if n == prev:
+            break
+        prev = n
 
     return (
         spark.read.parquet(outdir)
@@ -836,12 +812,7 @@ def st18_rocksdb_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics change) — which is exactly what the batch-twin oracle
     certifies. The provider is set per-query-start here; a production
     job sets it once in the session conf."""
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with _rocksdb_state_store(spark):
         s = events_stream(spark, sf_dir)
         agg = (
             s.groupBy("event_type", F.col("ts").cast("date").alias("day"))
@@ -851,11 +822,6 @@ def st18_rocksdb_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return drain(agg, "complete")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 @register(
@@ -883,24 +849,11 @@ def st19_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, state == final answer, which also certifies no state row
     was lost or double-applied across micro-batches. partition_id is
     deliberately dropped: shard placement is engine topology, not
-    semantics."""
-    import tempfile
-
-    from big_data_programming_spark.streaming.harness import _ckpt_base, _sink_ids
-
+    semantics. Only the state store is read, so the sink is ``noop``."""
     s = events_stream(spark, sf_dir)
     agg = s.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    ckpt = tempfile.mkdtemp(prefix="bdps_ckpt_state_", dir=_ckpt_base())
-    name = f"bdps_stream_sink_{next(_sink_ids)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt = scratch_dir("bdps_ckpt_state_")
+    run_bounded(agg.writeStream.format("noop").outputMode("complete"), ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.user_id").alias("user_id"),
@@ -1100,9 +1053,7 @@ def st23_foreach_row_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     retry, exactly-once here because the bounded drain runs each task
     once (st14 covers restart semantics; s19 covers a committing
     sink)."""
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="bdps_st23_out_")
+    out_dir = scratch_dir("bdps_st23_out_")
 
     class CentsWriter:
         def open(self, partition_id: int, epoch_id: int) -> bool:
@@ -1119,14 +1070,7 @@ def st23_foreach_row_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = events_stream(spark, sf_dir)
     hot = s.filter(F.col("value") >= 95.0).select("event_id", "value")
-    with tempfile.TemporaryDirectory(prefix="bdps_ckpt_") as ckpt:
-        q = (
-            hot.writeStream.foreach(CentsWriter())
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_bounded(hot.writeStream.foreach(CentsWriter()))
     return spark.read.schema("event_id long, cents long").csv(out_dir)
 
 
@@ -1165,40 +1109,7 @@ def st24_outer_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame
     NOT-EXISTS branch. Matched rows emit eagerly as in st10. This
     deferred-negative-evidence pattern is what any unbounded
     reconciliation (payment matching, ad attribution) runs on."""
-    s = events_stream(spark, sf_dir)
-    views = (
-        s.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("purchase_ts") > F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
-        F.col("v_user").alias("user_id"),
-        "view_id",
-        "purchase_id",
-        F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
-        F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
-    )
-    return drain(joined, "append")
+    return drain(_view_purchase_join(spark, sf_dir, "left_outer"), "append")
 
 
 @register(
@@ -1225,9 +1136,7 @@ def st25_partitioned_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatch. Exactly-once comes from the sink's transaction log
     (_spark_metadata), the same mechanism st14 exercises across
     restarts."""
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="bdps_st25_out_")
+    out_dir = scratch_dir("bdps_st25_out_")
     s = events_stream(spark, sf_dir)
     hot = s.filter(F.col("value") >= 80.0).select(
         "event_id",
@@ -1235,16 +1144,11 @@ def st25_partitioned_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
     )
-    with tempfile.TemporaryDirectory(prefix="bdps_ckpt_") as ckpt:
-        q = (
-            hot.writeStream.format("parquet")
-            .partitionBy("event_type")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_bounded(
+        hot.writeStream.format("parquet")
+        .partitionBy("event_type")
+        .option("path", out_dir)
+    )
     back = spark.read.schema("event_id long, user_id long, cents long, event_type string").parquet(out_dir)
     return back.select(
         "event_id",

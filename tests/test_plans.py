@@ -357,17 +357,15 @@ def test_binned_range_join_is_equi_join():
     )
 
 
-def test_orc_scan_pushes_filters_and_prunes_columns():
+def test_orc_scan_pushes_filters_and_prunes_columns(tmp_path):
     """X27: the ORC read path must get the same scan hygiene as
     parquet — predicates as PushedFilters, projection narrowing the
     read schema. Format parity is what makes s10 a real second
     columnar path rather than a demo."""
-    import tempfile
-
     import big_data_programming_spark.session as S
 
     spark = S.get_spark("plan-tests", cpus=8)
-    out = tempfile.mkdtemp(prefix="bdps_orc_plan_")
+    out = str(tmp_path / "orders.orc")
     load(spark, SF_DIR, "orders").write.mode("overwrite").orc(out)
     df = (
         spark.read.orc(out)

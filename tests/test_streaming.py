@@ -8,55 +8,101 @@ from __future__ import annotations
 
 import glob
 import os
+import subprocess
+import sys
 import tempfile
 
 from pyspark.sql import functions as F
 
 from big_data_programming_spark.functions.canonical import DEC
 from big_data_programming_spark.sources.loaders import load
-from big_data_programming_spark.streaming.harness import (
-    _ckpt_base,
-    drain,
-    events_stream,
-)
+from big_data_programming_spark.streaming import harness
+from big_data_programming_spark.streaming.harness import drain, events_stream
 from tests.conftest import SMOKE_SF_DIR, spark_result
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def _ckpt_dirs() -> set[str]:
-    bases = {_ckpt_base(), tempfile.gettempdir()} - {None}
-    return {p for b in bases for p in glob.glob(os.path.join(b, "bdps_ckpt_*"))}
+
+def _bdps_entries(pattern: str = "bdps_*") -> set[str]:
+    bases = {harness._ckpt_base(), tempfile.gettempdir()} - {None}
+    return {p for b in bases for p in glob.glob(os.path.join(b, pattern))}
 
 
 def test_stream_replays_batch_rows(spark):
     """S8 smoke: the stream sees exactly the batch table (ids, µs
     timestamps, values) after ns→µs truncation, and the drain leaves
     no checkpoint directory behind."""
-    before = _ckpt_dirs()
+    before = _bdps_entries("bdps_ckpt_*")
     got = drain(events_stream(spark, SMOKE_SF_DIR), "append")
-    assert _ckpt_dirs() - before == set()
+    assert _bdps_entries("bdps_ckpt_*") - before == set()
     want = load(spark, SMOKE_SF_DIR, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     assert spark_result(got) == spark_result(want)
 
 
-def test_checkpointed_queries_remove_their_checkpoints(spark):
-    """st14 and st17 restart a query on one checkpoint, st23 and st25
-    drain with their own: each removes that checkpoint once its runs
-    end. Their output dirs stay, and the returned frames still read
-    them after the checkpoint is gone."""
+#: Every catalog query that writes files its returned frame reads.
+SCRATCH_QUERIES = (
+    "st9_foreach_batch_sink",
+    "st11_incremental_upsert",
+    "st14_checkpoint_recovery",
+    "st16_incremental_agg_maintenance",
+    "st17_python_stream_source",
+    "st19_state_store_reader",
+    "st23_foreach_row_sink",
+    "st25_partitioned_stream_sink",
+    "s2_csv_roundtrip",
+    "s2b_corrupt_records",
+    "s3_json_roundtrip",
+    "s6_partitioned_roundtrip",
+    "s10_orc_roundtrip",
+    "s11_text_source",
+    "s12_binaryfile_source",
+    "s13_schema_evolution",
+    "s15_compaction",
+    "s18_xml_roundtrip",
+    "s19_python_sink",
+    "s26_zstd_compression",
+    "o5_bucketed_join",
+    "o9_file_size_targeting",
+    "j12_dynamic_partition_pruning",
+)
+
+
+def test_scratch_queries_leave_only_the_scratch_root(spark):
+    """Queries whose frames read files lazily put those files under the
+    one per-process scratch root; drain checkpoints go when their run
+    ends. So after all of them, and after their frames are read, the
+    only new ``bdps_*`` entry next to the checkpoints or in the temp
+    dir is that root."""
     from big_data_programming_spark.registry import queries
 
     q = queries()
-    before = _ckpt_dirs()
-    for name in (
-        "st14_checkpoint_recovery",
-        "st17_python_stream_source",
-        "st23_foreach_row_sink",
-        "st25_partitioned_stream_sink",
-    ):
-        assert q[name](spark, SMOKE_SF_DIR).count() > 0, name
-    assert _ckpt_dirs() - before == set()
+    before = _bdps_entries()
+    frames = {name: q[name](spark, SMOKE_SF_DIR) for name in SCRATCH_QUERIES}
+    for name, df in frames.items():
+        assert df.count() > 0, name
+    new = _bdps_entries() - before
+    assert new <= {harness._scratch_root}, sorted(new)
+    assert os.path.basename(harness._scratch_root).startswith("bdps_scratch_")
+
+
+def test_scratch_root_is_removed_at_exit():
+    """The scratch root lives exactly as long as the process that made
+    it (Spark-free: a child interpreter only asks for a directory)."""
+    code = (
+        "import os\n"
+        "from big_data_programming_spark.streaming.harness import scratch_dir\n"
+        "d = scratch_dir('bdps_probe_')\n"
+        "open(os.path.join(d, 'f'), 'w').close()\n"
+        "print(d)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True
+    )
+    root = os.path.dirname(out.stdout.strip())
+    assert os.path.basename(root).startswith("bdps_scratch_"), out.stdout
+    assert not os.path.exists(root)
 
 
 def test_tumbling_complete_equals_batch_twin(spark):
@@ -130,7 +176,7 @@ def test_stream_dedup_restores_exactly_once(spark):
     assert spark_result(got) == spark_result(want)
 
 
-def test_late_rows_past_watermark_are_dropped(spark):
+def test_late_rows_past_watermark_are_dropped(spark, tmp_path):
     """ST8: a row arriving AFTER the watermark passed its window must
     be discarded — the bound that keeps state finite on an unbounded
     stream. Two files staged with ordered mtimes + maxFilesPerTrigger=1
@@ -138,10 +184,7 @@ def test_late_rows_past_watermark_are_dropped(spark):
     batch 2 = stragglers for hour 0 (now > 1h late) — whose counts
     must NOT appear in the emitted windows."""
     import datetime as dt
-    import glob
-    import os
     import shutil
-    import tempfile
 
     def ts(h, m=0):
         return dt.datetime(2024, 1, 1, h, m, 0)
@@ -155,15 +198,16 @@ def test_late_rows_past_watermark_are_dropped(spark):
     fresh = [(50, ts(10, 30))]
     late = [(100 + i, ts(0, 5 + i)) for i in range(5)]
 
-    stage = tempfile.mkdtemp(prefix="bdps_late_stage_")
+    stage = tmp_path / "stage"
+    stage.mkdir()
     schema = "event_id long, ts timestamp"
     for name, rows, age in (("a", on_time, 300), ("b", fresh, 200), ("c", late, 100)):
-        d = tempfile.mkdtemp(prefix=f"bdps_late_{name}_")
+        d = str(tmp_path / name)
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(d)
         (part,) = glob.glob(f"{d}/part-*.parquet")
-        dst = f"{stage}/{name}.parquet"
+        dst = stage / f"{name}.parquet"
         shutil.copy(part, dst)
         mtime = 1_700_000_000 - age  # a older than b -> processed first
         os.utime(dst, (mtime, mtime))
@@ -172,7 +216,7 @@ def test_late_rows_past_watermark_are_dropped(spark):
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "*.parquet")
-        .parquet(stage)
+        .parquet(str(stage))
     )
     agg = (
         stream.withWatermark("ts", "1 hour")
