@@ -14,17 +14,58 @@ from pyspark.sql import functions as F
 STOPWORDS = ("the", "a", "of", "and", "to")
 
 
-def basic_gate_sql(toks_expr: str) -> str:
-    """DuckDB spelling of the l5 basic quality gate (length 20-2000 +
-    >= 2 stopwords) over a token-list expression — ONE definition so
-    the l4u / st29 oracles cannot drift from STOPWORDS or from each
-    other (r6 review finding: the fragment was hand-inlined 3x)."""
+def stopword_count(toks: Column) -> Column:
+    """How many tokens of a token array are in STOPWORDS. Twin of
+    :func:`stopword_count_sql`."""
+    return F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
+
+
+def stopword_count_sql(toks_expr: str) -> str:
+    """DuckDB twin of :func:`stopword_count`."""
     stop = ", ".join(f"'{w}'" for w in STOPWORDS)
-    return (
-        f"LEN({toks_expr}) BETWEEN 20 AND 2000\n"
-        f"                      AND LEN(list_filter({toks_expr},\n"
-        f"                              x -> x IN ({stop}))) >= 2"
-    )
+    return f"LEN(list_filter({toks_expr}, x -> x IN ({stop})))"
+
+
+def gate_flags(toks: Column, wv: Column | None = None) -> dict[str, Column]:
+    """The l5 in-row gates over a token array, each as a flag that is
+    true when the document FAILS it: ``bad_length`` (outside 20-2000
+    tokens), ``low_stopword`` (fewer than 2 stopwords) and, given the
+    model column ``wv``, ``low_quality`` (l5i logit <= 0). ONE
+    definition of the thresholds for every query that applies them
+    (l4u, st29, l5g, l5j, lm10); twin of :func:`gate_flags_sql`."""
+    flags = {
+        "bad_length": ~F.size(toks).between(20, 2000),
+        "low_stopword": stopword_count(toks) < 2,
+    }
+    if wv is not None:
+        flags["low_quality"] = quality_logit(toks, wv) <= 0
+    return flags
+
+
+def gate_flags_sql(toks_expr: str, w_expr: str | None = None) -> dict[str, str]:
+    """DuckDB twin of :func:`gate_flags`."""
+    flags = {
+        "bad_length": f"LEN({toks_expr}) NOT BETWEEN 20 AND 2000",
+        "low_stopword": f"{stopword_count_sql(toks_expr)} < 2",
+    }
+    if w_expr is not None:
+        flags["low_quality"] = f"{quality_logit_sql(toks_expr, w_expr)} <= 0"
+    return flags
+
+
+def basic_gate(toks: Column) -> Column:
+    """The l5 basic quality gate (l4u, st29): a document passes when
+    neither the length nor the stopword flag of :func:`gate_flags`
+    fires. Twin of :func:`basic_gate_sql`."""
+    f = gate_flags(toks)
+    return ~(f["bad_length"] | f["low_stopword"])
+
+
+def basic_gate_sql(toks_expr: str) -> str:
+    """DuckDB twin of :func:`basic_gate`."""
+    f = gate_flags_sql(toks_expr)
+    return f"NOT ({f['bad_length']} OR {f['low_stopword']})"
+
 
 #: BPE-ish tokenizer regex: letter runs, digit runs, or single
 #: non-alphanumeric marks — the shape (not the vocab) of a byte-pair
@@ -48,7 +89,7 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     toks = tokenize(F.col(text_col))
     n_tokens = F.size(toks)
     total_len = F.aggregate(F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, b: a + b)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
+    n_stop = stopword_count(toks)
     out = docs.select(
         "doc_id",
         "lang",
@@ -66,15 +107,14 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 #: DuckDB twin expression fragments for :func:`quality_features`.
-QUALITY_ORACLE_SQL = """
+QUALITY_ORACLE_SQL = f"""
 WITH feats AS (
   SELECT doc_id, lang, source,
          LEN(string_split(text, ' ')) AS n_tokens,
          CAST(list_reduce(list_transform(string_split(text, ' '), t -> LENGTH(t)),
                           (a, b) -> a + b) AS DOUBLE)
            / LEN(string_split(text, ' ')) AS mean_token_len,
-         CAST(LEN(list_filter(string_split(text, ' '),
-                              t -> t IN ('the', 'a', 'of', 'and', 'to'))) AS DOUBLE)
+         CAST({stopword_count_sql("string_split(text, ' ')")} AS DOUBLE)
            / LEN(string_split(text, ' ')) AS stopword_ratio
   FROM documents
 )
@@ -121,17 +161,55 @@ def _l5i_weight(key: int | str) -> float:
 L5I_WEIGHTS: tuple[float, ...] = tuple(_l5i_weight(i) for i in range(L5I_BUCKETS))
 
 
-def unigram_bigram_features(toks: Column) -> Column:
-    """fastText's feature set: the tokens plus their adjacent bigrams,
-    formed IN-ROW with slice/zip_with (no token explode, no self-join
-    — the l5e4 discipline)."""
-    n = F.size(toks)
-    bigrams = F.zip_with(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
+def bigrams(toks: Column) -> Column:
+    """The adjacent token pairs of a token array, each as 'a b', formed
+    IN-ROW with slice/zip_with (no token explode, no self-join — the
+    l5e4 discipline). Twin of :func:`bigrams_sql`."""
+    m = F.greatest(F.size(toks) - 1, F.lit(0))
+    return F.zip_with(
+        F.slice(toks, 1, m), F.slice(toks, 2, m), lambda a, b: F.concat_ws(" ", a, b)
     )
-    return F.concat(toks, bigrams)
+
+
+def bigrams_sql(toks_expr: str) -> str:
+    """DuckDB twin of :func:`bigrams`."""
+    return (
+        f"list_transform(generate_series(1, GREATEST(LEN({toks_expr}) - 1, 0)), "
+        f"i -> {toks_expr}[i] || ' ' || {toks_expr}[i + 1])"
+    )
+
+
+def max_token_freq(toks: DataFrame) -> DataFrame:
+    """``(doc_id, max_freq)``: the count of each document's most
+    frequent token, from ``(doc_id, t)`` token-array rows (l4h, l5d).
+    One aggregate over per-(doc, token) counts already shrunk by
+    map-side combine. Twin of :data:`MAX_TOKEN_FREQ_SQL`."""
+    return (
+        toks.select("doc_id", F.explode(F.col("t")).alias("token"))
+        .groupBy("doc_id", "token")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("doc_id")
+        .agg(F.max("c").alias("max_freq"))
+    )
+
+
+#: DuckDB twin of :func:`max_token_freq` over a ``toks(doc_id, t)`` CTE.
+MAX_TOKEN_FREQ_SQL = """SELECT doc_id, MAX(c) AS max_freq
+  FROM (SELECT doc_id, u.token, COUNT(*) AS c
+        FROM toks, UNNEST(t) AS u(token)
+        GROUP BY doc_id, u.token)
+  GROUP BY doc_id"""
+
+
+def unigram_bigram_features(toks: Column) -> Column:
+    """fastText's feature set: the tokens plus their adjacent bigrams
+    (l5i, l5k, lm7). Twin of :func:`unigram_bigram_features_sql`."""
+    return F.concat(toks, bigrams(toks))
+
+
+def unigram_bigram_features_sql(toks_expr: str) -> str:
+    """DuckDB twin of :func:`unigram_bigram_features`."""
+    return f"list_concat({toks_expr}, {bigrams_sql(toks_expr)})"
 
 
 def quality_logit(
@@ -164,17 +242,11 @@ def quality_logit(
 def quality_logit_sql(
     toks_expr: str, w_expr: str, bias_expr: str | None = None
 ) -> str:
-    """DuckDB spelling of :func:`quality_logit` — ONE definition so the
-    l5i / l5g / l5h oracles cannot drift from each other (the
-    basic_gate_sql lesson). ``w_expr`` must reference a DOUBLE[]
-    column holding the weights in bucket order; ``bias_expr`` defaults
-    to the fixed L5I_BIAS literal (l5k2 passes the trained intercept
-    column, mirroring :func:`quality_logit`)."""
-    fs = (
-        f"list_concat({toks_expr}, "
-        f"list_transform(generate_series(1, GREATEST(LEN({toks_expr}) - 1, 0)), "
-        f"i -> {toks_expr}[i] || ' ' || {toks_expr}[i + 1]))"
-    )
+    """DuckDB twin of :func:`quality_logit`. ``w_expr`` must reference
+    a DOUBLE[] column holding the weights in bucket order; ``bias_expr``
+    defaults to the fixed L5I_BIAS literal (l5k2 passes the trained
+    intercept column, mirroring :func:`quality_logit`)."""
+    fs = unigram_bigram_features_sql(toks_expr)
     # Zero-init left fold (list_concat of a [0.0] accumulator seed)
     # mirrors Spark's F.aggregate(..., lit(0.0), ...): a genuinely
     # empty feature list folds to 0.0 then NULL after /LEN (DuckDB
@@ -197,15 +269,44 @@ def l5i_weights_sql() -> str:
     return "[" + ", ".join(repr(w) for w in L5I_WEIGHTS) + "]::DOUBLE[]"
 
 
+#: Spark SQL spelling of the weight vector: DOUBLE literals (the ``D``
+#: suffix; a bare decimal would parse as DECIMAL), so each parses to
+#: the identical double.
+_L5I_WEIGHTS_SPARK_SQL = "array(" + ", ".join(f"{w!r}D" for w in L5I_WEIGHTS) + ")"
+
+
+def quality_weights() -> Column:
+    """The weight vector as an ``array<double>`` Column, parsed from ONE
+    SQL literal: built element by element it cost one py4j round trip
+    per node (~1,050 gateway commands per build against ~20)."""
+    return F.expr(_L5I_WEIGHTS_SPARK_SQL)
+
+
+def with_quality_weights(df: DataFrame) -> DataFrame:
+    """``df`` with the model vector attached as column ``wv``: one
+    broadcast 1-row cross join, the l5i model-attach shape."""
+    w = df.sparkSession.range(1).select(quality_weights().alias("wv"))
+    return df.crossJoin(F.broadcast(w))
+
+
 def shingle_hashes(toks: Column, k: int = 8) -> Column:
     """md5 hashes of every k-token shingle of a token array (at least
     one window even for shorter docs — the degenerate shingle is the
     whole doc). ONE definition on purpose: l4i's decontamination gate
-    and l5g's capstone verdict must stay provably identical (r5 review
-    finding), and shingle_fingerprint shares the same construction."""
+    and l5g/l5j's n-gram probe must stay provably identical (r5 review
+    finding), and shingle_fingerprint shares the same construction.
+    Twin of :func:`shingle_hashes_sql`."""
     return F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1))),
         lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, k)).cast("binary")),
+    )
+
+
+def shingle_hashes_sql(toks_expr: str, k: int = 8) -> str:
+    """DuckDB twin of :func:`shingle_hashes`."""
+    return (
+        f"list_transform(generate_series(1, GREATEST(LEN({toks_expr}) - {k - 1}, 1)), "
+        f"i -> md5(array_to_string(list_slice({toks_expr}, i, i + {k - 1}), ' ')))"
     )
 
 
@@ -344,7 +445,7 @@ def bpe_pairs(sym: Column) -> Column:
     Twin of :func:`bpe_pairs_sql`.
 
     Built with the zip_with(slice, slice) idiom (the same guarded
-    construction unigram_bigram_features uses), NOT sequence(1, n-1) +
+    construction :func:`bigrams` uses), NOT sequence(1, n-1) +
     element_at: for a SINGLE-symbol string ``sequence(1, 0)`` yields
     ``[1, 0]`` on Spark (step defaults to -1 when start > stop) and
     ``element_at(p, 0)`` then throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT,

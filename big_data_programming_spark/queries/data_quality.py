@@ -17,6 +17,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_programming_spark.functions.canonical import DEC
+from big_data_programming_spark.queries.llm_curation import (
+    _SEMDECON_TH,
+    EVAL_MAX_COS_SQL,
+    eval_max_cos,
+)
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
@@ -644,32 +649,23 @@ def dq8_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: dq9 conventions: the l4t semantic-contamination rule (max cosine
-#: vs the eval slice >= 0.35, the fixture's separation point), the
-#: % 13 eval-slice convention, and a synthesized 7-day ingest cycle
+#: vs the eval slice >= _SEMDECON_TH, over the _EVAL_MOD eval slice —
+#: eval_max_cos, llm_curation.py) and a synthesized 7-day ingest cycle
 #: (vec_id % 7 — the corpus carries no ingest timestamps; the l2j
 #: synthetic-surface convention applied to time). Drift = the day's
 #: contamination rate deviating from the corpus rate by > 5 pp,
 #: decided in EXACT integer cross-multiplication (the dq5 discipline).
-_DQ9_EVAL_MOD = 13
 _DQ9_DAYS = 7
-_DQ9_TH = 0.35
 
 
 def _dq9_oracle() -> str:
-    from big_data_programming_spark.functions.canonical import COS64_SQL
-
     return f"""
 WITH sem AS (
-  SELECT t.vec_id, MAX({COS64_SQL.format(a='t.embedding', b='e.c')}) AS mx
-  FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE vec_id % {_DQ9_EVAL_MOD} <> 0) t
-  CROSS JOIN (SELECT vec_id, embedding AS c FROM embeddings
-              WHERE vec_id % {_DQ9_EVAL_MOD} = 0) e
-  GROUP BY 1
+  {EVAL_MAX_COS_SQL}
 ), daily AS (
   SELECT vec_id % {_DQ9_DAYS} AS ingest_day,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(CASE WHEN mx >= {_DQ9_TH} THEN 1 ELSE 0 END) AS BIGINT)
+         CAST(SUM(CASE WHEN mx >= {_SEMDECON_TH} THEN 1 ELSE 0 END) AS BIGINT)
            AS n_contaminated
   FROM sem GROUP BY 1
 ), tot AS (
@@ -718,30 +714,13 @@ def dq9_contamination_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|n_cd * N - nc_all * n_day| * 20 > n_day * N <=> |dev| > 5 pp) —
     the dq5 discipline, hash-exact at any partition count and immune
     to int64 overflow at planetary batch sizes."""
-    from big_data_programming_spark.operators.similarity import (
-        as_double_array,
-        collect_vector_array,
-        cosine_similarity_col,
-    )
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("v")
-    )
-    ev = collect_vector_array(emb.filter(F.col("vec_id") % _DQ9_EVAL_MOD == 0))
-    mx = F.array_max(
-        F.transform(
-            F.col("evals"),
-            lambda e: cosine_similarity_col(F.col("v"), e.getField("c")),
-        )
-    )
     daily = (
-        emb.filter(F.col("vec_id") % _DQ9_EVAL_MOD != 0)
-        .crossJoin(F.broadcast(ev))
-        .select((F.col("vec_id") % _DQ9_DAYS).alias("ingest_day"), mx.alias("mx"))
+        eval_max_cos(load(spark, sf_dir, "embeddings"))
+        .select((F.col("vec_id") % _DQ9_DAYS).alias("ingest_day"), "mx")
         .groupBy("ingest_day")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(F.when(F.col("mx") >= _DQ9_TH, 1).otherwise(0))
+            F.sum(F.when(F.col("mx") >= _SEMDECON_TH, 1).otherwise(0))
             .cast("bigint")
             .alias("n_contaminated"),
         )

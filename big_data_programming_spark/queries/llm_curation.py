@@ -11,18 +11,29 @@ eval-set shingle table. Each shape survives 100 TB unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_programming_spark.functions.canonical import COS64_SQL
+from big_data_programming_spark.operators.similarity import (
+    as_double_array,
+    collect_vector_array,
+    cosine_similarity_col,
+)
 from big_data_programming_spark.operators.text import (
-    L5I_WEIGHTS,
+    MAX_TOKEN_FREQ_SQL,
+    basic_gate,
     basic_gate_sql,
+    bigrams,
+    bigrams_sql,
+    gate_flags,
+    gate_flags_sql,
     l5i_weights_sql,
-    quality_logit,
-    quality_logit_sql,
+    max_token_freq,
     shingle_hashes,
+    shingle_hashes_sql,
     tokenize,
+    with_quality_weights,
 )
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
@@ -120,21 +131,16 @@ def l4g_pii_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l4h_repetition_signals",
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ), freq AS (
-  SELECT doc_id, MAX(c) AS max_freq
-  FROM (SELECT doc_id, u.token, COUNT(*) AS c
-        FROM toks, UNNEST(t) AS u(token)
-        GROUP BY doc_id, u.token)
-  GROUP BY doc_id
+  {MAX_TOKEN_FREQ_SQL}
 ), arr AS (
   SELECT doc_id,
          LEN(t) AS n_tokens,
          LEN(list_distinct(t)) AS distinct_tokens,
-         list_transform(generate_series(1, LEN(t) - 1),
-                        i -> t[i] || ' ' || t[i + 1]) AS bg
+         {bigrams_sql("t")} AS bg
   FROM toks
 )
 SELECT a.doc_id,
@@ -160,29 +166,16 @@ def l4h_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     fractions are raw IEEE double divisions of integers — bitwise
     identical across engines, no rounding step to disagree on."""
     d = load(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
-    base = d.select("doc_id", toks.alias("t"))
-    freq = (
-        base.select("doc_id", F.explode(F.col("t")).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(F.max("c").alias("max_freq"))
-    )
-    n = F.size(F.col("t"))
-    bg = F.zip_with(
-        F.slice(F.col("t"), 1, n - 1),
-        F.slice(F.col("t"), 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
+    base = d.select("doc_id", tokenize(F.col("text")).alias("t"))
+    bg = bigrams(F.col("t"))
     arr = base.select(
         "doc_id",
-        n.cast("bigint").alias("n_tokens"),
+        F.size("t").cast("bigint").alias("n_tokens"),
         F.size(F.array_distinct(F.col("t"))).cast("bigint").alias("distinct_tokens"),
         F.size(bg).cast("bigint").alias("n_bigrams"),
         (F.size(bg) - F.size(F.array_distinct(bg))).cast("bigint").alias("dup_bigrams"),
     )
-    return arr.join(freq, "doc_id").select(
+    return arr.join(max_token_freq(base), "doc_id").select(
         "doc_id",
         "n_tokens",
         "distinct_tokens",
@@ -205,11 +198,7 @@ _EVAL_MOD = 13
     oracle=f"""
 WITH shingled AS (
   SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, GREATEST(LEN(string_split(text, ' ')) - {_DECON_K - 1}, 1)),
-           i -> md5(array_to_string(
-                  list_slice(string_split(text, ' '), i, i + {_DECON_K - 1}), ' '))
-         )) AS sh
+         list_distinct({shingle_hashes_sql("string_split(text, ' ')", _DECON_K)}) AS sh
   FROM documents
 ), eval_sh AS (
   SELECT DISTINCT u.h FROM shingled, UNNEST(sh) AS u(h)
@@ -258,6 +247,28 @@ def l4i_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         train.join(F.broadcast(eval_sh), "h")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap_shingles"))
+    )
+
+
+def ngram_hits(docs: DataFrame, train: DataFrame) -> DataFrame:
+    """l4i's rule as a per-document flag: ``(doc_id, _ng)`` for every
+    ``train`` row (``doc_id``, token array ``toks``) that shares an
+    8-token shingle with the eval slice of ``docs``, probing the
+    broadcast distinct eval shingle set. l5g and l5j apply it; the
+    DuckDB twin is ``ev_sh``/``ngram_hits`` in ``_PIPE_CTES``."""
+    shingles = F.array_distinct(shingle_hashes(F.col("toks"), _DECON_K))
+    ev_sh = (
+        docs.filter(F.col("doc_id") % _EVAL_MOD == 0)
+        .select(tokenize(F.col("text")).alias("toks"))
+        .select(F.explode(shingles).alias("h"))
+        .distinct()
+    )
+    return (
+        train.select("doc_id", F.explode(shingles).alias("h"))
+        .join(F.broadcast(ev_sh), "h")
+        .select("doc_id")
+        .distinct()
+        .select("doc_id", F.lit(True).alias("_ng"))
     )
 
 
@@ -614,17 +625,7 @@ def l4t_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval id, pinned identically in the oracle's window order. Cosines
     fold left-to-right on both engines (bit-identical doubles);
     threshold compares the raw double, output rounds to 8 dp."""
-    from big_data_programming_spark.operators.similarity import (
-        as_double_array,
-        collect_vector_array,
-        cosine_similarity_col,
-    )
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("v")
-    )
-    ev = collect_vector_array(emb.filter(F.col("vec_id") % _EVAL_MOD == 0))
-    train = emb.filter(F.col("vec_id") % _EVAL_MOD != 0)
+    train, ev = _eval_vectors(load(spark, sf_dir, "embeddings"))
     best = F.array_max(
         F.transform(
             F.col("evals"),
@@ -651,6 +652,39 @@ def l4t_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _eval_vectors(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The embeddings as f64 ``(vec_id, v)`` rows of the train slice,
+    and the eval slice collapsed to the 1-row ``evals`` array."""
+    v = emb.select("vec_id", as_double_array(F.col("embedding")).alias("v"))
+    return (
+        v.filter(F.col("vec_id") % _EVAL_MOD != 0),
+        collect_vector_array(v.filter(F.col("vec_id") % _EVAL_MOD == 0)),
+    )
+
+
+def eval_max_cos(emb: DataFrame) -> DataFrame:
+    """l4t's rule without the argmax: ``(vec_id, mx)``, each train-slice
+    vector's max cosine against the broadcast 1-row eval array (an
+    in-row array_max, no |train| x |eval| rows). l5g, l5j and dq9
+    apply it; twin of :data:`EVAL_MAX_COS_SQL`."""
+    train, ev = _eval_vectors(emb)
+    mx = F.array_max(
+        F.transform(
+            F.col("evals"),
+            lambda e: cosine_similarity_col(F.col("v"), e.getField("c")),
+        )
+    )
+    return train.crossJoin(F.broadcast(ev)).select("vec_id", mx.alias("mx"))
+
+
+#: DuckDB twin of :func:`eval_max_cos`.
+EVAL_MAX_COS_SQL = f"""SELECT t.vec_id, MAX({_COS_CUR.format(a='t.embedding', b='e.c')}) AS mx
+  FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id % {_EVAL_MOD} <> 0) t
+  CROSS JOIN (SELECT vec_id, embedding AS c FROM embeddings
+              WHERE vec_id % {_EVAL_MOD} = 0) e
+  GROUP BY 1"""
+
+
 #: Pipeline-verdict gate order: the cheap scan gates run first (the
 #: order a production pipeline applies them — cheapest rejection
 #: first), contamination last; `verdict` names the FIRST failing
@@ -668,11 +702,25 @@ _VERDICT_STAGES = (
 )
 
 
+def first_fail_sql(stages: tuple[str, ...]) -> str:
+    """The verdict over boolean stage columns: the name of the FIRST
+    stage whose flag is true, in ``stages`` order, else 'keep'. The
+    same CASE text parses in Spark SQL and DuckDB, so
+    :func:`first_fail` is this string parsed (l5g, l5j, lm10)."""
+    whens = " ".join(f"WHEN {s} THEN '{s}'" for s in stages)
+    return f"CASE {whens} ELSE 'keep' END"
+
+
+def first_fail(stages: tuple[str, ...]) -> Column:
+    """Spark twin of :func:`first_fail_sql`."""
+    return F.expr(first_fail_sql(stages))
+
+
 #: Shared oracle fragments — ONE definition of the train slice, the
-#: per-gate side tables, the six gate flag expressions, and the gate
-#: join set, composed verbatim by the l5g, l5h (via l5g) and l5j
-#: oracles so the three artifacts provably cannot drift (the
-#: basic_gate_sql discipline applied to the whole pipeline).
+#: per-gate side tables, the stage flag expressions, and the gate
+#: join set, composed by the l5g, l5h (via l5g) and l5j oracles. The
+#: n-gram probe (``ev_sh``, ``ngram_hits``) is :func:`ngram_hits`'s
+#: twin and ``sem`` is :data:`EVAL_MAX_COS_SQL`.
 _PIPE_CTES = f"""w AS (SELECT {l5i_weights_sql()} AS wv),
 train AS (
   SELECT doc_id, text, source, string_split(text, ' ') AS toks
@@ -683,53 +731,67 @@ train AS (
   SELECT h, MIN(doc_id) AS keeper FROM hashes GROUP BY 1
 ), ev_sh AS (
   SELECT DISTINCT u.h
-  FROM (SELECT list_distinct(list_transform(
-          generate_series(1, GREATEST(LEN(string_split(text, ' ')) - {_DECON_K - 1}, 1)),
-          i -> md5(array_to_string(
-                 list_slice(string_split(text, ' '), i, i + {_DECON_K - 1}), ' ')))) AS sh
+  FROM (SELECT list_distinct({shingle_hashes_sql("string_split(text, ' ')", _DECON_K)}) AS sh
         FROM documents WHERE doc_id % {_EVAL_MOD} = 0),
        UNNEST(sh) AS u(h)
 ), ngram_hits AS (
   SELECT DISTINCT t.doc_id
-  FROM (SELECT doc_id, UNNEST(list_distinct(list_transform(
-          generate_series(1, GREATEST(LEN(toks) - {_DECON_K - 1}, 1)),
-          i -> md5(array_to_string(list_slice(toks, i, i + {_DECON_K - 1}), ' '))))) AS h
+  FROM (SELECT doc_id, UNNEST(list_distinct({shingle_hashes_sql("toks", _DECON_K)})) AS h
         FROM train) t
   JOIN ev_sh ON t.h = ev_sh.h
 ), sem AS (
-  SELECT t.vec_id AS doc_id, MAX({_COS_CUR.format(a='t.embedding', b='e.c')}) AS mx
-  FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id % {_EVAL_MOD} <> 0) t
-  CROSS JOIN (SELECT vec_id, embedding AS c FROM embeddings
-              WHERE vec_id % {_EVAL_MOD} = 0) e
-  GROUP BY 1
+  {EVAL_MAX_COS_SQL}
 )"""
 
-_GATE_FLAGS_SQL = f"""tr.doc_id <> f.keeper AS exact_dup,
-         LEN(tr.toks) NOT BETWEEN 20 AND 2000 AS bad_length,
-         LEN(list_filter(tr.toks,
-             x -> x IN ('the', 'a', 'of', 'and', 'to'))) < 2 AS low_stopword,
-         {quality_logit_sql('tr.toks', 'wv')} <= 0 AS low_quality,
-         nh.doc_id IS NOT NULL AS contaminated_ngram,
-         COALESCE(s.mx >= {_SEMDECON_TH}, FALSE) AS contaminated_semantic"""
+#: Every l5g/l5j stage flag over the aliases of _GATE_JOINS_SQL (and
+#: l5j's url/sig joins); twin of :func:`_stage_flags`.
+_STAGE_FLAGS_SQL = {
+    "url_dup": "tr.doc_id <> uk.ukeeper",
+    "exact_dup": "tr.doc_id <> f.keeper",
+    **gate_flags_sql("tr.toks", "wv"),
+    "near_dup_simhash": "tr.doc_id <> sk.skeeper",
+    "contaminated_ngram": "nh.doc_id IS NOT NULL",
+    "contaminated_semantic": f"COALESCE(s.mx >= {_SEMDECON_TH}, FALSE)",
+}
+
+
+def _stage_flags_sql(stages: tuple[str, ...]) -> str:
+    return ",\n         ".join(f"{_STAGE_FLAGS_SQL[s]} AS {s}" for s in stages)
+
+
+def _stage_flags(stages: tuple[str, ...]) -> list[Column]:
+    """The l5g/l5j stage flags, one boolean column per name in
+    ``stages``, over the per-doc relation their joins assemble
+    (``keeper``/``ukeeper``/``skeeper``, ``toks``, ``wv``, ``_ng``,
+    ``mx``)."""
+    flags = {
+        "url_dup": F.col("doc_id") != F.col("ukeeper"),
+        "exact_dup": F.col("doc_id") != F.col("keeper"),
+        **gate_flags(F.col("toks"), F.col("wv")),
+        "near_dup_simhash": F.col("doc_id") != F.col("skeeper"),
+        "contaminated_ngram": F.coalesce(F.col("_ng"), F.lit(False)),
+        "contaminated_semantic": F.coalesce(F.col("mx") >= _SEMDECON_TH, F.lit(False)),
+    }
+    return [flags[s].alias(s) for s in stages]
+
 
 _GATE_JOINS_SQL = """FROM train tr
   CROSS JOIN w
   JOIN hashes h2 ON h2.doc_id = tr.doc_id
   JOIN firsts f ON f.h = h2.h
   LEFT JOIN ngram_hits nh ON nh.doc_id = tr.doc_id
-  LEFT JOIN sem s ON s.doc_id = tr.doc_id"""
+  LEFT JOIN sem s ON s.vec_id = tr.doc_id"""
 
 #: l5g's full oracle (shared with l5h's ablation rollup, which
 #: aggregates over exactly this relation).
 _L5G_ORACLE = f"""
 WITH {_PIPE_CTES}, flags AS (
   SELECT tr.doc_id,
-         {_GATE_FLAGS_SQL}
+         {_stage_flags_sql(_VERDICT_STAGES)}
   {_GATE_JOINS_SQL}
 )
 SELECT doc_id, {", ".join(_VERDICT_STAGES)},
-       CASE {" ".join(f"WHEN {s} THEN '{s}'" for s in _VERDICT_STAGES)}
-            ELSE 'keep' END AS verdict
+       {first_fail_sql(_VERDICT_STAGES)} AS verdict
 FROM flags
 """
 
@@ -766,78 +828,23 @@ def l5g_pipeline_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines emit exactly this record in one pass over each shard.
     The doc side of the semantic gate joins embeddings on
     doc_id = vec_id (LEFT, so docs without vectors pass that gate)."""
-    from big_data_programming_spark.operators.similarity import (
-        as_double_array,
-        collect_vector_array,
-        cosine_similarity_col,
-    )
-    from big_data_programming_spark.operators.text import STOPWORDS
-
     d = load(spark, sf_dir, "documents")
     train = d.filter(F.col("doc_id") % _EVAL_MOD != 0).select(
         "doc_id", "text", tokenize(F.col("text")).alias("toks")
     )
     hashes = train.select("doc_id", F.md5(F.col("text").cast("binary")).alias("h"))
     firsts = hashes.groupBy("h").agg(F.min("doc_id").alias("keeper"))
-    shingles = F.array_distinct(shingle_hashes(F.col("toks"), _DECON_K))
-    ev_sh = (
-        d.filter(F.col("doc_id") % _EVAL_MOD == 0)
-        .select("doc_id", tokenize(F.col("text")).alias("toks"))
-        .select(F.explode(shingles).alias("h"))
-        .distinct()
+    sem = eval_max_cos(load(spark, sf_dir, "embeddings")).select(
+        F.col("vec_id").alias("doc_id"), "mx"
     )
-    ngram_hits = (
-        train.select("doc_id", F.explode(shingles).alias("h"))
-        .join(F.broadcast(ev_sh), "h")
-        .select("doc_id")
-        .distinct()
-        .select(F.col("doc_id"), F.lit(True).alias("_ng"))
-    )
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("v")
-    )
-    ev = collect_vector_array(emb.filter(F.col("vec_id") % _EVAL_MOD == 0))
-    mx = F.array_max(
-        F.transform(
-            F.col("evals"),
-            lambda e: cosine_similarity_col(F.col("v"), e.getField("c")),
-        )
-    )
-    sem = (
-        emb.filter(F.col("vec_id") % _EVAL_MOD != 0)
-        .crossJoin(F.broadcast(ev))
-        .select(F.col("vec_id").alias("doc_id"), mx.alias("mx"))
-    )
-    wrow = spark.range(1).select(
-        F.array(*[F.lit(x) for x in L5I_WEIGHTS]).alias("wv")
-    )
-    flags = (
+    flags = with_quality_weights(
         train.join(hashes, "doc_id")
         .join(firsts, "h")
-        .join(F.broadcast(ngram_hits), "doc_id", "left")
+        .join(F.broadcast(ngram_hits(d, train)), "doc_id", "left")
         .join(sem, "doc_id", "left")
-        .crossJoin(F.broadcast(wrow))
-        .select(
-            "doc_id",
-            (F.col("doc_id") != F.col("keeper")).alias("exact_dup"),
-            (~F.size("toks").between(20, 2000)).alias("bad_length"),
-            (
-                F.size(F.filter(F.col("toks"), lambda x: x.isin(*STOPWORDS))) < 2
-            ).alias("low_stopword"),
-            (quality_logit(F.col("toks"), F.col("wv")) <= 0).alias("low_quality"),
-            F.coalesce(F.col("_ng"), F.lit(False)).alias("contaminated_ngram"),
-            F.coalesce(F.col("mx") >= _SEMDECON_TH, F.lit(False)).alias(
-                "contaminated_semantic"
-            ),
-        )
-    )
-    verdict = F.when(F.col("exact_dup"), "exact_dup")
-    for stage in _VERDICT_STAGES[1:]:
-        verdict = verdict.when(F.col(stage), stage)
+    ).select("doc_id", *_stage_flags(_VERDICT_STAGES))
     return flags.select(
-        "doc_id",
-        *_VERDICT_STAGES,
-        verdict.otherwise("keep").alias("verdict"),
+        "doc_id", *_VERDICT_STAGES, first_fail(_VERDICT_STAGES).alias("verdict")
     )
 
 
@@ -961,19 +968,14 @@ def l4u_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     over each shard plus a tiny final merge; every release pipeline
     runs exactly this before publishing. Ratios are int/int IEEE
     divisions rounded on both engines."""
-    from big_data_programming_spark.operators.text import STOPWORDS
-
     d = load(spark, sf_dir, "documents")
     toks = tokenize(F.col("text"))
-    keeps = F.size(toks).between(20, 2000) & (
-        F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS))) >= 2
-    )
     base = d.select(
         "source",
         "lang",
         F.md5(F.col("text").cast("binary")).alias("h"),
         F.size(toks).cast("bigint").alias("n_tokens"),
-        keeps.alias("keeps"),
+        basic_gate(toks).alias("keeps"),
     )
     return base.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1029,7 +1031,6 @@ def l5j_verdict_ctes_sql() -> str:
         synthetic_url_sql,
     )
 
-    first_fail = " ".join(f"WHEN {s} THEN '{s}'" for s in _L5J_STAGES)
     return f"""WITH {_PIPE_CTES},
 urls AS (
   SELECT doc_id,
@@ -1046,16 +1047,14 @@ urls AS (
 ), pflags AS (
   SELECT tr.doc_id, tr.source,
          CAST(LEN(tr.toks) AS BIGINT) AS n_tokens,
-         tr.doc_id <> uk.ukeeper AS url_dup,
-         tr.doc_id <> sk.skeeper AS near_dup_simhash,
-         {_GATE_FLAGS_SQL}
+         {_stage_flags_sql(_L5J_STAGES)}
   {_GATE_JOINS_SQL}
   JOIN urls u ON u.doc_id = tr.doc_id
   JOIN url_keep uk ON uk.cu = u.cu
   JOIN sig sg ON sg.doc_id = tr.doc_id
   JOIN sig_keep sk ON sk.simhash_bits = sg.simhash_bits
 ), v AS (
-  SELECT source, n_tokens, CASE {first_fail} ELSE 'keep' END AS verdict
+  SELECT source, n_tokens, {first_fail_sql(_L5J_STAGES)} AS verdict
   FROM pflags
 )"""
 
@@ -1131,18 +1130,10 @@ def l5j_doc_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     release point. test_plans pins both the static FileScan bound
     and the runtime executed-scan count."""
     from big_data_programming_spark.operators.dedup import simhash
-    from big_data_programming_spark.operators.similarity import (
-        as_double_array,
-        collect_vector_array,
-        cosine_similarity_col,
-    )
     from big_data_programming_spark.operators.text import (
-        STOPWORDS,
         canonicalize_url,
-        quality_logit,
         synthetic_url,
     )
-    from pyspark.sql.window import Window
 
     from pyspark import StorageLevel
 
@@ -1168,77 +1159,31 @@ def l5j_doc_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cu"),
     )
     url_keep = urls.groupBy("cu").agg(F.min("doc_id").alias("ukeeper"))
-    hashes = train.select("doc_id", "h")
-    firsts = hashes.groupBy("h").agg(F.min("doc_id").alias("keeper"))
+    firsts = train.groupBy("h").agg(F.min("doc_id").alias("keeper"))
     sig = simhash(d)
     sig_keep = (
         sig.join(train.select("doc_id"), "doc_id")
         .groupBy("simhash_bits")
         .agg(F.min("doc_id").alias("skeeper"))
     )
-    shingles = F.array_distinct(shingle_hashes(F.col("toks"), _DECON_K))
-    ev_sh = (
-        d.filter(F.col("doc_id") % _EVAL_MOD == 0)
-        .select("doc_id", tokenize(F.col("text")).alias("toks"))
-        .select(F.explode(shingles).alias("h"))
-        .distinct()
+    sem = eval_max_cos(load(spark, sf_dir, "embeddings")).select(
+        F.col("vec_id").alias("doc_id"), "mx"
     )
-    ngram_hits = (
-        train.select("doc_id", F.explode(shingles).alias("h"))
-        .join(F.broadcast(ev_sh), "h")
-        .select("doc_id")
-        .distinct()
-        .select(F.col("doc_id"), F.lit(True).alias("_ng"))
-    )
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("v")
-    )
-    ev = collect_vector_array(emb.filter(F.col("vec_id") % _EVAL_MOD == 0))
-    mx = F.array_max(
-        F.transform(
-            F.col("evals"),
-            lambda e: cosine_similarity_col(F.col("v"), e.getField("c")),
-        )
-    )
-    sem = (
-        emb.filter(F.col("vec_id") % _EVAL_MOD != 0)
-        .crossJoin(F.broadcast(ev))
-        .select(F.col("vec_id").alias("doc_id"), mx.alias("mx"))
-    )
-    wrow = spark.range(1).select(
-        F.array(*[F.lit(x) for x in L5I_WEIGHTS]).alias("wv")
-    )
-    pflags = (
+    pflags = with_quality_weights(
         train.join(urls, "doc_id")
         .join(url_keep, "cu")
         .join(firsts, "h")
         .join(sig, "doc_id")
         .join(sig_keep, "simhash_bits")
-        .join(F.broadcast(ngram_hits), "doc_id", "left")
+        .join(F.broadcast(ngram_hits(d, train)), "doc_id", "left")
         .join(sem, "doc_id", "left")
-        .crossJoin(F.broadcast(wrow))
-        .select(
-            "source",
-            F.size("toks").cast("bigint").alias("n_tokens"),
-            (F.col("doc_id") != F.col("ukeeper")).alias("url_dup"),
-            (F.col("doc_id") != F.col("keeper")).alias("exact_dup"),
-            (~F.size("toks").between(20, 2000)).alias("bad_length"),
-            (
-                F.size(F.filter(F.col("toks"), lambda x: x.isin(*STOPWORDS))) < 2
-            ).alias("low_stopword"),
-            (quality_logit(F.col("toks"), F.col("wv")) <= 0).alias("low_quality"),
-            (F.col("doc_id") != F.col("skeeper")).alias("near_dup_simhash"),
-            F.coalesce(F.col("_ng"), F.lit(False)).alias("contaminated_ngram"),
-            F.coalesce(F.col("mx") >= _SEMDECON_TH, F.lit(False)).alias(
-                "contaminated_semantic"
-            ),
-        )
+    ).select(
+        "source",
+        F.size("toks").cast("bigint").alias("n_tokens"),
+        *_stage_flags(_L5J_STAGES),
     )
-    verdict = F.when(F.col(_L5J_STAGES[0]), _L5J_STAGES[0])
-    for stage in _L5J_STAGES[1:]:
-        verdict = verdict.when(F.col(stage), stage)
     return pflags.select(
-        "source", "n_tokens", verdict.otherwise("keep").alias("verdict")
+        "source", "n_tokens", first_fail(_L5J_STAGES).alias("verdict")
     )
 
 
@@ -1256,9 +1201,9 @@ def l5j_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark decontamination (l4i), semantic decontamination (l4t) —
     emitting the per-stage FUNNEL: docs in/removed/out, surviving
     token mass, and the stage removal fraction. Every rule is the
-    shared fragment of its standalone query (operators/text.py,
-    _PIPE_CTES, _GATE_FLAGS_SQL, l5j_doc_verdicts), so each stage
-    provably equals its deep-dive twin; l5g/l5h remain the
+    one kernel its standalone query and l5g apply (gate_flags,
+    ngram_hits, eval_max_cos, first_fail and their DuckDB twins), so
+    each stage provably equals its deep-dive twin; l5g/l5h remain the
     per-document and per-gate views, lm9 the downstream mixer, of
     the same semantics.
 
@@ -1286,18 +1231,15 @@ def verdict_funnel(
         F.count(F.lit(1)).cast("bigint").alias("rm"),
         F.sum("n_tokens").cast("bigint").alias("rmt"),
     )
-    dim = spark.range(1).select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i + 1).alias("ord"), F.lit(s).alias("stage")
-                    )
-                    for i, s in enumerate(stages + ("keep",))
-                ]
-            )
-        ).alias("s")
-    ).select(F.col("s.ord").alias("ord"), F.col("s.stage").alias("stage"))
+    # the stage dimension as ONE parsed array literal (a py4j round trip
+    # per Column node otherwise)
+    rows = ", ".join(
+        f"struct({i + 1} AS ord, '{s}' AS stage)"
+        for i, s in enumerate(stages + ("keep",))
+    )
+    dim = spark.range(1).select(F.expr(f"explode(array({rows}))").alias("s")).select(
+        F.col("s.ord").alias("ord"), F.col("s.stage").alias("stage")
+    )
     j = dim.join(
         F.broadcast(per_v), dim["stage"] == per_v["verdict"], "left"
     ).select(

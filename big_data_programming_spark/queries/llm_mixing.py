@@ -36,6 +36,23 @@ from big_data_programming_spark.operators.similarity import (
     as_double_array,
     cosine_similarity_col,
 )
+from big_data_programming_spark.operators.text import (
+    gate_flags,
+    gate_flags_sql,
+    l5i_weights_sql,
+    tokenize,
+    unigram_bigram_features,
+    unigram_bigram_features_sql,
+    with_quality_weights,
+)
+from big_data_programming_spark.queries.llm_curation import (
+    first_fail,
+    first_fail_sql,
+    funnel_tail_sql,
+    l5j_doc_verdicts,
+    l5j_verdict_ctes_sql,
+    verdict_funnel,
+)
 from big_data_programming_spark.queries.llm_similarity import _COS
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
@@ -528,10 +545,7 @@ WITH t AS (
   SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents
 ), feats AS (
   SELECT doc_id, lang,
-         list_concat(
-           toks,
-           list_transform(generate_series(1, GREATEST(LEN(toks) - 1, 0)),
-                          i -> toks[i] || ' ' || toks[i + 1])) AS fs
+         {unigram_bigram_features_sql("toks")} AS fs
   FROM t
 ), fx AS (
   SELECT doc_id, lang,
@@ -598,16 +612,9 @@ def lm7_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (identical expression tree both engines), exact DECIMAL per-doc
     sum (order-free), mean rounded 6dp."""
     d = load(spark, sf_dir, "documents")
-    toks = F.col("toks")
-    n = F.size(toks)
-    bigrams = F.zip_with(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
     feats = d.select(
         "doc_id", "lang", F.split(F.col("text"), " ").alias("toks")
-    ).select("doc_id", "lang", F.concat(toks, bigrams).alias("fs"))
+    ).select("doc_id", "lang", unigram_bigram_features(F.col("toks")).alias("fs"))
     fx = feats.select(
         "doc_id", "lang", F.explode(F.col("fs")).alias("f")
     ).select(
@@ -747,10 +754,6 @@ def _lm8(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame:
 
 
 def _lm9_oracle() -> str:
-    from big_data_programming_spark.queries.llm_curation import (
-        l5j_verdict_ctes_sql,
-    )
-
     sqrt_kept = "SQRT(CAST(kept_tokens AS DOUBLE))"
     return f"""
 {l5j_verdict_ctes_sql()}, surv AS (
@@ -807,10 +810,6 @@ def lm9_curated_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit CASE (0/0 guard), exact both engines. Adds nothing to
     l5j's bounded corpus-scan budget beyond the one extra grouped
     aggregate."""
-    from big_data_programming_spark.queries.llm_curation import (
-        l5j_doc_verdicts,
-    )
-
     v = l5j_doc_verdicts(spark, sf_dir)
     surv = v.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs_raw"),
@@ -874,15 +873,9 @@ _LM10_STAGES = (
 
 
 def _lm10_oracle() -> str:
-    from big_data_programming_spark.operators.text import (
-        STOPWORDS,
-        l5i_weights_sql,
-        quality_logit_sql,
+    gates = ",\n         ".join(
+        f"{e} AS {g}" for g, e in gate_flags_sql("n.toks", "wv").items()
     )
-    from big_data_programming_spark.queries.llm_curation import funnel_tail_sql
-
-    stop = ", ".join(f"'{w}'" for w in STOPWORDS)
-    first_fail = " ".join(f"WHEN {s} THEN '{s}'" for s in _LM10_STAGES)
     return f"""
 WITH {minhash_signatures_sql()},
 w AS (SELECT {l5i_weights_sql()} AS wv),
@@ -898,16 +891,14 @@ new AS (SELECT * FROM sigs WHERE doc % 10 = 9),
 ), flags AS (
   SELECT n.source, CAST(LEN(n.toks) AS BIGINT) AS n_tokens,
          hh.h IS NOT NULL AS exact_dup_hist,
-         LEN(n.toks) NOT BETWEEN 20 AND 2000 AS bad_length,
-         LEN(list_filter(n.toks, x -> x IN ({stop}))) < 2 AS low_stopword,
-         {quality_logit_sql('n.toks', 'wv')} <= 0 AS low_quality,
+         {gates},
          nd.doc_id IS NOT NULL AS near_dup_minhash_hist
   FROM arrivals n
   CROSS JOIN w
   LEFT JOIN hist_h hh ON hh.h = n.h
   LEFT JOIN nd ON nd.doc_id = n.doc_id
 ), v AS (
-  SELECT source, n_tokens, CASE {first_fail} ELSE 'keep' END AS verdict
+  SELECT source, n_tokens, {first_fail_sql(_LM10_STAGES)} AS verdict
   FROM flags
 ){funnel_tail_sql(_LM10_STAGES)}"""
 
@@ -926,7 +917,8 @@ def lm10_incremental_curation_funnel(
     pipeline actually persists — the md5 content-hash set (l1c's
     tier) and the 24-long MinHash signature table (lm8's tier), never
     historical raw text — plus the in-row gates that need no history
-    at all (l5j's length / stopword / l5i classifier rules). Emits
+    at all (l5j's length / stopword / l5i classifier rules: the same
+    gate_flags kernel, and the same first_fail verdict). Emits
     the same per-stage funnel relation as l5j (docs in/removed/out,
     surviving token mass, removal fraction), produced by the SHARED
     verdict_funnel / funnel_tail_sql fragments so the daily funnel's
@@ -957,14 +949,6 @@ def _lm10_funnel(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
     """lm10 body with the hot-bucket ceiling as a parameter, so the
     property test can diff the capped funnel against the uncapped one
     (cap=None) — same discipline as the lm8/lm8b pair."""
-    from big_data_programming_spark.operators.text import (
-        L5I_WEIGHTS,
-        STOPWORDS,
-        quality_logit,
-        tokenize,
-    )
-    from big_data_programming_spark.queries.llm_curation import verdict_funnel
-
     d = load(spark, sf_dir, "documents")
     hist_h = (
         d.filter(F.col("doc_id") % 10 != 9)
@@ -988,30 +972,18 @@ def _lm10_funnel(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
         .distinct()
         .select("doc_id", F.lit(True).alias("_nd"))
     )
-    wrow = spark.range(1).select(
-        F.array(*[F.lit(x) for x in L5I_WEIGHTS]).alias("wv")
+    gates = gate_flags(F.col("toks"), F.col("wv"))
+    flags = with_quality_weights(
+        new.join(hist_h, "h", "left").join(nd, "doc_id", "left")
+    ).select(
+        "source",
+        F.size("toks").cast("bigint").alias("n_tokens"),
+        F.coalesce(F.col("_ex"), F.lit(False)).alias("exact_dup_hist"),
+        *[c.alias(g) for g, c in gates.items()],
+        F.coalesce(F.col("_nd"), F.lit(False)).alias("near_dup_minhash_hist"),
     )
-    flags = (
-        new.join(hist_h, "h", "left")
-        .join(nd, "doc_id", "left")
-        .crossJoin(F.broadcast(wrow))
-        .select(
-            "source",
-            F.size("toks").cast("bigint").alias("n_tokens"),
-            F.coalesce(F.col("_ex"), F.lit(False)).alias("exact_dup_hist"),
-            (~F.size("toks").between(20, 2000)).alias("bad_length"),
-            (
-                F.size(F.filter(F.col("toks"), lambda x: x.isin(*STOPWORDS))) < 2
-            ).alias("low_stopword"),
-            (quality_logit(F.col("toks"), F.col("wv")) <= 0).alias("low_quality"),
-            F.coalesce(F.col("_nd"), F.lit(False)).alias("near_dup_minhash_hist"),
-        )
-    )
-    verdict = F.when(F.col(_LM10_STAGES[0]), _LM10_STAGES[0])
-    for stage in _LM10_STAGES[1:]:
-        verdict = verdict.when(F.col(stage), stage)
     v = flags.select(
-        "source", "n_tokens", verdict.otherwise("keep").alias("verdict")
+        "source", "n_tokens", first_fail(_LM10_STAGES).alias("verdict")
     )
     return verdict_funnel(spark, v, _LM10_STAGES)
 

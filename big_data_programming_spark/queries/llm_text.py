@@ -11,17 +11,24 @@ from pyspark.sql.window import Window
 from big_data_programming_spark.functions.canonical import DEC, oracle_davg
 from big_data_programming_spark.operators.text import (
     BPE_ISH_PATTERN,
-    L5I_WEIGHTS,
+    MAX_TOKEN_FREQ_SQL,
     QUALITY_ORACLE_SQL,
-    STOPWORDS,
+    bigrams,
+    bigrams_sql,
     bpe_ish_tokens,
     l5i_weights_sql,
+    max_token_freq,
     quality_features,
     quality_logit,
     quality_logit_sql,
     shingle_fingerprint,
+    shingle_hashes_sql,
+    stopword_count,
+    stopword_count_sql,
     tokenize,
     unigram_bigram_features,
+    unigram_bigram_features_sql,
+    with_quality_weights,
 )
 from big_data_programming_spark.operators.dedup import (
     SIMHASH_ORACLE_SQL,
@@ -248,12 +255,9 @@ def l4d_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l4e_fingerprint",
-    oracle="""
+    oracle=f"""
 SELECT doc_id,
-       list_min(list_transform(
-         generate_series(1, GREATEST(LEN(string_split(text, ' ')) - 7, 1)),
-         i -> md5(array_to_string(list_slice(string_split(text, ' '), i, i + 7), ' '))
-       )) AS fingerprint
+       list_min({shingle_hashes_sql("string_split(text, ' ')")}) AS fingerprint
 FROM documents
 """,
     tags=("L4", "L2", "F4", "F7"),
@@ -628,30 +632,22 @@ def l5c_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STOP_SQL = "('the', 'a', 'of', 'and', 'to')"
-
-
 @register(
     "l5d_gopher_gate",
     oracle=f"""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ), freq AS (
-  SELECT doc_id, MAX(c) AS max_freq
-  FROM (SELECT doc_id, u.token, COUNT(*) AS c
-        FROM toks, UNNEST(t) AS u(token)
-        GROUP BY doc_id, u.token)
-  GROUP BY doc_id
+  {MAX_TOKEN_FREQ_SQL}
 ), feats AS (
   SELECT doc_id,
          CAST(LEN(t) AS BIGINT) AS n_tokens,
          CAST(list_reduce(list_transform(t, x -> LENGTH(x)), (a, b) -> a + b) AS DOUBLE)
            / LEN(t) AS mean_word_len,
-         CAST(LEN(list_filter(t, x -> x IN {_STOP_SQL})) AS BIGINT) AS stop_count,
+         CAST({stopword_count_sql("t")} AS BIGINT) AS stop_count,
          COALESCE(
-           CAST(LEN(list_transform(generate_series(1, LEN(t) - 1), i -> t[i] || ' ' || t[i + 1]))
-                - LEN(list_distinct(list_transform(generate_series(1, LEN(t) - 1),
-                                                   i -> t[i] || ' ' || t[i + 1]))) AS DOUBLE)
+           CAST(LEN({bigrams_sql("t")})
+                - LEN(list_distinct({bigrams_sql("t")})) AS DOUBLE)
              / NULLIF(LEN(t) - 1, 0), 0) AS dup_bigram_frac
   FROM toks
 ), rules AS (
@@ -701,38 +697,24 @@ def l5d_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule thresholds are constants, so the gate composes with l4n/lm1
     sampling as a pushed-down filter."""
     d = load(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
-    base = d.select("doc_id", toks.alias("t"))
-    freq = (
-        base.select("doc_id", F.explode(F.col("t")).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(F.max("c").alias("max_freq"))
-    )
+    base = d.select("doc_id", tokenize(F.col("text")).alias("t"))
     n = F.size(F.col("t"))
     total_len = F.aggregate(
         F.transform(F.col("t"), lambda x: F.length(x)), F.lit(0), lambda a, b: a + b
     )
-    bg = F.zip_with(
-        F.slice(F.col("t"), 1, n - 1),
-        F.slice(F.col("t"), 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
+    bg = bigrams(F.col("t"))
     feats = base.select(
         "doc_id",
         n.cast("bigint").alias("n_tokens"),
         (total_len.cast("double") / n).alias("mean_word_len"),
-        F.size(F.filter(F.col("t"), lambda x: x.isin(*STOPWORDS)))
-        .cast("bigint")
-        .alias("stop_count"),
+        stopword_count(F.col("t")).cast("bigint").alias("stop_count"),
         F.coalesce(
             (F.size(bg) - F.size(F.array_distinct(bg))).cast("double")
             / F.nullif((n - 1).cast("bigint"), F.lit(0)),
             F.lit(0.0),
         ).alias("dup_bigram_frac"),
     )
-    rules = feats.join(freq, "doc_id").select(
+    rules = feats.join(max_token_freq(base), "doc_id").select(
         "doc_id",
         "n_tokens",
         "mean_word_len",
@@ -1428,13 +1410,9 @@ def l5i_fasttext_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     before both the sigmoid and the keep comparison (bias calibrated
     so no fixture doc sits on the boundary)."""
     d = load(spark, sf_dir, "documents")
-    w = spark.range(1).select(
-        F.array(*[F.lit(x) for x in L5I_WEIGHTS]).alias("wv")
-    )
     n = F.size(F.col("toks"))
     scored = (
-        d.select("doc_id", tokenize(F.col("text")).alias("toks"))
-        .crossJoin(F.broadcast(w))
+        with_quality_weights(d.select("doc_id", tokenize(F.col("text")).alias("toks")))
         .select(
             "doc_id",
             n.cast("bigint").alias("n_tokens"),
@@ -1724,9 +1702,7 @@ def _l5k_ctes() -> str:
     return f"""fx AS (
   SELECT doc_id,
          CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-         list_concat(toks,
-           list_transform(generate_series(1, GREATEST(LEN(toks) - 1, 0)),
-             i -> toks[i] || ' ' || toks[i + 1])) AS fs
+         {unigram_bigram_features_sql("toks")} AS fs
   FROM (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents)
 ), ex AS (
   SELECT doc_id, y, LEN(fs) AS nf, UNNEST(fs) AS f FROM fx

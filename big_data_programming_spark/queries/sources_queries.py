@@ -22,6 +22,7 @@ from pyspark.sql.types import (
 
 from big_data_programming_spark.functions.canonical import DEC, dsum, oracle_dsum
 from big_data_programming_spark.registry import register
+from big_data_programming_spark.session import scoped_conf
 from big_data_programming_spark.sources.loaders import (
     load,
     read_csv,
@@ -560,11 +561,16 @@ def s13_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: s15 geometry: the fragmented table's file count and the compacted one's.
+_S15_FRAGMENTS = 48
+_S15_FILES = 4
+
+
 @register(
     "s15_compaction",
     oracle=f"""
-SELECT CAST(48 AS BIGINT) AS files_before,
-       CAST(4 AS BIGINT) AS files_after,
+SELECT CAST({_S15_FRAGMENTS} AS BIGINT) AS files_before,
+       CAST({_S15_FILES} AS BIGINT) AS files_after,
        COUNT(*) AS n_rows,
        {oracle_dsum('l_quantity', 'total_qty')}
 FROM lineitem
@@ -589,9 +595,14 @@ def s15_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     frag_dir = scratch_dir("bdps_s15_frag_")
     comp_dir = scratch_dir("bdps_s15_comp_")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    li.repartition(48).write.mode("overwrite").parquet(frag_dir)
+    li.repartition(_S15_FRAGMENTS).write.mode("overwrite").parquet(frag_dir)
     frag = spark.read.parquet(frag_dir)
-    frag.coalesce(4).write.mode("overwrite").parquet(comp_dir)
+    # One read split per fragment file at any core count: Spark packs
+    # small files into splits of up to max(openCostInBytes, bytes /
+    # parallelism), so on 2 cores the 48 files read back as 2 splits and
+    # coalesce, which never adds partitions, wrote 2 files.
+    with scoped_conf(spark, "spark.sql.files.minPartitionNum", str(_S15_FRAGMENTS)):
+        frag.coalesce(_S15_FILES).write.mode("overwrite").parquet(comp_dir)
     comp = spark.read.parquet(comp_dir)
     before = frag.select(F.input_file_name().alias("f")).agg(
         F.count_distinct("f").alias("files_before")

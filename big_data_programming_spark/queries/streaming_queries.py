@@ -18,9 +18,9 @@ holds one fixed-width tuple per user. Nothing here buffers raw events.
 
 from __future__ import annotations
 
-import contextlib
 import importlib.util
 from collections.abc import Callable, Iterator
+from contextlib import AbstractContextManager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +40,7 @@ from big_data_programming_spark.queries.pipeline_ops import (
 )
 from big_data_programming_spark.queries.events import E2_SLIDING_ORACLE
 from big_data_programming_spark.registry import register
+from big_data_programming_spark.session import scoped_conf
 from big_data_programming_spark.sources.loaders import load
 from big_data_programming_spark.streaming.harness import (
     documents_stream,
@@ -492,22 +493,14 @@ def st11_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@contextlib.contextmanager
-def _rocksdb_state_store(spark: SparkSession) -> Iterator[None]:
+def _rocksdb_state_store(spark: SparkSession) -> AbstractContextManager[None]:
     """Start the queries inside on the RocksDB state store provider
     (st12, st18), then restore the session's provider setting."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    return scoped_conf(
+        spark,
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def st12_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1390,13 +1383,14 @@ def st28_streaming_cm_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from big_data_programming_spark.operators.text import (
+    basic_gate,
     basic_gate_sql,
     l5i_weights_sql as _l5i_weights_sql,
+    quality_logit,
     quality_logit_sql as _l5i_logit_sql,
+    quality_weights,
+    tokenize,
 )
-
-#: the shared l5 basic-gate fragment (one definition with l4u's oracle)
-_gate_sql_fragment = basic_gate_sql("string_split(text, ' ')")
 
 
 @register(
@@ -1405,7 +1399,7 @@ _gate_sql_fragment = basic_gate_sql("string_split(text, ' ')")
 WITH g AS (
   SELECT source,
          LEN(string_split(text, ' ')) AS n_tokens,
-         {_gate_sql_fragment} AS keeps
+         {basic_gate_sql("string_split(text, ' ')")} AS keeps
   FROM documents
 )
 SELECT source,
@@ -1437,17 +1431,12 @@ def st29_streaming_curation_monitor(spark: SparkSession, sf_dir: str) -> DataFra
     checkpoint. At 100 TB/day ingest this is the canonical monitoring
     topology: no joins, no watermark (no event-time), state bounded
     by the source-key cardinality."""
-    from big_data_programming_spark.operators.text import STOPWORDS, tokenize
-
     s = documents_stream(spark, sf_dir)
     toks = tokenize(F.col("text"))
-    keeps = F.size(toks).between(20, 2000) & (
-        F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS))) >= 2
-    )
     gated = s.select(
         "source",
         F.size(toks).cast("bigint").alias("n_tokens"),
-        keeps.alias("keeps"),
+        basic_gate(toks).alias("keeps"),
     )
     agg = gated.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1504,17 +1493,10 @@ def st30_streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFram
     st29+st30 is how a production pipeline watches a model-gate
     rollout: heuristic gate and classifier gate side by side, per
     source, per micro-batch."""
-    from big_data_programming_spark.operators.text import (
-        L5I_WEIGHTS,
-        quality_logit,
-        tokenize,
-    )
-
     s = documents_stream(spark, sf_dir)
-    wv = F.array(*[F.lit(x) for x in L5I_WEIGHTS])
     gated = s.select(
         "source",
-        quality_logit(tokenize(F.col("text")), wv).alias("logit"),
+        quality_logit(tokenize(F.col("text")), quality_weights()).alias("logit"),
     )
     keep = F.sum(F.when(F.col("logit") > 0, 1).otherwise(0))
     agg = gated.groupBy("source").agg(

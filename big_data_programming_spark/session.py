@@ -21,7 +21,9 @@ One place to encode the execution posture:
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -104,3 +106,18 @@ def release_caches(spark: SparkSession) -> None:
     iterations once each result is consumed; one-shot driver runs
     never need it."""
     spark.catalog.clearCache()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the statements inside, then restore the
+    session's previous setting (or unset it if there was none)."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -34,41 +34,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-)
 
-#: events schema as the *streaming file source* must declare it:
-#: PySpark 4.1 reads the ns-precision parquet ``ts`` natively as
-#: TIMESTAMP_NTZ truncated to µs — same as the batch loader
-#: (sources/loaders.py:load).
-_EVENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampNTZType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-#: documents schema for the streaming file source (matches the fixture
-#: parquet exactly; no timestamps, so no zone handling needed).
-_DOCUMENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
+from big_data_programming_spark.sources.schemas import SCHEMAS
 
 _sink_ids = itertools.count()
 
@@ -149,10 +116,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     cast window bounds back to TIMESTAMP_NTZ on output to match their
     batch twins.
     """
-    # The file stream source requires a *directory*; select the single
-    # fixture file out of the sf dir with a glob filter.
+    # The file stream source requires a *directory* and a declared
+    # schema (the batch loader's); select the single fixture file out of
+    # the sf dir with a glob filter.
     raw = (
-        spark.readStream.schema(_EVENTS_RAW_SCHEMA)
+        spark.readStream.schema(SCHEMAS["events"])
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -166,7 +134,7 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps receiving shards). No event-time column, so no watermark —
     consumers are either stateless maps or running aggregates."""
     return (
-        spark.readStream.schema(_DOCUMENTS_RAW_SCHEMA)
+        spark.readStream.schema(SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

@@ -1357,6 +1357,22 @@ def test_classifier_gate_consistent_across_queries(spark):
         assert r["low_quality"] == (not keep[r["doc_id"]]), r
 
 
+def test_quality_weights_literal_is_the_weight_table(spark):
+    """The parsed model literal l5i, l5g, l5j, lm10 and st30 attach is
+    L5I_WEIGHTS bit for bit, as a non-null array<double>: each literal
+    carries the D suffix, without which Spark parses a DECIMAL."""
+    import struct
+
+    from pyspark.sql.types import ArrayType, DoubleType
+
+    from big_data_programming_spark.operators.text import L5I_WEIGHTS, quality_weights
+
+    row = spark.range(1).select(quality_weights().alias("wv"))
+    assert row.schema["wv"].dataType == ArrayType(DoubleType(), False)
+    bits = [struct.pack(">d", w) for w in row.first()["wv"]]
+    assert bits == [struct.pack(">d", w) for w in L5I_WEIGHTS]
+
+
 def test_capped_minhash_fanout(spark):
     """lm8b: the hot-bucket ceiling only ever REMOVES candidates —
     flagged docs are a subset of lm8's, per-doc match/dup counts

@@ -105,6 +105,30 @@ def test_scratch_root_is_removed_at_exit():
     assert not os.path.exists(root)
 
 
+def test_s15_compaction_writes_four_files_on_two_cores():
+    """s15 rewrites its 48 fragment files into 4 at any core count. On a
+    2-core session Spark packed the 48 small files into 2 read splits,
+    and coalesce(4), which never adds partitions, wrote 2 files. Runs in
+    a child interpreter so the session really has 2 cores."""
+    code = (
+        "import big_data_programming_spark.session as S\n"
+        "from big_data_programming_spark.registry import catalog\n"
+        "spark = S.get_spark('s15-two-cores', cpus=2)\n"
+        f"df = catalog()['s15_compaction'].fn(spark, {SMOKE_SF_DIR!r})\n"
+        "r = df.collect()[0]\n"
+        "print(spark.sparkContext.defaultParallelism, r.files_before, r.files_after)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-3:] == ["2", "48", "4"], out.stdout
+
+
 def test_tumbling_complete_equals_batch_twin(spark):
     """ST2 (complete mode) ≡ batch groupBy(window): bit-identical."""
 
