@@ -411,10 +411,14 @@ def _minhash_band_key_sql(elem: str, string: str, band: int | str) -> str:
     return f"concat_ws('-', {cast})"
 
 
-#: Spark SQL text of the signature and of the exploded band rows, built
-#: once at import. Each is one ``F.expr`` parse per build; the Column
-#: API costs a py4j round trip per node, ~80 for one slot's
-#: ``transform`` lambda alone.
+#: Spark SQL text of the base hashes, of the signature and of the
+#: exploded band rows, built once at import. Each is one ``F.expr``
+#: parse per build; the Column API costs a py4j round trip per node,
+#: ~80 for one slot's ``transform`` lambda alone. A base hash is the
+#: first 7 hex digits (28 bits) of the token's md5.
+_MINHASH_BASE_SQL = (
+    "transform(ts, x -> CAST(conv(substring(md5(CAST(x AS BINARY)), 1, 7), 16, 10) AS BIGINT))"
+)
 _MINHASH_SIG_SQL = _minhash_sig_sql("array({items})", "array_min", "transform")
 _MINHASH_BANDS_SQL = "explode(array({}))".format(
     ", ".join(
@@ -439,15 +443,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     base = docs.select(F.col("doc_id").alias("doc"), toks_arr.alias("ts")).filter(
         F.size("ts") > 0
     )
-    hv = base.select(
-        "doc",
-        F.transform(
-            F.col("ts"),
-            lambda t: F.conv(F.substring(F.md5(t.cast("binary")), 1, 7), 16, 10).cast(
-                "long"
-            ),
-        ).alias("h"),
-    )
+    hv = base.select("doc", F.expr(_MINHASH_BASE_SQL).alias("h"))
     return hv.select("doc", F.expr(_MINHASH_SIG_SQL).alias("sig"))
 
 

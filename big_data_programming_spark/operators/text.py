@@ -26,16 +26,18 @@ def stopword_count_sql(toks_expr: str) -> str:
     return f"LEN(list_filter({toks_expr}, x -> x IN ({stop})))"
 
 
-def gate_flags(toks: Column, wv: Column | None = None) -> dict[str, Column]:
-    """The l5 in-row gates over a token array, each as a flag that is
-    true when the document FAILS it: ``bad_length`` (outside 20-2000
-    tokens), ``low_stopword`` (fewer than 2 stopwords) and, given the
-    model column ``wv``, ``low_quality`` (l5i logit <= 0). ONE
-    definition of the thresholds for every query that applies them
-    (l4u, st29, l5g, l5j, lm10); twin of :func:`gate_flags_sql`."""
+def gate_flags(toks: str, wv: Column | None = None) -> dict[str, Column]:
+    """The l5 in-row gates over the token-array column named ``toks``,
+    each as a flag that is true when the document FAILS it:
+    ``bad_length`` (outside 20-2000 tokens), ``low_stopword`` (fewer
+    than 2 stopwords) and, given the model column ``wv``,
+    ``low_quality`` (l5i logit <= 0). ONE definition of the thresholds
+    for every query that applies them (l4u, st29, l5g, l5j, lm10);
+    twin of :func:`gate_flags_sql`."""
+    t = F.col(toks)
     flags = {
-        "bad_length": ~F.size(toks).between(20, 2000),
-        "low_stopword": stopword_count(toks) < 2,
+        "bad_length": ~F.size(t).between(20, 2000),
+        "low_stopword": stopword_count(t) < 2,
     }
     if wv is not None:
         flags["low_quality"] = quality_logit(toks, wv) <= 0
@@ -53,10 +55,11 @@ def gate_flags_sql(toks_expr: str, w_expr: str | None = None) -> dict[str, str]:
     return flags
 
 
-def basic_gate(toks: Column) -> Column:
-    """The l5 basic quality gate (l4u, st29): a document passes when
-    neither the length nor the stopword flag of :func:`gate_flags`
-    fires. Twin of :func:`basic_gate_sql`."""
+def basic_gate(toks: str) -> Column:
+    """The l5 basic quality gate (l4u, st29) over the token-array
+    column named ``toks``: a document passes when neither the length
+    nor the stopword flag of :func:`gate_flags` fires. Twin of
+    :func:`basic_gate_sql`."""
     f = gate_flags(toks)
     return ~(f["bad_length"] | f["low_stopword"])
 
@@ -161,21 +164,28 @@ def _l5i_weight(key: int | str) -> float:
 L5I_WEIGHTS: tuple[float, ...] = tuple(_l5i_weight(i) for i in range(L5I_BUCKETS))
 
 
-def bigrams(toks: Column) -> Column:
-    """The adjacent token pairs of a token array, each as 'a b', formed
-    IN-ROW with slice/zip_with (no token explode, no self-join — the
-    l5e4 discipline). Twin of :func:`bigrams_sql`."""
-    m = F.greatest(F.size(toks) - 1, F.lit(0))
-    return F.zip_with(
-        F.slice(toks, 1, m), F.slice(toks, 2, m), lambda a, b: F.concat_ws(" ", a, b)
+def _word_ngrams_spark_sql(toks: str, n: int) -> str:
+    return (
+        f"transform(slice({toks}, 1, greatest(size({toks}) - {n - 1}, 0)), "
+        f"(x, i) -> array_join(slice({toks}, i + 1, {n}), ' '))"
     )
 
 
-def bigrams_sql(toks_expr: str) -> str:
-    """DuckDB twin of :func:`bigrams`."""
+def word_ngrams(toks: str, n: int) -> Column:
+    """The word n-grams of the token-array column named ``toks``, each
+    its ``n`` adjacent tokens joined by one space, formed IN-ROW (no
+    token explode, no self-join). A text shorter than ``n`` tokens has
+    none. One parsed SQL string: built Column by Column it cost
+    100-158 py4j round trips per use against ~24. Twin of
+    :func:`word_ngrams_sql`."""
+    return F.expr(_word_ngrams_spark_sql(toks, n))
+
+
+def word_ngrams_sql(toks_expr: str, n: int) -> str:
+    """DuckDB twin of :func:`word_ngrams`."""
     return (
-        f"list_transform(generate_series(1, GREATEST(LEN({toks_expr}) - 1, 0)), "
-        f"i -> {toks_expr}[i] || ' ' || {toks_expr}[i + 1])"
+        f"list_transform(generate_series(1, GREATEST(LEN({toks_expr}) - {n - 1}, 0)), "
+        f"i -> array_to_string(list_slice({toks_expr}, i, i + {n - 1}), ' '))"
     )
 
 
@@ -201,25 +211,27 @@ MAX_TOKEN_FREQ_SQL = """SELECT doc_id, MAX(c) AS max_freq
   GROUP BY doc_id"""
 
 
-def unigram_bigram_features(toks: Column) -> Column:
-    """fastText's feature set: the tokens plus their adjacent bigrams
-    (l5i, l5k, lm7). Twin of :func:`unigram_bigram_features_sql`."""
-    return F.concat(toks, bigrams(toks))
+def unigram_bigram_features(toks: str) -> Column:
+    """fastText's feature set over the token-array column named
+    ``toks``: the tokens plus their adjacent bigrams (l5i, l5k, lm7).
+    Twin of :func:`unigram_bigram_features_sql`."""
+    return F.expr(f"concat({toks}, {_word_ngrams_spark_sql(toks, 2)})")
 
 
 def unigram_bigram_features_sql(toks_expr: str) -> str:
     """DuckDB twin of :func:`unigram_bigram_features`."""
-    return f"list_concat({toks_expr}, {bigrams_sql(toks_expr)})"
+    return f"list_concat({toks_expr}, {word_ngrams_sql(toks_expr, 2)})"
 
 
 def quality_logit(
-    toks: Column, weights: Column, bias: Column | None = None
+    toks: str, weights: Column, bias: Column | None = None
 ) -> Column:
-    """l5i logit: mean hashed-feature weight + bias, rounded 6dp.
-    Pure in-row pipeline — transform maps each feature to its bucket
-    weight (md5 -> first 8 hex -> % {B}), aggregate folds LEFT in
-    array order (the l4t fixed-order-fold canon, so Spark and DuckDB
-    produce the identical IEEE double), then /n + bias + round.
+    """l5i logit over the token-array column named ``toks``: mean
+    hashed-feature weight + bias, rounded 6dp. Pure in-row pipeline —
+    transform maps each feature to its bucket weight (md5 -> first 8
+    hex -> % {B}), aggregate folds LEFT in array order (the l4t
+    fixed-order-fold canon, so Spark and DuckDB produce the identical
+    IEEE double), then /n + bias + round.
     ``bias`` defaults to the fixed L5I_BIAS calibration; l5k2 passes
     the TRAINED intercept column instead — the gate shape is the swap
     point, so the bias must be swappable along with the weights."""
@@ -444,8 +456,7 @@ def bpe_pairs(sym: Column) -> Column:
     """All adjacent symbol pairs of a symbol string, each as 'a b'.
     Twin of :func:`bpe_pairs_sql`.
 
-    Built with the zip_with(slice, slice) idiom (the same guarded
-    construction :func:`bigrams` uses), NOT sequence(1, n-1) +
+    Built with the zip_with(slice, slice) idiom, NOT sequence(1, n-1) +
     element_at: for a SINGLE-symbol string ``sequence(1, 0)`` yields
     ``[1, 0]`` on Spark (step defaults to -1 when start > stop) and
     ``element_at(p, 0)`` then throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT,

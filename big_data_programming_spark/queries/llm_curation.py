@@ -24,8 +24,6 @@ from big_data_programming_spark.operators.text import (
     MAX_TOKEN_FREQ_SQL,
     basic_gate,
     basic_gate_sql,
-    bigrams,
-    bigrams_sql,
     gate_flags,
     gate_flags_sql,
     l5i_weights_sql,
@@ -34,6 +32,8 @@ from big_data_programming_spark.operators.text import (
     shingle_hashes_sql,
     tokenize,
     with_quality_weights,
+    word_ngrams,
+    word_ngrams_sql,
 )
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
@@ -140,7 +140,7 @@ WITH toks AS (
   SELECT doc_id,
          LEN(t) AS n_tokens,
          LEN(list_distinct(t)) AS distinct_tokens,
-         {bigrams_sql("t")} AS bg
+         {word_ngrams_sql("t", 2)} AS bg
   FROM toks
 )
 SELECT a.doc_id,
@@ -167,7 +167,7 @@ def l4h_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical across engines, no rounding step to disagree on."""
     d = load(spark, sf_dir, "documents")
     base = d.select("doc_id", tokenize(F.col("text")).alias("t"))
-    bg = bigrams(F.col("t"))
+    bg = word_ngrams("t", 2)
     arr = base.select(
         "doc_id",
         F.size("t").cast("bigint").alias("n_tokens"),
@@ -574,24 +574,22 @@ def l4n_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: embedding cosine >= 0.35 (the corpus's l2e separation point).
 _SEMDECON_TH = 0.35
 
-#: The shared 64-dim cosine oracle fragment (functions/canonical.py:
-#: COS64_SQL) — one definition of the fold-order canon, aliased here.
-_COS_CUR = COS64_SQL
+#: Every (train-slice vector, eval-slice vector) pair with its cosine
+#: (the shared fold-order canon COS64_SQL), ``(vec_id, eid, cos)``:
+#: ONE spelling of the eval split for the DuckDB twins of l4t (argmax)
+#: and :func:`eval_max_cos` (max).
+_EVAL_COS_PAIRS_SQL = f"""SELECT t.vec_id, e.vec_id AS eid,
+         {COS64_SQL.format(a='t.embedding', b='e.c')} AS cos
+  FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id % {_EVAL_MOD} <> 0) t
+  CROSS JOIN (SELECT vec_id, embedding AS c FROM embeddings
+              WHERE vec_id % {_EVAL_MOD} = 0) e"""
 
 
 @register(
     "l4t_semantic_decontamination",
     oracle=f"""
-WITH ev AS (
-  SELECT vec_id AS eid, embedding AS c FROM embeddings
-  WHERE vec_id % {_EVAL_MOD} = 0
-), tr AS (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id % {_EVAL_MOD} <> 0
-), scored AS (
-  SELECT t.vec_id, e.eid,
-         {_COS_CUR.format(a='t.embedding', b='e.c')} AS cos
-  FROM tr t CROSS JOIN ev e
+WITH scored AS (
+  {_EVAL_COS_PAIRS_SQL}
 ), best AS (
   SELECT vec_id, eid, cos,
          ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -678,11 +676,9 @@ def eval_max_cos(emb: DataFrame) -> DataFrame:
 
 
 #: DuckDB twin of :func:`eval_max_cos`.
-EVAL_MAX_COS_SQL = f"""SELECT t.vec_id, MAX({_COS_CUR.format(a='t.embedding', b='e.c')}) AS mx
-  FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id % {_EVAL_MOD} <> 0) t
-  CROSS JOIN (SELECT vec_id, embedding AS c FROM embeddings
-              WHERE vec_id % {_EVAL_MOD} = 0) e
-  GROUP BY 1"""
+EVAL_MAX_COS_SQL = f"""SELECT vec_id, MAX(cos) AS mx FROM (
+  {_EVAL_COS_PAIRS_SQL}
+  ) GROUP BY 1"""
 
 
 #: Pipeline-verdict gate order: the cheap scan gates run first (the
@@ -767,7 +763,7 @@ def _stage_flags(stages: tuple[str, ...]) -> list[Column]:
     flags = {
         "url_dup": F.col("doc_id") != F.col("ukeeper"),
         "exact_dup": F.col("doc_id") != F.col("keeper"),
-        **gate_flags(F.col("toks"), F.col("wv")),
+        **gate_flags("toks", F.col("wv")),
         "near_dup_simhash": F.col("doc_id") != F.col("skeeper"),
         "contaminated_ngram": F.coalesce(F.col("_ng"), F.lit(False)),
         "contaminated_semantic": F.coalesce(F.col("mx") >= _SEMDECON_TH, F.lit(False)),
@@ -969,13 +965,17 @@ def l4u_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs exactly this before publishing. Ratios are int/int IEEE
     divisions rounded on both engines."""
     d = load(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
     base = d.select(
         "source",
         "lang",
         F.md5(F.col("text").cast("binary")).alias("h"),
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        basic_gate(toks).alias("keeps"),
+        tokenize(F.col("text")).alias("toks"),
+    ).select(
+        "source",
+        "lang",
+        "h",
+        F.size("toks").cast("bigint").alias("n_tokens"),
+        basic_gate("toks").alias("keeps"),
     )
     return base.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),

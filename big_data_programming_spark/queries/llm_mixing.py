@@ -614,7 +614,7 @@ def lm7_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     feats = d.select(
         "doc_id", "lang", F.split(F.col("text"), " ").alias("toks")
-    ).select("doc_id", "lang", unigram_bigram_features(F.col("toks")).alias("fs"))
+    ).select("doc_id", "lang", unigram_bigram_features("toks").alias("fs"))
     fx = feats.select(
         "doc_id", "lang", F.explode(F.col("fs")).alias("f")
     ).select(
@@ -972,7 +972,7 @@ def _lm10_funnel(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
         .distinct()
         .select("doc_id", F.lit(True).alias("_nd"))
     )
-    gates = gate_flags(F.col("toks"), F.col("wv"))
+    gates = gate_flags("toks", F.col("wv"))
     flags = with_quality_weights(
         new.join(hist_h, "h", "left").join(nd, "doc_id", "left")
     ).select(

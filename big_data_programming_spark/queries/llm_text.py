@@ -4,7 +4,9 @@ language ID, token counting, fingerprinting)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -13,8 +15,6 @@ from big_data_programming_spark.operators.text import (
     BPE_ISH_PATTERN,
     MAX_TOKEN_FREQ_SQL,
     QUALITY_ORACLE_SQL,
-    bigrams,
-    bigrams_sql,
     bpe_ish_tokens,
     l5i_weights_sql,
     max_token_freq,
@@ -29,6 +29,8 @@ from big_data_programming_spark.operators.text import (
     unigram_bigram_features,
     unigram_bigram_features_sql,
     with_quality_weights,
+    word_ngrams,
+    word_ngrams_sql,
 )
 from big_data_programming_spark.operators.dedup import (
     SIMHASH_ORACLE_SQL,
@@ -457,13 +459,9 @@ def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "l4o_bigram_novelty",
-    oracle="""
+    oracle=f"""
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-e AS (
-  SELECT doc_id, UNNEST(list_transform(generate_series(1, LEN(toks) - 1),
-                        i -> concat(toks[i], ' ', toks[i + 1]))) AS bg
-  FROM t
-),
+e AS (SELECT doc_id, UNNEST({word_ngrams_sql("toks", 2)}) AS bg FROM t),
 top AS (SELECT bg FROM e GROUP BY bg ORDER BY COUNT(*) DESC, bg LIMIT 100)
 SELECT e.doc_id,
        COUNT(*) AS n_bigrams,
@@ -489,18 +487,7 @@ def l4o_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, so the cut is deterministic."""
     d = load(spark, sf_dir, "documents")
     toks = d.select("doc_id", tokenize(F.col("text")).alias("t"))
-    exploded = toks.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("t") >= 2,
-                F.expr(
-                    "transform(sequence(1, size(t) - 1),"
-                    " i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("bg"),
-    )
+    exploded = toks.select("doc_id", F.explode(word_ngrams("t", 2)).alias("bg"))
     top = (
         exploded.groupBy("bg")
         .count()
@@ -646,8 +633,8 @@ WITH toks AS (
            / LEN(t) AS mean_word_len,
          CAST({stopword_count_sql("t")} AS BIGINT) AS stop_count,
          COALESCE(
-           CAST(LEN({bigrams_sql("t")})
-                - LEN(list_distinct({bigrams_sql("t")})) AS DOUBLE)
+           CAST(LEN({word_ngrams_sql("t", 2)})
+                - LEN(list_distinct({word_ngrams_sql("t", 2)})) AS DOUBLE)
              / NULLIF(LEN(t) - 1, 0), 0) AS dup_bigram_frac
   FROM toks
 ), rules AS (
@@ -702,7 +689,7 @@ def l5d_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_len = F.aggregate(
         F.transform(F.col("t"), lambda x: F.length(x)), F.lit(0), lambda a, b: a + b
     )
-    bg = bigrams(F.col("t"))
+    bg = word_ngrams("t", 2)
     feats = base.select(
         "doc_id",
         n.cast("bigint").alias("n_tokens"),
@@ -751,66 +738,133 @@ def l5d_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: The perplexity canon of the n-gram LM ladder (l5e, l5e2, l5e3,
+#: l5e4, l5e5): each n-gram's negative log-probability is rounded to
+#: 8 dp and summed as exact DECIMAL(38,10) (order-free, so neither
+#: the partitioning nor a union's order can move a bit), the per-doc
+#: mean is rounded to 6 dp, and exp is applied to that already-rounded
+#: double on both engines — the l4k component-rounding canon.
+def _nll(p: Column) -> Column:
+    """The canon's per-n-gram ``nll`` column for probability ``p``.
+    Twin of :func:`_nll_sql`."""
+    return F.round(-F.log(p), 8).cast("decimal(38,10)").alias("nll")
+
+
+def _nll_sql(p: str) -> str:
+    """DuckDB twin of :func:`_nll`."""
+    return f"CAST(ROUND(-LN({p}), 8) AS DECIMAL(38,10)) AS nll"
+
+
+def _perplexity(
+    scored: DataFrame, keys: list[str], count: str, **extra: Column
+) -> DataFrame:
+    """The canon's per-doc summary of a scored n-gram stream ``(*keys,
+    nll)``: ``(*keys, count, *extra, avg_nll, ppl_proxy)``, where
+    ``count`` names the n-gram count and ``extra`` holds further
+    per-doc aggregates by output name. The projection is SQL text: one
+    parse, where the Column API costs a py4j round trip per node. Twin
+    of :func:`_perplexity_sql`."""
+    avg = f"round(CAST(s AS DOUBLE) / {count}, 6)"
+    return (
+        scored.groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias(count),
+            *(c.alias(k) for k, c in extra.items()),
+            F.sum("nll").alias("s"),
+        )
+        .selectExpr(
+            *keys,
+            count,
+            *extra,
+            f"{avg} AS avg_nll",
+            f"round(exp({avg}), 4) AS ppl_proxy",
+        )
+    )
+
+
+def _perplexity_sql(scored: str, keys: str, count: str, **extra: str) -> str:
+    """DuckDB twin of :func:`_perplexity` over the relation ``scored``;
+    ``keys`` is the comma-separated group key."""
+    ext = "".join(f"\n       {e} AS {k}," for k, e in extra.items())
+    return f"""SELECT {keys}, CAST(COUNT(*) AS BIGINT) AS {count},{ext}
+       ROUND(CAST(SUM(nll) AS DOUBLE) / COUNT(*), 6) AS avg_nll,
+       ROUND(EXP(avg_nll), 4) AS ppl_proxy
+FROM {scored} GROUP BY {keys}"""
+
+
+def _unigram_model(tok: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The unigram LM of a ``token`` row stream: the ``(token, cnt)``
+    vocab counts (|V| rows, far smaller than the corpus) and their
+    1-row ``(n_total)`` total, which attaches by broadcast cross join
+    (the l4k corpus-statistics shape). Twin of
+    :func:`_unigram_model_sql`."""
+    vocab = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
+    return vocab, vocab.agg(F.sum("cnt").alias("n_total"))
+
+
+def _unigram_model_sql(tok: str) -> str:
+    """DuckDB twin of :func:`_unigram_model`: the ``vocab`` and ``tot``
+    CTEs over the ``token`` column of relation ``tok``."""
+    return f"""vocab AS (
+  SELECT token, COUNT(*) AS cnt FROM {tok} GROUP BY 1
+), tot AS (
+  SELECT SUM(cnt) AS n_total FROM vocab
+)"""
+
+
 #: The per-document unigram-LM scoring relation as a SQL fragment —
 #: ``(doc_id, lang, n_tokens, avg_nll, ppl_proxy)`` — shared by l5e's
-#: projection and l5e3's CCNet bucketing so the two provably score
-#: identically. Twin of :func:`unigram_scored`.
-UNIGRAM_SCORED_SQL = """
+#: and l5e2's projection and l5e3's CCNet bucketing so they provably
+#: score identically. Twin of :func:`unigram_scored`.
+UNIGRAM_SCORED_SQL = f"""
 WITH tok AS (
   SELECT doc_id, lang, u.token
   FROM (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
        UNNEST(t) AS u(token)
-), vocab AS (
-  SELECT token, COUNT(*) AS cnt FROM tok GROUP BY 1
-), tot AS (
-  SELECT SUM(cnt) AS n_total FROM vocab
-), scored AS (
+), {_unigram_model_sql("tok")}, scored AS (
   SELECT doc_id, lang,
-         CAST(ROUND(-LN(CAST(cnt AS DOUBLE) / CAST(n_total AS DOUBLE)), 8)
-              AS DECIMAL(38,10)) AS nll
+         {_nll_sql("CAST(cnt AS DOUBLE) / CAST(n_total AS DOUBLE)")}
   FROM tok JOIN vocab USING (token) CROSS JOIN tot
-), agg AS (
-  SELECT doc_id, lang, COUNT(*) AS n_tokens, SUM(nll) AS s
-  FROM scored GROUP BY 1, 2
 )
-SELECT doc_id, lang,
-       CAST(n_tokens AS BIGINT) AS n_tokens,
-       ROUND(CAST(s AS DOUBLE) / n_tokens, 6) AS avg_nll,
-       ROUND(EXP(ROUND(CAST(s AS DOUBLE) / n_tokens, 6)), 4) AS ppl_proxy
-FROM agg
+{_perplexity_sql("scored", "doc_id, lang", "n_tokens")}
 """
 
 
-def unigram_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-document unigram-LM scoring relation ``(doc_id, lang,
-    n_tokens, avg_nll, ppl_proxy)`` — l5e's body (lang carried through
-    the explode instead of a join back; the grouping key stays
-    doc-unique), shared with l5e3's CCNet head/middle/tail bucketing.
-    Twin of :data:`UNIGRAM_SCORED_SQL`."""
+def _scored_unigrams(
+    spark: SparkSession,
+    sf_dir: str,
+    lookup: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """The unigram-LM scoring relation ``(doc_id, lang, n_tokens,
+    avg_nll, ppl_proxy)`` with each token's vocab count attached by
+    ``lookup(tok, vocab)`` (the one step l5e2 plans differently). One
+    explode feeds both the vocab aggregate and the lookup; lang rides
+    through the explode instead of a join back (the grouping key stays
+    doc-unique)."""
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", "lang", F.explode(tokenize(F.col("text"))).alias("token")
     )
-    vocab = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    tot = vocab.agg(F.sum("cnt").alias("n_total"))
-    nll = F.round(
-        -F.log(F.col("cnt").cast("double") / F.col("n_total").cast("double")), 8
-    ).cast("decimal(38,10)")
+    vocab, tot = _unigram_model(tok)
     scored = (
-        tok.join(vocab, "token")
+        lookup(tok, vocab)
         .crossJoin(F.broadcast(tot))
-        .select("doc_id", "lang", nll.alias("nll"))
+        .select(
+            "doc_id",
+            "lang",
+            _nll(F.col("cnt").cast("double") / F.col("n_total").cast("double")),
+        )
     )
-    agg = scored.groupBy("doc_id", "lang").agg(
-        F.count(F.lit(1)).alias("n_tokens"), F.sum("nll").alias("s")
-    )
-    avg = F.round(F.col("s").cast("double") / F.col("n_tokens"), 6)
-    return agg.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        avg.alias("avg_nll"),
-        F.round(F.exp(avg), 4).alias("ppl_proxy"),
+    return _perplexity(scored, ["doc_id", "lang"], "n_tokens")
+
+
+def unigram_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-document unigram-LM scoring relation ``(doc_id, lang,
+    n_tokens, avg_nll, ppl_proxy)`` — l5e's body, shared with l5e3's
+    CCNet head/middle/tail bucketing; the vocab attaches by one
+    token-keyed equi-join. Twin of :data:`UNIGRAM_SCORED_SQL`."""
+    return _scored_unigrams(
+        spark, sf_dir, lambda tok, vocab: tok.join(vocab, "token")
     )
 
 
@@ -842,12 +896,9 @@ def l5e_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB ('the' is a hot join key): the fix is the sk2 recipe —
     broadcast the top-K head of the vocab and shuffle only the tail —
     implemented as the registered variant l5e2_unigram_logprob_headtail
-    (applied when |V| exceeds broadcast budget; kept out of this entry
-    so the r6 window's pinned plan is unchanged).
-    Determinism: each token's nll is rounded to 8 dp then summed in
-    exact DECIMAL(38,10) (order-free), the mean rounded to 6 dp, and
-    exp applied to that already-rounded double on both engines —
-    the l4k component-rounding canon."""
+    (applied when |V| exceeds broadcast budget).
+    Determinism: the ladder's perplexity canon (:func:`_nll`,
+    :func:`_perplexity`)."""
     return unigram_scored(spark, sf_dir).select(
         "doc_id", "n_tokens", "avg_nll", "ppl_proxy"
     )
@@ -858,6 +909,18 @@ def l5e_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: small constant head absorbs the hot join keys; the fixture's |V|=31
 #: still leaves a non-empty 23-token tail, so both paths are exercised.
 _L5E_HEAD_K = 8
+
+
+def _headtail_lookup(tok: DataFrame, vocab: DataFrame) -> DataFrame:
+    """l5e2's token -> vocab lookup, split at the Zipf head: the top
+    ``_L5E_HEAD_K`` types by count join by explicit broadcast, the
+    rest by the ordinary equi-join, and the two streams union."""
+    head = vocab.orderBy(F.col("cnt").desc(), "token").limit(_L5E_HEAD_K)
+    hot = F.broadcast(head.select("token"))
+    tail = vocab.join(hot, "token", "left_anti")
+    return tok.join(F.broadcast(head), "token").unionByName(
+        tok.join(hot, "token", "left_anti").join(tail, "token")
+    )
 
 
 @register(
@@ -886,40 +949,15 @@ def l5e2_unigram_logprob_headtail(spark: SparkSession, sf_dir: str) -> DataFrame
     streams union before the per-doc aggregate; the per-token nll is
     rounded then summed in exact DECIMAL(38,10), so the union order —
     and therefore the split itself — cannot perturb a single bit of
-    the result: the oracle is l5e's verbatim.
+    the result: the model, the canon and the oracle are l5e's.
 
     At scale the same split serves any corpus-frequency join (lm7's
     bucket join is bounded at 256 rows and needs none; l4k/l4c score
     joins would take it verbatim). Head size is a constant, not a
     fraction: Zipf puts the mass in O(1) types, and a constant head
     keeps the broadcast plan-stable as the corpus grows."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokenize(F.col("text"))).alias("token"))
-    vocab = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    tot = vocab.agg(F.sum("cnt").alias("n_total"))
-    head = vocab.orderBy(F.col("cnt").desc(), "token").limit(_L5E_HEAD_K)
-    tail = vocab.join(F.broadcast(head.select("token")), "token", "left_anti")
-    nll = F.round(
-        -F.log(F.col("cnt").cast("double") / F.col("n_total").cast("double")), 8
-    ).cast("decimal(38,10)")
-    scored_head = tok.join(F.broadcast(head), "token")
-    scored_tail = tok.join(
-        F.broadcast(head.select("token")), "token", "left_anti"
-    ).join(tail, "token")
-    scored = (
-        scored_head.unionByName(scored_tail)
-        .crossJoin(F.broadcast(tot))
-        .select("doc_id", nll.alias("nll"))
-    )
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"), F.sum("nll").alias("s")
-    )
-    avg = F.round(F.col("s").cast("double") / F.col("n_tokens"), 6)
-    return agg.select(
-        "doc_id",
-        "n_tokens",
-        avg.alias("avg_nll"),
-        F.round(F.exp(avg), 4).alias("ppl_proxy"),
+    return _scored_unigrams(spark, sf_dir, _headtail_lookup).select(
+        "doc_id", "n_tokens", "avg_nll", "ppl_proxy"
     )
 
 
@@ -1024,47 +1062,45 @@ def l5e3_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: lambda JM keeps the identical plan shape fully oracle-checkable).
 _L5E4_LAMBDA = 0.75
 
+#: The context and backoff keys of a bigram ``big`` (l5e4) and of a
+#: trigram ``tg`` (l5e5), cut from the n-gram string: tokens never
+#: contain a space, so split_part inverts the kernel's join. The same
+#: SQL text parses in Spark SQL and DuckDB.
+_BIGRAM_KEYS = ("split_part(big, ' ', 1) AS w1", "split_part(big, ' ', 2) AS w2")
+_TRIGRAM_KEYS = (
+    "concat_ws(' ', split_part(tg, ' ', 1), split_part(tg, ' ', 2)) AS big12",
+    "concat_ws(' ', split_part(tg, ' ', 2), split_part(tg, ' ', 3)) AS big23",
+    "split_part(tg, ' ', 2) AS w2",
+    "split_part(tg, ' ', 3) AS w3",
+)
+
 
 @register(
     "l5e4_bigram_interp_logprob",
     oracle=f"""
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), bg AS (
-  SELECT doc_id, u.i AS pos,
-         toks[u.i] AS w1, toks[u.i + 1] AS w2,
-         concat(toks[u.i], ' ', toks[u.i + 1]) AS big
-  FROM t, UNNEST(generate_series(1, LEN(toks) - 1)) AS u(i)
-  WHERE LEN(toks) >= 2
-), uni AS (
-  SELECT u.token AS w, COUNT(*) AS cw
-  FROM (SELECT UNNEST(string_split(text, ' ')) AS token FROM documents) u
-  GROUP BY 1
-), tot AS (
-  SELECT SUM(cw) AS n_total FROM uni
-), ctx AS (
-  SELECT w1 AS w, COUNT(*) AS cctx FROM bg GROUP BY 1
+WITH bg AS (
+  SELECT doc_id, big, {", ".join(_BIGRAM_KEYS)}
+  FROM (SELECT doc_id, UNNEST({word_ngrams_sql("toks", 2)}) AS big
+        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents))
+), tok AS (
+  SELECT UNNEST(string_split(text, ' ')) AS token FROM documents
+), {_unigram_model_sql("tok")}, ctx AS (
+  SELECT w1, COUNT(*) AS cctx FROM bg GROUP BY 1
 ), bgm AS (
   SELECT big, COUNT(*) AS cbg FROM bg GROUP BY 1
 ), scored AS (
   SELECT bg.doc_id,
-         CAST(ROUND(-LN(
-             {_L5E4_LAMBDA} * (CAST(cbg AS DOUBLE) / CAST(cctx AS DOUBLE))
-             + {1 - _L5E4_LAMBDA} * (CAST(cw AS DOUBLE) / CAST(n_total AS DOUBLE))
-           ), 8) AS DECIMAL(38,10)) AS nll
+         {_nll_sql(
+             f"{_L5E4_LAMBDA} * (CAST(cbg AS DOUBLE) / CAST(cctx AS DOUBLE))"
+             f" + {1 - _L5E4_LAMBDA} * (CAST(cnt AS DOUBLE) / CAST(n_total AS DOUBLE))"
+         )}
   FROM bg
   JOIN bgm USING (big)
-  JOIN ctx ON ctx.w = bg.w1
-  JOIN uni ON uni.w = bg.w2
+  JOIN ctx USING (w1)
+  JOIN vocab ON vocab.token = bg.w2
   CROSS JOIN tot
-), agg AS (
-  SELECT doc_id, COUNT(*) AS n_bigrams, SUM(nll) AS s FROM scored GROUP BY 1
 )
-SELECT doc_id,
-       CAST(n_bigrams AS BIGINT) AS n_bigrams,
-       ROUND(CAST(s AS DOUBLE) / n_bigrams, 6) AS avg_nll,
-       ROUND(EXP(ROUND(CAST(s AS DOUBLE) / n_bigrams, 6)), 4) AS ppl_proxy
-FROM agg
+{_perplexity_sql("scored", "doc_id", "n_bigrams")}
 """,
     tags=("L5", "L4", "A1", "J8"),
 )
@@ -1080,81 +1116,53 @@ def l5e4_bigram_interp_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     is identical to what a real n-gram scorer runs: model-build
     aggregates + model joins back onto the n-gram stream.
 
-    Plan shape: bigrams form IN-ROW (transform over sequence — no
-    self-join of token rows) and the exploded bigram stream is
-    PERSISTED (MEMORY_AND_DISK, the l2m discipline) because three
-    consumers read it — the scoring stream plus the bigram and
-    context model builds — and unreused lineage would re-explode the
-    corpus per consumer; with the cache the corpus tokenizes exactly
-    twice (bigram build + unigram model), the minimum without
-    deriving one model from the other. Three model tables join back —
-    the bigram model keyed on the pair, the context and unigram
-    models keyed on single tokens, the 1-row total as a broadcast
-    attach. Model tables are |V|^2- and |V|-bounded (far smaller
+    Plan shape: bigrams form IN-ROW (the word_ngrams kernel — no
+    self-join of token rows; w1/w2 are cut from the bigram string)
+    and the exploded bigram stream is PERSISTED (MEMORY_AND_DISK, the
+    l2m discipline) because three consumers read it — the scoring
+    stream plus the bigram and context model builds — and unreused
+    lineage would re-explode the corpus per consumer; with the cache
+    the corpus tokenizes exactly twice (bigram build + unigram model),
+    the minimum without deriving one model from the other. Three model
+    tables join back — the bigram model keyed on the pair, the context
+    and unigram models keyed on single tokens, the 1-row total as a
+    broadcast attach. Model tables are |V|^2- and |V|-bounded (far smaller
     than the corpus; AQE broadcasts them when they fit), and the
     token-keyed joins carry the same Zipf hot-key exposure as
     l5e — the l5e2 broadcast-head/shuffle-tail lever applies to each
     verbatim at 100 TB. Per-doc reduction is one hash aggregate;
     docs under 2 tokens have no bigrams and drop out (documented; the
-    fixture has none). Determinism: the l5e rounding canon — each
-    bigram's nll rounded to 8 dp (the interpolation's two products
-    and their sum are fixed-order IEEE ops on identical inputs), then
-    DECIMAL-summed, mean rounded to 6 dp, exp applied to the rounded
-    mean."""
+    fixture has none). Determinism: the ladder's perplexity canon
+    (the interpolation's two products and their sum are fixed-order
+    IEEE ops on identical inputs)."""
     from pyspark import StorageLevel
 
     d = load(spark, sf_dir, "documents")
-    t = d.select("doc_id", tokenize(F.col("text")).alias("toks"))
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - 1),
-        lambda i: F.struct(
-            F.element_at("toks", i.cast("int")).alias("w1"),
-            F.element_at("toks", (i + 1).cast("int")).alias("w2"),
-        ),
-    )
     bg = (
-        t.filter(F.size("toks") >= 2)
-        .select("doc_id", F.explode(pairs).alias("p"))
-        .select(
-            "doc_id",
-            F.col("p.w1").alias("w1"),
-            F.col("p.w2").alias("w2"),
-            F.concat_ws(" ", "p.w1", "p.w2").alias("big"),
-        )
+        d.select("doc_id", tokenize(F.col("text")).alias("toks"))
+        .select("doc_id", F.explode(word_ngrams("toks", 2)).alias("big"))
+        .selectExpr("doc_id", "big", *_BIGRAM_KEYS)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    uni = (
-        d.select(F.explode(tokenize(F.col("text"))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cw"))
+    vocab, tot = _unigram_model(
+        d.select(F.explode(tokenize(F.col("text"))).alias("token"))
     )
-    tot = uni.agg(F.sum("cw").alias("n_total"))
-    ctx = bg.groupBy(F.col("w1").alias("w")).agg(F.count(F.lit(1)).alias("cctx"))
+    ctx = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("cctx"))
     bgm = bg.groupBy("big").agg(F.count(F.lit(1)).alias("cbg"))
     lam = _L5E4_LAMBDA
     p = F.lit(lam) * (
         F.col("cbg").cast("double") / F.col("cctx").cast("double")
     ) + F.lit(1 - lam) * (
-        F.col("cw").cast("double") / F.col("n_total").cast("double")
+        F.col("cnt").cast("double") / F.col("n_total").cast("double")
     )
-    nll = F.round(-F.log(p), 8).cast("decimal(38,10)")
     scored = (
         bg.join(bgm, "big")
-        .join(ctx, bg["w1"] == ctx["w"])
-        .join(uni, bg["w2"] == uni["w"])
+        .join(ctx, "w1")
+        .join(vocab.withColumnRenamed("token", "w2"), "w2")
         .crossJoin(F.broadcast(tot))
-        .select("doc_id", nll.alias("nll"))
+        .select("doc_id", _nll(p))
     )
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"), F.sum("nll").alias("s")
-    )
-    avg = F.round(F.col("s").cast("double") / F.col("n_bigrams"), 6)
-    return agg.select(
-        "doc_id",
-        "n_bigrams",
-        avg.alias("avg_nll"),
-        F.round(F.exp(avg), 4).alias("ppl_proxy"),
-    )
+    return _perplexity(scored, ["doc_id"], "n_bigrams")
 
 
 #: Boilerplate geometry: non-overlapping 8-token chunks; a chunk text
@@ -1400,7 +1408,7 @@ def l5i_fasttext_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: the model is ONE row (a 256-double array, the lm7
     feature-hashing discipline: constant-size regardless of
     vocabulary), broadcast-crossJoined onto the scan; features form
-    in-row (slice/zip_with bigrams — no token explode, no shuffle at
+    in-row (word_ngrams bigrams — no token explode, no shuffle at
     all), and the dot product is an in-row fold in array order (the
     l4t fixed-order canon, so DuckDB replays the identical IEEE sum).
     The whole gate is a pure map over document partitions — at 100 TB
@@ -1417,7 +1425,7 @@ def l5i_fasttext_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             n.cast("bigint").alias("n_tokens"),
             (2 * n - 1).cast("bigint").alias("n_features"),
-            quality_logit(F.col("toks"), F.col("wv")).alias("quality_logit"),
+            quality_logit("toks", F.col("wv")).alias("quality_logit"),
         )
     )
     return scored.select(
@@ -1451,61 +1459,42 @@ WITH train AS (
 ), ev AS (
   SELECT doc_id, string_split(text, ' ') AS toks FROM documents WHERE doc_id % 13 = 0
 ), tri_ev AS (
-  SELECT doc_id,
-         concat(toks[u.i], ' ', toks[u.i + 1], ' ', toks[u.i + 2]) AS tg,
-         concat(toks[u.i], ' ', toks[u.i + 1]) AS big12,
-         concat(toks[u.i + 1], ' ', toks[u.i + 2]) AS big23,
-         toks[u.i + 1] AS w2, toks[u.i + 2] AS w3
-  FROM ev, UNNEST(generate_series(1, LEN(toks) - 2)) AS u(i)
-  WHERE LEN(toks) >= 3
+  SELECT doc_id, tg, {", ".join(_TRIGRAM_KEYS)}
+  FROM (SELECT doc_id, UNNEST({word_ngrams_sql("toks", 3)}) AS tg FROM ev)
 ), tri_m AS (
-  SELECT concat(toks[u.i], ' ', toks[u.i + 1], ' ', toks[u.i + 2]) AS tg,
-         COUNT(*) AS c3
-  FROM train, UNNEST(generate_series(1, LEN(toks) - 2)) AS u(i)
-  WHERE LEN(toks) >= 3 GROUP BY 1
+  SELECT g, COUNT(*) AS c FROM (SELECT UNNEST({word_ngrams_sql("toks", 3)}) AS g FROM train)
+  GROUP BY 1
 ), bg_m AS (
-  SELECT concat(toks[u.i], ' ', toks[u.i + 1]) AS bgk, COUNT(*) AS c2
-  FROM train, UNNEST(generate_series(1, LEN(toks) - 1)) AS u(i)
-  WHERE LEN(toks) >= 2 GROUP BY 1
-), uni_m AS (
-  SELECT u.w, COUNT(*) AS c1 FROM (SELECT UNNEST(toks) AS w FROM train) u GROUP BY 1
-), tot AS (
-  SELECT SUM(c1) AS n FROM uni_m
-), scored AS (
+  SELECT g, COUNT(*) AS c FROM (SELECT UNNEST({word_ngrams_sql("toks", 2)}) AS g FROM train)
+  GROUP BY 1
+), tok AS (
+  SELECT UNNEST(toks) AS token FROM train
+), {_unigram_model_sql("tok")}, scored AS (
   SELECT e.doc_id,
-         t3.c3 IS NOT NULL AS hit3,
-         t3.c3 IS NULL AND b23.c2 IS NOT NULL AS hit2,
-         CAST(ROUND(-LN(
-           CASE
-             WHEN t3.c3 IS NOT NULL
-               THEN CAST(t3.c3 AS DOUBLE) / CAST(b12.c2 AS DOUBLE)
-             WHEN b23.c2 IS NOT NULL
-               THEN {_L5E5_ALPHA} * (CAST(b23.c2 AS DOUBLE) / CAST(u2.c1 AS DOUBLE))
+         t3.c IS NOT NULL AS hit3,
+         t3.c IS NULL AND b23.c IS NOT NULL AS hit2,
+         {_nll_sql(f'''CASE
+             WHEN t3.c IS NOT NULL
+               THEN CAST(t3.c AS DOUBLE) / CAST(b12.c AS DOUBLE)
+             WHEN b23.c IS NOT NULL
+               THEN {_L5E5_ALPHA} * (CAST(b23.c AS DOUBLE) / CAST(u2.cnt AS DOUBLE))
              ELSE {_L5E5_ALPHA2}
-               * (CAST(GREATEST(COALESCE(u3.c1, 0), 1) AS DOUBLE) / CAST(n AS DOUBLE))
-           END), 8) AS DECIMAL(38,10)) AS nll
+               * (CAST(GREATEST(COALESCE(u3.cnt, 0), 1) AS DOUBLE) / CAST(n_total AS DOUBLE))
+           END''')}
   FROM tri_ev e
-  LEFT JOIN tri_m t3 ON t3.tg = e.tg
-  LEFT JOIN bg_m b12 ON b12.bgk = e.big12
-  LEFT JOIN bg_m b23 ON b23.bgk = e.big23
-  LEFT JOIN uni_m u2 ON u2.w = e.w2
-  LEFT JOIN uni_m u3 ON u3.w = e.w3
+  LEFT JOIN tri_m t3 ON t3.g = e.tg
+  LEFT JOIN bg_m b12 ON b12.g = e.big12
+  LEFT JOIN bg_m b23 ON b23.g = e.big23
+  LEFT JOIN vocab u2 ON u2.token = e.w2
+  LEFT JOIN vocab u3 ON u3.token = e.w3
   CROSS JOIN tot
-), agg AS (
-  SELECT doc_id, COUNT(*) AS n_trigrams,
-         CAST(SUM(CASE WHEN hit3 THEN 1 ELSE 0 END) AS BIGINT) AS n_hit3,
-         CAST(SUM(CASE WHEN hit2 THEN 1 ELSE 0 END) AS BIGINT) AS n_backoff2,
-         CAST(SUM(CASE WHEN NOT hit3 AND NOT hit2 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_backoff1,
-         SUM(nll) AS s
-  FROM scored GROUP BY 1
 )
-SELECT doc_id,
-       CAST(n_trigrams AS BIGINT) AS n_trigrams,
-       n_hit3, n_backoff2, n_backoff1,
-       ROUND(CAST(s AS DOUBLE) / n_trigrams, 6) AS avg_nll,
-       ROUND(EXP(ROUND(CAST(s AS DOUBLE) / n_trigrams, 6)), 4) AS ppl_proxy
-FROM agg
+{_perplexity_sql(
+    "scored", "doc_id", "n_trigrams",
+    n_hit3="CAST(SUM(CASE WHEN hit3 THEN 1 ELSE 0 END) AS BIGINT)",
+    n_backoff2="CAST(SUM(CASE WHEN hit2 THEN 1 ELSE 0 END) AS BIGINT)",
+    n_backoff1="CAST(SUM(CASE WHEN NOT hit3 AND NOT hit2 THEN 1 ELSE 0 END) AS BIGINT)",
+)}
 """,
     tags=("L5", "L4", "A1", "J8"),
 )
@@ -1527,7 +1516,8 @@ def l5e5_trigram_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables bounded by |V|^3 / |V|^2 / |V| regardless of corpus size
     (the reason n-gram LMs scale: Brants built 5-gram models over
     2 trillion tokens this way), joined back onto the in-row-formed
-    eval trigram stream; the 1-row total broadcasts. The bigram and
+    eval trigram stream (its context and backoff keys cut from the
+    trigram string); the 1-row total broadcasts. The bigram and
     unigram models are each probed TWICE (context key + backoff key),
     so both are persisted (MEMORY_AND_DISK) — without the persist each
     second probe would re-tokenize the train corpus (the l5e4/l2m
@@ -1537,84 +1527,33 @@ def l5e5_trigram_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjusted-count subtlety, so the three expansions are the honest
     minimum) and the eval slice once. Token-keyed model joins carry
     the Zipf hot-key exposure; the l5e2 broadcast-head/shuffle-tail
-    lever applies verbatim at 100 TB. Determinism: the l5e canon —
-    per-trigram nll rounded 8dp (every branch a fixed-order IEEE
-    expression over exact counts), DECIMAL sum, mean rounded 6dp."""
+    lever applies verbatim at 100 TB. Determinism: the ladder's
+    perplexity canon (every branch a fixed-order IEEE expression over
+    exact counts)."""
     from pyspark import StorageLevel
 
     d = load(spark, sf_dir, "documents")
 
-    def toks_of(pred):
+    def toks_of(pred: Column) -> DataFrame:
         return d.filter(pred).select(
             "doc_id", tokenize(F.col("text")).alias("toks")
         )
 
     train = toks_of(F.col("doc_id") % 13 != 0)
     ev = toks_of(F.col("doc_id") % 13 == 0)
-    n = F.size("toks")
 
-    def ngrams(df, order):
-        width = order - 1
-        parts = lambda i: [  # noqa: E731
-            F.element_at("toks", (i + j).cast("int")) for j in range(order)
-        ]
-        return (
-            df.filter(n >= order)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), n - width),
-                        lambda i: F.concat_ws(" ", *parts(i)),
-                    )
-                ).alias("g"),
-            )
-        )
+    def counts(n: int) -> DataFrame:
+        """The train slice's n-gram model ``(g, c)``."""
+        g = train.select(F.explode(word_ngrams("toks", n)).alias("g"))
+        return g.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
 
-    tri_m = ngrams(train, 3).groupBy(F.col("g").alias("tg")).agg(
-        F.count(F.lit(1)).alias("c3")
-    )
-    bg_m = (
-        ngrams(train, 2)
-        .groupBy(F.col("g").alias("bgk"))
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    uni_m = (
-        ngrams(train, 1)
-        .groupBy(F.col("g").alias("w"))
-        .agg(F.count(F.lit(1)).alias("c1"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    tot = uni_m.agg(F.sum("c1").alias("ntot"))
-    tri_ev = (
-        ev.filter(n >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), n - 2),
-                    lambda i: F.struct(
-                        F.element_at("toks", i.cast("int")).alias("w1"),
-                        F.element_at("toks", (i + 1).cast("int")).alias("w2"),
-                        F.element_at("toks", (i + 2).cast("int")).alias("w3"),
-                    ),
-                )
-            ).alias("p"),
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(" ", "p.w1", "p.w2", "p.w3").alias("tg"),
-            F.concat_ws(" ", "p.w1", "p.w2").alias("big12"),
-            F.concat_ws(" ", "p.w2", "p.w3").alias("big23"),
-            F.col("p.w2").alias("w2"),
-            F.col("p.w3").alias("w3"),
-        )
-    )
-    b12 = bg_m.select(F.col("bgk").alias("k12"), F.col("c2").alias("c2_12"))
-    b23 = bg_m.select(F.col("bgk").alias("k23"), F.col("c2").alias("c2_23"))
-    u2 = uni_m.select(F.col("w").alias("uw2"), F.col("c1").alias("c1_w2"))
-    u3 = uni_m.select(F.col("w").alias("uw3"), F.col("c1").alias("c1_w3"))
+    mem = StorageLevel.MEMORY_AND_DISK
+    bg_m = counts(2).persist(mem)
+    vocab, tot = _unigram_model(train.select(F.explode("toks").alias("token")))
+    vocab = vocab.persist(mem)
+    tri_ev = ev.select(
+        "doc_id", F.explode(word_ngrams("toks", 3)).alias("tg")
+    ).selectExpr("doc_id", "tg", *_TRIGRAM_KEYS)
     score = (
         F.when(
             F.col("c3").isNotNull(),
@@ -1631,44 +1570,33 @@ def l5e5_trigram_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.greatest(F.coalesce(F.col("c1_w3"), F.lit(0)), F.lit(1)).cast(
                     "double"
                 )
-                / F.col("ntot").cast("double")
+                / F.col("n_total").cast("double")
             )
         )
     )
     scored = (
-        tri_ev.join(tri_m, "tg", "left")
-        .join(b12, F.col("big12") == F.col("k12"), "left")
-        .join(b23, F.col("big23") == F.col("k23"), "left")
-        .join(u2, F.col("w2") == F.col("uw2"), "left")
-        .join(u3, F.col("w3") == F.col("uw3"), "left")
+        tri_ev.join(counts(3).toDF("tg", "c3"), "tg", "left")
+        .join(bg_m.toDF("big12", "c2_12"), "big12", "left")
+        .join(bg_m.toDF("big23", "c2_23"), "big23", "left")
+        .join(vocab.toDF("w2", "c1_w2"), "w2", "left")
+        .join(vocab.toDF("w3", "c1_w3"), "w3", "left")
         .crossJoin(F.broadcast(tot))
         .select(
             "doc_id",
             F.col("c3").isNotNull().alias("hit3"),
             (F.col("c3").isNull() & F.col("c2_23").isNotNull()).alias("hit2"),
-            F.round(-F.log(score), 8).cast("decimal(38,10)").alias("nll"),
+            _nll(score),
         )
     )
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_trigrams"),
-        F.sum(F.when(F.col("hit3"), 1).otherwise(0)).cast("bigint").alias("n_hit3"),
-        F.sum(F.when(F.col("hit2"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_backoff2"),
-        F.sum(F.when(~F.col("hit3") & ~F.col("hit2"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_backoff1"),
-        F.sum("nll").alias("s"),
-    )
-    avg = F.round(F.col("s").cast("double") / F.col("n_trigrams"), 6)
-    return agg.select(
-        "doc_id",
+    return _perplexity(
+        scored,
+        ["doc_id"],
         "n_trigrams",
-        "n_hit3",
-        "n_backoff2",
-        "n_backoff1",
-        avg.alias("avg_nll"),
-        F.round(F.exp(avg), 4).alias("ppl_proxy"),
+        n_hit3=F.sum(F.when(F.col("hit3"), 1).otherwise(0)).cast("bigint"),
+        n_backoff2=F.sum(F.when(F.col("hit2"), 1).otherwise(0)).cast("bigint"),
+        n_backoff1=F.sum(
+            F.when(~F.col("hit3") & ~F.col("hit2"), 1).otherwise(0)
+        ).cast("bigint"),
     )
 
 
@@ -1808,8 +1736,8 @@ def l5k_train_quality_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     fx = d.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
-        unigram_bigram_features(tokenize(F.col("text"))).alias("fs"),
-    )
+        tokenize(F.col("text")).alias("toks"),
+    ).select("doc_id", "y", unigram_bigram_features("toks").alias("fs"))
     bucket = (
         F.conv(F.substring(F.md5(F.col("f").cast("binary")), 1, 8), 16, 10)
         .cast("long")
@@ -2224,7 +2152,7 @@ def l5k2_trained_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("thr")
         )
     )
-    logit = quality_logit(F.col("toks"), F.col("wv"), bias=F.col("b0"))
+    logit = quality_logit("toks", F.col("wv"), bias=F.col("b0"))
     scored = (
         d.select("doc_id", tokenize(F.col("text")).alias("toks"))
         .crossJoin(F.broadcast(wrow))

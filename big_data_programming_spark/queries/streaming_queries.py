@@ -1432,11 +1432,10 @@ def st29_streaming_curation_monitor(spark: SparkSession, sf_dir: str) -> DataFra
     topology: no joins, no watermark (no event-time), state bounded
     by the source-key cardinality."""
     s = documents_stream(spark, sf_dir)
-    toks = tokenize(F.col("text"))
-    gated = s.select(
+    gated = s.select("source", tokenize(F.col("text")).alias("toks")).select(
         "source",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        basic_gate(toks).alias("keeps"),
+        F.size("toks").cast("bigint").alias("n_tokens"),
+        basic_gate("toks").alias("keeps"),
     )
     agg = gated.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1494,9 +1493,8 @@ def st30_streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFram
     rollout: heuristic gate and classifier gate side by side, per
     source, per micro-batch."""
     s = documents_stream(spark, sf_dir)
-    gated = s.select(
-        "source",
-        quality_logit(tokenize(F.col("text")), quality_weights()).alias("logit"),
+    gated = s.select("source", tokenize(F.col("text")).alias("toks")).select(
+        "source", quality_logit("toks", quality_weights()).alias("logit")
     )
     keep = F.sum(F.when(F.col("logit") > 0, 1).otherwise(0))
     agg = gated.groupBy("source").agg(

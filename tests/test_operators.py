@@ -1373,6 +1373,33 @@ def test_quality_weights_literal_is_the_weight_table(spark):
     assert bits == [struct.pack(">d", w) for w in L5I_WEIGHTS]
 
 
+def test_word_ngrams_match_python_reference(spark):
+    """word_ngrams and its DuckDB twin against pure Python for n = 1,
+    2, 3, over texts shorter than n, a single token, the empty text
+    (one empty token) and a double space (an empty middle token)."""
+    import duckdb
+
+    from big_data_programming_spark.operators.text import word_ngrams, word_ngrams_sql
+
+    texts = ["", "a", "a b", "a  b", "the cat sat on the mat"]
+
+    def ref(text: str, n: int) -> list[str]:
+        t = text.split(" ")
+        return [" ".join(t[i : i + n]) for i in range(len(t) - n + 1)]
+
+    df = spark.createDataFrame([(s,) for s in texts], "text string").select(
+        "text", F.split("text", " ").alias("t")
+    )
+    con = duckdb.connect()
+    toks_sql = "string_split(s, ' ')"
+    for n in (1, 2, 3):
+        want = {s: ref(s, n) for s in texts}
+        got = df.select("text", word_ngrams("t", n)).collect()
+        assert dict(map(tuple, got)) == want, n
+        sql = f"SELECT s, {word_ngrams_sql(toks_sql, n)} FROM unnest(?) AS u(s)"
+        assert dict(con.execute(sql, [texts]).fetchall()) == want, n
+
+
 def test_capped_minhash_fanout(spark):
     """lm8b: the hot-bucket ceiling only ever REMOVES candidates —
     flagged docs are a subset of lm8's, per-doc match/dup counts
@@ -1494,8 +1521,8 @@ def test_trained_quality_weights_learn(spark):
     fx = d.select(
         "doc_id",
         (F.col("lang") == "en").alias("is_en"),
-        unigram_bigram_features(tokenize(F.col("text"))).alias("fs"),
-    )
+        tokenize(F.col("text")).alias("toks"),
+    ).select("doc_id", "is_en", unigram_bigram_features("toks").alias("fs"))
     bucket = (
         F.conv(F.substring(F.md5(F.col("f").cast("binary")), 1, 8), 16, 10)
         .cast("long")

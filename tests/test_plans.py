@@ -1129,14 +1129,19 @@ def test_dedup_pair_queries_build_without_jobs():
 
 def test_query_builds_stay_within_py4j_budget(monkeypatch):
     """Building the wide-expression queries stays cheap on the driver:
-    the MinHash signature, band and SimHash vote expressions (l2i, l2b)
-    and the 256-double l5i weight row and funnel stage dimension (l5i,
-    l5g, l5j, lm10) are each one parsed SQL string, not one py4j round
-    trip per Column node. Gateway commands are counted per build
-    (minimum over 3 builds). Built Column by Column they took >= 4,300
-    for l2i, >= 2,000 for l2b, >= 1,600 for l5i, >= 3,200 for l5g,
-    >= 5,200 for l5j and >= 4,500 for lm10."""
+    the MinHash base-hash, signature, band and SimHash vote expressions
+    (l2i, l2b), the 256-double l5i weight row and funnel stage
+    dimension (l5i, l5g, l5j, lm10) and the word n-gram arrays of the
+    LM ladder (l5e5) are each one parsed SQL string, not one py4j round
+    trip per Column node. Gateway commands are counted over one build,
+    leaving out py4j's memory-release (``m``) commands: those are sent
+    when the collector finalizes Java object proxies, so their number
+    depends on when collection runs, while every other command is the
+    same on every build. Built Column by Column they took >= 4,300 for
+    l2i, >= 2,000 for l2b, >= 1,600 for l5i, >= 3,200 for l5g, >= 5,200
+    for l5j, >= 4,500 for lm10 and 2,328 for l5e5."""
     import py4j.clientserver as cs
+    from py4j.protocol import MEMORY_COMMAND_NAME
 
     import big_data_programming_spark.session as S
     from big_data_programming_spark.registry import catalog
@@ -1146,30 +1151,30 @@ def test_query_builds_stay_within_py4j_budget(monkeypatch):
     send = cs.ClientServerConnection.send_command
 
     def counting(self, command):
-        sent[0] += 1
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent[0] += 1
         return send(self, command)
 
     monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
     cat = catalog()
 
-    def fewest_commands(name: str) -> int:
-        counts = []
-        for _ in range(3):
-            sent[0] = 0
-            cat[name].fn(spark, SF_DIR)
-            counts.append(sent[0])
-        S.release_caches(spark)  # l5j persists its train relation
-        return min(counts)
+    def commands(name: str) -> int:
+        sent[0] = 0
+        cat[name].fn(spark, SF_DIR)
+        n = sent[0]
+        S.release_caches(spark)  # l5j, l5e5 persist
+        return n
 
     budget = {
-        "l2i_minhash_banded": 1500,
-        "l2b_simhash": 1000,
-        "l5i_fasttext_quality_gate": 1100,
-        "l5g_pipeline_verdict": 2700,
-        "l5j_curation_pipeline": 4600,
-        "lm10_incremental_curation_funnel": 4000,
+        "l2i_minhash_banded": 850,
+        "l2b_simhash": 200,
+        "l5i_fasttext_quality_gate": 550,
+        "l5g_pipeline_verdict": 1850,
+        "l5j_curation_pipeline": 3400,
+        "lm10_incremental_curation_funnel": 2650,
+        "l5e5_trigram_backoff_logprob": 1800,
     }
-    got = {n: fewest_commands(n) for n in budget}
+    got = {n: commands(n) for n in budget}
     assert all(got.values()), f"no gateway command counted: {got}"
     over = {n: c for n, c in got.items() if c > budget[n]}
     assert not over, (over, got)
