@@ -10,14 +10,28 @@ The canon used by every query in this repo instead makes the aggregate
 itself exact:
 
     Spark :  sum(col.cast(DECIMAL(38,10))).cast(double)
-    DuckDB:  CAST(SUM(CAST(expr AS DECIMAL(38,10))) AS DOUBLE)
+    DuckDB:  CAST(CAST(SUM(CAST(expr AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
 
-double→decimal(38,10) is a deterministic rounding both engines perform
-identically (round-half-up at the 10th fractional digit; exact ties
-require the double's binary expansion to terminate exactly there, which
-fixture data never does). The decimal SUM is exact integer arithmetic —
-associative, order-free — and decimal→double is again deterministic.
+double→decimal(38,10) is a deterministic rounding at the 10th
+fractional digit. Spark rounds the double's shortest decimal repr,
+DuckDB its exact binary expansion; the two agree while the value has
+at most ~16 significant digits down to that 10th fraction digit
+(|x| < ~1e6 with a fraction, or any integral value). Larger fractional
+values can differ in the 10th decimal, so ratios of such sums are
+rounded to 8 dp (w8, st29). The decimal SUM is exact integer
+arithmetic — associative, order-free. decimal→double is correctly rounded on Spark
+(BigDecimal.doubleValue) but DuckDB's direct DECIMAL→DOUBLE cast is
+occasionally 1 ulp off (DuckDB 1.0.0: 289473120.0 + 0.03 comes back as
+289473120.03000003), so the DuckDB side goes through VARCHAR, which
+DuckDB parses with a correctly-rounded strtod (:func:`dbl_sql`).
 Net: bit-identical doubles on both sides, at any partition count.
+
+Four kernels spell the canon, one per engine and aggregate:
+:func:`dsum` / :func:`davg` (Spark Columns) and :func:`dsum_sql` /
+:func:`davg_sql` (DuckDB SQL). None of them aliases its result, so each
+can sit inside ``/ COUNT(…)``, ``ROUND(…)`` or a window frame; the
+caller adds the alias. This module is the only one that spells the
+decimal width (:data:`DEC`) or the VARCHAR route.
 
 Cost: decimal aggregation is slower than double aggregation, but it
 stays inside whole-stage codegen (no Python boundary) and is still a
@@ -29,70 +43,61 @@ gate — the query shapes don't change.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, WindowSpec
 from pyspark.sql import functions as F
 
 #: Decimal type wide enough for sums over 1e9 rows of 1e10-magnitude
-#: values while keeping 10 fractional digits.
-DEC = "decimal(38,10)"
+#: values while keeping 10 fractional digits. The same spelling parses
+#: in Spark SQL and DuckDB, so SQL strings interpolate it too.
+DEC = "DECIMAL(38,10)"
 
 
-def dsum(col: Column | str, alias: str) -> Column:
-    """Order-independent SUM over a double column, emitted as double."""
+def dsum(col: Column | str, over: WindowSpec | None = None) -> Column:
+    """Order-independent SUM over a double column (or, with ``over``,
+    over a window frame), emitted as double. Twin of :func:`dsum_sql`."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(DEC)).cast("double").alias(alias)
+    s = F.sum(c.cast(DEC))
+    return (s if over is None else s.over(over)).cast("double")
 
 
-def davg(col: Column | str, alias: str) -> Column:
-    """Order-independent AVG: exact decimal sum / count, double division."""
+def davg(col: Column | str) -> Column:
+    """Order-independent AVG: exact decimal sum / count, double division.
+    Twin of :func:`davg_sql`."""
     c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(c.cast(DEC)).cast("double") / F.count(c)).alias(alias)
+    return dsum(c) / F.count(c)
 
 
-def oracle_dsum(expr: str, alias: str) -> str:
-    """DuckDB twin of :func:`dsum`.
-
-    DuckDB's direct DECIMAL→DOUBLE cast is occasionally 1 ulp off the
-    correctly-rounded result (observed on q1: 289473120.03 came back as
-    …03000003); Spark's BigDecimal.doubleValue *is* correctly rounded.
-    Routing through VARCHAR makes DuckDB use strtod, which is correctly
-    rounded — verified to match Python's float(Decimal) on all fixture
-    groups.
-    """
-    return (
-        f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)"
-        f" AS {alias}"
-    )
+def dbl_sql(expr: str) -> str:
+    """DuckDB DECIMAL (or HUGEINT) → DOUBLE, correctly rounded: through
+    VARCHAR, because the direct cast can be 1 ulp off."""
+    return f"CAST(CAST({expr} AS VARCHAR) AS DOUBLE)"
 
 
-def oracle_davg(expr: str, alias: str) -> str:
-    """DuckDB twin of :func:`davg` (same VARCHAR-mediated cast, then an
-    exact double division both engines perform identically)."""
-    return (
-        f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)"
-        f" / COUNT({expr}) AS {alias}"
-    )
+def dsum_sql(expr: str, over: str | None = None) -> str:
+    """DuckDB twin of :func:`dsum`; ``over`` is the window clause body
+    (``''`` for ``OVER ()``)."""
+    s = f"SUM(CAST({expr} AS {DEC}))"
+    return dbl_sql(s if over is None else f"{s} OVER ({over})")
 
 
-def r6(col: Column, alias: str) -> Column:
-    """Round to 6 dp — for quantities where the decimal canon can't apply
-    (stddev/corr-style aggregates whose per-engine algorithms differ by
-    ~1e-12 relative). Pair with ``ROUND(x, 6)`` in the oracle SQL."""
-    return F.round(col, 6).alias(alias)
+def davg_sql(expr: str) -> str:
+    """DuckDB twin of :func:`davg` (the same correctly-rounded sum, then
+    an exact double division both engines perform identically)."""
+    return f"{dsum_sql(expr)} / COUNT({expr})"
 
 
-#: DuckDB fragment: cosine(a, b) over the fixture's 64-dim embeddings
-#: with Spark's exact fold order — format with {a}/{b} expressions.
-#: 0.0 + x == x in IEEE, so Spark's zero-seeded F.aggregate fold equals
-#: DuckDB's first-element-seeded list_reduce, making every cosine
-#: bit-identical cross-engine. ONE definition on purpose: this string
-#: encodes the load-bearing fold-order canon, and a drifted copy would
-#: be a silent last-ulp oracle divergence (r5 review finding).
-COS64_SQL = """
-list_reduce(list_transform(generate_series(1, 64),
-            i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)
-/ (SQRT(list_reduce(list_transform(generate_series(1, 64),
-         i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE)), (x, y) -> x + y))
-   * SQRT(list_reduce(list_transform(generate_series(1, 64),
-           i -> CAST({b}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)))
-"""
+def cos_sql(a: str, b: str, k: int = 64) -> str:
+    """DuckDB cosine of two ``k``-dim lists with Spark's exact fold
+    order. 0.0 + x == x in IEEE, so Spark's zero-seeded F.aggregate
+    fold equals DuckDB's first-element-seeded list_reduce, making every
+    cosine bit-identical cross-engine. ONE definition on purpose: this
+    string encodes the load-bearing fold-order canon, and a drifted copy
+    would be a silent last-ulp oracle divergence."""
+
+    def dot(x: str, y: str) -> str:
+        return (
+            f"list_reduce(list_transform(generate_series(1, {k}), "
+            f"i -> CAST({x}[i] AS DOUBLE) * CAST({y}[i] AS DOUBLE)), (x, y) -> x + y)"
+        )
+
+    return f"({dot(a, b)} / (SQRT({dot(a, a)}) * SQRT({dot(b, b)})))"

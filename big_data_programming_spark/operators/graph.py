@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.functions.canonical import DEC
+from big_data_programming_spark.functions.canonical import DEC, dsum_sql
 
 
 def canonical_undirected(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -280,15 +280,14 @@ r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / nn.n AS r FROM nodes, nn)
     # Every literal is CAST(... AS DOUBLE): DuckDB would otherwise do
     # DECIMAL arithmetic on 1.0/0.85 where Spark/Python do IEEE double
     # (1.0 - 0.85 is 0.15000000000000002 in doubles, NOT decimal 0.15),
-    # and the decimal→double sum takes the VARCHAR route (oracle_dsum
-    # rationale: DuckDB's direct cast is occasionally 1 ulp off).
+    # and the decimal sum is the dsum_sql canon.
     iters = []
     for i in range(1, iterations + 1):
         iters.append(
             f""",
 c{i} AS (
   SELECT e.dst AS node,
-         CAST(CAST(SUM(CAST(p.r / outdeg.outdeg AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS s
+         {dsum_sql('p.r / outdeg.outdeg')} AS s
   FROM r{i - 1} p
   JOIN outdeg ON outdeg.src = p.node
   JOIN dedges e ON e.src = p.node

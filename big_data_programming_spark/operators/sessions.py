@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_programming_spark.functions.canonical import DEC
+from big_data_programming_spark.functions.canonical import dsum, dsum_sql
 
 
 def sessionize(
@@ -50,17 +50,17 @@ def sessionize(
         F.min(ts_col).alias("session_start"),
         F.max(ts_col).alias("session_end"),
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("session_value"),
+        dsum("value").alias("session_value"),
     )
 
 
 #: DuckDB twin of :func:`sessionize` — kept adjacent so the two
 #: formulations evolve together.
-SESSIONIZE_ORACLE_SQL = """
+SESSIONIZE_ORACLE_SQL = f"""
 WITH gaps AS (
   SELECT user_id, ts, event_id, value,
          CASE WHEN LAG(ts) OVER w IS NULL
-                OR EPOCH_US(ts) - EPOCH_US(LAG(ts) OVER w) > {gap_us}
+                OR EPOCH_US(ts) - EPOCH_US(LAG(ts) OVER w) > {{gap_us}}
               THEN 1 ELSE 0 END AS is_new_session
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -76,7 +76,7 @@ SELECT user_id, session_id,
        MIN(ts) AS session_start,
        MAX(ts) AS session_end,
        COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS session_value
+       {dsum_sql('value')} AS session_value
 FROM ids
 GROUP BY user_id, session_id
 """

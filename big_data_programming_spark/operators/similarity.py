@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from big_data_programming_spark.functions.canonical import davg
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -124,7 +126,7 @@ def label_centroids(
     return (
         flat.groupBy(label_col, "pos")
         .agg(
-            (F.sum(F.col("x").cast("decimal(38,10)")).cast("double") / F.count("x")).alias("cx")
+            davg("x").alias("cx")
         )
         .groupBy(label_col)
         .agg(

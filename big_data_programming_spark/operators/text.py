@@ -26,11 +26,11 @@ def stopword_count_sql(toks_expr: str) -> str:
     return f"LEN(list_filter({toks_expr}, x -> x IN ({stop})))"
 
 
-def gate_flags(toks: str, wv: Column | None = None) -> dict[str, Column]:
+def gate_flags(toks: str, wv: str | None = None) -> dict[str, Column]:
     """The l5 in-row gates over the token-array column named ``toks``,
     each as a flag that is true when the document FAILS it:
     ``bad_length`` (outside 20-2000 tokens), ``low_stopword`` (fewer
-    than 2 stopwords) and, given the model column ``wv``,
+    than 2 stopwords) and, given the model column named ``wv``,
     ``low_quality`` (l5i logit <= 0). ONE definition of the thresholds
     for every query that applies them (l4u, st29, l5g, l5j, lm10);
     twin of :func:`gate_flags_sql`."""
@@ -211,11 +211,15 @@ MAX_TOKEN_FREQ_SQL = """SELECT doc_id, MAX(c) AS max_freq
   GROUP BY doc_id"""
 
 
+def _unigram_bigram_spark_sql(toks: str) -> str:
+    return f"concat({toks}, {_word_ngrams_spark_sql(toks, 2)})"
+
+
 def unigram_bigram_features(toks: str) -> Column:
     """fastText's feature set over the token-array column named
     ``toks``: the tokens plus their adjacent bigrams (l5i, l5k, lm7).
     Twin of :func:`unigram_bigram_features_sql`."""
-    return F.expr(f"concat({toks}, {_word_ngrams_spark_sql(toks, 2)})")
+    return F.expr(_unigram_bigram_spark_sql(toks))
 
 
 def unigram_bigram_features_sql(toks_expr: str) -> str:
@@ -224,31 +228,31 @@ def unigram_bigram_features_sql(toks_expr: str) -> str:
 
 
 def quality_logit(
-    toks: str, weights: Column, bias: Column | None = None
+    toks: str, weights: str = "wv", bias: str | None = None
 ) -> Column:
     """l5i logit over the token-array column named ``toks``: mean
     hashed-feature weight + bias, rounded 6dp. Pure in-row pipeline —
     transform maps each feature to its bucket weight (md5 -> first 8
-    hex -> % {B}), aggregate folds LEFT in array order (the l4t
-    fixed-order-fold canon, so Spark and DuckDB produce the identical
-    IEEE double), then /n + bias + round.
-    ``bias`` defaults to the fixed L5I_BIAS calibration; l5k2 passes
-    the TRAINED intercept column instead — the gate shape is the swap
-    point, so the bias must be swappable along with the weights."""
-    fs = unigram_bigram_features(toks)
-    contrib = lambda f: F.element_at(  # noqa: E731
-        weights,
-        (
-            F.conv(F.substring(F.md5(f.cast("binary")), 1, 8), 16, 10).cast("long")
-            % L5I_BUCKETS
-        ).cast("int")
-        + 1,
+    hex -> % {B}), aggregate folds LEFT from a 0.0 seed in array order
+    (the l4t fixed-order-fold canon, so Spark and DuckDB produce the
+    identical IEEE double), then /n + bias + round.
+    ``weights`` and ``bias`` are Spark SQL expressions: the weight
+    array (a column name, or :data:`L5I_WEIGHTS_SPARK_SQL` inline) and
+    the intercept, which defaults to the fixed L5I_BIAS calibration;
+    l5k2 passes the TRAINED intercept column instead — the gate shape
+    is the swap point, so the bias must be swappable along with the
+    weights. One parsed SQL string: built Column by Column the lookup
+    and fold cost ~180 py4j round trips per use."""
+    fs = _unigram_bigram_spark_sql(toks)
+    bucket = (
+        "CAST(CAST(conv(substring(md5(CAST(f AS BINARY)), 1, 8), 16, 10) AS BIGINT)"
+        f" % {L5I_BUCKETS} AS INT)"
     )
-    s = F.aggregate(
-        F.transform(fs, contrib), F.lit(0.0), lambda a, b: a + b
+    b = f"{L5I_BIAS!r}D" if bias is None else bias
+    return F.expr(
+        f"round({b} + aggregate(transform({fs}, f -> element_at({weights}, {bucket} + 1)), "
+        f"0.0D, (a, x) -> a + x) / size({fs}), 6)"
     )
-    b = F.lit(L5I_BIAS) if bias is None else bias
-    return F.round(b + s / F.size(fs), 6)
 
 
 def quality_logit_sql(
@@ -284,14 +288,14 @@ def l5i_weights_sql() -> str:
 #: Spark SQL spelling of the weight vector: DOUBLE literals (the ``D``
 #: suffix; a bare decimal would parse as DECIMAL), so each parses to
 #: the identical double.
-_L5I_WEIGHTS_SPARK_SQL = "array(" + ", ".join(f"{w!r}D" for w in L5I_WEIGHTS) + ")"
+L5I_WEIGHTS_SPARK_SQL = "array(" + ", ".join(f"{w!r}D" for w in L5I_WEIGHTS) + ")"
 
 
 def quality_weights() -> Column:
     """The weight vector as an ``array<double>`` Column, parsed from ONE
     SQL literal: built element by element it cost one py4j round trip
     per node (~1,050 gateway commands per build against ~20)."""
-    return F.expr(_L5I_WEIGHTS_SPARK_SQL)
+    return F.expr(L5I_WEIGHTS_SPARK_SQL)
 
 
 def with_quality_weights(df: DataFrame) -> DataFrame:
@@ -449,36 +453,6 @@ def bpe_symbolize_sql(word_expr: str) -> str:
         f"array_to_string(list_transform("
         f"generate_series(1, GREATEST(LEN({word_expr}), 1)), "
         f"i -> SUBSTRING({word_expr}, i, 1)), ' ') || ' {BPE_EOW}'"
-    )
-
-
-def bpe_pairs(sym: Column) -> Column:
-    """All adjacent symbol pairs of a symbol string, each as 'a b'.
-    Twin of :func:`bpe_pairs_sql`.
-
-    Built with the zip_with(slice, slice) idiom, NOT sequence(1, n-1) +
-    element_at: for a SINGLE-symbol string ``sequence(1, 0)`` yields
-    ``[1, 0]`` on Spark (step defaults to -1 when start > stop) and
-    ``element_at(p, 0)`` then throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT,
-    whereas the DuckDB twin returns [] — a data-dependent crash any
-    time a word fully merges within l4m3's rounds (r8 advice finding,
-    reproduced on 'the</w>'). Here both slices are empty when n == 1,
-    so zip_with returns [] on both engines."""
-    p = F.split(sym, " ")
-    w = F.greatest(F.size(p) - 1, F.lit(0))
-    return F.zip_with(
-        F.slice(p, 1, w),
-        F.slice(p, 2, w),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-
-
-def bpe_pairs_sql(sym_expr: str) -> str:
-    """DuckDB twin of :func:`bpe_pairs`."""
-    return (
-        f"list_transform(generate_series(1, LEN(string_split({sym_expr}, ' ')) - 1), "
-        f"i -> string_split({sym_expr}, ' ')[i] || ' ' || "
-        f"string_split({sym_expr}, ' ')[i + 1])"
     )
 
 

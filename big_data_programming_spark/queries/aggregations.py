@@ -18,9 +18,10 @@ from pyspark.sql import functions as F
 from big_data_programming_spark.functions.canonical import (
     DEC,
     davg,
+    davg_sql,
+    dbl_sql,
     dsum,
-    oracle_davg,
-    oracle_dsum,
+    dsum_sql,
 )
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
@@ -33,8 +34,8 @@ SELECT COUNT(*) AS n_orders,
        COUNT(DISTINCT o_custkey) AS n_customers,
        MIN(o_orderdate) AS first_order,
        MAX(o_orderdate) AS last_order,
-       {oracle_dsum('o_totalprice', 'total_sales')},
-       {oracle_davg('o_totalprice', 'avg_sale')}
+       {dsum_sql('o_totalprice')} AS total_sales,
+       {davg_sql('o_totalprice')} AS avg_sale
 FROM orders
 """,
     tags=("A2", "A3"),
@@ -47,17 +48,17 @@ def a2_global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct(F.col("o_custkey")).alias("n_customers"),
         F.min("o_orderdate").alias("first_order"),
         F.max("o_orderdate").alias("last_order"),
-        dsum("o_totalprice", "total_sales"),
-        davg("o_totalprice", "avg_sale"),
+        dsum("o_totalprice").alias("total_sales"),
+        davg("o_totalprice").alias("avg_sale"),
     )
 
 
 @register(
     "a3_distinct_agg",
-    oracle="""
+    oracle=f"""
 SELECT o_orderpriority,
        COUNT(DISTINCT o_custkey) AS n_customers,
-       CAST(CAST(SUM(DISTINCT CAST(o_totalprice AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS sum_distinct_price
+       {dbl_sql(f'SUM(DISTINCT CAST(o_totalprice AS {DEC}))')} AS sum_distinct_price
 FROM orders
 GROUP BY o_orderpriority
 """,
@@ -158,15 +159,15 @@ def a4b_approx_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a5_stats_agg",
-    oracle="""
+    oracle=f"""
 WITH comp AS (
   SELECT l_returnflag,
          COUNT(*) AS n,
-         CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS sx,
-         CAST(CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS sxx,
-         CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS syy,
-         CAST(CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS sxy
+         {dsum_sql('l_quantity')} AS sx,
+         {dsum_sql('l_quantity * l_quantity')} AS sxx,
+         {dsum_sql('l_extendedprice')} AS sy,
+         {dsum_sql('l_extendedprice * l_extendedprice')} AS syy,
+         {dsum_sql('l_quantity * l_extendedprice')} AS sxy
   FROM lineitem GROUP BY l_returnflag
 )
 SELECT l_returnflag,
@@ -185,11 +186,11 @@ def a5_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, p = F.col("l_quantity"), F.col("l_extendedprice")
     comp = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(q.cast(DEC)).cast("double").alias("sx"),
-        F.sum((q * q).cast(DEC)).cast("double").alias("sxx"),
-        F.sum(p.cast(DEC)).cast("double").alias("sy"),
-        F.sum((p * p).cast(DEC)).cast("double").alias("syy"),
-        F.sum((q * p).cast(DEC)).cast("double").alias("sxy"),
+        dsum(q).alias("sx"),
+        dsum(q * q).alias("sxx"),
+        dsum(p).alias("sy"),
+        dsum(p * p).alias("syy"),
+        dsum(q * p).alias("sxy"),
     )
     n, sx, sxx, sy, syy, sxy = (F.col(c) for c in ["n", "sx", "sxx", "sy", "syy", "sxy"])
     return comp.select(
@@ -219,8 +220,9 @@ GROUP BY l_returnflag
 )
 def a6_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact median / interpolated quantiles. Both engines sort exactly;
-    the interpolation arithmetic can differ in the last ulp, so outputs
-    are rounded to 6 dp on both sides (canonical.r6 rationale)."""
+    the interpolation arithmetic can differ in the last ulp, and no
+    decimal-sum canon applies to it, so outputs are rounded to 6 dp on
+    both sides."""
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.median("l_quantity"), 6).alias("median_qty"),
@@ -291,7 +293,7 @@ def a8_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT l_returnflag, l_linestatus,
        COUNT(*) AS n_rows,
-       {oracle_dsum('l_quantity', 'sum_qty')},
+       {dsum_sql('l_quantity')} AS sum_qty,
        GROUPING(l_returnflag) AS g_flag,
        GROUPING(l_linestatus) AS g_status
 FROM lineitem
@@ -307,7 +309,7 @@ def a9_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            dsum("l_quantity", "sum_qty"),
+            dsum("l_quantity").alias("sum_qty"),
             F.grouping("l_returnflag").cast("int").alias("g_flag"),
             F.grouping("l_linestatus").cast("int").alias("g_status"),
         )
@@ -319,7 +321,7 @@ def a9_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT l_returnflag, l_linestatus,
        COUNT(*) AS n_rows,
-       {oracle_dsum('l_extendedprice', 'sum_price')}
+       {dsum_sql('l_extendedprice')} AS sum_price
 FROM lineitem
 GROUP BY CUBE (l_returnflag, l_linestatus)
 """,
@@ -330,7 +332,7 @@ def a9b_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        dsum("l_extendedprice", "sum_price"),
+        dsum("l_extendedprice").alias("sum_price"),
     )
 
 
@@ -364,11 +366,11 @@ def a10_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a11_unpivot",
-    oracle="""
+    oracle=f"""
 WITH per_nation AS (
   SELECT c_nationkey,
          CAST(COUNT(*) AS DOUBLE) AS n_customers,
-         CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS total_balance
+         {dsum_sql('c_acctbal')} AS total_balance
   FROM customer GROUP BY c_nationkey
 )
 SELECT c_nationkey, metric, val FROM per_nation
@@ -382,7 +384,7 @@ def a11_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer")
     per_nation = c.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).cast("double").alias("n_customers"),
-        dsum("c_acctbal", "total_balance"),
+        dsum("c_acctbal").alias("total_balance"),
     )
     return per_nation.unpivot(
         ["c_nationkey"], ["n_customers", "total_balance"], "metric", "val"
@@ -393,7 +395,7 @@ def a11_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a12_having",
     oracle=f"""
 SELECT o_custkey, COUNT(*) AS n_orders,
-       {oracle_dsum('o_totalprice', 'spend')}
+       {dsum_sql('o_totalprice')} AS spend
 FROM orders
 GROUP BY o_custkey
 HAVING COUNT(*) >= 12
@@ -405,7 +407,7 @@ def a12_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice", "spend"))
+        .agg(F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice").alias("spend"))
         .filter(F.col("n_orders") >= 12)
     )
 
@@ -415,7 +417,7 @@ def a12_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT l_returnflag, l_linestatus,
        COUNT(*) AS n_rows,
-       {oracle_dsum('l_extendedprice', 'sum_price')}
+       {dsum_sql('l_extendedprice')} AS sum_price
 FROM lineitem
 GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 """,
@@ -431,7 +433,7 @@ def a9c_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         [["l_returnflag"], ["l_linestatus"], []], "l_returnflag", "l_linestatus"
     ).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        dsum("l_extendedprice", "sum_price"),
+        dsum("l_extendedprice").alias("sum_price"),
     )
 
 
@@ -549,9 +551,9 @@ WITH comp AS (
          COUNT(*) AS n,
          SUM(CAST(HOUR(ts) AS BIGINT)) AS sx,
          SUM(CAST(HOUR(ts) AS BIGINT) * HOUR(ts)) AS sxx,
-         {oracle_dsum('value', 'sy')},
-         {oracle_dsum('value * value', 'syy')},
-         {oracle_dsum('HOUR(ts) * value', 'sxy')}
+         {dsum_sql('value')} AS sy,
+         {dsum_sql('value * value')} AS syy,
+         {dsum_sql('HOUR(ts) * value')} AS sxy
   FROM events GROUP BY event_type
 )
 SELECT event_type, n,
@@ -582,9 +584,9 @@ def a16_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(x).alias("sx"),
         F.sum(x * x).alias("sxx"),
-        dsum("value", "sy"),
-        dsum(F.col("value") * F.col("value"), "syy"),
-        dsum(x * F.col("value"), "sxy"),
+        dsum("value").alias("sy"),
+        dsum(F.col("value") * F.col("value")).alias("syy"),
+        dsum(x * F.col("value")).alias("sxy"),
     )
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -914,8 +916,7 @@ SELECT l_returnflag,
        COUNT(*) AS n_lines,
        COUNT(*) FILTER (WHERE l_discount > 0.05) AS n_discounted,
        COUNT(*) FILTER (WHERE l_quantity >= 30) AS n_bulk,
-       {oracle_dsum('CASE WHEN l_discount > 0.05 THEN l_extendedprice END',
-                    'discounted_revenue')},
+       {dsum_sql('CASE WHEN l_discount > 0.05 THEN l_extendedprice END')} AS discounted_revenue,
        COUNT(DISTINCT l_suppkey) FILTER (WHERE l_quantity >= 30)
          AS bulk_suppliers
 FROM lineitem
@@ -941,8 +942,7 @@ def a23_filtered_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_lines"),
         F.count(F.when(disc, 1)).alias("n_discounted"),
         F.count(F.when(bulk, 1)).alias("n_bulk"),
-        F.sum(F.when(disc, F.col("l_extendedprice")).cast(DEC))
-        .cast("double")
+        dsum(F.when(disc, F.col("l_extendedprice")))
         .alias("discounted_revenue"),
         F.count_distinct(F.when(bulk, F.col("l_suppkey"))).alias(
             "bulk_suppliers"

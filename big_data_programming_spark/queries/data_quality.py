@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_programming_spark.functions.canonical import DEC
+from big_data_programming_spark.functions.canonical import DEC, dbl_sql, dsum, dsum_sql
 from big_data_programming_spark.queries.llm_curation import (
     _SEMDECON_TH,
     EVAL_MAX_COS_SQL,
@@ -327,7 +327,7 @@ def dq4_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq5_category_drift",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(DATE_TRUNC('day', ts) AS TIMESTAMP) AS day, event_type, COUNT(*) AS n_dt
   FROM events GROUP BY 1, 2
@@ -349,9 +349,9 @@ WITH daily AS (
 )
 SELECT day,
        CAST(MAX(n_day) AS BIGINT) AS n_events,
-       CAST(CAST(SUM(term) AS VARCHAR) AS DOUBLE)
+       {dbl_sql('SUM(term)')}
          / (2.0 * MAX(n_day) * MAX(n_all)) AS tv_distance,
-       CAST(CAST(SUM(term) AS VARCHAR) AS DOUBLE)
+       {dbl_sql('SUM(term)')}
          / (2.0 * MAX(n_day) * MAX(n_all)) > 0.05 AS is_drifted
 FROM terms
 GROUP BY 1
@@ -426,7 +426,7 @@ def dq5_category_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq6_point_in_time_join",
-    oracle="""
+    oracle=f"""
 WITH browse AS (
   SELECT user_id, event_type, ts, event_id FROM events
   WHERE event_type <> 'purchase'
@@ -461,7 +461,7 @@ WITH browse AS (
 )
 SELECT state_at_purchase,
        CAST(COUNT(*) AS BIGINT) AS n_purchases,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
+       {dsum_sql('value')}
          AS total_value
 FROM looked GROUP BY state_at_purchase
 """,
@@ -522,7 +522,7 @@ def dq6_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return looked.groupBy("state_at_purchase").agg(
         F.count(F.lit(1)).alias("n_purchases"),
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+        dsum("value").alias("total_value"),
     )
 
 
@@ -677,8 +677,7 @@ WITH sem AS (
 SELECT CAST(ingest_day AS BIGINT) AS ingest_day, n_docs, n_contaminated,
        CAST(n_contaminated AS DOUBLE) / n_docs AS contam_rate,
        CAST(nc_all AS DOUBLE) / n_all AS corpus_rate,
-       CAST(CAST(CAST(n_contaminated AS HUGEINT) * n_all
-                 - CAST(nc_all AS HUGEINT) * n_docs AS VARCHAR) AS DOUBLE)
+       {dbl_sql('CAST(n_contaminated AS HUGEINT) * n_all - CAST(nc_all AS HUGEINT) * n_docs')}
          / (1.0 * n_docs * n_all) AS rate_dev,
        ABS(CAST(n_contaminated AS HUGEINT) * n_all
            - CAST(nc_all AS HUGEINT) * n_docs) * 20

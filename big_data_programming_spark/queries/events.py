@@ -12,7 +12,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_programming_spark.functions.canonical import DEC, oracle_dsum
+from big_data_programming_spark.functions.canonical import (
+    davg,
+    davg_sql,
+    dsum,
+    dsum_sql,
+)
 from big_data_programming_spark.operators.sessions import SESSIONIZE_ORACLE_SQL, sessionize
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
@@ -25,7 +30,7 @@ SELECT CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP) AS hour,
        event_type,
        COUNT(*) AS n_events,
        COUNT(DISTINCT user_id) AS n_users,
-       {oracle_dsum('value', 'total_value')}
+       {dsum_sql('value')} AS total_value
 FROM events
 GROUP BY 1, 2
 """,
@@ -43,7 +48,7 @@ def e1_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.count_distinct("user_id").alias("n_users"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
     )
 
@@ -52,7 +57,7 @@ def e1_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: lands in exactly 4 overlapping windows; the offsets CTE reconstructs
 #: Spark's window-start arithmetic. Shared with the streaming variant
 #: (queries/streaming_queries.py st3).
-E2_SLIDING_ORACLE = """
+E2_SLIDING_ORACLE = f"""
 WITH offsets(j) AS (VALUES (0), (1), (2), (3)),
 win AS (
   SELECT make_timestamp(((CAST(FLOOR(EPOCH(ts)) AS BIGINT) - j * 900) // 3600 * 3600 + j * 900) * 1000000)
@@ -63,7 +68,7 @@ win AS (
 SELECT window_start,
        make_timestamp((CAST(EPOCH(window_start) AS BIGINT) + 3600) * 1000000) AS window_end,
        COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS total_value
+       {dsum_sql('value')} AS total_value
 FROM win
 GROUP BY 1
 """
@@ -83,7 +88,7 @@ def e2_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
@@ -439,7 +444,7 @@ def e10_rolling_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e16_conversion_attribution",
-    oracle="""
+    oracle=f"""
 WITH touched AS (
   SELECT event_type, ts,
          LAST_VALUE(CASE WHEN event_type <> 'purchase' THEN event_type END
@@ -465,8 +470,7 @@ WITH touched AS (
 ), agg AS (
   SELECT attributed_channel,
          CAST(COUNT(*) AS BIGINT) AS n_conversions,
-         CAST(CAST(SUM(CAST(hours_to_convert AS DECIMAL(38,10))) AS VARCHAR)
-           AS DOUBLE) / COUNT(hours_to_convert) AS avg_hours_to_convert
+         {davg_sql('hours_to_convert')} AS avg_hours_to_convert
   FROM conv GROUP BY attributed_channel
 )
 SELECT attributed_channel, n_conversions, avg_hours_to_convert,
@@ -524,10 +528,7 @@ def e16_conversion_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = conv.groupBy("attributed_channel").agg(
         F.count(F.lit(1)).alias("n_conversions"),
-        (
-            F.sum(F.col("hours_to_convert").cast(DEC)).cast("double")
-            / F.count("hours_to_convert")
-        ).alias("avg_hours_to_convert"),
+        davg("hours_to_convert").alias("avg_hours_to_convert"),
     )
     share_w = Window.partitionBy()
     return agg.select(
@@ -543,11 +544,11 @@ def e16_conversion_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e17_wow_kpi",
-    oracle="""
+    oracle=f"""
 WITH weekly AS (
   SELECT CAST(DATE_TRUNC('week', ts) AS DATE) AS week,
          CAST(COUNT(*) AS BIGINT) AS n_events,
-         CAST(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
+         {dsum_sql('value')}
            AS revenue
   FROM events GROUP BY 1
 )
@@ -576,7 +577,7 @@ def e17_wow_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("week", F.col("ts")).cast("date").alias("week")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("revenue"),
+        dsum("value").alias("revenue"),
     )
     w = Window.orderBy("week")
     prev = F.lag("revenue").over(w)
@@ -656,7 +657,7 @@ def e18_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e19_cohort_ltv",
-    oracle="""
+    oracle=f"""
 WITH firsts AS (
   SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort_day
   FROM events GROUP BY user_id
@@ -666,17 +667,16 @@ WITH firsts AS (
 ), rev AS (
   SELECT f.cohort_day,
          DATE_DIFF('day', f.cohort_day, CAST(e.ts AS DATE)) AS age_days,
-         CAST(CAST(SUM(CAST(e.value AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
+         {dsum_sql('e.value')}
            AS day_revenue
   FROM events e JOIN firsts f USING (user_id)
   WHERE e.event_type = 'purchase'
   GROUP BY 1, 2
 ), cum AS (
   SELECT cohort_day, age_days, day_revenue,
-         CAST(CAST(SUM(CAST(day_revenue AS DECIMAL(38,10))) OVER (
-           PARTITION BY cohort_day ORDER BY age_days
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS VARCHAR) AS DOUBLE) AS cum_revenue
+         {dsum_sql('day_revenue', over=(
+             'PARTITION BY cohort_day ORDER BY age_days'
+             ' ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW'))} AS cum_revenue
   FROM rev
 )
 SELECT c.cohort_day, CAST(c.age_days AS BIGINT) AS age_days,
@@ -717,7 +717,7 @@ def e19_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "age_days"
             ),
         )
-        .agg(F.sum(F.col("value").cast(DEC)).cast("double").alias("day_revenue"))
+        .agg(dsum("value").alias("day_revenue"))
     )
     w = (
         Window.partitionBy("cohort_day")
@@ -727,7 +727,7 @@ def e19_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = rev.select(
         "cohort_day",
         F.col("age_days").cast("long").alias("age_days"),
-        F.sum(F.col("day_revenue").cast(DEC)).over(w).cast("double").alias(
+        dsum("day_revenue", over=w).alias(
             "cum_revenue"
         ),
     )

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.functions.canonical import DEC, oracle_dsum
+from big_data_programming_spark.functions.canonical import DEC, dsum, dsum_sql
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 from big_data_programming_spark.streaming.harness import scratch_dir
@@ -23,7 +23,7 @@ from big_data_programming_spark.streaming.harness import scratch_dir
     oracle=f"""
 SELECT o.o_orderstatus,
        COUNT(*) AS n_lines,
-       {oracle_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue')}
+       {dsum_sql('l.l_extendedprice * (1.0 - l.l_discount)')} AS revenue
 FROM lineitem l
 JOIN orders o ON l.l_orderkey = o.o_orderkey
 GROUP BY o.o_orderstatus
@@ -40,8 +40,7 @@ def j1_inner_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.sum((F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(DEC))
-            .cast("double")
+            dsum(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
             .alias("revenue"),
         )
     )
@@ -49,10 +48,10 @@ def j1_inner_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j2_left_outer_join",
-    oracle="""
+    oracle=f"""
 SELECT c.c_custkey,
        COUNT(o.o_orderkey) AS n_orders,
-       CAST(CAST(SUM(CAST(COALESCE(o.o_totalprice, 0.0) AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS total_spend
+       {dsum_sql('COALESCE(o.o_totalprice, 0.0)')} AS total_spend
 FROM customer c
 LEFT JOIN orders o ON c.c_custkey = o.o_custkey
 GROUP BY c.c_custkey
@@ -69,8 +68,7 @@ def j2_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
-            F.sum(F.coalesce(F.col("o_totalprice"), F.lit(0.0)).cast(DEC))
-            .cast("double")
+            dsum(F.coalesce(F.col("o_totalprice"), F.lit(0.0)))
             .alias("total_spend"),
         )
     )
@@ -163,13 +161,13 @@ def j5_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j6_range_join",
-    oracle="""
+    oracle=f"""
 WITH bands(band, lo, hi) AS (
   VALUES ('tiny', 0.0, 50.0), ('small', 50.0, 150.0),
          ('medium', 150.0, 400.0), ('large', 400.0, 1e18)
 )
 SELECT b.band, COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(e.value AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS total_value
+       {dsum_sql('e.value')} AS total_value
 FROM events e
 JOIN bands b ON e.value >= b.lo AND e.value < b.hi
 GROUP BY b.band
@@ -190,7 +188,7 @@ def j6_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
     )
 
@@ -232,7 +230,7 @@ def j7_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "j8_broadcast_join",
     oracle=f"""
 SELECT p.p_brand,
-       {oracle_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue')},
+       {dsum_sql('l.l_extendedprice * (1.0 - l.l_discount)')} AS revenue,
        COUNT(*) AS n_lines
 FROM lineitem l
 JOIN part p ON l.l_partkey = p.p_partkey
@@ -249,8 +247,7 @@ def j8_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("p_brand")
         .agg(
-            F.sum((F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(DEC))
-            .cast("double")
+            dsum(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
             .alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
@@ -301,13 +298,13 @@ def j9_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j10_null_safe_join",
-    oracle="""
+    oracle=f"""
 WITH counts AS (
   SELECT NULLIF(l_linenumber % 4, 0) AS kn, COUNT(*) AS n_lines
   FROM lineitem GROUP BY 1
 ), qtys AS (
   SELECT NULLIF(l_linenumber % 4, 0) AS kn,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(38,10))) AS BIGINT) AS total_qty
+         CAST(SUM(CAST(l_quantity AS {DEC})) AS BIGINT) AS total_qty
   FROM lineitem WHERE l_returnflag = 'R' GROUP BY 1
 )
 SELECT c.kn, c.n_lines, q.total_qty
@@ -345,7 +342,7 @@ WITH promos AS (
 )
 SELECT p.promo_id,
        COUNT(*) AS n_events,
-       {oracle_dsum('e.value', 'total_value')}
+       {dsum_sql('e.value')} AS total_value
 FROM events e
 JOIN promos p ON e.ts >= p.p_start AND e.ts < p.p_end
 GROUP BY 1
@@ -395,7 +392,7 @@ def j6b_binned_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("promo_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
     )
 
@@ -405,7 +402,7 @@ def j6b_binned_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT o_orderpriority,
        COUNT(*) AS n_orders,
-       {oracle_dsum('o_totalprice', 'total_value')}
+       {dsum_sql('o_totalprice')} AS total_value
 FROM orders
 WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
 GROUP BY 1
@@ -440,9 +437,7 @@ def j12_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias(
-                "total_value"
-            ),
+            dsum("o_totalprice").alias("total_value"),
         )
     )
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.functions.canonical import COS64_SQL
+from big_data_programming_spark.functions.canonical import cos_sql
 from big_data_programming_spark.operators.similarity import (
     as_double_array,
     collect_vector_array,
@@ -575,11 +575,11 @@ def l4n_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDECON_TH = 0.35
 
 #: Every (train-slice vector, eval-slice vector) pair with its cosine
-#: (the shared fold-order canon COS64_SQL), ``(vec_id, eid, cos)``:
+#: (the shared fold-order canon cos_sql), ``(vec_id, eid, cos)``:
 #: ONE spelling of the eval split for the DuckDB twins of l4t (argmax)
 #: and :func:`eval_max_cos` (max).
 _EVAL_COS_PAIRS_SQL = f"""SELECT t.vec_id, e.vec_id AS eid,
-         {COS64_SQL.format(a='t.embedding', b='e.c')} AS cos
+         {cos_sql('t.embedding', 'e.c')} AS cos
   FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id % {_EVAL_MOD} <> 0) t
   CROSS JOIN (SELECT vec_id, embedding AS c FROM embeddings
               WHERE vec_id % {_EVAL_MOD} = 0) e"""
@@ -763,7 +763,7 @@ def _stage_flags(stages: tuple[str, ...]) -> list[Column]:
     flags = {
         "url_dup": F.col("doc_id") != F.col("ukeeper"),
         "exact_dup": F.col("doc_id") != F.col("keeper"),
-        **gate_flags("toks", F.col("wv")),
+        **gate_flags("toks", "wv"),
         "near_dup_simhash": F.col("doc_id") != F.col("skeeper"),
         "contaminated_ngram": F.coalesce(F.col("_ng"), F.lit(False)),
         "contaminated_semantic": F.coalesce(F.col("mx") >= _SEMDECON_TH, F.lit(False)),

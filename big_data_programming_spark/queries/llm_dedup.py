@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_programming_spark.functions.canonical import cos_sql
 from big_data_programming_spark.operators.clustering import (
     CLUSTERS_ORACLE_SQL,
     connected_components_two_phase,
@@ -32,7 +33,6 @@ from big_data_programming_spark.operators.dedup import (
     winnowed_span_oracle_sql,
     winnowed_span_stats,
 )
-from big_data_programming_spark.functions.canonical import COS64_SQL
 from big_data_programming_spark.operators.similarity import semdedup
 from big_data_programming_spark.operators.text import (
     canonicalize_url_sql,
@@ -178,11 +178,6 @@ def l2d_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(pairs.select("doc_a", "doc_b"))
 
 
-#: The shared 64-dim cosine oracle fragment (functions/canonical.py:
-#: COS64_SQL) — one definition of the fold-order canon, aliased here.
-_COS_DD = COS64_SQL
-
-
 @register(
     "l2e_embedding_dedup",
     oracle=f"""
@@ -194,7 +189,7 @@ WITH b AS (
 ), pairs AS (
   SELECT l.vec_id AS vec_a, r.vec_id AS vec_b
   FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
-  WHERE {_COS_DD.format(a='l.embedding', b='r.embedding')} >= 0.35
+  WHERE {cos_sql('l.embedding', 'r.embedding')} >= 0.35
 )
 SELECT d.doc_id, d.lang, d.source, d.n_chars
 FROM documents d
@@ -725,7 +720,7 @@ WITH seeds AS (
   FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT {_SEM_K})
 ), scored AS (
   SELECT e.vec_id, s.cid,
-         {_COS_DD.format(a='e.embedding', b='s.c')} AS cos_raw
+         {cos_sql('e.embedding', 's.c')} AS cos_raw
   FROM embeddings e CROSS JOIN seeds s
 ), asg AS (
   SELECT vec_id, cid AS cluster_id, ROUND(cos_raw, 8) AS cos_centroid
@@ -740,7 +735,7 @@ WITH seeds AS (
   JOIN asg b ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
   JOIN embeddings ea ON ea.vec_id = a.vec_id
   JOIN embeddings eb ON eb.vec_id = b.vec_id
-  WHERE {_COS_DD.format(a='ea.embedding', b='eb.embedding')} >= {_SEM_TH}
+  WHERE {cos_sql('ea.embedding', 'eb.embedding')} >= {_SEM_TH}
 ), drops AS (
   SELECT DISTINCT CASE WHEN ca > cb THEN va
                        WHEN cb > ca THEN vb
@@ -785,7 +780,7 @@ WITH b AS (
                          x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS bucket
   FROM embeddings
 ), pairs AS (
-  SELECT FLOOR({COS64_SQL.format(a='l.embedding', b='r.embedding')} * 20) / 20
+  SELECT FLOOR({cos_sql('l.embedding', 'r.embedding')} * 20) / 20
            AS sim_bin
   FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
 )

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_programming_spark.functions.canonical import DEC, davg
+from big_data_programming_spark.functions.canonical import cos_sql, davg, dsum, dsum_sql
 from big_data_programming_spark.operators.dedup import (
     MINHASH_HASHES,
     SIMHASH_BITS,
@@ -53,16 +53,8 @@ from big_data_programming_spark.queries.llm_curation import (
     l5j_verdict_ctes_sql,
     verdict_funnel,
 )
-from big_data_programming_spark.queries.llm_similarity import _COS
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
-
-#: Decimal window-sum canon, oracle side (w8 precedent: even a 5-row
-#: window SUM of doubles drifts 1 ulp across partition counts).
-_ORACLE_WSUM = (
-    "CAST(CAST(SUM(CAST({x} AS DECIMAL(38,10))) OVER () AS VARCHAR) AS DOUBLE)"
-)
-
 
 @register(
     "lm1_temperature_mix",
@@ -70,11 +62,11 @@ _ORACLE_WSUM = (
 WITH c AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang)
 SELECT lang, n_docs,
        SQRT(CAST(n_docs AS DOUBLE))
-         / {_ORACLE_WSUM.format(x='SQRT(CAST(n_docs AS DOUBLE))')} AS mix_weight,
+         / {dsum_sql('SQRT(CAST(n_docs AS DOUBLE))', over='')} AS mix_weight,
        CAST(n_docs AS DOUBLE)
          / CAST(SUM(n_docs) OVER () AS DOUBLE) AS natural_share,
        (SQRT(CAST(n_docs AS DOUBLE))
-         / {_ORACLE_WSUM.format(x='SQRT(CAST(n_docs AS DOUBLE))')})
+         / {dsum_sql('SQRT(CAST(n_docs AS DOUBLE))', over='')})
          / (CAST(n_docs AS DOUBLE) / CAST(SUM(n_docs) OVER () AS DOUBLE))
          AS boost
 FROM c
@@ -96,7 +88,7 @@ def lm1_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     w = Window.partitionBy()
     sqrt_c = F.sqrt(F.col("n_docs").cast("double"))
-    total_sqrt = F.sum(sqrt_c.cast(DEC)).over(w).cast("double")
+    total_sqrt = dsum(sqrt_c, over=w)
     total_docs = F.sum("n_docs").over(w).cast("double")
     mix_weight = sqrt_c / total_sqrt
     natural_share = F.col("n_docs").cast("double") / total_docs
@@ -123,14 +115,14 @@ WITH c AS (
 )
 SELECT lang, avail_tokens,
        CAST(FLOOR(SQRT(CAST(n_docs AS DOUBLE))
-         / {_ORACLE_WSUM.format(x='SQRT(CAST(n_docs AS DOUBLE))')}
+         / {dsum_sql('SQRT(CAST(n_docs AS DOUBLE))', over='')}
          * {_EPOCH_BUDGET}) AS BIGINT) AS planned_tokens,
        CAST(FLOOR(SQRT(CAST(n_docs AS DOUBLE))
-         / {_ORACLE_WSUM.format(x='SQRT(CAST(n_docs AS DOUBLE))')}
+         / {dsum_sql('SQRT(CAST(n_docs AS DOUBLE))', over='')}
          * {_EPOCH_BUDGET}) AS BIGINT)
          / CAST(avail_tokens AS DOUBLE) AS repeat_factor,
        CAST(FLOOR(SQRT(CAST(n_docs AS DOUBLE))
-         / {_ORACLE_WSUM.format(x='SQRT(CAST(n_docs AS DOUBLE))')}
+         / {dsum_sql('SQRT(CAST(n_docs AS DOUBLE))', over='')}
          * {_EPOCH_BUDGET}) AS BIGINT)
          > avail_tokens AS needs_oversample
 FROM c
@@ -153,7 +145,7 @@ def lm2_mix_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy()
     sqrt_c = F.sqrt(F.col("n_docs").cast("double"))
-    mix_weight = sqrt_c / F.sum(sqrt_c.cast(DEC)).over(w).cast("double")
+    mix_weight = sqrt_c / dsum(sqrt_c, over=w)
     planned = F.floor(mix_weight * _EPOCH_BUDGET).cast("long")
     return c.select(
         "lang",
@@ -201,7 +193,7 @@ def lm3_reservoir_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lm4_curriculum_bins",
-    oracle="""
+    oracle=f"""
 WITH b AS (
   SELECT lang, doc_id, n_chars,
          NTILE(4) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS bin
@@ -211,7 +203,7 @@ SELECT lang, bin,
        COUNT(*) AS n_docs,
        MIN(n_chars) AS min_chars,
        MAX(n_chars) AS max_chars,
-       CAST(CAST(SUM(CAST(n_chars AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
+       {dsum_sql('n_chars')}
          / COUNT(n_chars) AS avg_chars
 FROM b
 GROUP BY lang, bin
@@ -233,7 +225,7 @@ def lm4_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.min("n_chars").alias("min_chars"),
         F.max("n_chars").alias("max_chars"),
-        davg("n_chars", "avg_chars"),
+        davg("n_chars").alias("avg_chars"),
     )
 
 
@@ -400,7 +392,7 @@ a AS (
   FROM embeddings CROSS JOIN n
 )
 SELECT a.vec_id, b.vec_id AS partner_id,
-       {_COS.format(a='a.embedding', b='b.embedding')} AS neg_cosine,
+       {cos_sql('a.embedding', 'b.embedding')} AS neg_cosine,
        a.label = b.label AS same_label
 FROM a JOIN embeddings b ON b.vec_id = a.partner
 WHERE a.vec_id <> b.vec_id
@@ -567,7 +559,7 @@ WITH t AS (
   FROM raw_model r LEFT JOIN tgt_model USING (b) CROSS JOIN tots
 ), per_doc AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_features,
-         CAST(CAST(SUM(CAST(w AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS s
+         {dsum_sql('w')} AS s
   FROM fx JOIN llr USING (b) GROUP BY 1
 )
 SELECT doc_id, n_features,
@@ -646,7 +638,7 @@ def lm7_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_features"),
-            F.sum(F.col("w").cast(DEC)).cast("double").alias("s"),
+            dsum("w").alias("s"),
         )
     )
     mean = F.round(F.col("s") / F.col("n_features"), 6)
@@ -770,10 +762,10 @@ SELECT source, n_docs_raw, n_docs_kept, raw_tokens, kept_tokens,
        ROUND(CAST(kept_tokens AS DOUBLE) / raw_tokens, 8) AS survival_rate,
        ROUND(CAST(kept_tokens AS DOUBLE)
          / CAST(SUM(kept_tokens) OVER () AS DOUBLE), 8) AS natural_share,
-       ROUND({sqrt_kept} / {_ORACLE_WSUM.format(x=sqrt_kept)}, 8)
+       ROUND({sqrt_kept} / {dsum_sql(sqrt_kept, over='')}, 8)
          AS mix_weight,
        CASE WHEN kept_tokens = 0 THEN 0.0
-            ELSE ROUND(({sqrt_kept} / {_ORACLE_WSUM.format(x=sqrt_kept)})
+            ELSE ROUND(({sqrt_kept} / {dsum_sql(sqrt_kept, over='')})
                / (CAST(kept_tokens AS DOUBLE)
                   / CAST(SUM(kept_tokens) OVER () AS DOUBLE)), 8)
        END AS boost
@@ -823,7 +815,7 @@ def lm9_curated_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy()
     sqrt_kept = F.sqrt(F.col("kept_tokens").cast("double"))
-    total_sqrt = F.sum(sqrt_kept.cast(DEC)).over(w).cast("double")
+    total_sqrt = dsum(sqrt_kept, over=w)
     total_kept = F.sum("kept_tokens").over(w).cast("double")
     mix_weight = sqrt_kept / total_sqrt
     natural_share = F.col("kept_tokens").cast("double") / total_kept
@@ -972,7 +964,7 @@ def _lm10_funnel(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame
         .distinct()
         .select("doc_id", F.lit(True).alias("_nd"))
     )
-    gates = gate_flags("toks", F.col("wv"))
+    gates = gate_flags("toks", "wv")
     flags = with_quality_weights(
         new.join(hist_h, "h", "left").join(nd, "doc_id", "left")
     ).select(

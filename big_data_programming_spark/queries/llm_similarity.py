@@ -21,13 +21,9 @@ from big_data_programming_spark.operators.similarity import (
     lsh_sign_bucket,
     topk_cosine,
 )
-from big_data_programming_spark.functions.canonical import COS64_SQL
+from big_data_programming_spark.functions.canonical import cos_sql, davg_sql
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load, register_views
-
-#: The shared 64-dim cosine oracle fragment (functions/canonical.py:
-#: COS64_SQL) — one definition of the fold-order canon, aliased here.
-_COS = COS64_SQL
 
 
 @register(
@@ -35,7 +31,7 @@ _COS = COS64_SQL
     oracle=f"""
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
 SELECT e.vec_id,
-       {_COS.format(a='e.embedding', b='q.qv')} AS cosine_sim
+       {cos_sql('e.embedding', 'q.qv')} AS cosine_sim
 FROM embeddings e CROSS JOIN q
 ORDER BY cosine_sim DESC, e.vec_id
 LIMIT 10
@@ -63,9 +59,9 @@ WITH b AS (
   FROM embeddings
 )
 SELECT l.vec_id AS vec_a, r.vec_id AS vec_b,
-       {_COS.format(a='l.embedding', b='r.embedding')} AS cosine_sim
+       {cos_sql('l.embedding', 'r.embedding')} AS cosine_sim
 FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
-WHERE {_COS.format(a='l.embedding', b='r.embedding')} >= 0.2
+WHERE {cos_sql('l.embedding', 'r.embedding')} >= 0.2
 """,
     tags=("L3", "L2", "J1"),
 )
@@ -87,15 +83,14 @@ WITH flat AS (
   FROM embeddings CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS pos) g
 ), cent AS (
   SELECT label, pos,
-         CAST(CAST(SUM(CAST(x AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
-           / COUNT(x) AS cx
+         {davg_sql('x')} AS cx
   FROM flat GROUP BY label, pos
 ), cvec AS (
   SELECT label, list(cx ORDER BY pos) AS centroid
   FROM cent GROUP BY label
 )
 SELECT e.vec_id, e.label,
-       ROUND({_COS.format(a='e.embedding', b='c.centroid')}, 6) AS sim_to_centroid
+       ROUND({cos_sql('e.embedding', 'c.centroid')}, 6) AS sim_to_centroid
 FROM embeddings e JOIN cvec c USING (label)
 ORDER BY e.vec_id
 """,
@@ -132,7 +127,7 @@ def l3c_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH q AS (SELECT embedding AS qv, label AS qlabel FROM embeddings WHERE vec_id = 7),
 nn AS (
   SELECT e.vec_id, e.label,
-         {_COS.format(a='e.embedding', b='q.qv')} AS sim
+         {cos_sql('e.embedding', 'q.qv')} AS sim
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id <> 7
   ORDER BY sim DESC, e.vec_id
@@ -173,8 +168,7 @@ flat AS (
   FROM embeddings CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS pos) g
 ), cent AS (
   SELECT label, pos,
-         CAST(CAST(SUM(CAST(x AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
-           / COUNT(x) AS cx
+         {davg_sql('x')} AS cx
   FROM flat GROUP BY label, pos
 ), cvec AS (
   SELECT label, list(cx ORDER BY pos) AS centroid
@@ -182,11 +176,11 @@ flat AS (
 ), probe AS (
   SELECT c.label
   FROM cvec c CROSS JOIN q
-  ORDER BY {_COS.format(a='c.centroid', b='q.qv')} DESC, c.label
+  ORDER BY {cos_sql('c.centroid', 'q.qv')} DESC, c.label
   LIMIT 2
 )
 SELECT e.vec_id, e.label,
-       {_COS.format(a='e.embedding', b='q.qv')} AS cosine_sim
+       {cos_sql('e.embedding', 'q.qv')} AS cosine_sim
 FROM embeddings e JOIN probe USING (label) CROSS JOIN q
 ORDER BY cosine_sim DESC, e.vec_id
 LIMIT 10
@@ -264,10 +258,10 @@ def l3e_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5)
 SELECT q.query_id, e.vec_id,
-       {_COS.format(a='e.embedding', b='q.qv')} AS cosine_sim,
+       {cos_sql('e.embedding', 'q.qv')} AS cosine_sim,
        CAST(ROW_NUMBER() OVER (
            PARTITION BY q.query_id
-           ORDER BY {_COS.format(a='e.embedding', b='q.qv')} DESC, e.vec_id
+           ORDER BY {cos_sql('e.embedding', 'q.qv')} DESC, e.vec_id
        ) AS INT) AS rank
 FROM embeddings e JOIN q ON e.vec_id <> q.query_id
 QUALIFY rank <= 5
@@ -287,16 +281,6 @@ def l3g_batch_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return knn_join(emb, queries, k=5)
 
-
-#: DuckDB fragment: cosine over two k-dim DOUBLE lists, Spark fold order.
-_COS_K = """
-list_reduce(list_transform(generate_series(1, {k}),
-            i -> {a}[i] * {b}[i]), (x, y) -> x + y)
-/ (SQRT(list_reduce(list_transform(generate_series(1, {k}),
-         i -> {a}[i] * {a}[i]), (x, y) -> x + y))
-   * SQRT(list_reduce(list_transform(generate_series(1, {k}),
-           i -> {b}[i] * {b}[i]), (x, y) -> x + y)))
-"""
 
 #: Hash-seeded ±1 projection matrix, 16 rows × 64 cols — identical
 #: expression in both engines (md5 parity of 'rp-{j}-{i}'), so the
@@ -323,8 +307,8 @@ p AS (
 ),
 q AS (SELECT proj AS qp, embedding AS qe FROM p WHERE vec_id = 0)
 SELECT p.vec_id,
-       {_COS_K.format(k=16, a='p.proj', b='q.qp')} AS proj_sim,
-       {_COS.format(a='p.embedding', b='q.qe')} AS cosine_sim
+       {cos_sql('p.proj', 'q.qp', k=16)} AS proj_sim,
+       {cos_sql('p.embedding', 'q.qe')} AS cosine_sim
 FROM p CROSS JOIN q
 ORDER BY proj_sim DESC, p.vec_id
 LIMIT 10
@@ -394,7 +378,7 @@ WITH x AS (
 SELECT vec_id,
        CAST(len(list_filter(qv, v -> ABS(v) = 127.0)) AS INT) AS n_saturated,
        list_max(list_transform(generate_series(1, 64), i -> ABS(xs[i] - deq[i]))) AS max_abs_err,
-       {_COS.format(a='xs', b='deq')} AS cosine_orig_deq
+       {cos_sql('xs', 'deq')} AS cosine_orig_deq
 FROM d
 """,
     tags=("L3", "F4", "L7"),
@@ -626,7 +610,7 @@ dense AS (
     SELECT vec_id,
            ROW_NUMBER() OVER (ORDER BY cosine_sim DESC, vec_id) AS r_dense
     FROM (SELECT e.vec_id,
-                 {_COS.format(a='e.embedding', b='q.qv')} AS cosine_sim
+                 {cos_sql('e.embedding', 'q.qv')} AS cosine_sim
           FROM embeddings e CROSS JOIN q)
   ) WHERE r_dense <= {_RRF_DEPTH}
 )
@@ -726,8 +710,7 @@ flat AS (
   FROM embeddings CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS pos) g
 ), cent AS (
   SELECT label, pos,
-         CAST(CAST(SUM(CAST(x AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
-           / COUNT(x) AS cx
+         {davg_sql('x')} AS cx
   FROM flat GROUP BY label, pos
 ), cvec AS (
   SELECT label, list(cx ORDER BY pos) AS centroid
@@ -735,12 +718,12 @@ flat AS (
 ), ranked AS (
   SELECT c.label,
          ROW_NUMBER() OVER (
-           ORDER BY {_COS.format(a='c.centroid', b='q.qv')} DESC, c.label
+           ORDER BY {cos_sql('c.centroid', 'q.qv')} DESC, c.label
          ) AS rl
   FROM cvec c CROSS JOIN q
 ), sims AS (
   SELECT e.vec_id, r.rl,
-         {_COS.format(a='e.embedding', b='q.qv')} AS csim
+         {cos_sql('e.embedding', 'q.qv')} AS csim
   FROM embeddings e JOIN ranked r USING (label) CROSS JOIN q
 ), truth AS (
   SELECT vec_id FROM sims ORDER BY csim DESC, vec_id LIMIT 10

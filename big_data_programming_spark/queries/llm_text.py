@@ -10,7 +10,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_programming_spark.functions.canonical import DEC, oracle_davg
+from big_data_programming_spark.functions.canonical import (
+    DEC,
+    davg,
+    davg_sql,
+    dsum,
+    dsum_sql,
+)
 from big_data_programming_spark.operators.text import (
     BPE_ISH_PATTERN,
     MAX_TOKEN_FREQ_SQL,
@@ -46,7 +52,7 @@ from big_data_programming_spark.sources.loaders import load
     oracle=f"""
 SELECT lang, source,
        COUNT(*) AS n_docs,
-       {oracle_davg('n_chars', 'avg_chars')},
+       {davg_sql('n_chars')} AS avg_chars,
        CAST(SUM(LEN(string_split(text, ' '))) AS BIGINT) AS total_tokens,
        MIN(n_chars) AS min_chars,
        MAX(n_chars) AS max_chars
@@ -61,9 +67,7 @@ def l4_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        (F.sum(F.col("n_chars").cast("decimal(38,10)")).cast("double") / F.count("n_chars")).alias(
-            "avg_chars"
-        ),
+        davg("n_chars").alias("avg_chars"),
         F.sum(F.size(tokenize(F.col("text")))).alias("total_tokens"),
         F.min("n_chars").alias("min_chars"),
         F.max("n_chars").alias("max_chars"),
@@ -346,7 +350,7 @@ def bm25_scored_sql() -> str:
             * (CAST(tf_{t} AS DOUBLE) * 2.2
                / (CAST(tf_{t} AS DOUBLE)
                   + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))), 6)
-          AS DECIMAL(38,10))"""
+          AS {DEC})"""
         for t in _BM25_TERMS
     )
     return f"""
@@ -357,7 +361,7 @@ WITH base AS (
 ),
 g AS (
   SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-         CAST(CAST(SUM(CAST(dl AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
+         {dsum_sql('dl')}
            / COUNT(*) AS avgdl,
          {df_cols}
   FROM base
@@ -424,10 +428,7 @@ def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = base.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
-        (
-            F.sum(F.col("dl").cast("decimal(38,10)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("avgdl"),
+        (dsum("dl") / F.count(F.lit(1))).alias("avgdl"),
         *[
             F.sum(F.when(F.col(f"tf_{t}") > 0, 1).otherwise(0)).alias(f"df_{t}")
             for t in _BM25_TERMS
@@ -442,7 +443,7 @@ def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         tfw = tf * F.lit(2.2) / (
             tf + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl").cast("double") / F.col("avgdl"))
         )
-        return F.round(idf * tfw, 6).cast("decimal(38,10)")
+        return F.round(idf * tfw, 6).cast(DEC)
 
     score = term_score(_BM25_TERMS[0])
     for t in _BM25_TERMS[1:]:
@@ -747,12 +748,12 @@ def l5d_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _nll(p: Column) -> Column:
     """The canon's per-n-gram ``nll`` column for probability ``p``.
     Twin of :func:`_nll_sql`."""
-    return F.round(-F.log(p), 8).cast("decimal(38,10)").alias("nll")
+    return F.round(-F.log(p), 8).cast(DEC).alias("nll")
 
 
 def _nll_sql(p: str) -> str:
     """DuckDB twin of :func:`_nll`."""
-    return f"CAST(ROUND(-LN({p}), 8) AS DECIMAL(38,10)) AS nll"
+    return f"CAST(ROUND(-LN({p}), 8) AS {DEC}) AS nll"
 
 
 def _perplexity(
@@ -1299,10 +1300,10 @@ WITH tok AS (
   FROM ranked WHERE r <= {_ZIPF_R}
 ), sums AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(CAST(SUM(CAST(x AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS sx,
-         CAST(CAST(SUM(CAST(y AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(CAST(x * y AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS sxy,
-         CAST(CAST(SUM(CAST(x * x AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS sxx
+         {dsum_sql('x')} AS sx,
+         {dsum_sql('y')} AS sy,
+         {dsum_sql('x * y')} AS sxy,
+         {dsum_sql('x * x')} AS sxx
   FROM pts
 ), tot AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -1350,10 +1351,10 @@ def l4s_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sums = pts.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast(DEC)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(DEC)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast(DEC)).cast("double").alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast(DEC)).cast("double").alias("sxx"),
+        dsum("x").alias("sx"),
+        dsum("y").alias("sy"),
+        dsum(F.col("x") * F.col("y")).alias("sxy"),
+        dsum(F.col("x") * F.col("x")).alias("sxx"),
     )
     tot = vocab.agg(
         F.sum("cnt").alias("n_tokens"),
@@ -1425,7 +1426,7 @@ def l5i_fasttext_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             n.cast("bigint").alias("n_tokens"),
             (2 * n - 1).cast("bigint").alias("n_features"),
-            quality_logit("toks", F.col("wv")).alias("quality_logit"),
+            quality_logit("toks").alias("quality_logit"),
         )
     )
     return scored.select(
@@ -1616,14 +1617,6 @@ def _l5k_ctes() -> str:
     oracle and the l5k2 trained-gate oracle, so the gate provably
     scores with the exact weights the trainer emits."""
 
-    def ds(expr: str) -> str:
-        # decimal-canon SUM as a bare expression (oracle_dsum with the
-        # trailing alias stripped — these sums sit inside ROUND(...))
-        return (
-            f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,10)))"
-            f" AS VARCHAR) AS DOUBLE)"
-        )
-
     bucket = (
         "(CAST(CONCAT('0x', SUBSTRING(md5(f), 1, 8)) AS BIGINT) % 256)"
     )
@@ -1640,30 +1633,30 @@ def _l5k_ctes() -> str:
   FROM ex GROUP BY doc_id, y, nf, {bucket}
 ), n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nn FROM documents),
 b1 AS (
-  SELECT ROUND(-{_L5K_LR} * ({ds("0.5 - y")}) / ANY_VALUE(nn), 8)
+  SELECT ROUND(-{_L5K_LR} * ({dsum_sql("0.5 - y")}) / ANY_VALUE(nn), 8)
          AS b1
   FROM fx, n
 ), g1 AS (
   SELECT bucket, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-         {ds("(0.5 - y) * x")} AS s1
+         {dsum_sql("(0.5 - y) * x")} AS s1
   FROM xdb GROUP BY 1
 ), w1 AS (
   SELECT bucket, n_docs, ROUND(-{_L5K_LR} * s1 / nn, 8) AS w1
   FROM g1, n
 ), z AS (
   SELECT x.doc_id, ANY_VALUE(x.y) AS y,
-         ROUND(({ds("w1.w1 * x.x")}) + ANY_VALUE(b1.b1), 8) AS z
+         ROUND(({dsum_sql("w1.w1 * x.x")}) + ANY_VALUE(b1.b1), 8) AS z
   FROM xdb x JOIN w1 USING (bucket) CROSS JOIN b1
   GROUP BY x.doc_id
 ), p AS (
   SELECT doc_id, y, ROUND(1.0 / (1.0 + EXP(-z)), 8) AS p FROM z
 ), b2 AS (
   SELECT ROUND(ANY_VALUE(b1.b1)
-           - {_L5K_LR} * ({ds("p.p - p.y")}) / ANY_VALUE(nn), 8)
+           - {_L5K_LR} * ({dsum_sql("p.p - p.y")}) / ANY_VALUE(nn), 8)
          AS b2
   FROM p, b1, n
 ), g2 AS (
-  SELECT x.bucket, {ds("(p.p - p.y) * x.x")} AS s2
+  SELECT x.bucket, {dsum_sql("(p.p - p.y) * x.x")} AS s2
   FROM xdb x JOIN p ON p.doc_id = x.doc_id
   GROUP BY 1
 ), w2 AS (
@@ -1759,7 +1752,7 @@ def l5k_train_quality_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nrow = d.agg(F.count(F.lit(1)).cast("double").alias("nn"))
     b1row = (
-        fx.agg(F.sum((F.lit(0.5) - F.col("y")).cast(DEC)).cast("double").alias("s"))
+        fx.agg(dsum(F.lit(0.5) - F.col("y")).alias("s"))
         .crossJoin(F.broadcast(nrow))
         .select(F.round(-_L5K_LR * F.col("s") / F.col("nn"), 8).alias("b1"))
     )
@@ -1767,8 +1760,7 @@ def l5k_train_quality_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         xdb.groupBy("bucket")
         .agg(
             F.count_distinct(F.col("doc_id")).cast("bigint").alias("n_docs"),
-            F.sum(((F.lit(0.5) - F.col("y")) * F.col("x")).cast(DEC))
-            .cast("double")
+            dsum((F.lit(0.5) - F.col("y")) * F.col("x"))
             .alias("s1"),
         )
         .crossJoin(F.broadcast(nrow))
@@ -1782,7 +1774,7 @@ def l5k_train_quality_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         xdb.join(F.broadcast(g1.select("bucket", "w1")), "bucket")
         .groupBy("doc_id", "y")
         .agg(
-            F.sum((F.col("w1") * F.col("x")).cast(DEC)).cast("double").alias("zs")
+            dsum(F.col("w1") * F.col("x")).alias("zs")
         )
         .crossJoin(F.broadcast(b1row))
         .select(
@@ -1797,7 +1789,7 @@ def l5k_train_quality_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("z"))), 8).alias("p"),
     )
     b2row = (
-        p.agg(F.sum((F.col("p") - F.col("y")).cast(DEC)).cast("double").alias("s"))
+        p.agg(dsum(F.col("p") - F.col("y")).alias("s"))
         .crossJoin(F.broadcast(nrow))
         .crossJoin(F.broadcast(b1row))
         .select(
@@ -1811,8 +1803,7 @@ def l5k_train_quality_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         xdb.join(p.select("doc_id", "p"), "doc_id")
         .groupBy("bucket")
         .agg(
-            F.sum(((F.col("p") - F.col("y")) * F.col("x")).cast(DEC))
-            .cast("double")
+            dsum((F.col("p") - F.col("y")) * F.col("x"))
             .alias("s2")
         )
     )
@@ -1862,7 +1853,6 @@ def _l4m3_ctes() -> list[str]:
     the exact merges the trainer learned."""
     from big_data_programming_spark.operators.text import (
         bpe_apply_merge_sql,
-        bpe_pairs_sql,
         bpe_symbolize_sql,
     )
 
@@ -1877,7 +1867,7 @@ def _l4m3_ctes() -> list[str]:
     for k in range(1, _L4M3_MERGES + 1):
         ctes.append(f"""p{k} AS (
   SELECT u.pair, CAST(SUM(cnt) AS BIGINT) AS pair_count
-  FROM s{k - 1}, UNNEST({bpe_pairs_sql("sym")}) AS u(pair)
+  FROM s{k - 1}, UNNEST({word_ngrams_sql("string_split(sym, ' ')", 2)}) AS u(pair)
   GROUP BY 1
 )""")
         ctes.append(f"""m{k} AS (
@@ -1960,7 +1950,6 @@ def _l4m3_train(
     final vocabulary) — ONE loop so train and apply cannot drift."""
     from big_data_programming_spark.operators.text import (
         bpe_apply_merge,
-        bpe_pairs,
         bpe_symbolize,
     )
 
@@ -1976,7 +1965,7 @@ def _l4m3_train(
     merges = []
     for k in range(1, _L4M3_MERGES + 1):
         pc = (
-            cur.select("cnt", F.explode(bpe_pairs(F.col("sym"))).alias("pair"))
+            cur.select("cnt", F.explode(word_ngrams("split(sym, ' ')", 2)).alias("pair"))
             .groupBy("pair")
             .agg(F.sum("cnt").cast("bigint").alias("pair_count"))
         )
@@ -2013,10 +2002,7 @@ def _l4m3_train(
 
 
 def _l5k2_oracle() -> str:
-    mean = (
-        "ROUND(CAST(CAST(SUM(CAST(trained_logit AS DECIMAL(38,10)))"
-        " AS VARCHAR) AS DOUBLE) / COUNT(*), 8)"
-    )
+    mean = f"ROUND({dsum_sql('trained_logit')} / COUNT(*), 8)"
     return f"""
 WITH {_l5k_ctes()},
 mdl AS (
@@ -2152,7 +2138,7 @@ def l5k2_trained_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("thr")
         )
     )
-    logit = quality_logit("toks", F.col("wv"), bias=F.col("b0"))
+    logit = quality_logit("toks", bias="b0")
     scored = (
         d.select("doc_id", tokenize(F.col("text")).alias("toks"))
         .crossJoin(F.broadcast(wrow))
@@ -2165,7 +2151,7 @@ def l5k2_trained_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mu = scored.agg(
         F.round(
-            F.sum(F.col("trained_logit").cast(DEC)).cast("double")
+            dsum("trained_logit")
             / F.count(F.lit(1)),
             8,
         ).alias("mu")

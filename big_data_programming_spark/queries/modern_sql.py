@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.functions.canonical import oracle_dsum
+from big_data_programming_spark.functions.canonical import DEC, dsum_sql
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load, register_views
 from big_data_programming_spark.streaming.harness import scratch_dir
@@ -21,8 +21,8 @@ from big_data_programming_spark.streaming.harness import scratch_dir
     oracle=f"""
 SELECT l_returnflag, l_linestatus,
        COUNT(*) AS n_rows,
-       {oracle_dsum('l_quantity', 'sum_qty')},
-       {oracle_dsum('l_extendedprice * (1 - l_discount)', 'sum_disc_price')}
+       {dsum_sql('l_quantity')} AS sum_qty,
+       {dsum_sql('l_extendedprice * (1 - l_discount)')} AS sum_disc_price
 FROM lineitem
 WHERE l_shipdate <= DATE '1998-09-02'
 GROUP BY 1, 2
@@ -39,13 +39,13 @@ def s21_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin, proving plan equivalence by value equality."""
     register_views(spark, sf_dir, ("lineitem",))
     return spark.sql(
-        """
+        f"""
         FROM lineitem
         |> WHERE l_shipdate <= DATE '1998-09-02'
         |> EXTEND l_extendedprice * (1 - l_discount) AS disc_price
         |> AGGREGATE COUNT(*) AS n_rows,
-                     CAST(SUM(CAST(l_quantity AS DECIMAL(38,10))) AS DOUBLE) AS sum_qty,
-                     CAST(SUM(CAST(disc_price AS DECIMAL(38,10))) AS DOUBLE) AS sum_disc_price
+                     CAST(SUM(CAST(l_quantity AS {DEC})) AS DOUBLE) AS sum_qty,
+                     CAST(SUM(CAST(disc_price AS {DEC})) AS DOUBLE) AS sum_disc_price
            GROUP BY l_returnflag, l_linestatus
         """
     )
@@ -57,7 +57,7 @@ def s21_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH g AS (
   SELECT o_orderpriority, o_orderstatus,
          COUNT(*) AS n_orders,
-         {oracle_dsum('o_totalprice', 'total_price')}
+         {dsum_sql('o_totalprice')} AS total_price
   FROM orders
   GROUP BY 1, 2
 )
@@ -80,14 +80,14 @@ def s22_sql_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
     aliases out and must match bit-for-bit."""
     register_views(spark, sf_dir, ("orders",))
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority, o_orderstatus, n_orders, total_price,
                total_price / n_orders AS avg_price,
                avg_price > 150000 AS is_premium_mix
         FROM (
           SELECT o_orderpriority, o_orderstatus,
                  COUNT(*) AS n_orders,
-                 CAST(SUM(CAST(o_totalprice AS DECIMAL(38,10))) AS DOUBLE) AS total_price
+                 CAST(SUM(CAST(o_totalprice AS {DEC})) AS DOUBLE) AS total_price
           FROM orders
           GROUP BY ALL
           ORDER BY ALL
@@ -339,7 +339,7 @@ def l4p_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT l_returnflag,
        COUNT(*) AS n_rows,
-       {oracle_dsum('l_extendedprice * (1 - l_discount)', 'revenue')}
+       {dsum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
 FROM lineitem
 WHERE l_quantity >= 30.0 AND l_discount >= 0.05
 GROUP BY 1
@@ -361,10 +361,10 @@ def s23_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql("SET VAR qty_floor = 30.0")
     spark.sql("SET VAR disc_floor = 0.05")
     return spark.sql(
-        """
+        f"""
         SELECT l_returnflag,
                COUNT(*) AS n_rows,
-               CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,10))) AS DOUBLE) AS revenue
+               CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS {DEC})) AS DOUBLE) AS revenue
         FROM lineitem
         WHERE l_quantity >= qty_floor AND l_discount >= disc_floor
         GROUP BY 1

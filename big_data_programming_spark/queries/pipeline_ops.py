@@ -28,8 +28,10 @@ from pyspark.sql import functions as F
 from big_data_programming_spark.functions.canonical import (
     DEC,
     davg,
-    oracle_davg,
-    oracle_dsum,
+    davg_sql,
+    dbl_sql,
+    dsum,
+    dsum_sql,
 )
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
@@ -233,7 +235,7 @@ def observed_quality_gate(
     gated = watched.filter(passing)
     out = gated.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        davg(F.col("n_chars").cast("double"), "avg_chars"),
+        davg(F.col("n_chars").cast("double")).alias("avg_chars"),
     )
     return out, obs
 
@@ -242,7 +244,7 @@ def observed_quality_gate(
     "po2_observed_quality_gate",
     oracle=f"""
 SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       {oracle_davg('CAST(n_chars AS DOUBLE)', 'avg_chars')}
+       {davg_sql('CAST(n_chars AS DOUBLE)')} AS avg_chars
 FROM documents
 WHERE n_chars >= 200 AND LEN(regexp_split_to_array(text, '\\s+')) >= 30
 GROUP BY lang
@@ -266,8 +268,8 @@ def po2_observed_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT event_type,
        CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days,
        CAST(COUNT(*) AS BIGINT) AS total_events,
-       {oracle_dsum('value', 'total_value')},
-       {oracle_davg('value', 'avg_value')}
+       {dsum_sql('value')} AS total_value,
+       {davg_sql('value')} AS avg_value
 FROM events
 GROUP BY event_type
 """,
@@ -370,7 +372,7 @@ def po4_stratified_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT c.c_nationkey,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
-       {oracle_dsum('o.o_totalprice', 'total_price')}
+       {dsum_sql('o.o_totalprice')} AS total_price
 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY c.c_nationkey
 """,
@@ -411,9 +413,7 @@ def po5_incremental_join_maintenance(
     merged = j(a, b).unionAll(j(da, b)).unionAll(j(a, db)).unionAll(j(da, db))
     return merged.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias(
-            "total_price"
-        ),
+        dsum("o_totalprice").alias("total_price"),
     )
 
 
@@ -612,8 +612,7 @@ WITH hashed AS (
   SELECT grid.bucket, COALESCE(regs.m_reg, 0) AS m_reg
   FROM grid LEFT JOIN regs ON regs.bucket = grid.bucket
 ), s AS (
-  SELECT CAST(CAST(SUM(CAST((CAST(1 AS BIGINT) << (57 - m_reg))
-           AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS denom
+  SELECT {dbl_sql('SUM(CAST((CAST(1 AS BIGINT) << (57 - m_reg)) AS DECIMAL(38,0)))')} AS denom
   FROM full_regs
 ), e AS (
   SELECT CAST(COUNT(DISTINCT event_id) AS BIGINT) AS exact_distinct

@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_programming_spark.functions.canonical import dsum, oracle_dsum
+from big_data_programming_spark.functions.canonical import dsum, dsum_sql
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
@@ -16,8 +16,8 @@ from big_data_programming_spark.sources.loaders import load
     oracle=f"""
 WITH m AS (
   SELECT l_returnflag AS f,
-         {oracle_dsum('l_quantity', 'sum_qty')},
-         {oracle_dsum('l_extendedprice', 'sum_price')},
+         {dsum_sql('l_quantity')} AS sum_qty,
+         {dsum_sql('l_extendedprice')} AS sum_price,
          CAST(COUNT(*) AS DOUBLE) AS n_rows
   FROM lineitem GROUP BY 1
 )
@@ -58,8 +58,8 @@ def a24_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
-            dsum("l_quantity", "sum_qty"),
-            dsum("l_extendedprice", "sum_price"),
+            dsum("l_quantity").alias("sum_qty"),
+            dsum("l_extendedprice").alias("sum_price"),
             F.count(F.lit(1)).cast("double").alias("n_rows"),
         )
         .orderBy("l_returnflag")
@@ -285,13 +285,13 @@ def e12_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH base AS (
   SELECT o_orderpriority,
          COUNT(*) AS n_orders,
-         {oracle_dsum('o_totalprice', 'total_price')}
+         {dsum_sql('o_totalprice')} AS total_price
   FROM orders
   GROUP BY 1
 )
 SELECT o_orderpriority, n_orders, total_price,
        ROUND(total_price
-         / CAST(CAST(SUM(CAST(total_price AS DECIMAL(38,10))) OVER () AS VARCHAR) AS DOUBLE),
+         / {dsum_sql('total_price', over='')},
          8) AS revenue_share,
        ROUND(CAST(n_orders AS DOUBLE) / SUM(n_orders) OVER (), 8) AS order_share
 FROM base
@@ -316,15 +316,13 @@ def w8_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     base = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        dsum("o_totalprice", "total_price"),
+        dsum("o_totalprice").alias("total_price"),
     )
-    from big_data_programming_spark.functions.canonical import DEC
-
     w = Window.partitionBy()
     # Denominator through the decimal canon: a plain double window sum
     # is summation-order-dependent and drifted 1 ulp between partition
     # counts (observed 8 vs 200); exact decimal addition is invariant.
-    total_all = F.sum(F.col("total_price").cast(DEC)).over(w).cast("double")
+    total_all = dsum("total_price", over=w)
     return base.select(
         "o_orderpriority",
         "n_orders",

@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.functions.canonical import DEC
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.functions.canonical import oracle_dsum
+from big_data_programming_spark.functions.canonical import dsum, dsum_sql
 from big_data_programming_spark.operators.skew import salted_join, salted_sum_count
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
@@ -18,7 +18,7 @@ from big_data_programming_spark.sources.loaders import load
     oracle=f"""
 SELECT event_type,
        COUNT(*) AS n_rows,
-       {oracle_dsum('value', 'total')}
+       {dsum_sql('value')} AS total
 FROM events
 GROUP BY event_type
 """,
@@ -41,7 +41,7 @@ def sk1_salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT c.c_nationkey,
        COUNT(*) AS n_orders,
-       {oracle_dsum('o.o_totalprice', 'total_price')}
+       {dsum_sql('o.o_totalprice')} AS total_price
 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY 1
 """,
@@ -60,5 +60,5 @@ def sk2_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(o, c, key="custkey", salt_source="o_orderkey", n_salts=8)
     return joined.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(38,10)")).cast("double").alias("total_price"),
+        dsum("o_totalprice").alias("total_price"),
     )

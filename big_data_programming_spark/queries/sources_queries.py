@@ -20,7 +20,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from big_data_programming_spark.functions.canonical import DEC, dsum, oracle_dsum
+from big_data_programming_spark.functions.canonical import DEC, dsum, dsum_sql
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.session import scoped_conf
 from big_data_programming_spark.sources.loaders import (
@@ -186,10 +186,10 @@ def o3_sort_within_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "o4_repartition_coalesce",
-    oracle="""
+    oracle=f"""
 SELECT l_suppkey,
        COUNT(*) AS n_lines,
-       CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS total_qty
+       {dsum_sql('l_quantity')} AS total_qty
 FROM lineitem
 GROUP BY l_suppkey
 """,
@@ -207,7 +207,7 @@ def o4_repartition_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_suppkey")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.sum(F.col("l_quantity").cast("decimal(38,10)")).cast("double").alias("total_qty"),
+            dsum("l_quantity").alias("total_qty"),
         )
         .coalesce(4)
     )
@@ -247,7 +247,7 @@ def s6_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "o5_bucketed_join",
     oracle=f"""
 SELECT c.c_mktsegment, COUNT(*) AS n_orders,
-       {oracle_dsum("o.o_totalprice", "segment_value")}
+       {dsum_sql("o.o_totalprice")} AS segment_value
 FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
 GROUP BY 1
 """,
@@ -284,7 +284,7 @@ def o5_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice", "segment_value"),
+            dsum("o_totalprice").alias("segment_value"),
         )
     )
 
@@ -530,7 +530,7 @@ def s12_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT COUNT(*) AS n_rows,
        COUNT(CASE WHEN p_size > 5 THEN p_retailprice END) AS n_with_price,
-       {oracle_dsum('CASE WHEN p_size > 5 THEN p_retailprice END', 'price_total')}
+       {dsum_sql('CASE WHEN p_size > 5 THEN p_retailprice END')} AS price_total
 FROM part
 """,
     tags=("S1", "S6", "P2"),
@@ -557,7 +557,7 @@ def s13_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("p_retailprice").alias("n_with_price"),
-        F.sum(F.col("p_retailprice").cast(DEC)).cast("double").alias("price_total"),
+        dsum("p_retailprice").alias("price_total"),
     )
 
 
@@ -572,7 +572,7 @@ _S15_FILES = 4
 SELECT CAST({_S15_FRAGMENTS} AS BIGINT) AS files_before,
        CAST({_S15_FILES} AS BIGINT) AS files_after,
        COUNT(*) AS n_rows,
-       {oracle_dsum('l_quantity', 'total_qty')}
+       {dsum_sql('l_quantity')} AS total_qty
 FROM lineitem
 """,
     tags=("S6", "O4", "S1"),
@@ -612,7 +612,7 @@ def s15_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count_distinct("f").alias("files_after"),
             F.count(F.lit(1)).alias("n_rows"),
-            dsum("l_quantity", "total_qty"),
+            dsum("l_quantity").alias("total_qty"),
         )
         .crossJoin(F.broadcast(before))
         .select("files_before", "files_after", "n_rows", "total_qty")
@@ -782,10 +782,10 @@ def s19_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s20_parameterized_sql",
-    oracle="""
+    oracle=f"""
 SELECT o_orderpriority,
        COUNT(*) AS n_orders,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS total_price
+       {dsum_sql('o_totalprice')} AS total_price
 FROM orders
 WHERE o_totalprice >= 150000.0
 GROUP BY o_orderpriority
@@ -803,10 +803,10 @@ def s20_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the hand-written query — zero plan cost for the indirection."""
     register_views(spark, sf_dir, ("orders",))
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
                COUNT(*) AS n_orders,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(38,10))) AS DOUBLE) AS total_price
+               CAST(SUM(CAST(o_totalprice AS {DEC})) AS DOUBLE) AS total_price
         FROM IDENTIFIER(:tbl)
         WHERE o_totalprice >= :cutoff
         GROUP BY o_orderpriority

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_programming_spark.functions.canonical import DEC, oracle_dsum
+from big_data_programming_spark.functions.canonical import DEC, dbl_sql, dsum, dsum_sql
 from big_data_programming_spark.operators.upsert import latest_per_key
 from big_data_programming_spark.queries.pipeline_ops import (
     HLL_ALPHA_SQL,
@@ -67,7 +67,7 @@ WITH w AS (
 ), wm AS (SELECT {_WM_US.format(delay_ms=2 * 3600 * 1000)} AS wm_us FROM events)
 SELECT window_start, window_end,
        COUNT(*) AS n_events,
-       {oracle_dsum('value', 'total_value')}
+       {dsum_sql('value')} AS total_value
 FROM w, wm
 WHERE EPOCH_US(window_end) <= wm_us
 GROUP BY 1, 2
@@ -87,7 +87,7 @@ def st1_watermark_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
@@ -105,7 +105,7 @@ def st1_watermark_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600 * 3600) * 1000000) AS window_start,
        event_type,
        COUNT(*) AS n_events,
-       {oracle_dsum('value', 'total_value')}
+       {dsum_sql('value')} AS total_value
 FROM events
 GROUP BY 1, 2
 """,
@@ -121,7 +121,7 @@ def st2_tumbling_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
@@ -146,7 +146,7 @@ def st3_sliding_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
@@ -178,7 +178,7 @@ WITH gaps AS (
          MIN(ts) AS session_start,
          MAX(ts) + INTERVAL 30 MINUTE AS session_end,
          COUNT(*) AS n_events,
-         CAST(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS session_value
+         {dsum_sql('value')} AS session_value
   FROM ids GROUP BY user_id, sid
 ), wm AS (SELECT {_WM_US.format(delay_ms=0)} AS wm_us FROM events)
 SELECT user_id, session_start, session_end, n_events, session_value
@@ -203,7 +203,7 @@ def st4_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("session_value"),
+            dsum("value").alias("session_value"),
         )
         .select(
             "user_id",
@@ -288,7 +288,7 @@ def st6_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT c.c_nationkey,
        COUNT(*) AS n_events,
-       {oracle_dsum('e.value', 'total_value')}
+       {dsum_sql('e.value')} AS total_value
 FROM events e JOIN customer c ON e.user_id = c.c_custkey
 GROUP BY 1
 """,
@@ -305,7 +305,7 @@ def st7_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = joined.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+        dsum("value").alias("total_value"),
     )
     return drain(agg, "complete")
 
@@ -619,7 +619,7 @@ def st13_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT event_type,
        COUNT(*) AS n_events,
-       {oracle_dsum('value', 'total_value')}
+       {dsum_sql('value')} AS total_value
 FROM events
 WHERE value >= 10.0
 GROUP BY 1
@@ -656,7 +656,7 @@ def st14_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
     )
 
@@ -667,7 +667,7 @@ def st14_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT event_type,
        CAST(ts AS DATE) AS day,
        COUNT(*) AS n_events,
-       {oracle_dsum('value', 'total_value')}
+       {dsum_sql('value')} AS total_value
 FROM events
 GROUP BY 1, 2
 """,
@@ -714,7 +714,7 @@ def st16_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     snap = _snapshot_fold(
         spark,
         ev,
-        "event_type string, day date, n_events long, sv decimal(38,10)",
+        f"event_type string, day date, n_events long, sv {DEC}",
         merge,
     )
     return snap.select(
@@ -787,7 +787,7 @@ def st17_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT event_type,
        CAST(ts AS DATE) AS day,
        COUNT(*) AS n_events,
-       {oracle_dsum('value', 'total_value')}
+       {dsum_sql('value')} AS total_value
 FROM events
 GROUP BY 1, 2
 """,
@@ -811,7 +811,7 @@ def st18_rocksdb_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             s.groupBy("event_type", F.col("ts").cast("date").alias("day"))
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+                dsum("value").alias("total_value"),
             )
         )
         return drain(agg, "complete")
@@ -860,7 +860,7 @@ def st19_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600 * 3600) * 1000000) AS window_start,
        event_type,
        COUNT(*) AS n_events,
-       {oracle_dsum('value', 'total_value')}
+       {dsum_sql('value')} AS total_value
 FROM events
 GROUP BY 1, 2
 """,
@@ -885,7 +885,7 @@ def st20_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
@@ -924,7 +924,7 @@ WITH iv AS (
          make_timestamp(MIN(s_us)) AS session_start,
          make_timestamp(MAX(e_us)) AS session_end,
          COUNT(*) AS n_events,
-         CAST(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS session_value
+         {dsum_sql('value')} AS session_value
   FROM ids GROUP BY user_id, sid
 ), wm AS (SELECT {_WM_US.format(delay_ms=0)} AS wm_us FROM events)
 SELECT user_id, session_start, session_end, n_events, session_value
@@ -954,7 +954,7 @@ def st21_dynamic_gap_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("session_value"),
+            dsum("value").alias("session_value"),
         )
         .select(
             "user_id",
@@ -1208,11 +1208,11 @@ WITH hashed AS (
   FROM hashed GROUP BY day, bucket
 ), denom AS (
   SELECT day,
-         CAST(CAST(
-           SUM(CAST((CAST(1 AS BIGINT) << (57 - m_reg)) AS DECIMAL(38,0)))
-           + CAST(64 - COUNT(*) AS DECIMAL(38,0))
-             * CAST({POW2_57_INT} AS DECIMAL(38,0))
-         AS VARCHAR) AS DOUBLE) AS d
+         {dbl_sql(
+             "SUM(CAST((CAST(1 AS BIGINT) << (57 - m_reg)) AS DECIMAL(38,0)))"
+             " + CAST(64 - COUNT(*) AS DECIMAL(38,0))"
+             f" * CAST({POW2_57_INT} AS DECIMAL(38,0))"
+         )} AS d
   FROM regs GROUP BY day
 )
 SELECT day,
@@ -1383,12 +1383,12 @@ def st28_streaming_cm_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from big_data_programming_spark.operators.text import (
+    L5I_WEIGHTS_SPARK_SQL,
     basic_gate,
     basic_gate_sql,
     l5i_weights_sql as _l5i_weights_sql,
     quality_logit,
     quality_logit_sql as _l5i_logit_sql,
-    quality_weights,
     tokenize,
 )
 
@@ -1464,7 +1464,7 @@ SELECT source,
        CAST(SUM(CASE WHEN logit > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
        ROUND(CAST(SUM(CASE WHEN logit > 0 THEN 1 ELSE 0 END) AS DOUBLE)
              / COUNT(*), 8) AS keep_rate,
-       ROUND(CAST(CAST(SUM(CAST(logit AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
+       ROUND({dsum_sql('logit')}
              / COUNT(*), 6) AS avg_logit
 FROM g
 GROUP BY source
@@ -1494,7 +1494,7 @@ def st30_streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFram
     source, per micro-batch."""
     s = documents_stream(spark, sf_dir)
     gated = s.select("source", tokenize(F.col("text")).alias("toks")).select(
-        "source", quality_logit("toks", quality_weights()).alias("logit")
+        "source", quality_logit("toks", L5I_WEIGHTS_SPARK_SQL).alias("logit")
     )
     keep = F.sum(F.when(F.col("logit") > 0, 1).otherwise(0))
     agg = gated.groupBy("source").agg(
@@ -1502,7 +1502,7 @@ def st30_streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFram
         keep.cast("bigint").alias("n_keep"),
         F.round(keep.cast("double") / F.count(F.lit(1)), 8).alias("keep_rate"),
         F.round(
-            F.sum(F.col("logit").cast(DEC)).cast("double") / F.count(F.lit(1)), 6
+            dsum("logit") / F.count(F.lit(1)), 6
         ).alias("avg_logit"),
     )
     return drain(agg, "complete")

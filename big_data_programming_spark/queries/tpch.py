@@ -23,29 +23,29 @@ from pyspark.sql import functions as F
 from big_data_programming_spark.functions.canonical import (
     DEC,
     davg,
+    davg_sql,
     dsum,
-    oracle_davg,
-    oracle_dsum,
+    dsum_sql,
 )
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
 
 def _disc_price() -> F.Column:
-    return (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(DEC)
+    return F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
 
 
 @register(
     "q1_pricing_summary",
     oracle=f"""
 SELECT l_returnflag, l_linestatus,
-       {oracle_dsum('l_quantity', 'sum_qty')},
-       {oracle_dsum('l_extendedprice', 'sum_base_price')},
-       {oracle_dsum('l_extendedprice * (1.0 - l_discount)', 'sum_disc_price')},
-       {oracle_dsum('l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)', 'sum_charge')},
-       {oracle_davg('l_quantity', 'avg_qty')},
-       {oracle_davg('l_extendedprice', 'avg_price')},
-       {oracle_davg('l_discount', 'avg_disc')},
+       {dsum_sql('l_quantity')} AS sum_qty,
+       {dsum_sql('l_extendedprice')} AS sum_base_price,
+       {dsum_sql('l_extendedprice * (1.0 - l_discount)')} AS sum_disc_price,
+       {dsum_sql('l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)')} AS sum_charge,
+       {davg_sql('l_quantity')} AS avg_qty,
+       {davg_sql('l_extendedprice')} AS avg_price,
+       {davg_sql('l_discount')} AS avg_disc,
        COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -62,21 +62,18 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            dsum("l_quantity", "sum_qty"),
-            dsum("l_extendedprice", "sum_base_price"),
-            F.sum(_disc_price()).cast("double").alias("sum_disc_price"),
-            F.sum(
-                (
+            dsum("l_quantity").alias("sum_qty"),
+            dsum("l_extendedprice").alias("sum_base_price"),
+            dsum(_disc_price()).alias("sum_disc_price"),
+            dsum(
                     F.col("l_extendedprice")
                     * (F.lit(1.0) - F.col("l_discount"))
                     * (F.lit(1.0) + F.col("l_tax"))
-                ).cast(DEC)
-            )
-            .cast("double")
+                )
             .alias("sum_charge"),
-            davg("l_quantity", "avg_qty"),
-            davg("l_extendedprice", "avg_price"),
-            davg("l_discount", "avg_disc"),
+            davg("l_quantity").alias("avg_qty"),
+            davg("l_extendedprice").alias("avg_price"),
+            davg("l_discount").alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -87,7 +84,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q3_shipping_priority",
     oracle=f"""
 SELECT l.l_orderkey,
-       {oracle_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue')},
+       {dsum_sql('l.l_extendedprice * (1.0 - l.l_discount)')} AS revenue,
        o.o_orderdate
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
@@ -115,7 +112,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.sum(_disc_price()).cast("double").alias("revenue"))
+        .agg(dsum(_disc_price()).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate")
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)
@@ -126,7 +123,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q5_local_supplier_volume",
     oracle=f"""
 SELECT n.n_name,
-       {oracle_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue')}
+       {dsum_sql('l.l_extendedprice * (1.0 - l.l_discount)')} AS revenue
 FROM customer c
 JOIN orders o   ON c.c_custkey = o.o_custkey
 JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -164,7 +161,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
-        .agg(F.sum(_disc_price()).cast("double").alias("revenue"))
+        .agg(dsum(_disc_price()).alias("revenue"))
         .orderBy(F.col("revenue").desc())
     )
 
@@ -172,7 +169,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q6_forecast_revenue",
     oracle=f"""
-SELECT {oracle_dsum('l_extendedprice * l_discount', 'revenue')},
+SELECT {dsum_sql('l_extendedprice * l_discount')} AS revenue,
        COUNT(*) AS n_rows
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -192,8 +189,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_discount").between(0.05, 0.07)
         & (F.col("l_quantity") < 24.0)
     ).agg(
-        F.sum((F.col("l_extendedprice") * F.col("l_discount")).cast(DEC))
-        .cast("double")
+        dsum(F.col("l_extendedprice") * F.col("l_discount"))
         .alias("revenue"),
         F.count(F.lit(1)).alias("n_rows"),
     )
@@ -203,7 +199,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q10_returned_items",
     oracle=f"""
 SELECT c.c_custkey, c.c_name,
-       {oracle_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue')},
+       {dsum_sql('l.l_extendedprice * (1.0 - l.l_discount)')} AS revenue,
        c.c_acctbal, n.n_name
 FROM customer c
 JOIN orders o   ON c.c_custkey = o.o_custkey
@@ -233,7 +229,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum(_disc_price()).cast("double").alias("revenue"))
+        .agg(dsum(_disc_price()).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)
@@ -308,11 +304,11 @@ def q12_ship_delay_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q14_promo_revenue_share",
-    oracle="""
-SELECT 100.0 * CAST(CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                 THEN CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,10))
-                 ELSE CAST(0 AS DECIMAL(38,10)) END) AS VARCHAR) AS DOUBLE)
-       / CAST(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
+    oracle=f"""
+SELECT 100.0 * {dsum_sql(
+         "CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END"
+       )}
+       / {dsum_sql('l.l_extendedprice * (1 - l.l_discount)')}
        AS promo_revenue_pct
 FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
 WHERE l.l_shipdate >= TIMESTAMP '1995-09-01'
@@ -328,14 +324,14 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1995-09-01") & (F.col("l_shipdate") < "1995-10-01")
     )
     p = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    disc = _disc_price()
+    disc = _disc_price().cast(DEC)
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .agg(
             (
                 F.lit(100.0)
                 * F.sum(F.when(F.col("p_type") == "PROMO", disc).otherwise(F.lit(0).cast(DEC))).cast("double")
-                / F.sum(disc).cast("double")
+                / dsum(_disc_price())
             ).alias("promo_revenue_pct")
         )
     )
@@ -343,9 +339,9 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q18_large_volume_orders",
-    oracle="""
+    oracle=f"""
 SELECT c.c_name, o.o_orderkey, o.o_orderdate, o.o_totalprice,
-       CAST(CAST(SUM(CAST(l.l_quantity AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS total_qty
+       {dsum_sql('l.l_quantity')} AS total_qty
 FROM customer c
 JOIN orders o ON o.o_custkey = c.c_custkey
 JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -377,21 +373,20 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("c_name", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.sum(F.col("l_quantity").cast(DEC)).cast("double").alias("total_qty"))
+        .agg(dsum("l_quantity").alias("total_qty"))
     )
 
 
 @register(
     "q22_idle_rich_customers",
-    oracle="""
+    oracle=f"""
 WITH avg_bal AS (
-  SELECT CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
-         / COUNT(c_acctbal) AS a
+  SELECT {davg_sql('c_acctbal')} AS a
   FROM customer WHERE c_acctbal > 0.0
 )
 SELECT c.c_nationkey,
        COUNT(*) AS n_customers,
-       CAST(CAST(SUM(CAST(c.c_acctbal AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) AS total_bal
+       {dsum_sql('c.c_acctbal')} AS total_bal
 FROM customer c, avg_bal
 WHERE c.c_acctbal > avg_bal.a
   AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
@@ -409,7 +404,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_bal = (
         c.filter(F.col("c_acctbal") > 0.0)
         .agg(
-            (F.sum(F.col("c_acctbal").cast(DEC)).cast("double") / F.count("c_acctbal")).alias("a")
+            davg("c_acctbal").alias("a")
         )
     )
     o = load(spark, sf_dir, "orders").select("o_custkey")
@@ -417,7 +412,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     idle = rich.join(o, rich.c_custkey == o.o_custkey, "left_anti")
     return idle.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_customers"),
-        F.sum(F.col("c_acctbal").cast(DEC)).cast("double").alias("total_bal"),
+        dsum("c_acctbal").alias("total_bal"),
     )
 
 
@@ -425,7 +420,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q7_nation_volume_shipping",
     oracle=f"""
 SELECT supp_nation, cust_nation, l_year,
-       {oracle_dsum('volume', 'revenue')}
+       {dsum_sql('volume')} AS revenue
 FROM (
   SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          YEAR(l.l_shipdate) AS l_year,
@@ -474,18 +469,16 @@ def q7_nation_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
         )
-        .agg(F.sum(_disc_price()).cast("double").alias("revenue"))
+        .agg(dsum(_disc_price()).alias("revenue"))
     )
 
 
 @register(
     "q8_market_share",
-    oracle="""
+    oracle=f"""
 SELECT o_year,
-       CAST(CAST(SUM(CASE WHEN nation = 'NATION_2'
-                  THEN CAST(volume AS DECIMAL(38,10))
-                  ELSE CAST(0 AS DECIMAL(38,10)) END) AS VARCHAR) AS DOUBLE)
-       / CAST(CAST(SUM(CAST(volume AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
+       {dsum_sql("CASE WHEN nation = 'NATION_2' THEN volume ELSE 0 END")}
+       / {dsum_sql('volume')}
        AS mkt_share
 FROM (
   SELECT YEAR(o.o_orderdate) AS o_year,
@@ -532,7 +525,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1997-01-01")
     ).select("o_orderkey", "o_custkey", "o_orderdate")
     li = load(spark, sf_dir, "lineitem")
-    disc = _disc_price()
+    disc = _disc_price().cast(DEC)
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
@@ -546,7 +539,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.lit(0).cast(DEC)
                     )
                 ).cast("double")
-                / F.sum(disc).cast("double")
+                / dsum(_disc_price())
             ).alias("mkt_share")
         )
     )
@@ -585,7 +578,7 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     oracle=f"""
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
-         {oracle_dsum('l_extendedprice * (1.0 - l_discount)', 'total_revenue')}
+         {dsum_sql('l_extendedprice * (1.0 - l_discount)')} AS total_revenue
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '1996-01-01'
     AND l_shipdate <  TIMESTAMP '1996-04-01'
@@ -608,7 +601,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(_disc_price()).cast("double").alias("total_revenue")
+        dsum(_disc_price()).alias("total_revenue")
     )
     max_rev = revenue.agg(F.max("total_revenue").alias("mr"))
     s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -652,14 +645,13 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q17_small_quantity_revenue",
-    oracle="""
+    oracle=f"""
 WITH part_avg AS (
   SELECT l_partkey,
-         0.2 * (CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
-                / COUNT(l_quantity)) AS threshold
+         0.2 * ({davg_sql('l_quantity')}) AS threshold
   FROM lineitem GROUP BY l_partkey
 )
-SELECT CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
+SELECT {dsum_sql('l.l_extendedprice')}
        / 7.0 AS avg_yearly
 FROM lineitem l
 JOIN part p ON p.p_partkey = l.l_partkey
@@ -680,7 +672,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part_avg = li.groupBy(F.col("l_partkey").alias("pa_key")).agg(
         (
             F.lit(0.2)
-            * (F.sum(F.col("l_quantity").cast(DEC)).cast("double") / F.count("l_quantity"))
+            * davg("l_quantity")
         ).alias("threshold")
     )
     p = load(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3").select(
@@ -691,7 +683,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(part_avg, li.l_partkey == part_avg.pa_key)
         .filter(F.col("l_quantity") < F.col("threshold"))
         .agg(
-            (F.sum(F.col("l_extendedprice").cast(DEC)).cast("double") / F.lit(7.0)).alias(
+            (dsum("l_extendedprice") / F.lit(7.0)).alias(
                 "avg_yearly"
             )
         )
@@ -701,7 +693,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q19_disjunctive_revenue",
     oracle=f"""
-SELECT {oracle_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue')},
+SELECT {dsum_sql('l.l_extendedprice * (1.0 - l.l_discount)')} AS revenue,
        COUNT(*) AS n_lines
 FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
 WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 5
@@ -744,7 +736,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(pruned), li.l_partkey == pruned.p_partkey)
         .filter(band)
         .agg(
-            F.sum(_disc_price()).cast("double").alias("revenue"),
+            dsum(_disc_price()).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -904,7 +896,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q9_product_type_profit",
     oracle=f"""
-SELECT nation, o_year, {oracle_dsum('amount', 'sum_profit')}
+SELECT nation, o_year, {dsum_sql('amount')} AS sum_profit
 FROM (
   SELECT n.n_name AS nation, YEAR(o.o_orderdate) AS o_year,
          l.l_extendedprice * (1.0 - l.l_discount)
@@ -940,13 +932,13 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     amount = (
         F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
         - F.lit(0.6) * F.col("p_retailprice") * F.col("l_quantity")
-    ).cast(DEC)
+    )
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("nation", F.year("o_orderdate").alias("o_year"))
-        .agg(F.sum(amount).cast("double").alias("sum_profit"))
+        .agg(dsum(amount).alias("sum_profit"))
     )
 
 
@@ -954,7 +946,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q11_important_part_value",
     oracle=f"""
 WITH v AS (
-  SELECT l.l_partkey, {oracle_dsum('l.l_extendedprice', 'value')}
+  SELECT l.l_partkey, {dsum_sql('l.l_extendedprice')} AS value
   FROM lineitem l
   JOIN supplier s ON s.s_suppkey = l.l_suppkey
   JOIN nation n   ON n.n_nationkey = s.s_nationkey
@@ -963,7 +955,7 @@ WITH v AS (
 )
 SELECT l_partkey, value
 FROM v
-WHERE value > 0.001 * (SELECT CAST(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE) FROM v)
+WHERE value > 0.001 * (SELECT {dsum_sql('value')} FROM v)
 """,
     tags=("J1", "A1", "A2", "S5"),
 )
@@ -985,9 +977,9 @@ def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
         li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .groupBy("l_partkey")
-        .agg(dsum("l_extendedprice", "value"))
+        .agg(dsum("l_extendedprice").alias("value"))
     )
-    total = v.agg(F.sum(F.col("value").cast(DEC)).cast("double").alias("total"))
+    total = v.agg(dsum("value").alias("total"))
     return (
         v.crossJoin(F.broadcast(total))
         .filter(F.col("value") > F.lit(0.001) * F.col("total"))
@@ -999,13 +991,13 @@ def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q20_dominant_suppliers",
     oracle=f"""
 WITH shipped AS (
-  SELECT l_suppkey, l_partkey, {oracle_dsum('l_quantity', 'qty')}
+  SELECT l_suppkey, l_partkey, {dsum_sql('l_quantity')} AS qty
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '1996-01-01'
     AND l_shipdate <  TIMESTAMP '1997-01-01'
   GROUP BY l_suppkey, l_partkey
 ), tot AS (
-  SELECT l_partkey, {oracle_dsum('l_quantity', 'total_qty')}
+  SELECT l_partkey, {dsum_sql('l_quantity')} AS total_qty
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '1996-01-01'
     AND l_shipdate <  TIMESTAMP '1997-01-01'
@@ -1040,9 +1032,9 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     red = load(spark, sf_dir, "part").filter(F.col("p_name").like("red%")).select(
         "p_partkey"
     )
-    shipped = li.groupBy("l_suppkey", "l_partkey").agg(dsum("l_quantity", "qty"))
+    shipped = li.groupBy("l_suppkey", "l_partkey").agg(dsum("l_quantity").alias("qty"))
     tot = li.groupBy(F.col("l_partkey").alias("t_key")).agg(
-        dsum("l_quantity", "total_qty")
+        dsum("l_quantity").alias("total_qty")
     )
     dominant = (
         shipped.join(F.broadcast(red), shipped.l_partkey == red.p_partkey, "left_semi")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_programming_spark.functions.canonical import DEC
+from big_data_programming_spark.functions.canonical import DEC, dbl_sql, dsum, dsum_sql
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
@@ -113,16 +113,19 @@ def w3_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: w4's window: one customer's orders in date order, framed per column.
+_W4_FRAME = (
+    "PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey"
+    " ROWS BETWEEN {} PRECEDING AND CURRENT ROW"
+)
+
+
 @register(
     "w4_running_sum",
-    oracle="""
+    oracle=f"""
 SELECT o_custkey, o_orderkey, o_orderdate,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,10))) OVER (
-         PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS running_spend,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,10))) OVER (
-         PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS last3_spend
+       {dsum_sql('o_totalprice', over=_W4_FRAME.format('UNBOUNDED'))} AS running_spend,
+       {dsum_sql('o_totalprice', over=_W4_FRAME.format(2))} AS last3_spend
 FROM orders
 """,
     tags=("W4",),
@@ -133,29 +136,28 @@ def w4_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     run = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     mov = base.rowsBetween(-2, Window.currentRow)
-    dec_price = F.col("o_totalprice").cast(DEC)
     return o.select(
         "o_custkey",
         "o_orderkey",
         "o_orderdate",
-        F.sum(dec_price).over(run).cast("double").alias("running_spend"),
-        F.sum(dec_price).over(mov).cast("double").alias("last3_spend"),
+        dsum("o_totalprice", over=run).alias("running_spend"),
+        dsum("o_totalprice", over=mov).alias("last3_spend"),
     )
 
 
 @register(
     "w5_range_frame",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(DATE_TRUNC('day', o_orderdate) AS TIMESTAMP) AS day,
-         SUM(CAST(o_totalprice AS DECIMAL(38,10))) AS day_sales
+         SUM(CAST(o_totalprice AS {DEC})) AS day_sales
   FROM orders GROUP BY 1
 )
 SELECT day,
-       CAST(CAST(day_sales AS VARCHAR) AS DOUBLE) AS day_sales,
-       CAST(CAST(SUM(day_sales) OVER (
-         ORDER BY CAST(EPOCH(day) AS BIGINT)
-         RANGE BETWEEN 518400 PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS sales_7d
+       {dbl_sql('day_sales')} AS day_sales,
+       {dsum_sql('day_sales', over=(
+           'ORDER BY CAST(EPOCH(day) AS BIGINT)'
+           ' RANGE BETWEEN 518400 PRECEDING AND CURRENT ROW'))} AS sales_7d
 FROM daily
 """,
     tags=("W5", "F2"),

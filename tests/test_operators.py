@@ -1601,13 +1601,14 @@ def test_bpe_merge_learning_matches_reference(spark):
 
 
 def test_bpe_twins_agree_on_degenerate_words(spark):
-    """The bpe_* Spark/DuckDB twin pairs agree on the degenerate words
-    the fixtures never produce (r8 advice findings): the EMPTY word
-    (whose symbol string ' </w>' contains a legal empty symbol), a
-    single-char word, and fully-merged SINGLE-SYMBOL strings — where
-    the old sequence(1, 0)-based pair walk crashed Spark-side
-    (INVALID_ARRAY_INDEX_IN_ELEMENT_AT; Spark's sequence steps DOWN
-    when start > stop) while the DuckDB twin returned []. Also pins
+    """The bpe_* Spark/DuckDB twin pairs, and the symbol-pair kernel
+    (word_ngrams at n = 2 over the split symbol string), agree on the
+    degenerate words the fixtures never produce (r8 advice findings):
+    the EMPTY word (whose symbol string ' </w>' contains a legal empty
+    symbol), a single-char word, and fully-merged SINGLE-SYMBOL
+    strings — where an old sequence(1, 0)-based pair walk crashed
+    Spark-side (INVALID_ARRAY_INDEX_IN_ELEMENT_AT; Spark's sequence
+    steps DOWN when start > stop) while the DuckDB twin returned []. Also pins
     the apply-fold's NULL sentinel: an empty first symbol must survive
     the fold, not be swallowed by an acc == '' "first element" test."""
     import duckdb
@@ -1615,27 +1616,27 @@ def test_bpe_twins_agree_on_degenerate_words(spark):
     from big_data_programming_spark.operators.text import (
         bpe_apply_merge,
         bpe_apply_merge_sql,
-        bpe_pairs,
-        bpe_pairs_sql,
         bpe_symbolize,
         bpe_symbolize_sql,
+        word_ngrams,
+        word_ngrams_sql,
     )
 
     words = ["", "a", "the", "aa", "aaa", "abab"]
     merges = [("a", "a"), ("the", "</w>"), ("", "</w>"), ("a", "b")]
     df = spark.createDataFrame([(w,) for w in words], ["word"])
-    cols = [
-        "word",
-        bpe_symbolize("word").alias("sym"),
-        bpe_pairs(bpe_symbolize("word")).alias("pairs"),
-    ]
+    pairs = word_ngrams("split(sym, ' ')", 2)
+    cols = ["word", bpe_symbolize("word").alias("sym")]
     for i, (a, b) in enumerate(merges):
         cols.append(
             bpe_apply_merge(bpe_symbolize("word"), F.lit(a), F.lit(b)).alias(
                 f"m{i}"
             )
         )
-    got = {r["word"]: r.asDict() for r in df.select(*cols).collect()}
+    got = {
+        r["word"]: r.asDict()
+        for r in df.select(*cols).withColumn("pairs", pairs).collect()
+    }
 
     def q(s: str) -> str:
         return "'" + s + "'"
@@ -1643,7 +1644,8 @@ def test_bpe_twins_agree_on_degenerate_words(spark):
     con = duckdb.connect()
     for w in words:
         (sym_d,) = con.execute(f"SELECT {bpe_symbolize_sql(q(w))}").fetchone()
-        (pairs_d,) = con.execute(f"SELECT {bpe_pairs_sql(q(sym_d))}").fetchone()
+        split_d = f"string_split({q(sym_d)}, ' ')"
+        (pairs_d,) = con.execute(f"SELECT {word_ngrams_sql(split_d, 2)}").fetchone()
         s = got[w]
         assert s["sym"] == sym_d, (w, s["sym"], sym_d)
         assert list(s["pairs"]) == list(pairs_d), (w, s["pairs"], pairs_d)
@@ -1656,10 +1658,95 @@ def test_bpe_twins_agree_on_degenerate_words(spark):
     # the exact r8-advice crash case: a fully merged single-symbol string
     one = (
         spark.createDataFrame([("the</w>",)], ["sym"])
-        .select(bpe_pairs(F.col("sym")).alias("p"))
+        .select(pairs.alias("p"))
         .collect()
     )
     assert list(one[0]["p"]) == []
+
+
+def test_decimal_canon_twins_agree(spark):
+    """The decimal-sum canon (functions/canonical.py) on both engines
+    against a Python Decimal reference: grouped dsum/davg and a running
+    window dsum on Spark, grouped dsum_sql/davg_sql and the same window
+    on DuckDB. Group ``a`` is the case DuckDB's direct DECIMAL->DOUBLE
+    cast gets 1 ulp wrong (289473120.03000003): only the VARCHAR route
+    returns the correctly rounded double. A NULL is skipped, an
+    all-NULL group sums (and averages) to NULL, negatives cancel
+    exactly. Non-integral values stay below 1e6 in magnitude, where
+    both engines' double->DECIMAL(38,10) conversions agree."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import duckdb
+    from pyspark.sql.window import Window
+
+    from big_data_programming_spark.functions.canonical import (
+        davg,
+        davg_sql,
+        dsum,
+        dsum_sql,
+    )
+
+    rows = [
+        ("a", 1, 289473120.0), ("a", 2, 0.03),
+        ("b", 1, 1.5), ("b", 2, None), ("b", 3, 2.25),
+        ("c", 1, None), ("c", 2, None),
+        ("d", 1, -0.1), ("d", 2, -12345.67), ("d", 3, 0.3),
+    ]
+
+    def dec(v: float) -> Decimal:
+        return Decimal(repr(v)).quantize(Decimal("1e-10"), ROUND_HALF_UP)
+
+    want_sum, want_avg, want_run = {}, {}, {}
+    for g in sorted({r[0] for r in rows}):
+        vals = [v for k, _, v in sorted(rows) if k == g]
+        nn = [dec(v) for v in vals if v is not None]
+        want_sum[g] = float(sum(nn)) if nn else None
+        want_avg[g] = float(sum(nn)) / len(nn) if nn else None
+        acc, seen = Decimal(0), False
+        for i, v in enumerate(vals, 1):
+            if v is not None:
+                acc, seen = acc + dec(v), True
+            want_run[(g, i)] = float(acc) if seen else None
+    assert want_sum["a"] == 289473120.03
+
+    df = spark.createDataFrame(rows, "g string, i int, v double")
+    got = {
+        r["g"]: (r["s"], r["m"])
+        for r in df.groupBy("g")
+        .agg(dsum("v").alias("s"), davg("v").alias("m"))
+        .collect()
+    }
+    assert got == {g: (want_sum[g], want_avg[g]) for g in want_sum}, got
+    w = Window.partitionBy("g").orderBy("i").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    got_run = {
+        (r["g"], r["i"]): r["s"]
+        for r in df.select("g", "i", dsum("v", over=w).alias("s")).collect()
+    }
+    assert got_run == want_run, got_run
+
+    con = duckdb.connect()
+    values = ", ".join(
+        f"('{g}', {i}, {'NULL' if v is None else repr(v)}::DOUBLE)"
+        for g, i, v in rows
+    )
+    con.execute(f"CREATE TABLE t AS SELECT * FROM (VALUES {values}) x(g, i, v)")
+    got_d = {
+        g: (s, m)
+        for g, s, m in con.execute(
+            f"SELECT g, {dsum_sql('v')}, {davg_sql('v')} FROM t GROUP BY g"
+        ).fetchall()
+    }
+    assert got_d == {g: (want_sum[g], want_avg[g]) for g in want_sum}, got_d
+    frame = "PARTITION BY g ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    got_run_d = {
+        (g, i): s
+        for g, i, s in con.execute(
+            f"SELECT g, i, {dsum_sql('v', over=frame)} FROM t"
+        ).fetchall()
+    }
+    assert got_run_d == want_run, got_run_d
 
 
 def test_trained_gate_composes_train_and_apply(spark):

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.functions.canonical import DEC
+from big_data_programming_spark.functions.canonical import davg, dsum
 from big_data_programming_spark.queries.pipeline_ops import (
     bloom_build,
     bloom_probe,
@@ -74,11 +74,8 @@ def test_partial_merge_is_bit_exact_under_partitioning(spark):
             ev.repartition(parts)
             .groupBy("event_type")
             .agg(
-                F.sum(F.col("value").cast(DEC)).cast("double").alias("tv"),
-                (
-                    F.sum(F.col("value").cast(DEC)).cast("double")
-                    / F.count("value")
-                ).alias("av"),
+                dsum("value").alias("tv"),
+                davg("value").alias("av"),
             )
             .collect()
         )

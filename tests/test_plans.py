@@ -1130,9 +1130,10 @@ def test_dedup_pair_queries_build_without_jobs():
 def test_query_builds_stay_within_py4j_budget(monkeypatch):
     """Building the wide-expression queries stays cheap on the driver:
     the MinHash base-hash, signature, band and SimHash vote expressions
-    (l2i, l2b), the 256-double l5i weight row and funnel stage
-    dimension (l5i, l5g, l5j, lm10) and the word n-gram arrays of the
-    LM ladder (l5e5) are each one parsed SQL string, not one py4j round
+    (l2i, l2b), the 256-double l5i weight row, the l5i logit's bucket
+    lookup and fold, and the funnel stage dimension (l5i, l5g, l5j,
+    lm10) and the word n-gram arrays of the LM ladder (l5e5) are each
+    one parsed SQL string, not one py4j round
     trip per Column node. Gateway commands are counted over one build,
     leaving out py4j's memory-release (``m``) commands: those are sent
     when the collector finalizes Java object proxies, so their number
@@ -1168,10 +1169,10 @@ def test_query_builds_stay_within_py4j_budget(monkeypatch):
     budget = {
         "l2i_minhash_banded": 850,
         "l2b_simhash": 200,
-        "l5i_fasttext_quality_gate": 550,
-        "l5g_pipeline_verdict": 1850,
-        "l5j_curation_pipeline": 3400,
-        "lm10_incremental_curation_funnel": 2650,
+        "l5i_fasttext_quality_gate": 355,
+        "l5g_pipeline_verdict": 1660,
+        "l5j_curation_pipeline": 3200,
+        "lm10_incremental_curation_funnel": 2450,
         "l5e5_trigram_backoff_logprob": 1800,
     }
     got = {n: commands(n) for n in budget}

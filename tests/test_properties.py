@@ -513,10 +513,10 @@ def test_bpe_symbolize_and_pairs_cross_engine(spark, word):
 
     from big_data_programming_spark.operators.text import (
         BPE_EOW,
-        bpe_pairs,
-        bpe_pairs_sql,
         bpe_symbolize,
         bpe_symbolize_sql,
+        word_ngrams,
+        word_ngrams_sql,
     )
 
     symbols = (list(word) if word else [""]) + [BPE_EOW]
@@ -526,10 +526,8 @@ def test_bpe_symbolize_and_pairs_cross_engine(spark, word):
     ]
     row = (
         spark.createDataFrame([(word,)], "w string")
-        .select(
-            bpe_symbolize("w").alias("sym"),
-            bpe_pairs(bpe_symbolize("w")).alias("pairs"),
-        )
+        .select(bpe_symbolize("w").alias("sym"))
+        .select("sym", word_ngrams("split(sym, ' ')", 2).alias("pairs"))
         .collect()[0]
     )
     assert row["sym"] == ref_sym, (word, row["sym"], ref_sym)
@@ -537,7 +535,7 @@ def test_bpe_symbolize_and_pairs_cross_engine(spark, word):
     con = duckdb.connect()
     word_lit = "'" + word + "'"
     sym_sql = bpe_symbolize_sql(word_lit)
-    pairs_sql = bpe_pairs_sql("(" + sym_sql + ")")
+    pairs_sql = word_ngrams_sql(f"string_split({sym_sql}, ' ')", 2)
     d_sym, d_pairs = con.execute(
         f"SELECT {sym_sql}, {pairs_sql}"
     ).fetchone()

@@ -14,7 +14,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.functions.canonical import DEC
+from big_data_programming_spark.functions.canonical import dsum
 from big_data_programming_spark.sources.loaders import load
 from big_data_programming_spark.streaming import harness
 from big_data_programming_spark.streaming.harness import drain, events_stream
@@ -137,7 +137,7 @@ def test_tumbling_complete_equals_batch_twin(spark):
             df.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+                dsum("value").alias("total_value"),
             )
             .select(
                 F.col("w.start").cast("timestamp_ntz").alias("window_start"),
