@@ -10,16 +10,20 @@ The canon used by every query in this repo instead makes the aggregate
 itself exact:
 
     Spark :  sum(col.cast(DECIMAL(38,10))).cast(double)
-    DuckDB:  CAST(CAST(SUM(CAST(expr AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)
+    DuckDB:  CAST(CAST(SUM(<expr as DECIMAL(38,10), through VARCHAR>)
+                  AS VARCHAR) AS DOUBLE)
 
-double→decimal(38,10) is a deterministic rounding at the 10th
-fractional digit. Spark rounds the double's shortest decimal repr,
-DuckDB its exact binary expansion; the two agree while the value has
-at most ~16 significant digits down to that 10th fraction digit
-(|x| < ~1e6 with a fraction, or any integral value). Larger fractional
-values can differ in the 10th decimal, so ratios of such sums are
-rounded to 8 dp (w8, st29). The decimal SUM is exact integer
-arithmetic — associative, order-free. decimal→double is correctly rounded on Spark
+double→decimal(38,10) is a deterministic half-up rounding at the 10th
+fractional digit of the double's shortest decimal repr. Spark's cast
+rounds that repr, and so does DuckDB's once the double is first cast
+to VARCHAR; its direct cast rounds the exact binary expansion instead,
+which differs for fractional values from ~1e6 up (-1234567.89 becomes
+-1234567.8899999998). One exception is mapped by hand: DuckDB 1.0.0
+parses a scientific-notation string whose digits all lie past the 11th
+decimal as ±1e-10 when its first digit is 5-9 (6.4e-12 → 1e-10), so
+magnitudes below 1e-11, which round to 0, are cast as 0
+(:func:`dsum_sql`). The decimal SUM is exact integer arithmetic —
+associative, order-free. decimal→double is correctly rounded on Spark
 (BigDecimal.doubleValue) but DuckDB's direct DECIMAL→DOUBLE cast is
 occasionally 1 ulp off (DuckDB 1.0.0: 289473120.0 + 0.03 comes back as
 289473120.03000003), so the DuckDB side goes through VARCHAR, which
@@ -75,8 +79,11 @@ def dbl_sql(expr: str) -> str:
 
 def dsum_sql(expr: str, over: str | None = None) -> str:
     """DuckDB twin of :func:`dsum`; ``over`` is the window clause body
-    (``''`` for ``OVER ()``)."""
-    s = f"SUM(CAST({expr} AS {DEC}))"
+    (``''`` for ``OVER ()``). Each row reaches DECIMAL through VARCHAR,
+    so DuckDB rounds the shortest repr as Spark's cast does; magnitudes
+    below 1e-11, which that parse can round up, are cast as 0."""
+    dec = f"CASE WHEN ABS({expr}) < 1e-11 THEN 0 ELSE CAST(CAST({expr} AS VARCHAR) AS {DEC}) END"
+    s = f"SUM({dec})"
     return dbl_sql(s if over is None else f"{s} OVER ({over})")
 
 

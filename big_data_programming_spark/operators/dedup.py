@@ -280,7 +280,14 @@ def simhash(docs: DataFrame) -> DataFrame:
     return simhash_packed(docs, _SIMHASH_BITS_SQL, "simhash_bits")
 
 
-SIMHASH_ORACLE_SQL = f"""
+def simhash_oracle_sql(one: str, zero: str, pack: str, name: str) -> str:
+    """DuckDB twin of :func:`simhash_packed`: ``(doc_id, <name>)`` from
+    the same md5 token hashes and per-bit vote sums. Bit ``bit`` yields
+    ``one`` (a SQL expression over ``bit``) when its vote sum is
+    positive and ``zero`` otherwise; ``pack`` aggregates those per-bit
+    values ``s`` into the doc's signature (the packing of
+    :func:`simhash_sql`'s callers: bit string or BIGINT)."""
+    return f"""
 WITH toks AS (
   SELECT doc_id,
          CAST(CONCAT('0x', SUBSTRING(md5(t.token), 1, 15)) AS BIGINT) AS h
@@ -290,12 +297,18 @@ WITH toks AS (
          CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END AS vote
   FROM toks, (SELECT UNNEST(generate_series(0, {SIMHASH_BITS - 1})) AS bit) b
 ), signs AS (
-  SELECT doc_id, bit, CASE WHEN SUM(vote) > 0 THEN '1' ELSE '0' END AS s
+  SELECT doc_id, bit, CASE WHEN SUM(vote) > 0 THEN {one} ELSE {zero} END AS s
   FROM votes GROUP BY doc_id, bit
 )
-SELECT doc_id, STRING_AGG(s, '' ORDER BY bit) AS simhash_bits
+SELECT doc_id, {pack} AS {name}
 FROM signs GROUP BY doc_id
 """
+
+
+#: DuckDB twin of :func:`simhash` (the bit string ``simhash_bits``).
+SIMHASH_ORACLE_SQL = simhash_oracle_sql(
+    "'1'", "'0'", "STRING_AGG(s, '' ORDER BY bit)", "simhash_bits"
+)
 
 
 def minhash_lsh_candidates(

@@ -1,16 +1,32 @@
-"""Sessionization — the batch twin of Structured Streaming's
-session_window (SURVEY.md §2.9 ST4, §7 M4).
+"""Event-time kernels, one per engine (SURVEY.md §2.9 ST1-ST4, §7 M4).
 
-Gap-based algorithm, pure window algebra (no Python boundary):
-1. per user, lag(ts) over event order → gap to previous event;
-2. new-session flag where gap exceeds the threshold (or first event);
-3. running sum of flags = session ordinal → (user_id, session_id);
-4. aggregate per session.
+The batch twins of the streaming event-time queries, and the batch
+sessionization they mirror, spell their three rules here and nowhere
+else:
 
-One shuffle (partitionBy user), one window pass, one hash aggregate —
-holds at any scale because state per key is a single counter, and
-skewed users are split by AQE at the final aggregate (the window itself
-is inherently per-user sequential, as sessionization must be).
+- **Gap sessions** (e3, e14, e18, w7, st4): :func:`session_ids` /
+  :func:`session_ids_sql`. Per user, over (ts, event_id): the gap in
+  µs to the previous event, a new-session flag where that gap is NULL
+  (first event) or exceeds the threshold, and the running sum of flags
+  as the session ordinal. :func:`sessionize` / :func:`sessionize_sql`
+  add the per-session aggregate. Spark's session_window (batch and
+  streaming) merges an event while ``ts <= last + gap``, the same
+  rule, so st4 is :func:`sessionize_sql` with ``session_end`` moved
+  to ``last + gap``.
+- **Window bounds** (e2, st1-st3, st20, st22, st26): :func:`window_sql`
+  is Spark's window-start arithmetic in DuckDB (tumbling, or one slide
+  offset of a sliding window); :func:`window_bounds` reads the start
+  and end of Spark's window struct as TIMESTAMP_NTZ columns.
+- **Final-watermark cutoff** (st1, st4, st21, st22, st24, st26): an
+  append-mode query emits exactly the batch result over the input its
+  watermark has passed (Structured Streaming, SIGMOD 2018).
+  :func:`watermark_us_sql` is that final watermark.
+
+Gap sessions are pure window algebra (no Python boundary): one shuffle
+(partitionBy user), one window pass, one hash aggregate. State per key
+is a single counter, so it holds at any scale; skewed users are split
+by AQE at the final aggregate (the window itself is inherently
+per-user sequential, as sessionization must be).
 """
 
 from __future__ import annotations
@@ -22,56 +38,68 @@ from pyspark.sql.window import Window
 from big_data_programming_spark.functions.canonical import dsum, dsum_sql
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Assign session ids and aggregate one row per session."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
-    gap_us: Column = F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(
-        F.lag(ts_col).over(w).cast("timestamp")
+def session_ids(events: DataFrame, gap_us: int) -> DataFrame:
+    """``events`` plus, per event over (user_id ORDER BY ts, event_id):
+    ``gap_us`` to the user's previous event (NULL at the first),
+    ``is_new_session`` (1 where that gap is NULL or exceeds ``gap_us``)
+    and ``session_id``, the running sum of the flags. Twin of
+    :func:`session_ids_sql`."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
+        F.lag("ts").over(w).cast("timestamp")
     )
-    flagged = events.withColumn(
-        "is_new_session",
-        F.when(gap_us.isNull() | (gap_us > gap_minutes * 60 * 1_000_000), 1).otherwise(0),
-    )
-    with_ids = flagged.withColumn(
-        "session_id",
-        F.sum("is_new_session").over(
-            Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col).rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        ),
-    )
-    return with_ids.groupBy(user_col, "session_id").agg(
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-        dsum("value").alias("session_value"),
+    is_new = F.col("gap_us").isNull() | (F.col("gap_us") > gap_us)
+    return (
+        events.withColumn("gap_us", gap)
+        .withColumn("is_new_session", F.when(is_new, 1).otherwise(0))
+        .withColumn(
+            "session_id",
+            F.sum("is_new_session").over(
+                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            ),
+        )
     )
 
 
-#: DuckDB twin of :func:`sessionize` — kept adjacent so the two
-#: formulations evolve together.
-SESSIONIZE_ORACLE_SQL = f"""
+def session_ids_sql(gap_us: int) -> str:
+    """DuckDB twin of :func:`session_ids` over the ``events`` table.
+    ``session_id`` is cast to BIGINT: DuckDB's window SUM(int) yields
+    HUGEINT, which pandas reads as float64."""
+    return f"""
 WITH gaps AS (
-  SELECT user_id, ts, event_id, value,
-         CASE WHEN LAG(ts) OVER w IS NULL
-                OR EPOCH_US(ts) - EPOCH_US(LAG(ts) OVER w) > {{gap_us}}
-              THEN 1 ELSE 0 END AS is_new_session
+  SELECT *, EPOCH_US(ts) - EPOCH_US(LAG(ts) OVER (
+              PARTITION BY user_id ORDER BY ts, event_id)) AS gap_us
   FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), ids AS (
-  -- CAST: DuckDB window-SUM(int) yields HUGEINT -> pandas float64,
-  -- which hash-mismatches Spark's int64 under the driver's canon.
-  SELECT *, CAST(SUM(is_new_session) OVER (
-    PARTITION BY user_id ORDER BY ts, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+), flags AS (
+  SELECT *, CASE WHEN gap_us IS NULL OR gap_us > {gap_us}
+                 THEN 1 ELSE 0 END AS is_new_session
   FROM gaps
 )
+SELECT *, CAST(SUM(is_new_session) OVER (
+            PARTITION BY user_id ORDER BY ts, event_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+FROM flags
+"""
+
+
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+    """Assign session ids and aggregate one row per session."""
+    return (
+        session_ids(events, gap_minutes * 60 * 1_000_000)
+        .groupBy("user_id", "session_id")
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.count(F.lit(1)).alias("n_events"),
+            dsum("value").alias("session_value"),
+        )
+    )
+
+
+def sessionize_sql(gap_minutes: int = 30) -> str:
+    """DuckDB twin of :func:`sessionize`."""
+    return f"""
+WITH ids AS ({session_ids_sql(gap_minutes * 60 * 1_000_000)})
 SELECT user_id, session_id,
        MIN(ts) AS session_start,
        MAX(ts) AS session_end,
@@ -80,6 +108,40 @@ SELECT user_id, session_id,
 FROM ids
 GROUP BY user_id, session_id
 """
+
+
+def window_sql(ts: str, size_s: int, *names: str, offset: str = "0") -> str:
+    """DuckDB twin of ``F.window`` + :func:`window_bounds`: the SELECT
+    items naming the start (and, given a second name, the end)
+    TIMESTAMP of the ``size_s``-second window that holds ``ts`` and
+    starts ``offset`` seconds (a SQL expression) past a multiple of
+    ``size_s``. Spark computes ``start = t - (t - offset) mod size`` in
+    µs; for whole-second sizes and offsets that is the floored-second
+    form below. A tumbling window has offset 0; each window of a
+    sliding one has its own offset (e2: ``j * 900`` for j in 0..3)."""
+    start = f"(CAST(FLOOR(EPOCH({ts})) AS BIGINT) - {offset}) // {size_s} * {size_s} + {offset}"
+    bounds = (start, f"{start} + {size_s}")
+    return ", ".join(
+        f"make_timestamp(({b}) * 1000000) AS {name}" for b, name in zip(bounds, names)
+    )
+
+
+def window_bounds(w: str, *names: str) -> list[Column]:
+    """Spark: the start (and, given a second name, the end) of window
+    struct column ``w`` as TIMESTAMP_NTZ columns named ``names``, the
+    type DuckDB's TIMESTAMP compares against."""
+    return [
+        F.col(f"{w}.{field}").cast("timestamp_ntz").alias(name)
+        for field, name in zip(("start", "end"), names)
+    ]
+
+
+def watermark_us_sql(src: str, delay_ms: int) -> str:
+    """DuckDB: the final watermark of a stream that replays ``src`` (a
+    FROM clause with a ``ts`` column), in epoch-µs — Spark's max event
+    time floored to ms, minus ``delay_ms``. Append mode emits exactly
+    the windows and sessions whose end is at or before it."""
+    return f"(EPOCH_MS((SELECT MAX(ts) FROM {src})) - {delay_ms}) * 1000"
 
 
 def peak_concurrency(sessions: DataFrame) -> DataFrame:

@@ -18,7 +18,12 @@ from big_data_programming_spark.functions.canonical import (
     dsum,
     dsum_sql,
 )
-from big_data_programming_spark.operators.sessions import SESSIONIZE_ORACLE_SQL, sessionize
+from big_data_programming_spark.operators.sessions import (
+    sessionize,
+    sessionize_sql,
+    window_bounds,
+    window_sql,
+)
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
@@ -54,23 +59,21 @@ def e1_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: DuckDB twin of F.window("ts", "1 hour", "15 minutes") — each event
-#: lands in exactly 4 overlapping windows; the offsets CTE reconstructs
-#: Spark's window-start arithmetic. Shared with the streaming variant
+#: lands in exactly 4 overlapping windows, one per start offset j * 900 s
+#: (operators/sessions.py window_sql). Shared with the streaming variant
 #: (queries/streaming_queries.py st3).
 E2_SLIDING_ORACLE = f"""
 WITH offsets(j) AS (VALUES (0), (1), (2), (3)),
 win AS (
-  SELECT make_timestamp(((CAST(FLOOR(EPOCH(ts)) AS BIGINT) - j * 900) // 3600 * 3600 + j * 900) * 1000000)
-           AS window_start,
+  SELECT {window_sql("ts", 3600, "window_start", "window_end", offset="j * 900")},
          value
   FROM events CROSS JOIN offsets
 )
-SELECT window_start,
-       make_timestamp((CAST(EPOCH(window_start) AS BIGINT) + 3600) * 1000000) AS window_end,
+SELECT window_start, window_end,
        COUNT(*) AS n_events,
        {dsum_sql('value')} AS total_value
 FROM win
-GROUP BY 1
+GROUP BY 1, 2
 """
 
 
@@ -91,8 +94,7 @@ def e2_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("value").alias("total_value"),
         )
         .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            F.col("w.end").cast("timestamp_ntz").alias("window_end"),
+            *window_bounds("w", "window_start", "window_end"),
             "n_events",
             "total_value",
         )
@@ -101,7 +103,7 @@ def e2_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e3_sessionization",
-    oracle=SESSIONIZE_ORACLE_SQL.format(gap_us=30 * 60 * 1_000_000),
+    oracle=sessionize_sql(30),
     tags=("ST4", "W2", "W4"),
 )
 def e3_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -592,10 +594,8 @@ def e17_wow_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e18_peak_concurrency",
-    oracle="WITH sessions AS ("
-    + SESSIONIZE_ORACLE_SQL.format(gap_us=30 * 60 * 1_000_000)
-    + """
-), bounds0 AS (
+    oracle=f"""
+WITH sessions AS ({sessionize_sql(30)}), bounds0 AS (
   SELECT session_start AS ts, 1 AS delta,
          user_id * 1000000 + session_id AS sid
   FROM sessions

@@ -24,11 +24,11 @@ from pyspark.sql.window import Window
 from big_data_programming_spark.functions.canonical import cos_sql, davg, dsum, dsum_sql
 from big_data_programming_spark.operators.dedup import (
     MINHASH_HASHES,
-    SIMHASH_BITS,
     incremental_minhash_matches,
     incremental_minhash_matches_sql,
     minhash_signatures,
     minhash_signatures_sql,
+    simhash_oracle_sql,
     simhash_packed,
     simhash_sql,
 )
@@ -232,25 +232,9 @@ def lm4_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: SimHash-as-integer: 16 bit-position sign votes over md5 token
 #: hashes, packed into one BIGINT (operators/dedup.py simhash emits the
 #: bit STRING; the int form enables bit_count hamming in both engines).
-_SIG_SQL = f"""
-WITH toks AS (
-  SELECT doc_id,
-         CAST(CONCAT('0x', SUBSTRING(md5(t.token), 1, 15)) AS BIGINT) AS h
-  FROM documents, UNNEST(list_distinct(string_split(text, ' '))) AS t(token)
-), votes AS (
-  SELECT doc_id, b.bit,
-         CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END AS vote
-  FROM toks, (SELECT UNNEST(generate_series(0, {SIMHASH_BITS - 1})) AS bit) b
-), signs AS (
-  SELECT doc_id, bit,
-         CASE WHEN SUM(vote) > 0 THEN (CAST(1 AS BIGINT) << bit)
-              ELSE 0 END AS bitval
-  FROM votes GROUP BY doc_id, bit
-), sigs AS (
-  SELECT doc_id, CAST(SUM(bitval) AS BIGINT) AS sig
-  FROM signs GROUP BY doc_id
+_SIG_SQL = simhash_oracle_sql(
+    "CAST(1 AS BIGINT) << bit", "0", "CAST(SUM(s) AS BIGINT)", "sig"
 )
-"""
 _SIG_SPARK_SQL = simhash_sql("CAST({v} AS BIGINT)", "CAST(0 AS BIGINT)", " + ")
 
 
@@ -264,9 +248,9 @@ def _simhash_int(docs: DataFrame) -> DataFrame:
 
 @register(
     "lm5_incremental_simhash_dedup",
-    oracle=_SIG_SQL
-    + """
-, hist AS (SELECT doc_id, sig, sig & 15 AS b0, (sig >> 4) & 15 AS b1,
+    oracle=f"""
+WITH sigs AS ({_SIG_SQL}),
+  hist AS (SELECT doc_id, sig, sig & 15 AS b0, (sig >> 4) & 15 AS b1,
                   (sig >> 8) & 15 AS b2, (sig >> 12) & 15 AS b3
            FROM sigs WHERE doc_id % 10 <> 9),
   new  AS (SELECT doc_id, sig, sig & 15 AS b0, (sig >> 4) & 15 AS b1,

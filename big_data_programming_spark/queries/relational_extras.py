@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_programming_spark.functions.canonical import dsum, dsum_sql
+from big_data_programming_spark.operators.sessions import sessionize, sessionize_sql
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
@@ -304,13 +305,13 @@ def w8_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     column of every revenue report. The unpartitioned window is safe
     precisely because it runs post-aggregation (5 priority rows, not
     1.5M orders); the denominators are decimal-canon sums, and the
-    emitted shares are ROUNDED to 8dp (r7 sf0.1 finding: the per-row
-    double->DECIMAL(38,10) conversion differs between engines on rare
-    edge values — Spark converts via the double's shortest decimal
-    representation, DuckDB rounds the exact binary expansion — so at
-    large row counts the decimal totals can differ in the 10th
-    decimal and the unrounded share flips its last ulp; 8dp rounding
-    absorbs it, the st29 keep_rate precedent). Running the same window pre-aggregation
+    emitted shares are ROUNDED to 8dp, like st29's keep_rate. The
+    rounding came from an r7 sf0.1 finding: DuckDB's per-row
+    double->DECIMAL(38,10) cast rounded the exact binary expansion
+    where Spark rounds the shortest repr, so large totals could differ
+    in the 10th decimal. dsum_sql now casts through VARCHAR, which
+    rounds the repr on both engines; the 8dp rounding stays because
+    the emitted shares carry it. Running the same window pre-aggregation
     would single-partition the fact table — the documented
     anti-pattern (compute shares AFTER the rollup, always)."""
     o = load(spark, sf_dir, "orders")
@@ -396,26 +397,9 @@ def e13_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e14_bounce_rate",
-    oracle="""
-WITH gaps AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN LAG(ts) OVER w IS NULL
-                OR EPOCH_US(ts) - EPOCH_US(LAG(ts) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS is_new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), ids AS (
-  SELECT *, SUM(is_new_session) OVER (
-    PARTITION BY user_id ORDER BY ts, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM gaps
-), sess AS (
-  SELECT user_id, session_id,
-         CAST(DATE_TRUNC('day', MIN(ts)) AS TIMESTAMP) AS day,
-         COUNT(*) AS n_events
-  FROM ids GROUP BY 1, 2
-)
-SELECT day,
+    oracle=f"""
+WITH sess AS ({sessionize_sql(30)})
+SELECT CAST(DATE_TRUNC('day', session_start) AS TIMESTAMP) AS day,
        COUNT(*) AS n_sessions,
        COUNT(*) FILTER (WHERE n_events = 1) AS n_bounces,
        CAST(COUNT(*) FILTER (WHERE n_events = 1) AS DOUBLE) / COUNT(*) AS bounce_rate
@@ -432,8 +416,6 @@ def e14_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-grain aggregate with a conditional count (a23 discipline) and
     a single double division — partition-count invariant by
     construction."""
-    from big_data_programming_spark.operators.sessions import sessionize
-
     sess = sessionize(load(spark, sf_dir, "events"), gap_minutes=30)
     daily = sess.select(
         F.date_trunc("day", F.col("session_start")).cast("timestamp_ntz").alias("day"),

@@ -1,13 +1,19 @@
-"""Structured Streaming operators ST1-ST9 (SURVEY.md §2.9, §7 M6).
+"""Structured Streaming queries st1-st30 (SURVEY.md §2.9 ST1-ST10,
+§7 M6).
 
-Every query replays the bounded ``events`` fixture through
-``spark.readStream`` (S8) and drains deterministically with
-``trigger(availableNow=True)`` into a memory sink (S9) — see
-streaming/harness.py. The oracle for each is the *batch-equivalent*
-SQL: identical results because event-time semantics don't depend on
-boundedness; for watermarked append-mode queries the oracle reproduces
-the final-watermark emission rule (window_end ≤ max_event_time − delay,
-ms-floored) that the no-data micro-batch applies.
+Every query replays a bounded fixture (``events``, or ``documents``
+for the curation streams) through ``spark.readStream`` (S8) and drains
+deterministically with ``trigger(availableNow=True)`` into a sink (S9)
+— see streaming/harness.py. The oracle for each is the
+*batch-equivalent* SQL: identical results because event-time semantics
+don't depend on boundedness. Its event-time rules come from the
+kernels in operators/sessions.py, one per engine: ``window_sql`` (the
+DuckDB twin of ``F.window``, read on the Spark side through
+``window_bounds``), ``sessionize_sql`` (gap sessions) and, for
+watermarked append-mode queries, ``watermark_us_sql``, the final
+watermark (max event time, ms-floored, minus the delay) that the
+no-data micro-batch applies: a window or session is emitted iff its
+end is at or before it.
 
 Scale posture: state size is the 100 TB concern, not throughput.
 Tumbling/sliding aggs keep one row of state per open window per key;
@@ -28,6 +34,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_programming_spark.functions.canonical import DEC, dbl_sql, dsum, dsum_sql
+from big_data_programming_spark.operators.sessions import (
+    sessionize_sql,
+    watermark_us_sql,
+    window_bounds,
+    window_sql,
+)
 from big_data_programming_spark.operators.upsert import latest_per_key
 from big_data_programming_spark.queries.pipeline_ops import (
     HLL_ALPHA_SQL,
@@ -51,25 +63,18 @@ from big_data_programming_spark.streaming.harness import (
     scratch_dir,
 )
 
-#: DuckDB fragment: Spark's final watermark in epoch-µs for a given
-#: delay — max event time floored to ms, minus the delay.
-_WM_US = "(EPOCH_MS(MAX(ts)) - {delay_ms}) * 1000"
-
-
 @register(
     "st1_watermark_tumbling",
     oracle=f"""
 WITH w AS (
-  SELECT make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600 * 3600) * 1000000) AS window_start,
-         make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600 * 3600 + 3600) * 1000000) AS window_end,
-         value
+  SELECT {window_sql("ts", 3600, "window_start", "window_end")}, value
   FROM events
-), wm AS (SELECT {_WM_US.format(delay_ms=2 * 3600 * 1000)} AS wm_us FROM events)
+)
 SELECT window_start, window_end,
        COUNT(*) AS n_events,
        {dsum_sql('value')} AS total_value
-FROM w, wm
-WHERE EPOCH_US(window_end) <= wm_us
+FROM w
+WHERE EPOCH_US(window_end) <= {watermark_us_sql("events", 2 * 3600 * 1000)}
 GROUP BY 1, 2
 """,
     tags=("ST1", "ST2", "ST8", "S8", "S9"),
@@ -89,26 +94,40 @@ def st1_watermark_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             dsum("value").alias("total_value"),
         )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            F.col("w.end").cast("timestamp_ntz").alias("window_end"),
-            "n_events",
-            "total_value",
-        )
+        .select(*window_bounds("w", "window_start", "window_end"), "n_events", "total_value")
     )
     return drain(agg, "append")
 
 
-@register(
-    "st2_tumbling_complete",
-    oracle=f"""
-SELECT make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600 * 3600) * 1000000) AS window_start,
+#: st2's and st20's oracle: one availableNow batch emits every group
+#: once, in complete and update mode alike, so both equal the batch
+#: aggregate.
+_HOURLY_BY_TYPE_ORACLE = f"""
+SELECT {window_sql("ts", 3600, "window_start")},
        event_type,
        COUNT(*) AS n_events,
        {dsum_sql('value')} AS total_value
 FROM events
 GROUP BY 1, 2
-""",
+"""
+
+
+def _hourly_by_type(s: DataFrame) -> DataFrame:
+    """st2's and st20's aggregate: events and their value per 1-hour
+    tumbling window and event_type."""
+    return (
+        s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum("value").alias("total_value"),
+        )
+        .select(*window_bounds("w", "window_start"), "event_type", "n_events", "total_value")
+    )
+
+
+@register(
+    "st2_tumbling_complete",
+    oracle=_HOURLY_BY_TYPE_ORACLE,
     tags=("ST2", "S8", "S9"),
 )
 def st2_tumbling_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,21 +135,7 @@ def st2_tumbling_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, full re-emission each batch; exactly equals the batch
     twin (e1). Complete mode is the right choice when the window count
     is small and sinks want the whole table (dashboards)."""
-    s = events_stream(spark, sf_dir)
-    agg = (
-        s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    return drain(agg, "complete")
+    return drain(_hourly_by_type(events_stream(spark, sf_dir)), "complete")
 
 
 @register(
@@ -148,12 +153,7 @@ def st3_sliding_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             dsum("value").alias("total_value"),
         )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            F.col("w.end").cast("timestamp_ntz").alias("window_end"),
-            "n_events",
-            "total_value",
-        )
+        .select(*window_bounds("w", "window_start", "window_end"), "n_events", "total_value")
     )
     return drain(agg, "complete")
 
@@ -161,42 +161,24 @@ def st3_sliding_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "st4_session_window",
     oracle=f"""
-WITH gaps AS (
-  SELECT user_id, ts, event_id, value,
-         CASE WHEN LAG(ts) OVER w IS NULL
-                OR EPOCH_US(ts) - EPOCH_US(LAG(ts) OVER w) >= {30 * 60 * 1_000_000}
-              THEN 1 ELSE 0 END AS is_new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), ids AS (
-  SELECT *, SUM(is_new_session) OVER (
-    PARTITION BY user_id ORDER BY ts, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM gaps
-), sess AS (
-  SELECT user_id,
-         MIN(ts) AS session_start,
-         MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-         COUNT(*) AS n_events,
-         {dsum_sql('value')} AS session_value
-  FROM ids GROUP BY user_id, sid
-), wm AS (SELECT {_WM_US.format(delay_ms=0)} AS wm_us FROM events)
-SELECT user_id, session_start, session_end, n_events, session_value
-FROM sess, wm
-WHERE EPOCH_US(session_end) <= wm_us
+WITH sess AS ({sessionize_sql(30)})
+SELECT user_id, session_start,
+       session_end + INTERVAL 30 MINUTE AS session_end,
+       n_events, session_value
+FROM sess
+WHERE EPOCH_US(session_end + INTERVAL 30 MINUTE) <= {watermark_us_sql("events", 0)}
 """,
     tags=("ST4", "S8"),
 )
 def st4_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows (30-minute gap) on the stream, append
     mode with a zero-delay watermark. Spark merges an event into a
-    session while event_ts < session_end (i.e. a gap of exactly 30:00
-    starts a NEW session — note the >= in the oracle's gap test,
-    versus > in the batch gap-sessionize e3, whose semantics keep an
-    exact-gap event). Sessions are emitted when the watermark passes
-    session_end = last_event + gap; tail sessions still open at
-    end-of-stream stay in state, and the oracle applies the same
-    cutoff."""
+    session while event_ts <= session_end, so an event exactly 30:00
+    after the previous one stays in its session: the sessions are e3's
+    (operators/sessions.py sessionize), with session_end = last_event +
+    gap. Sessions are emitted when the watermark passes session_end;
+    tail sessions still open at end-of-stream stay in state, and the
+    oracle applies the same cutoff."""
     s = events_stream(spark, sf_dir)
     agg = (
         s.withWatermark("ts", "0 seconds")
@@ -207,8 +189,7 @@ def st4_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "user_id",
-            F.col("w.start").cast("timestamp_ntz").alias("session_start"),
-            F.col("w.end").cast("timestamp_ntz").alias("session_end"),
+            *window_bounds("w", "session_start", "session_end"),
             "n_events",
             "session_value",
         )
@@ -378,21 +359,33 @@ def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame
     )
 
 
+def _view_purchase_join_sql(how: str) -> str:
+    """DuckDB twin of :func:`_view_purchase_join`. The left outer join
+    also emits each unmatched view, once view_ts + 30 min is behind the
+    final watermark: the minimum over both inputs of max event time −
+    1 h."""
+    on = "p.user_id = v.user_id AND p.ts > v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTE"
+    matched = f"""
+WITH v AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'view'),
+     p AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase')
+SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
+       v.ts AS view_ts, p.ts AS purchase_ts
+FROM v JOIN p ON {on}
+"""
+    if how == "inner":
+        return matched
+    return matched + f"""UNION ALL
+SELECT v.user_id, v.event_id, NULL, v.ts, NULL
+FROM v
+WHERE NOT EXISTS (SELECT 1 FROM p WHERE {on})
+  AND EPOCH_US(v.ts) + 1800000000
+      <= LEAST({watermark_us_sql("v", 3600 * 1000)}, {watermark_us_sql("p", 3600 * 1000)})
+"""
+
+
 @register(
     "st10_stream_stream_join",
-    oracle="""
-SELECT v.user_id,
-       v.event_id AS view_id,
-       p.event_id AS purchase_id,
-       v.ts AS view_ts,
-       p.ts AS purchase_ts
-FROM events v
-JOIN events p
-  ON p.user_id = v.user_id
- AND v.event_type = 'view' AND p.event_type = 'purchase'
- AND p.ts > v.ts
- AND p.ts <= v.ts + INTERVAL 30 MINUTE
-""",
+    oracle=_view_purchase_join_sql("inner"),
     tags=("ST7", "J9", "S8"),
 )
 def st10_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -856,14 +849,7 @@ def st19_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st20_update_mode",
-    oracle=f"""
-SELECT make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600 * 3600) * 1000000) AS window_start,
-       event_type,
-       COUNT(*) AS n_events,
-       {dsum_sql('value')} AS total_value
-FROM events
-GROUP BY 1, 2
-""",
+    oracle=_HOURLY_BY_TYPE_ORACLE,
     tags=("ST2", "ST8", "S8", "S9"),
 )
 def st20_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -879,22 +865,8 @@ def st20_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key contract update mode promises. State eviction still comes
     from the watermark (2h here), so long-horizon state is bounded at
     scale just like append mode."""
-    s = events_stream(spark, sf_dir)
-    agg = (
-        s.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    return drain(agg, "update")
+    s = events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
+    return drain(_hourly_by_type(s), "update")
 
 
 @register(
@@ -909,7 +881,7 @@ WITH iv AS (
   SELECT *, CASE WHEN MAX(e_us) OVER (
                    PARTITION BY user_id ORDER BY s_us, event_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-                 OR s_us >= MAX(e_us) OVER (
+                 OR s_us > MAX(e_us) OVER (
                    PARTITION BY user_id ORDER BY s_us, event_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
             THEN 1 ELSE 0 END AS is_new
@@ -926,10 +898,10 @@ WITH iv AS (
          COUNT(*) AS n_events,
          {dsum_sql('value')} AS session_value
   FROM ids GROUP BY user_id, sid
-), wm AS (SELECT {_WM_US.format(delay_ms=0)} AS wm_us FROM events)
+)
 SELECT user_id, session_start, session_end, n_events, session_value
-FROM sess, wm
-WHERE EPOCH_US(session_end) <= wm_us
+FROM sess
+WHERE EPOCH_US(session_end) <= {watermark_us_sql("events", 0)}
 """,
     tags=("ST4", "S8"),
 )
@@ -941,8 +913,8 @@ def st21_dynamic_gap_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping intervals merge, so session_end = max(ts_i + gap_i)
     over the merged chain. The oracle replays exactly that as an
     interval-union sweep: a new session starts iff the event's start
-    is >= the running max end of all prior intervals (strict-merge
-    rule matching st4's boundary semantics). State per open session is
+    is > the running max end of all prior intervals (an event exactly
+    at a session's end joins it, as in st4). State per open session is
     still one row; the watermark (0s) still evicts — the gap column
     changes merge arithmetic, not the state bound."""
     s = events_stream(spark, sf_dir)
@@ -958,8 +930,7 @@ def st21_dynamic_gap_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "user_id",
-            F.col("w.start").cast("timestamp_ntz").alias("session_start"),
-            F.col("w.end").cast("timestamp_ntz").alias("session_end"),
+            *window_bounds("w", "session_start", "session_end"),
             "n_events",
             "session_value",
         )
@@ -971,21 +942,19 @@ def st21_dynamic_gap_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     "st22_chained_stateful",
     oracle=f"""
 WITH q AS (
-  SELECT make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 900 * 900) * 1000000) AS q_start,
-         event_type, COUNT(*) AS n
+  SELECT {window_sql("ts", 900, "q_start")}, event_type, COUNT(*) AS n
   FROM events
   GROUP BY 1, 2
 ), h AS (
-  SELECT make_timestamp((CAST(FLOOR(EPOCH(q_start)) AS BIGINT) // 3600 * 3600) * 1000000) AS hour_start,
-         make_timestamp((CAST(FLOOR(EPOCH(q_start)) AS BIGINT) // 3600 * 3600 + 3600) * 1000000) AS hour_end,
+  SELECT {window_sql("q_start", 3600, "hour_start", "hour_end")},
          event_type,
          CAST(SUM(n) AS BIGINT) AS n_events,
          COUNT(*) AS n_active_quarters
   FROM q GROUP BY 1, 2, 3
-), wm AS (SELECT {_WM_US.format(delay_ms=0)} AS wm_us FROM events)
+)
 SELECT hour_start, event_type, n_events, n_active_quarters
-FROM h, wm
-WHERE EPOCH_US(hour_end) <= wm_us
+FROM h
+WHERE EPOCH_US(hour_end) <= {watermark_us_sql("events", 0)}
 """,
     tags=("ST2", "ST8", "S8"),
 )
@@ -1014,12 +983,7 @@ def st22_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").alias("n_events"),
             F.count(F.lit(1)).alias("n_active_quarters"),
         )
-        .select(
-            F.col("h.start").cast("timestamp_ntz").alias("hour_start"),
-            "event_type",
-            "n_events",
-            "n_active_quarters",
-        )
+        .select(*window_bounds("h", "hour_start"), "event_type", "n_events", "n_active_quarters")
     )
     return drain(hourly, "append")
 
@@ -1069,23 +1033,7 @@ def st23_foreach_row_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st24_outer_stream_stream_join",
-    oracle="""
-WITH v AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'view'),
-     p AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
-     wm AS (SELECT LEAST((EPOCH_MS((SELECT MAX(ts) FROM v)) - 3600000) * 1000,
-                         (EPOCH_MS((SELECT MAX(ts) FROM p)) - 3600000) * 1000) AS us)
-SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
-       v.ts AS view_ts, p.ts AS purchase_ts
-FROM v JOIN p
-  ON p.user_id = v.user_id AND p.ts > v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTE
-UNION ALL
-SELECT v.user_id, v.event_id, NULL, v.ts, NULL
-FROM v, wm
-WHERE NOT EXISTS (SELECT 1 FROM p
-                  WHERE p.user_id = v.user_id
-                    AND p.ts > v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTE)
-  AND EPOCH_US(v.ts) + 1800000000 <= wm.us
-""",
+    oracle=_view_purchase_join_sql("left_outer"),
     tags=("ST10", "J2", "S8"),
 )
 def st24_outer_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1155,16 +1103,11 @@ def st25_partitioned_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "st26_union_of_streams",
     oracle=f"""
-WITH w AS (
-  SELECT make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600 * 3600) * 1000000) AS window_start,
-         make_timestamp((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600 * 3600 + 3600) * 1000000) AS window_end,
-         event_type
-  FROM events
-  WHERE event_type IN ('view', 'purchase')
-), wm AS (SELECT {_WM_US.format(delay_ms=0)} AS wm_us FROM events WHERE event_type IN ('view', 'purchase'))
+WITH vp AS (SELECT * FROM events WHERE event_type IN ('view', 'purchase')),
+w AS (SELECT {window_sql("ts", 3600, "window_start", "window_end")}, event_type FROM vp)
 SELECT window_start, event_type, COUNT(*) AS n_events
-FROM w, wm
-WHERE EPOCH_US(window_end) <= wm_us
+FROM w
+WHERE EPOCH_US(window_end) <= {watermark_us_sql("vp", 0)}
 GROUP BY 1, 2
 """,
     tags=("ST2", "U1", "S8"),
@@ -1187,11 +1130,7 @@ def st26_union_of_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
         both.withWatermark("ts", "0 seconds")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
+        .select(*window_bounds("w", "window_start"), "event_type", "n_events")
     )
     return drain(agg, "append")
 

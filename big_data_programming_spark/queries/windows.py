@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_programming_spark.functions.canonical import DEC, dbl_sql, dsum, dsum_sql
+from big_data_programming_spark.operators.sessions import session_ids, session_ids_sql
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
@@ -205,30 +206,14 @@ def w6_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w7_session_features",
-    oracle="""
-WITH gaps AS (
-  SELECT event_id, user_id, ts,
-         EPOCH_US(ts) - EPOCH_US(LAG(ts) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id)) AS gap_us
-  FROM events
-),
-flagged AS (
-  SELECT *, CASE WHEN gap_us IS NULL OR gap_us > 30 * 60 * 1000000
-                 THEN 1 ELSE 0 END AS is_new
-  FROM gaps
-),
-sess AS (
-  SELECT *, SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-)
-SELECT event_id, user_id,
-       CAST(session_id AS BIGINT) AS session_id,
+    oracle=f"""
+WITH sess AS ({session_ids_sql(30 * 60 * 1_000_000)})
+SELECT event_id, user_id, session_id,
        CAST(ROW_NUMBER() OVER (PARTITION BY user_id, session_id
                                ORDER BY ts, event_id) AS BIGINT) AS event_idx,
        EPOCH_US(ts) - MIN(EPOCH_US(ts)) OVER
          (PARTITION BY user_id, session_id) AS us_since_start,
-       CASE WHEN is_new = 1 THEN NULL ELSE gap_us END AS us_since_prev
+       CASE WHEN is_new_session = 1 THEN NULL ELSE gap_us END AS us_since_prev
 FROM sess
 """,
     tags=("W1", "W2", "W4", "ST4"),
@@ -237,33 +222,18 @@ def w7_session_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-EVENT session-relative features — the sequence-model
     feature-generation twin of e3's per-session rollup: session
     ordinal, µs since session start, µs since the previous event
-    (NULL at session opens). Same gap-based session assignment as
-    operators/sessions.py (30-min gap, total order via event_id
-    tiebreak), then two more window passes over the SAME (user_id)
+    (NULL at session opens). The session assignment is the
+    session_ids kernel of operators/sessions.py (30-min gap, total
+    order via event_id tiebreak), then two more window passes over the SAME (user_id)
     partitioning — Catalyst reuses one exchange for all three, so the
     whole feature set costs a single shuffle at any scale. Time
     arithmetic stays in exact integer µs: no float seconds, so every
     engine agrees bit-for-bit."""
-    e = load(spark, sf_dir, "events")
-    order = [F.col("ts"), F.col("event_id")]
-    w_user = Window.partitionBy("user_id").orderBy(*order)
-    gap_us = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        F.lag("ts").over(w_user).cast("timestamp")
+    sess = session_ids(
+        load(spark, sf_dir, "events").select("event_id", "user_id", "ts"),
+        30 * 60 * 1_000_000,
     )
-    flagged = e.select("event_id", "user_id", "ts").withColumn(
-        "gap_us", gap_us
-    ).withColumn(
-        "is_new",
-        F.when(F.col("gap_us").isNull() | (F.col("gap_us") > 30 * 60 * 1_000_000), 1)
-        .otherwise(0),
-    )
-    sess = flagged.withColumn(
-        "session_id",
-        F.sum("is_new")
-        .over(w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("bigint"),
-    )
-    w_sess = Window.partitionBy("user_id", "session_id").orderBy(*order)
+    w_sess = Window.partitionBy("user_id", "session_id").orderBy("ts", "event_id")
     w_sess_all = Window.partitionBy("user_id", "session_id")
     return sess.select(
         "event_id",
@@ -274,7 +244,7 @@ def w7_session_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros(F.col("ts").cast("timestamp"))
             - F.min(F.unix_micros(F.col("ts").cast("timestamp"))).over(w_sess_all)
         ).alias("us_since_start"),
-        F.when(F.col("is_new") == 1, F.lit(None).cast("bigint"))
+        F.when(F.col("is_new_session") == 1, F.lit(None).cast("bigint"))
         .otherwise(F.col("gap_us"))
         .alias("us_since_prev"),
     )

@@ -52,3 +52,44 @@ def test_catalog_md_is_current():
 
     with open(CATALOG_MD) as f:
         assert f.read() == render()
+
+
+def test_canon_spellings_stay_in_their_home_modules():
+    """Each cross-engine canon is spelled in one module: the decimal
+    width and DuckDB's VARCHAR-routed cast in functions/canonical.py,
+    the window-start arithmetic and the final-watermark cutoff in
+    operators/sessions.py. Scans the string literals of the package's
+    code (docstrings may name a canon), case-insensitively."""
+    import ast
+    import pathlib
+
+    homes = {
+        "functions/canonical.py": ("DECIMAL(38,10)", "AS VARCHAR) AS DOUBLE"),
+        "operators/sessions.py": ("FLOOR(EPOCH(", "EPOCH_MS(MAX", "EPOCH_MS((SELECT MAX"),
+    }
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "big_data_programming_spark"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+        }
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+                continue
+            if id(node) in docstrings:
+                continue
+            text = node.value.upper()
+            found += [
+                (rel, node.lineno, spelling)
+                for home, spellings in homes.items()
+                if rel != home
+                for spelling in spellings
+                if spelling in text
+            ]
+    assert not found, found

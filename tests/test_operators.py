@@ -233,6 +233,111 @@ def test_sessionize_events_cover_all(spark):
     assert total == e.count()
 
 
+def test_event_time_twins_agree(spark):
+    """The event-time kernels of operators/sessions.py agree across
+    engines on the boundary cases: gaps of exactly 30:00, 30:00 - 1 us
+    and 30:00 + 1 us, a tie on ts (event_id breaks it), and timestamps
+    exactly on an hour boundary and 1 us before one.
+
+    - session_ids (Spark) against session_ids_sql (DuckDB) at 30:00 and
+      30:00 - 1 us, with the session ids pinned;
+    - session_ids_sql at 30:00 against Spark's own F.session_window,
+      which keeps an event exactly 30:00 after the previous one in its
+      session (st4 relies on this): same sessions, same counts;
+    - window_sql against F.window for 1 h tumbling and 1 h / 15 min
+      sliding windows, read through window_bounds;
+    - watermark_us_sql: max event time floored to ms, minus the delay."""
+    import datetime as dt
+
+    import duckdb
+
+    from big_data_programming_spark.operators.sessions import (
+        session_ids,
+        session_ids_sql,
+        watermark_us_sql,
+        window_bounds,
+        window_sql,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    us = dt.timedelta(microseconds=1)
+    gap = dt.timedelta(minutes=30)
+    rows = [
+        (1, 1, t0),  # on an hour boundary
+        (2, 1, t0 + gap),  # gap exactly 30:00
+        (3, 1, t0 + 2 * gap - us),  # 30:00 - 1 us; 1 us before 01:00
+        (4, 1, t0 + 3 * gap),  # 30:00 + 1 us
+        (5, 2, t0 + 4 * gap - us),  # 1 us before 02:00
+        (6, 2, t0 + 4 * gap),  # on 02:00, gap 1 us
+        (7, 2, t0 + 5 * gap),  # gap exactly 30:00
+        (8, 2, t0 + 5 * gap),  # tie on ts
+        (9, 3, t0 + 6 * gap + 999 * us),  # last event: ms floor matters
+    ]
+    events = spark.createDataFrame(
+        [(i, u, ts, float(i)) for i, u, ts in rows],
+        "event_id long, user_id long, ts timestamp_ntz, value double",
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events (event_id BIGINT, user_id BIGINT, ts TIMESTAMP, value DOUBLE)"
+    )
+    con.executemany(
+        "INSERT INTO events VALUES (?, ?, ?, ?)", [(i, u, ts, float(i)) for i, u, ts in rows]
+    )
+
+    gap_us = 30 * 60 * 1_000_000
+    cols = ["event_id", "gap_us", "is_new_session", "session_id"]
+    want_ids = {gap_us: [1, 1, 1, 2, 1, 1, 1, 1, 1], gap_us - 1: [1, 2, 2, 3, 1, 1, 2, 2, 1]}
+    for g, want in want_ids.items():
+        got = sorted(tuple(r) for r in session_ids(events, g).select(*cols).collect())
+        got_d = sorted(
+            con.execute(f"SELECT {', '.join(cols)} FROM ({session_ids_sql(g)})").fetchall()
+        )
+        assert got == got_d, (g, got, got_d)
+        assert [r[3] for r in got] == want, (g, got)
+
+    sessions = {
+        (r.user_id, r.start, r.n)
+        for r in events.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select("user_id", *window_bounds("w", "start"), "n")
+        .collect()
+    }
+    sessions_d = set(
+        con.execute(
+            f"SELECT user_id, MIN(ts), COUNT(*) FROM ({session_ids_sql(gap_us)}) "
+            "GROUP BY user_id, session_id"
+        ).fetchall()
+    )
+    assert sessions == sessions_d, (sessions, sessions_d)
+
+    windows = {}
+    sliding = (("1 hour", "15 minutes"), ["0", "900", "1800", "2700"])
+    for spec, offsets in ((("1 hour",), ["0"]), sliding):
+        windows[spec] = {
+            tuple(r)
+            for r in events.groupBy(F.window("ts", *spec).alias("w"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(*window_bounds("w", "ws", "we"), "n")
+            .collect()
+        }
+        bounds = " UNION ALL ".join(
+            f"SELECT {window_sql('ts', 3600, 'ws', 'we', offset=o)} FROM events" for o in offsets
+        )
+        got_d = set(
+            con.execute(f"SELECT ws, we, COUNT(*) FROM ({bounds}) GROUP BY 1, 2").fetchall()
+        )
+        assert windows[spec] == got_d, (spec, windows[spec], got_d)
+    # 00:59:59.999999 closes the first hour; 02:00:00 opens the third
+    assert {(t0, t0 + 2 * gap, 3), (t0 + 4 * gap, t0 + 6 * gap, 3)} <= windows[("1 hour",)]
+
+    last_ms_us = int((t0 + 6 * gap - dt.datetime(1970, 1, 1)).total_seconds()) * 1_000_000
+    for delay_ms in (0, 2 * 3600 * 1000):
+        assert con.execute(f"SELECT {watermark_us_sql('events', delay_ms)}").fetchone()[0] == (
+            last_ms_us - delay_ms * 1000
+        )
+
+
 # ---------- multimodal ----------
 
 
@@ -1672,8 +1777,10 @@ def test_decimal_canon_twins_agree(spark):
     cast gets 1 ulp wrong (289473120.03000003): only the VARCHAR route
     returns the correctly rounded double. A NULL is skipped, an
     all-NULL group sums (and averages) to NULL, negatives cancel
-    exactly. Non-integral values stay below 1e6 in magnitude, where
-    both engines' double->DECIMAL(38,10) conversions agree."""
+    exactly. Group ``e`` needs each row's double->DECIMAL(38,10) step
+    to round the shortest repr, as Spark's cast does (DuckDB's direct
+    cast turns -1234567.89 into -1234567.8899999998); group ``f`` holds
+    a magnitude below 1e-11, which rounds to 0 on both engines."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import duckdb
@@ -1691,6 +1798,8 @@ def test_decimal_canon_twins_agree(spark):
         ("b", 1, 1.5), ("b", 2, None), ("b", 3, 2.25),
         ("c", 1, None), ("c", 2, None),
         ("d", 1, -0.1), ("d", 2, -12345.67), ("d", 3, 0.3),
+        ("e", 1, -0.1), ("e", 2, -1234567.89), ("e", 3, 0.3),
+        ("f", 1, 6.4e-12), ("f", 2, 0.25),
     ]
 
     def dec(v: float) -> Decimal:

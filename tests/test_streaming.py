@@ -257,6 +257,52 @@ def test_late_rows_past_watermark_are_dropped(spark, tmp_path):
     assert all(n == 1 for n in got.values()), got
 
 
+def test_session_oracles_match_the_stream_at_exact_gaps(spark, tmp_path):
+    """st4 and st21 against their oracles on hand-built events at the
+    session boundaries the fixtures never hit (they hold no gap of a
+    whole number of seconds): Spark's session_window keeps an event
+    that arrives exactly at a session's end (30:00 after the last
+    purchase; 10:00 after a view) and opens a new session 1 us later.
+    User 3's late event moves the watermark past every other session."""
+    import datetime as dt
+    import shutil
+
+    import duckdb
+
+    from big_data_programming_spark.registry import catalog
+    from big_data_programming_spark.sources.schemas import SCHEMAS
+    from tests.conftest import duck_result
+
+    t0 = dt.datetime(2024, 1, 1)
+    us = dt.timedelta(microseconds=1)
+    minute = dt.timedelta(minutes=1)
+    rows = [
+        (1, 1, t0, "purchase"),
+        (2, 1, t0 + 30 * minute, "purchase"),  # exactly at the end: joins
+        (3, 1, t0 + 60 * minute + us, "purchase"),  # 1 us past it: new
+        (4, 2, t0, "view"),
+        (5, 2, t0 + 10 * minute, "view"),  # st21: a view's end is +10:00
+        (6, 2, t0 + 20 * minute + us, "view"),
+        (7, 3, t0 + 600 * minute, "purchase"),
+    ]
+    d = tmp_path / "parts"
+    spark.createDataFrame(
+        [(i, ts, u, kind, 1.0, None) for i, u, ts, kind in rows], SCHEMAS["events"]
+    ).coalesce(1).write.parquet(str(d))
+    (part,) = glob.glob(f"{d}/part-*.parquet")
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    shutil.copy(part, sf_dir / "events.parquet")
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')")
+    queries = catalog()
+    for name, n_sessions in (("st4_session_window", 3), ("st21_dynamic_gap_session", 4)):
+        got = spark_result(queries[name].fn(spark, str(sf_dir)))
+        assert got == duck_result(con, queries[name].oracle), name
+        assert len(got[1]) == n_sessions, (name, got)
+
+
 def test_streaming_query_listener_reports_progress(spark):
     """Operational surface: StreamingQueryListener must deliver
     start/progress/termination events with real row counts — the hook
