@@ -6,6 +6,7 @@ from big_data_programming_spark.functions.canonical import (  # noqa: F401
     davg,
     davg_sql,
     dbl_sql,
+    dec_sql,
     dsum,
     dsum_sql,
 )

@@ -22,7 +22,7 @@ which differs for fractional values from ~1e6 up (-1234567.89 becomes
 parses a scientific-notation string whose digits all lie past the 11th
 decimal as ±1e-10 when its first digit is 5-9 (6.4e-12 → 1e-10), so
 magnitudes below 1e-11, which round to 0, are cast as 0
-(:func:`dsum_sql`). The decimal SUM is exact integer arithmetic —
+(:func:`dec_sql`). The decimal SUM is exact integer arithmetic —
 associative, order-free. decimal→double is correctly rounded on Spark
 (BigDecimal.doubleValue) but DuckDB's direct DECIMAL→DOUBLE cast is
 occasionally 1 ulp off (DuckDB 1.0.0: 289473120.0 + 0.03 comes back as
@@ -32,9 +32,11 @@ Net: bit-identical doubles on both sides, at any partition count.
 
 Four kernels spell the canon, one per engine and aggregate:
 :func:`dsum` / :func:`davg` (Spark Columns) and :func:`dsum_sql` /
-:func:`davg_sql` (DuckDB SQL). None of them aliases its result, so each
-can sit inside ``/ COUNT(…)``, ``ROUND(…)`` or a window frame; the
-caller adds the alias. This module is the only one that spells the
+:func:`davg_sql` (DuckDB SQL); :func:`dec_sql`, the DuckDB per-row
+cast under :func:`dsum_sql`, also serves oracles that cast without
+summing on the spot. None of them aliases its result, so each can sit
+inside ``/ COUNT(…)``, ``ROUND(…)`` or a window frame; the caller adds
+the alias. This module is the only one that spells the
 decimal width (:data:`DEC`) or the VARCHAR route.
 
 Cost: decimal aggregation is slower than double aggregation, but it
@@ -77,13 +79,19 @@ def dbl_sql(expr: str) -> str:
     return f"CAST(CAST({expr} AS VARCHAR) AS DOUBLE)"
 
 
+def dec_sql(expr: str) -> str:
+    """DuckDB twin of Spark's per-row ``CAST(x AS DECIMAL(38,10))`` of
+    a double: through VARCHAR, so DuckDB rounds the shortest repr as
+    Spark's cast does; magnitudes below 1e-11, which that parse can
+    round up, are cast as 0."""
+    return f"CASE WHEN ABS({expr}) < 1e-11 THEN 0 ELSE CAST(CAST({expr} AS VARCHAR) AS {DEC}) END"
+
+
 def dsum_sql(expr: str, over: str | None = None) -> str:
     """DuckDB twin of :func:`dsum`; ``over`` is the window clause body
-    (``''`` for ``OVER ()``). Each row reaches DECIMAL through VARCHAR,
-    so DuckDB rounds the shortest repr as Spark's cast does; magnitudes
-    below 1e-11, which that parse can round up, are cast as 0."""
-    dec = f"CASE WHEN ABS({expr}) < 1e-11 THEN 0 ELSE CAST(CAST({expr} AS VARCHAR) AS {DEC}) END"
-    s = f"SUM({dec})"
+    (``''`` for ``OVER ()``). Each row reaches DECIMAL by
+    :func:`dec_sql`."""
+    s = f"SUM({dec_sql(expr)})"
     return dbl_sql(s if over is None else f"{s} OVER ({over})")
 
 

@@ -10,10 +10,10 @@ small-world-ish similarity graphs dedup produces.
 
 100 TB posture: each round is one equi-join (edges ⋈ labels, shuffled
 on node id) + one min-aggregate — no driver-side graph, state is one
-(node, label) row per node. Checkpointing every round truncates the
-lineage that iterative DataFrame algorithms otherwise accumulate
-(Spark re-plans the whole chain each action without it). The loop's
-only driver traffic is the converged? count — a scalar.
+(node, label) row per node. Both operators are step functions run by
+operators/graph.py's ``fixpoint``, which cuts every round's lineage
+and reads the round's changed-row count off that same cut job — the
+loop's only driver traffic is that scalar.
 
 The exact twin is a recursive CTE in DuckDB (see
 CLUSTERS_ORACLE_SQL), so even this iterative operator is
@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from big_data_programming_spark.operators.graph import cut, fixpoint
 
 
 def connected_components(
@@ -37,50 +39,33 @@ def connected_components(
     Returns (node, component) where component = min node id reachable.
     Deterministic: min() is order-free.
     """
-    spark = edges.sparkSession
-    sym = (
+    sym = cut(
+        # every propagation round joins sym; without the cut each
+        # round would re-execute the (expensive) upstream
+        # pair-generation pipeline that produced the edges
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        # materialize once: every propagation round joins sym, and
-        # without the cut each round would re-execute the (expensive)
-        # upstream pair-generation pipeline that produced the edges
-        .localCheckpoint(eager=True)
     )
-    nodes = sym.select(F.col("u").alias("node")).distinct()
-    labels = nodes.withColumn("component", F.col("node"))
 
-    for _ in range(max_iterations):
-        # neighbor labels: for each node u, the labels of all v adjacent
+    def propagate(labels: DataFrame) -> DataFrame:
+        # neighbor labels: for each node u, the min label of all v adjacent
         neighbor = (
-            sym.join(labels.withColumnRenamed("node", "v"), "v")
+            sym.join(labels.select(F.col("node").alias("v"), "component"), "v")
             .groupBy("u")
             .agg(F.min("component").alias("nbr_min"))
         )
-        new_labels = (
-            labels.join(neighbor, labels.node == neighbor.u, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-            )
+        return labels.join(neighbor, labels.node == neighbor.u, "left").select(
+            "node",
+            F.least(
+                F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
+            ).alias("component"),
+            (F.col("nbr_min") < F.col("component")).alias("moved"),
         )
-        # checkpoint-via-materialization: cut lineage so round k+1 does
-        # not re-execute rounds 1..k (localCheckpoint avoids needing a
-        # checkpoint dir; on a cluster use reliable checkpointing)
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+
+    labels = sym.select(F.col("u").alias("node")).distinct().withColumn("component", F.col("node"))
+    labels, _ = fixpoint(labels, propagate, max_iterations, changed=F.col("moved"))
+    return labels.select("node", "component")
 
 
 def dedup_clusters(pairs: DataFrame) -> DataFrame:
@@ -163,12 +148,12 @@ def connected_components_two_phase(
     fraction of the data. On dedup similarity graphs (small diameter)
     both converge fast; this variant is the insurance for the
     pathological chain-shaped components real corpora occasionally
-    contain. Per-round localCheckpoint cuts iterative lineage exactly
-    as in connected_components.
+    contain. A round changed nothing when its edge set equals the
+    previous one: each step groups its new edges (``live`` = 1) with
+    the previous ones, so an edge seen once was added or dropped.
     """
-    e = _canon_edges(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    e = e.localCheckpoint(eager=True)
-    for _ in range(max_iterations):
+    def contract(state: DataFrame) -> DataFrame:
+        e = state.filter(F.col("live") == 1).select("u", "v")
         # large-star: group over BOTH orientations; m = min(Γ(u) ∪ {u});
         # larger neighbors v > u re-attach as (v, m).
         sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -187,14 +172,17 @@ def connected_components_two_phase(
                 j.select("u", F.col("m").alias("v"))
             )
         )
-        small = small.localCheckpoint(eager=True)
-        changed = (
-            small.unionAll(e).groupBy("u", "v").agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") == 1).limit(1).count()
+        return (
+            small.withColumn("live", F.lit(1))
+            .unionAll(e.withColumn("live", F.lit(0)))
+            .groupBy("u", "v")
+            .agg(F.max("live").alias("live"), F.count(F.lit(1)).alias("seen"))
         )
-        e = small
-        if changed == 0:
-            break
+
+    e = _canon_edges(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    e = cut(e.withColumn("live", F.lit(1)))
+    e, _ = fixpoint(e, contract, max_iterations, changed=F.col("seen") == 1)
+    e = e.filter(F.col("live") == 1)
     # converged: e is a star forest (child, root). Roots label themselves.
     return (
         e.select(F.col("u").alias("node"), F.col("v").alias("component"))

@@ -8,18 +8,74 @@ compositions — equi-joins and hash aggregates only, no driver-side
 graph object, no library dependency — so they inherit Spark's
 partitioning/AQE behavior and scale like any other join pipeline.
 
-Determinism across engines: per-node double sums are cast to
-``DECIMAL(38,10)`` before aggregation (functions/canonical.py
-rationale) so every PageRank iteration is bit-identical to the DuckDB
-oracle's unrolled-CTE replay at any partition count.
+Iteration: :func:`cut` is the package's one lineage cut and
+:func:`fixpoint` its one round loop, which runs the step function of
+every iterative operator (CC in operators/clustering.py, PageRank,
+k-core, label propagation, l4m3's BPE training).
+
+Determinism across engines: per-node double sums go through the
+decimal canon (``dsum``, functions/canonical.py) so every PageRank
+iteration is bit-identical to the DuckDB oracle's unrolled-CTE replay
+at any partition count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.functions.canonical import DEC, dsum_sql
+from big_data_programming_spark.functions.canonical import dsum, dsum_sql
+
+
+def cut(df: DataFrame, **metrics: Column):
+    """Cut ``df``'s lineage: later consumers (each round of a loop, each
+    alias of a self-join) read its materialized rows instead of
+    re-executing or re-planning it.
+
+    A cut runs a job of its own only when it must. Without ``metrics``
+    it is lazy: adaptive execution runs the shuffle stages above the
+    cut while it is built, and the last stage runs in the first job
+    that reads it. With ``metrics`` (name → aggregate Column) it runs
+    at once and returns ``(frame, values)``: the aggregates ride that
+    job through a fresh unnamed :class:`Observation` (so two builds of
+    one query never share an observation key), read after it returns.
+    Either way building a query that cuts executes part of it, so scan
+    audits must wrap construction.
+
+    ``localCheckpoint`` rows live in executor storage, are released by
+    driver GC rather than ``catalog.clearCache`` and do not survive
+    executor loss: at cluster scale this is the one call to turn into a
+    reliable ``checkpoint``."""
+    obs = Observation() if metrics else None
+    if metrics:
+        df = df.observe(obs, *(c.alias(k) for k, c in metrics.items()))
+    out = df.localCheckpoint(eager=bool(metrics))
+    return (out, obs.get) if metrics else out
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
+    changed: Column | None = None,
+) -> tuple[DataFrame, int]:
+    """Iterate ``state = cut(step(state))``; return ``(state, rounds)``.
+    Without ``changed`` it runs exactly ``max_rounds`` rounds. With it
+    (a boolean Column over the step's output) its true-count rides
+    each round's cut job, and the loop stops after the first round in
+    which it is 0, or after ``max_rounds``."""
+    rounds = 0
+    while rounds < max_rounds:
+        rounds += 1
+        if changed is None:
+            state = cut(step(state))
+        else:
+            state, seen = cut(step(state), changed=F.count_if(changed))
+            if seen["changed"] == 0:
+                break
+    return state, rounds
 
 
 def canonical_undirected(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -101,22 +157,19 @@ def triangle_counts(
     hottest node; triangle SETS are orientation-invariant, so the
     id-ordered oracle twin (TRIANGLES_ORACLE_SQL) is unchanged.
     """
-    # TWO materialization cuts, and the first one is load-bearing:
-    # the canonical edge list is checkpointed BEFORE degree_oriented,
-    # because orientation references the edges twice more (the degree
-    # aggregate + the attach joins) on top of the three wedge-join
-    # aliases — without the cut every reference re-executes the full
-    # upstream pipeline that produced the edges (pair generation is
-    # far more expensive than the edge list is large; measured r10 at
-    # sf0.1: orienting the UNCUT relation re-ran jaccard_pairs per
-    # reference and filled the disk with shuffle spill before ENOSPC).
-    # The second cut materializes the small oriented relation once for
-    # the three self-join aliases. On a cluster these are cached /
-    # checkpointed tables; locally localCheckpoint serves the same cut.
-    # NOTE: eager=True means CONSTRUCTING this DataFrame executes the
-    # upstream pipeline (same caveat as label_propagation below).
-    e0 = canonical_undirected(edges, src, dst).localCheckpoint(eager=True)
-    e = degree_oriented(e0).localCheckpoint(eager=True)
+    # TWO cuts, and the first one is load-bearing: the canonical edge
+    # list is cut BEFORE degree_oriented, because orientation
+    # references the edges twice more (the degree aggregate + the
+    # attach joins) on top of the three wedge-join aliases — without
+    # the cut every reference re-executes the full upstream pipeline
+    # that produced the edges (pair generation is far more expensive
+    # than the edge list is large; measured r10 at sf0.1: orienting
+    # the UNCUT relation re-ran jaccard_pairs per reference and filled
+    # the disk with shuffle spill before ENOSPC). The second cut
+    # materializes the small oriented relation once for the three
+    # self-join aliases, and counts it for the broadcast gate below.
+    e0 = cut(canonical_undirected(edges, src, dst))
+    e, seen = cut(degree_oriented(e0), n_edges=F.count(F.lit(1)))
     ab, ac = e.alias("ab"), e.alias("ac")
     bc = e.select(F.col("u").alias("_bu"), F.col("v").alias("_bv"))
     # Wedge targets ordered by the SAME (degree, id) rank used to
@@ -133,9 +186,8 @@ def triangle_counts(
     # duplicate clique, not a plan artifact). So the wedge stream must
     # never touch an exchange: (1) the closing-edge side is broadcast
     # while the ORIENTED EDGE LIST fits the broadcast regime
-    # (edge count <= broadcast_edge_limit — e is already checkpointed,
-    # so the gate's count() reads the materialized relation, no
-    # recompute), letting wedges probe an in-memory hash map-side;
+    # (edge count <= broadcast_edge_limit — counted by e's own cut
+    # job), letting wedges probe an in-memory hash map-side;
     # beyond the bound the plan DEGRADES rather than OOMs: the
     # closing join runs shuffled (Suri–Vassilvitskii), where
     # orientation still bounds total wedge volume under power-law
@@ -149,7 +201,7 @@ def triangle_counts(
     # r9 id-ordered shuffled plan died >20 min into one straggler
     # task; the r10 shuffled-oriented plan spilled the 1.9e9-row wedge
     # exchange to ENOSPC; this plan streams it.
-    closing = F.broadcast(bc) if e.count() <= broadcast_edge_limit else bc
+    closing = F.broadcast(bc) if seen["n_edges"] <= broadcast_edge_limit else bc
     tri = ab.join(ac, (F.col("ab.u") == F.col("ac.u")) & rank_lt).join(
         closing,
         (F.col("_bu") == F.col("ab.v")) & (F.col("_bv") == F.col("ac.v")),
@@ -163,7 +215,7 @@ def triangle_counts(
 
 
 #: Two DuckDB materialization decisions mirror the Spark operator's two
-#: localCheckpoint cuts (both from round-10 sf0.1 measurement):
+#: lineage cuts (both from round-10 sf0.1 measurement):
 #: (1) ``e AS MATERIALIZED`` — the edge list is referenced three times
 #: by the triangle joins, and DuckDB otherwise INLINES the full
 #: upstream edge pipeline per reference (for g1 that is the whole
@@ -213,52 +265,38 @@ def pagerank(
     """Fixed-iteration PageRank over a directed edge list.
 
     Per iteration: each node splits its rank over its out-edges, each
-    node collects 0.15/N + 0.85 * (incoming contributions) — one
-    equi-join (ranks ⋈ edges on src) plus one hash aggregate (sum by
-    dst) per round, ranks checkpointed so round k+1 doesn't re-execute
-    1..k. Dangling-node mass is dropped (the common simplification;
-    redistribute-uniformly is one extra scalar broadcast if needed) —
-    the oracle replays the identical choice. Contribution sums go
-    through DECIMAL(38,10) so each iteration's doubles are
-    order-independent and bit-equal to the unrolled DuckDB CTE.
+    node collects 0.15/N + 0.85 * (incoming contributions) — a sparse
+    matrix–vector product (EDBT 2021's linear algebra over big data):
+    one equi-join (ranks ⋈ out-degree-carrying edges on src) plus one
+    hash aggregate (sum by dst, over a zero row per node). Dangling
+    mass is dropped (the common simplification) — the oracle replays
+    the identical choice. Contribution sums go through the decimal
+    canon, so each iteration is bit-equal to the unrolled DuckDB CTE.
     """
-    # Materialize the static relations once — every iteration joins
-    # dedges and outdeg, and without the cut each round would re-run
-    # the upstream pipeline that produced the edge list.
-    dedges = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # Cut the static relations once, or each round would re-run the
+    # upstream pipeline that produced the edge list.
+    dedges = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    wedges = cut(dedges.withColumn("outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))))
+    nodes, seen = cut(
+        wedges.select(F.col("src").alias("node"))
+        .unionAll(wedges.select(F.col("dst").alias("node")))
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
-    nodes = (
-        dedges.select(F.col("src").alias("node"))
-        .unionAll(dedges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_total = nodes.count()
-    outdeg = dedges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).localCheckpoint(eager=True)
-    ranks = nodes.withColumn("r", F.lit(1.0 / n_total))
-    base = (1.0 - damping) / n_total
-    for _ in range(iterations):
-        contribs = (
-            ranks.join(outdeg, ranks.node == outdeg.src)
-            .join(dedges, "src")
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("r") / F.col("outdeg")).cast(DEC).alias("contrib"),
-            )
+    base = (1.0 - damping) / seen["n"]
+    zeros = nodes.select("node", F.lit(0.0).alias("c"))
+
+    def spread(ranks: DataFrame) -> DataFrame:
+        contribs = wedges.join(ranks.withColumnRenamed("node", "src"), "src").select(
+            F.col("dst").alias("node"), (F.col("r") / F.col("outdeg")).alias("c")
+        )
+        return (
+            contribs.unionAll(zeros)
             .groupBy("node")
-            .agg(F.sum("contrib").cast("double").alias("s"))
+            .agg((F.lit(base) + F.lit(damping) * dsum("c")).alias("r"))
         )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
+
+    ranks, _ = fixpoint(nodes.withColumn("r", F.lit(1.0 / seen["n"])), spread, iterations)
     return ranks.select("node", F.col("r").alias("pagerank"))
 
 
@@ -311,30 +349,30 @@ def kcore_peel(edges: DataFrame, k: int) -> tuple[DataFrame, int]:
     surviving (node, degree) frame and the number of peel rounds
     executed — the round count is what tests pin against the oracle's
     fixed unroll depth (g4's docstring contract). Each round is one
-    degree aggregate + two semi-joins of the edge list against
-    survivors; ``localCheckpoint`` cuts lineage per round (the
-    l2d/pagerank iterative discipline). Rounds are bounded by peeling
-    depth (max degree), not graph diameter."""
-    edges = edges.localCheckpoint()
-    sym = edges.select(F.col("doc_a").alias("node")).unionAll(
-        edges.select(F.col("doc_b").alias("node"))
-    )
-    deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
-    rounds = 0
-    while True:
-        keep = deg.filter(F.col("degree") >= k).select("node").localCheckpoint()
-        if keep.count() == deg.count():
-            break
-        rounds += 1
-        edges = (
+    degree aggregate over two semi-joins of the edge list against
+    survivors; the count of nodes still below ``k`` rides its cut job.
+    Rounds are bounded by peeling depth (max degree), not diameter."""
+    edges = cut(edges)
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return (
+            e.select(F.col("doc_a").alias("node"))
+            .unionAll(e.select(F.col("doc_b").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("degree"))
+        )
+
+    def peel(deg: DataFrame) -> DataFrame:
+        keep = deg.filter(F.col("degree") >= k).select("node")
+        return degrees(
             edges.join(keep.withColumnRenamed("node", "doc_a"), "doc_a", "left_semi")
             .join(keep.withColumnRenamed("node", "doc_b"), "doc_b", "left_semi")
-            .localCheckpoint()
         )
-        sym = edges.select(F.col("doc_a").alias("node")).unionAll(
-            edges.select(F.col("doc_b").alias("node"))
-        )
-        deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("degree")).localCheckpoint()
+
+    low = F.col("degree") < k
+    deg, seen = cut(degrees(edges), low=F.count_if(low), n=F.count(F.lit(1)))
+    # each productive peel drops a node, so n rounds always reach the fixpoint
+    deg, rounds = fixpoint(deg, peel, seen["n"], changed=low) if seen["low"] else (deg, 0)
     return (
         deg.filter(F.col("degree") >= k).select(
             F.col("node").alias("doc_id"), F.col("degree").alias("core_degree")
@@ -356,43 +394,30 @@ def label_propagation(
     cluster path), the mode vote respects local density — a thin
     bridge edge between two dense near-dup cliques does not merge
     them. Fixed ``rounds`` keeps the oracle replayable as unrolled
-    CTEs; the mode is computed in two exact stages (max count per
-    node, then min label among the max-count labels) so the winner is
-    identical in both engines for ANY label domain — a single
-    cnt·C − label score would silently invert the vote once labels
-    exceed C (review catch: 64-bit hash ids would have).
+    CTEs; the mode is the min (-count, label) struct per node — the
+    oracle's two exact stages, max count then min label — identical in
+    both engines for ANY label domain (a single cnt·C − label score
+    inverts the vote once labels exceed C: 64-bit hash ids would).
 
     Scale: each round is one (node-keyed) join + two hash aggregates
-    over the edge list; labels are localCheckpointed per round to cut
-    lineage (the l2d/kcore discipline). The undirected edge relation
-    is eagerly localCheckpointed ONCE up front — the same idiom as
-    triangle_counts/pagerank/kcore_peel, applied here in round 9
-    after the executed-scan audit caught this operator re-deriving
-    its edge input per round (g5 feeds it jaccard_pairs: 12 corpus
-    scans executed, the all-pairs candidate join recomputed in every
-    round's consumer instead of once). Returns (node, label)."""
+    over the edge list, one :func:`fixpoint` round. The undirected
+    edge relation is cut ONCE up front (round 9: the executed-scan
+    audit caught g5 re-running jaccard_pairs in every round, 12 corpus
+    scans). Returns (node, label)."""
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    und = und.filter(F.col("a") != F.col("b")).distinct().localCheckpoint(
-        eager=True
-    )
-    labels = (
-        und.select(F.col("a").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for _ in range(rounds):
+    und = cut(und.filter(F.col("a") != F.col("b")).distinct())
+
+    def vote(labels: DataFrame) -> DataFrame:
         nl = und.join(
             labels.select(F.col("node").alias("b"), "label"), "b"
         ).select(F.col("a").alias("node"), F.col("label").alias("nl"))
         votes = nl.groupBy("node", "nl").agg(F.count(F.lit(1)).alias("cnt"))
-        maxc = votes.groupBy("node").agg(F.max("cnt").alias("mc"))
-        labels = (
-            votes.join(maxc, "node")
-            .filter(F.col("cnt") == F.col("mc"))
-            .groupBy("node")
-            .agg(F.min("nl").alias("label"))
-            .localCheckpoint(eager=False)
-        )
+        winner = F.min(F.struct((-F.col("cnt")).alias("c"), F.col("nl").alias("nl")))
+        return votes.groupBy("node").agg(winner["nl"].alias("label"))
+
+    labels = und.select(F.col("a").alias("node")).distinct().withColumn("label", F.col("node"))
+    labels, _ = fixpoint(labels, vote, rounds)
     return labels
 
 
@@ -403,8 +428,8 @@ def label_propagation_oracle_sql(edges_sql: str, rounds: int = 4) -> str:
     referenced once per unrolled round, and DuckDB otherwise INLINES
     the full upstream edge pipeline per reference — for g5 that is
     the whole jaccard-pairs computation, 5+ times over. This is the
-    oracle-side mirror of the Spark operator's own eager edge
-    checkpoint (the r9 fix above) and of the g1/g4 oracles'
+    oracle-side mirror of the Spark operator's own edge cut (the r9
+    fix above) and of the g1/g4 oracles'
     ``AS MATERIALIZED`` hygiene; without it the r11 sf0.1 spot-run
     died spilling >79 GB of DuckDB temp to disk (ENOSPC, measured)
     after r9's attempt expired a 13-minute box."""

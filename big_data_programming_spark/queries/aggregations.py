@@ -20,6 +20,7 @@ from big_data_programming_spark.functions.canonical import (
     davg,
     davg_sql,
     dbl_sql,
+    dec_sql,
     dsum,
     dsum_sql,
 )
@@ -58,7 +59,7 @@ def a2_global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT o_orderpriority,
        COUNT(DISTINCT o_custkey) AS n_customers,
-       {dbl_sql(f'SUM(DISTINCT CAST(o_totalprice AS {DEC}))')} AS sum_distinct_price
+       {dbl_sql(f'SUM(DISTINCT {dec_sql("o_totalprice")})')} AS sum_distinct_price
 FROM orders
 GROUP BY o_orderpriority
 """,

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from big_data_programming_spark.operators.dedup import jaccard_pairs, overlap_oracle_sql, tokens_sql
 from big_data_programming_spark.operators.graph import (
     TRIANGLES_ORACLE_SQL,
+    cut,
     kcore_peel,
     label_propagation,
     label_propagation_oracle_sql,
@@ -104,21 +105,15 @@ def g3_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative operators: operators/clustering.py cuts lineage per
     round, which a single recursive plan cannot).
 
-    The pair relation is eagerly localCheckpointed before entering the
-    SQL: ``{edges}`` appears THREE times in the CTE (the seed MIN, both
+    The pair relation is cut (operators/graph.py:cut) before entering
+    the SQL: ``{edges}`` appears THREE times in the CTE (the seed MIN, both
     arms of the undirected union) and the undirected arm re-executes
     once per recursion level, so an un-cut relation re-runs the full
     jaccard inverted-index pipeline 5+ times — the exact mistake g1's
     r10 rewrite fixed one file over (operators/graph.py e0 cut), and
-    the dominant share of g3's 545 s r10 sf0.1 spot-run. On a cluster
-    the cut is a cached/checkpointed table feeding the recursion.
-    CONSTRUCTION EXECUTES (g5's documented caveat now applies here
-    too): building this DataFrame runs the jaccard join; scan audits
-    must use executed_parquet_scan_count_during."""
-    pairs = (
-        jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.8)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+    the dominant share of g3's 545 s r10 sf0.1 spot-run."""
+    pairs = cut(
+        jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.8).select("doc_a", "doc_b")
     )
     return spark.sql(_BFS_SQL.format(edges="{edges}"), edges=pairs)
 
@@ -130,8 +125,8 @@ def g3_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def g2_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-iteration PageRank over the supplier→customer fulfillment
-    graph. Iterative join+aggregate per round with checkpointed
-    lineage (operators/graph.py:pagerank); contribution sums ride the
+    graph. One join + one aggregate per round, lineage cut per round
+    (operators/graph.py:pagerank); contribution sums ride the
     decimal canon, so all 8 iterations of doubles are bit-identical
     to the oracle's unrolled CTE at any partition count."""
     li = load(spark, sf_dir, "lineitem")
@@ -190,8 +185,8 @@ def g4_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     cliques (template farms, mirror sets) from incidental pairwise
     matches, and the standard preprocessing cut before community
     detection. Each round is one degree aggregate + two semi-joins of
-    the edge list against survivors, with localCheckpoint cutting
-    lineage per round (the l2d/g2 iterative discipline); rounds are
+    the edge list against survivors, one ``fixpoint`` round each
+    (the l2d/g2 iterative discipline); rounds are
     bounded by peeling depth, not diameter. The Spark side iterates
     to a TRUE fixpoint; the oracle unrolls six rounds, and
     tests/test_operators.py::test_kcore_converges_within_oracle_unroll
@@ -227,21 +222,15 @@ def g5_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round one node-keyed join + two map-side-combined
     aggregates over the edge list; fixed rounds (LPA converges in a
-    few rounds on clique-like dedup graphs), localCheckpoint per round
-    cuts lineage. The unrolled-CTE oracle replays the identical
-    two-stage mode (max count, then min label among maxima — exact
-    for any label domain).
+    few rounds on clique-like dedup graphs), lineage cut per round.
+    The unrolled-CTE oracle replays the identical mode (max count,
+    then min label among maxima — exact for any label domain).
 
-    CONSTRUCTION EXECUTES (r9 advice, documented): the r9 edge-relation
-    fix eagerly localCheckpoints the undirected edge list
-    (operators/graph.py:label_propagation), so merely BUILDING this
-    DataFrame runs the full jaccard_pairs join — plan-only consumers
-    (catalog plan loops, dtype_guard, gen_catalog) pay real execution
-    at fn() time, and scan audits of this query (and any future
-    eager-checkpoint operator: g1 triangle_counts shares the idiom)
-    must use executed_parquet_scan_count_during, not the plain
-    after-the-fact helper, or they silently miss the
-    construction-time scans."""
+    CONSTRUCTION EXECUTES (r9 advice): the undirected edge list is cut
+    (operators/graph.py:cut), so BUILDING this DataFrame runs the
+    jaccard_pairs join's shuffle stages; scan audits of this query and
+    of every other query that cuts must use
+    executed_parquet_scan_count_during."""
     docs = load(spark, sf_dir, "documents")
     edges = jaccard_pairs(docs, threshold=0.8).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")

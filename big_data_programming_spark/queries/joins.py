@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_programming_spark.functions.canonical import DEC, dsum, dsum_sql
+from big_data_programming_spark.functions.canonical import DEC, dec_sql, dsum, dsum_sql
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 from big_data_programming_spark.streaming.harness import scratch_dir
@@ -304,7 +304,7 @@ WITH counts AS (
   FROM lineitem GROUP BY 1
 ), qtys AS (
   SELECT NULLIF(l_linenumber % 4, 0) AS kn,
-         CAST(SUM(CAST(l_quantity AS {DEC})) AS BIGINT) AS total_qty
+         CAST(SUM({dec_sql('l_quantity')}) AS BIGINT) AS total_qty
   FROM lineitem WHERE l_returnflag = 'R' GROUP BY 1
 )
 SELECT c.kn, c.n_lines, q.total_qty

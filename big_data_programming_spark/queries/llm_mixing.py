@@ -32,6 +32,7 @@ from big_data_programming_spark.operators.dedup import (
     simhash_packed,
     simhash_sql,
 )
+from big_data_programming_spark.operators.graph import cut
 from big_data_programming_spark.operators.similarity import (
     as_double_array,
     cosine_similarity_col,
@@ -307,10 +308,8 @@ def lm5_incremental_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     # checkpoint cuts that to a single tokenize+aggregate pass over a
     # (doc_id, sig) table of 16 bytes/row; every downstream join reads
     # the materialized rows. Per-call, inside the timed region — not
-    # cross-run caching. localCheckpoint pins executor storage and is
-    # non-fault-tolerant; a cluster job with lineage-recovery needs
-    # would use a reliable checkpoint dir instead (graph.py:115).
-    sigs = _simhash_int(docs).localCheckpoint(eager=True)
+    # cross-run caching.
+    sigs = cut(_simhash_int(docs))
     banded = sigs.select(
         "doc_id",
         "sig",

@@ -14,6 +14,8 @@ from big_data_programming_spark.functions.canonical import (
     DEC,
     davg,
     davg_sql,
+    dbl_sql,
+    dec_sql,
     dsum,
     dsum_sql,
 )
@@ -43,6 +45,7 @@ from big_data_programming_spark.operators.dedup import (
     normalize_text,
     simhash,
 )
+from big_data_programming_spark.operators.graph import cut, fixpoint
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
 
@@ -156,7 +159,7 @@ def l4c_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang", "token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # Eager lineage cut (the g1/g3/l5j idiom): tf and df both consume
+    # Lineage cut (the g1/g3/l5j idiom): tf and df both consume
     # this vocab-sized table, and WITHOUT the cut the optimizer's
     # column pruning specializes each consumer's copy of the aggregate
     # (tf keeps term_freq, df keeps slice_docs), so the subtrees stop
@@ -164,19 +167,16 @@ def l4c_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenized twice (measured: 3 executed scans / 2 Generate nodes).
     # Materializing ≈|vocab|×|langs| rows once makes the single corpus
     # pass structural: 2 executed scans, runtime-pinned in
-    # tests/test_plans.py. eager=True is load-bearing: a lazy checkpoint
-    # only materializes AFTER the first job, so the first action would
-    # still compute both consumer branches from lineage (3 scans).
-    # Costs (r11 advisor, accepted): plan-only consumers (explain,
-    # profilers) pay the corpus pass at construction, and the
-    # checkpointed blocks are released by driver GC, not
-    # catalog.clearCache — acceptable for a vocab-sized table; a
-    # cluster job with fault-tolerance needs would use a reliable
-    # checkpoint dir instead (graph.py idiom).
-    lang_token = per_doc.groupBy("lang", "token").agg(
-        F.sum("cnt").alias("term_freq"),
-        F.count(F.lit(1)).alias("slice_docs"),
-    ).localCheckpoint(eager=True)
+    # tests/test_plans.py. The aggregate's shuffle stage runs while the
+    # cut is built, so both consumers read that one corpus pass.
+    # Accepted cost (r11 advisor): plan-only consumers (explain,
+    # profilers) pay the corpus pass at construction.
+    lang_token = cut(
+        per_doc.groupBy("lang", "token").agg(
+            F.sum("cnt").alias("term_freq"),
+            F.count(F.lit(1)).alias("slice_docs"),
+        )
+    )
     tf = lang_token.select("lang", "token", "term_freq")
     df = lang_token.groupBy("token").agg(F.sum("slice_docs").alias("doc_freq"))
     scored = (
@@ -326,11 +326,8 @@ def l5b_training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: BM25 query terms (all present in the synthetic corpus vocabulary)
-#: and the standard Okapi parameters.
+#: BM25 query terms (all present in the synthetic corpus vocabulary).
 _BM25_TERMS = ("spark", "join", "window")
-_BM25_K1 = 1.2
-_BM25_B = 0.75
 
 
 def bm25_scored_sql() -> str:
@@ -345,12 +342,13 @@ def bm25_scored_sql() -> str:
         f"SUM(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END) AS df_{t}" for t in _BM25_TERMS
     )
     score_terms = " + ".join(
-        f"""CAST(ROUND(
+        dec_sql(
+            f"""ROUND(
             LN((n_docs - df_{t} + 0.5) / (df_{t} + 0.5) + 1.0)
             * (CAST(tf_{t} AS DOUBLE) * 2.2
                / (CAST(tf_{t} AS DOUBLE)
-                  + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))), 6)
-          AS {DEC})"""
+                  + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))), 6)"""
+        )
         for t in _BM25_TERMS
     )
     return f"""
@@ -368,7 +366,7 @@ g AS (
 )
 SELECT doc_id, dl,
        {", ".join(f"tf_{t}" for t in _BM25_TERMS)},
-       CAST({score_terms} AS DOUBLE) AS score
+       {dbl_sql(score_terms)} AS score
 FROM base CROSS JOIN g
 WHERE {" + ".join(f"tf_{t}" for t in _BM25_TERMS)} > 0
 """
@@ -753,7 +751,7 @@ def _nll(p: Column) -> Column:
 
 def _nll_sql(p: str) -> str:
     """DuckDB twin of :func:`_nll`."""
-    return f"CAST(ROUND(-LN({p}), 8) AS {DEC}) AS nll"
+    return f"{dec_sql(f'ROUND(-LN({p}), 8)')} AS nll"
 
 
 def _perplexity(
@@ -1930,9 +1928,9 @@ def l4m3_bpe_merge_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
     split(sym) three times), and 8 un-truncated rounds push the
     logical plan past Spark's 2 GiB plan-string cap (measured, not
     theoretical) — so the vocab relation and each round's 1-row
-    argmax are localCheckpoint()ed: lineage truncates at every round
-    boundary, the exact bounded-state-per-step shape a production
-    iterative trainer uses. Determinism end to end: integer counts,
+    argmax are cut (one operators/graph.py ``fixpoint`` round each):
+    lineage truncates at every round boundary, the exact
+    bounded-state-per-step shape a production iterative trainer uses. Determinism end to end: integer counts,
     binary string ordering, no floats anywhere."""
     merges, _ = _l4m3_train(spark, sf_dir)
     out = merges[0]
@@ -1959,17 +1957,15 @@ def _l4m3_train(
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    cur = wc.select(
-        "word", "cnt", bpe_symbolize("word").alias("sym")
-    ).localCheckpoint()
     merges = []
-    for k in range(1, _L4M3_MERGES + 1):
+
+    def merge_round(cur: DataFrame) -> DataFrame:
         pc = (
             cur.select("cnt", F.explode(word_ngrams("split(sym, ' ')", 2)).alias("pair"))
             .groupBy("pair")
             .agg(F.sum("cnt").cast("bigint").alias("pair_count"))
         )
-        best = (
+        best = cut(
             pc.orderBy(F.col("pair_count").desc(), F.col("pair"))
             .limit(1)
             .select(
@@ -1977,11 +1973,10 @@ def _l4m3_train(
                 F.regexp_replace("pair", " ", "").alias("merged"),
                 "pair_count",
             )
-            .localCheckpoint()
         )
         merges.append(
             best.select(
-                F.lit(k).cast("bigint").alias("merge_ord"),
+                F.lit(len(merges) + 1).cast("bigint").alias("merge_ord"),
                 "pair",
                 "merged",
                 "pair_count",
@@ -1989,15 +1984,14 @@ def _l4m3_train(
         )
         a = F.element_at(F.split(F.col("pair"), " "), 1)
         b = F.element_at(F.split(F.col("pair"), " "), 2)
-        cur = (
-            cur.crossJoin(F.broadcast(best.select("pair")))
-            .select(
-                "word",
-                "cnt",
-                bpe_apply_merge(F.col("sym"), a, b).alias("sym"),
-            )
-            .localCheckpoint()
+        return cur.crossJoin(F.broadcast(best.select("pair"))).select(
+            "word",
+            "cnt",
+            bpe_apply_merge(F.col("sym"), a, b).alias("sym"),
         )
+
+    cur = cut(wc.select("word", "cnt", bpe_symbolize("word").alias("sym")))
+    cur, _ = fixpoint(cur, merge_round, _L4M3_MERGES)
     return merges, cur
 
 
@@ -2200,7 +2194,7 @@ def l4m4_learned_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged).
 
     Plan shape: the training loop's FINAL vocabulary (word, cnt, sym)
-    — vocabulary-sized, localCheckpoint-bounded — maps each word to
+    — vocabulary-sized, cut-bounded — maps each word to
     its symbol count; the corpus explodes once and joins that
     broadcast-tiny relation (the l4q encode topology: vocab broadcast,
     corpus side one map pass + one per-doc aggregate). At 100 TB the

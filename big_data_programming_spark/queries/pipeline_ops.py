@@ -433,14 +433,6 @@ def cm_col(key: Column, depth: int, width: int) -> Column:
     return (h.cast("long") % width).alias("col")
 
 
-def cm_oracle_col(key_sql: str, width: int) -> str:
-    """DuckDB twin of cm_col with the depth column named ``d``."""
-    return (
-        f"CAST(CONCAT('0x', SUBSTRING(md5({key_sql}), 1 + 8 * depths.d, 8))"
-        f" AS BIGINT) % {width}"
-    )
-
-
 @register(
     "po6_countmin_heavy_hitters",
     oracle=f"""

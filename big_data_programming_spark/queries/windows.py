@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_programming_spark.functions.canonical import DEC, dbl_sql, dsum, dsum_sql
+from big_data_programming_spark.functions.canonical import DEC, dbl_sql, dec_sql, dsum, dsum_sql
 from big_data_programming_spark.operators.sessions import session_ids, session_ids_sql
 from big_data_programming_spark.registry import register
 from big_data_programming_spark.sources.loaders import load
@@ -151,7 +151,7 @@ def w4_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH daily AS (
   SELECT CAST(DATE_TRUNC('day', o_orderdate) AS TIMESTAMP) AS day,
-         SUM(CAST(o_totalprice AS {DEC})) AS day_sales
+         SUM({dec_sql('o_totalprice')}) AS day_sales
   FROM orders GROUP BY 1
 )
 SELECT day,

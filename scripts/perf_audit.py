@@ -6,24 +6,82 @@ protocol; this sweep exists to catch a *regression or pathological
 plan anywhere in the catalog* before a round closes.
 
 Usage:
-    python scripts/perf_audit.py [sf_dir] [out.json]
+    python scripts/perf_audit.py [--scans | --build] [--only a,b] [sf_dir] [out.json]
 
 Defaults: /root/testdata/sf0.01, stdout summary only. Caches are
 cleared between queries (session.release_caches) so materialize=True
 operators are measured cold and cannot pin memory across the sweep.
+
+``--build`` splits each query into its build (``q.fn(spark, sf_dir)``)
+and its drain (the noop sink) and records, per query, build seconds,
+drain seconds, the Spark jobs started while building (newest-job
+watermark in the status store, as
+tests/test_plans.py::test_dedup_pair_queries_build_without_jobs reads
+it), the jobs the drain starts, and the driver's non-``m`` py4j
+commands while building (``m`` commands are memory releases whose
+timing follows the collector).
+``--only`` restricts any mode to the named queries.
 """
 
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 import big_data_programming_spark.session as S  # noqa: E402
 from big_data_programming_spark.registry import catalog  # noqa: E402
 from big_data_programming_spark.session import release_caches  # noqa: E402
+
+
+def _flag(name: str) -> bool:
+    if name in sys.argv:
+        sys.argv.remove(name)
+        return True
+    return False
+
+
+def _job_probe(spark):
+    """Return ``measure(fn)`` → (result, seconds, jobs, commands) for
+    one call of ``fn``."""
+    import py4j.clientserver as cs
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from big_data_programming_spark.plans.explain import _drain_listener_bus
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+    sent = [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent[0] += 1
+        return send(self, command)
+
+    def last_job_id() -> int:
+        # newest job id, not jobsList().size(): the store prunes
+        # retained jobs once a long session passes its cap
+        _drain_listener_bus(spark)
+        jobs = store.jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    def measure(fn):
+        before = last_job_id()
+        cs.ClientServerConnection.send_command = counting
+        sent[0] = 0
+        t0 = time.time()
+        try:
+            out = fn()
+        finally:
+            secs = time.time() - t0
+            cs.ClientServerConnection.send_command = send
+        commands = sent[0]
+        return out, secs, last_job_id() - before, commands
+
+    return measure
 
 
 def main() -> int:
@@ -34,25 +92,45 @@ def main() -> int:
     # of *executed* scans per query IS the dominant cost term, and the
     # plan string overcounts it (round-9 finding: l5k prints 12 scan
     # nodes, executes 2).
-    scans_mode = "--scans" in sys.argv
-    if scans_mode:
-        sys.argv.remove("--scans")
+    scans_mode = _flag("--scans")
+    build_mode = _flag("--build")
+    only = None
+    if "--only" in sys.argv:
+        i = sys.argv.index("--only")
+        only = set(sys.argv[i + 1].split(","))
+        del sys.argv[i:i + 2]
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    spark = S.get_spark("perf-audit", cpus=16)
+    spark = S.get_spark("perf-audit", cpus=S.DEFAULT_CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
     # JVM/scan warm-up so the first measured query isn't charged for it
     cat = catalog()
     next(iter(cat.values())).fn(spark, sf_dir).count()
+    if only is not None:
+        cat = {name: q for name, q in cat.items() if name in only}
+    measure = _job_probe(spark) if build_mode else None
 
     times: dict[str, float] = {}
     scans: dict[str, int] = {}
+    builds: dict[str, dict[str, float]] = {}
     errs: dict[str, str] = {}
     for name, q in cat.items():
         t0 = time.time()
         try:
-            if scans_mode:
+            if build_mode:
+                from big_data_programming_spark.plans import evaluate_fully
+
+                df, build_s, jobs, commands = measure(lambda: q.fn(spark, sf_dir))
+                _, drain_s, drain_jobs, _ = measure(lambda: evaluate_fully(df))
+                builds[name] = {
+                    "build_s": round(build_s, 3),
+                    "drain_s": round(drain_s, 3),
+                    "build_jobs": jobs,
+                    "drain_jobs": drain_jobs,
+                    "build_commands": commands,
+                }
+            elif scans_mode:
                 from big_data_programming_spark.plans import (
                     evaluate_fully,
                     executed_parquet_scan_count_during,
@@ -91,12 +169,23 @@ def main() -> int:
         print("most scans:")
         for name, n in sorted(scans.items(), key=lambda kv: -kv[1])[:15]:
             print(f"  {n:3d} scans  {name}")
+    if build_mode:
+        print(f"build {sum(b['build_s'] for b in builds.values()):.1f}s, "
+              f"drain {sum(b['drain_s'] for b in builds.values()):.1f}s, "
+              f"{sum(b['build_jobs'] for b in builds.values())} build-time jobs")
+        print("most build-time jobs:")
+        for name, b in sorted(builds.items(), key=lambda kv: -kv[1]["build_jobs"])[:15]:
+            if b["build_jobs"]:
+                print(f"  {b['build_jobs']:4d}+{b['drain_jobs']:<3d} jobs  "
+                      f"{b['build_s']:7.3f}s build  {b['drain_s']:7.3f}s drain  "
+                      f"{b['build_commands']:6d} cmds  {name}")
     for name, e in errs.items():
         print(f"ERR {name}: {e}")
     if out_path:
         json.dump(
             {"sf_dir": sf_dir, "total_sec": round(total, 1), "times": times,
-             "errors": errs, **({"executed_scans": scans} if scans_mode else {})},
+             "errors": errs, **({"executed_scans": scans} if scans_mode else {}),
+             **({"builds": builds} if build_mode else {})},
             open(out_path, "w"), indent=1, sort_keys=True,
         )
         print(f"wrote {out_path}")

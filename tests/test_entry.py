@@ -59,7 +59,9 @@ def test_canon_spellings_stay_in_their_home_modules():
     width and DuckDB's VARCHAR-routed cast in functions/canonical.py,
     the window-start arithmetic and the final-watermark cutoff in
     operators/sessions.py. Scans the string literals of the package's
-    code (docstrings may name a canon), case-insensitively."""
+    code (docstrings may name a canon), case-insensitively. The lineage
+    cut is one call too: a ``.localCheckpoint(`` or ``.checkpoint(``
+    call anywhere but operators/graph.py (``cut``) fails."""
     import ast
     import pathlib
 
@@ -80,6 +82,13 @@ def test_canon_spellings_stay_in_their_home_modules():
             and isinstance(node.body[0], ast.Expr)
         }
         for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+                and rel != "operators/graph.py"
+            ):
+                found.append((rel, node.lineno, node.func.attr))
             if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
                 continue
             if id(node) in docstrings:

@@ -438,15 +438,27 @@ def test_observe_metrics_single_scan(spark):
     assert metrics["rows_pass"] == n_out
 
 
-def test_two_phase_cc_matches_label_propagation_on_chain(spark):
+def test_two_phase_cc_matches_label_propagation_on_chain(spark, monkeypatch):
     """Large-star/small-star must agree with label propagation on the
     adversarial case it exists for: a high-diameter chain (diameter 49
-    — propagation needs ~25 rounds, contraction O(log n)). Plus a few
-    disjoint blobs to check component separation."""
+    — propagation needs 49 changing rounds, contraction O(log n)). Plus
+    a few disjoint blobs to check component separation. Both stop one
+    round after the last change: 50 and 7 rounds, as when each loop
+    probed for changes with a separate count job."""
+    from big_data_programming_spark.operators import clustering
     from big_data_programming_spark.operators.clustering import (
         connected_components,
         connected_components_two_phase,
     )
+
+    fixpoint, rounds = clustering.fixpoint, []
+
+    def recording_fixpoint(*args, **kwargs):
+        state, n = fixpoint(*args, **kwargs)
+        rounds.append(n)
+        return state, n
+
+    monkeypatch.setattr(clustering, "fixpoint", recording_fixpoint)
 
     edges = [(i, i + 1) for i in range(49)]            # chain 0..49
     edges += [(100, 101), (101, 102), (100, 102)]       # triangle
@@ -461,6 +473,7 @@ def test_two_phase_cc_matches_label_propagation_on_chain(spark):
         for r in connected_components_two_phase(df).collect()
     }
     assert a == b
+    assert rounds == [50, 7], rounds
     comps = {}
     for node, comp in b:
         comps.setdefault(comp, set()).add(node)
@@ -1780,7 +1793,10 @@ def test_decimal_canon_twins_agree(spark):
     exactly. Group ``e`` needs each row's double->DECIMAL(38,10) step
     to round the shortest repr, as Spark's cast does (DuckDB's direct
     cast turns -1234567.89 into -1234567.8899999998); group ``f`` holds
-    a magnitude below 1e-11, which rounds to 0 on both engines."""
+    a magnitude below 1e-11, which rounds to 0 on both engines. The
+    per-row cast ``dec_sql`` alone equals Spark's ``CAST(v AS
+    DECIMAL(38,10))`` on every row, -1234567.89 and 289473120.03
+    included."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import duckdb
@@ -1789,6 +1805,7 @@ def test_decimal_canon_twins_agree(spark):
     from big_data_programming_spark.functions.canonical import (
         davg,
         davg_sql,
+        dec_sql,
         dsum,
         dsum_sql,
     )
@@ -1856,6 +1873,21 @@ def test_decimal_canon_twins_agree(spark):
         ).fetchall()
     }
     assert got_run_d == want_run, got_run_d
+
+    per_row = rows + [("g", 1, 289473120.03)]
+    spark_dec = {
+        (r["g"], r["i"]): r["d"]
+        for r in spark.createDataFrame(per_row, "g string, i int, v double")
+        .selectExpr("g", "i", "CAST(v AS DECIMAL(38,10)) AS d")
+        .collect()
+    }
+    con.execute("INSERT INTO t VALUES ('g', 1, 289473120.03::DOUBLE)")
+    duck_dec = {
+        (g, i): d
+        for g, i, d in con.execute(f"SELECT g, i, {dec_sql('v')} FROM t").fetchall()
+    }
+    assert duck_dec == spark_dec, duck_dec
+    assert spark_dec[("e", 2)] == Decimal("-1234567.89")
 
 
 def test_trained_gate_composes_train_and_apply(spark):

@@ -1089,17 +1089,12 @@ def test_grouped_map_boundaries_prune_columns():
     assert set(scan_read_columns(ud6)) == {"event_id", "user_id", "value", "props"}
 
 
-def test_dedup_pair_queries_build_without_jobs():
-    """Building the exact-pair and MinHash dedup queries runs no Spark
-    job: every action belongs to the caller. A partition-count probe
-    (``.rdd.getNumPartitions()``) on an already repartitioned frame
-    makes AQE materialize that shuffle while the query is still being
-    built, which is what l2i's second spread_fanout_input call did."""
-    import big_data_programming_spark.session as S
+def _build_jobs(spark, names) -> dict[str, int]:
+    """Spark jobs each named query starts while it is only being built
+    (``q.fn(spark, SF_DIR)``, no action)."""
     from big_data_programming_spark.plans.explain import _drain_listener_bus
     from big_data_programming_spark.registry import catalog
 
-    spark = S.get_spark("plan-tests", cpus=8)
     store = spark.sparkContext._jsc.sc().statusStore()
 
     def last_job_id() -> int:
@@ -1110,21 +1105,64 @@ def test_dedup_pair_queries_build_without_jobs():
         return jobs.apply(0).jobId() if jobs.size() else -1
 
     cat = catalog()
-    eager = {}
-    for name in (
-        "l2_jaccard_near_dup",
-        "l2c_minhash_lsh",
-        "l2g_ngram_jaccard",
-        "l2g2_ngram_jaccard_shard",
-        "l2h_ngram_containment",
-        "l2i_minhash_banded",
-        "l2n_banding_recall_audit",
-    ):
+    jobs = {}
+    for name in names:
         before = last_job_id()
         cat[name].fn(spark, SF_DIR)
-        if last_job_id() != before:
-            eager[name] = last_job_id() - before
+        jobs[name] = last_job_id() - before
+    return jobs
+
+
+def test_dedup_pair_queries_build_without_jobs():
+    """Building the exact-pair and MinHash dedup queries runs no Spark
+    job: every action belongs to the caller. A partition-count probe
+    (``.rdd.getNumPartitions()``) on an already repartitioned frame
+    makes AQE materialize that shuffle while the query is still being
+    built, which is what l2i's second spread_fanout_input call did."""
+    import big_data_programming_spark.session as S
+
+    spark = S.get_spark("plan-tests", cpus=8)
+    jobs = _build_jobs(
+        spark,
+        (
+            "l2_jaccard_near_dup",
+            "l2c_minhash_lsh",
+            "l2g_ngram_jaccard",
+            "l2g2_ngram_jaccard_shard",
+            "l2h_ngram_containment",
+            "l2i_minhash_banded",
+            "l2n_banding_recall_audit",
+        ),
+    )
+    eager = {name: n for name, n in jobs.items() if n}
     assert not eager, f"jobs started while building: {eager}"
+
+
+def test_iterative_queries_build_within_job_budget():
+    """The iterative graph and BPE queries build with few Spark jobs.
+    Each loop is an operators/graph.py ``fixpoint``: a round's lineage
+    cut is lazy unless it observes metrics, and convergence (CC, k-core)
+    is counted on the round's own cut job, not by a separate
+    ``count()`` probe; pagerank's node count and triangle_counts'
+    broadcast gate are observed on their cuts too. Hand-rolled, these
+    loops started 67 (l2d), 44 (l2d2), 15 (g1), 81 (g2), 36 (g4), 35
+    (g5) and 34 (l4m3, l4m4) jobs while building at sf0.01."""
+    import big_data_programming_spark.session as S
+
+    budget = {
+        "l2d_dedup_clusters": 41,
+        "l2d2_cc_two_phase": 37,
+        "g1_triangle_counts": 12,
+        "g2_pagerank": 37,
+        "g4_kcore": 18,
+        "g5_label_propagation": 26,
+        "l4m3_bpe_merge_learning": 17,
+        "l4m4_learned_bpe_encode": 17,
+    }
+    spark = S.get_spark("plan-tests", cpus=8)
+    jobs = _build_jobs(spark, budget)
+    over = {name: (n, budget[name]) for name, n in jobs.items() if n > budget[name]}
+    assert not over, f"build-time jobs over budget (jobs, budget): {over}; all: {jobs}"
 
 
 def test_query_builds_stay_within_py4j_budget(monkeypatch):
