@@ -39,7 +39,7 @@ def connected_components(
     Returns (node, component) where component = min node id reachable.
     Deterministic: min() is order-free.
     """
-    sym = cut(
+    sym, _ = cut(
         # every propagation round joins sym; without the cut each
         # round would re-execute the (expensive) upstream
         # pair-generation pipeline that produced the edges
@@ -180,7 +180,7 @@ def connected_components_two_phase(
         )
 
     e = _canon_edges(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    e = cut(e.withColumn("live", F.lit(1)))
+    e, _ = cut(e.withColumn("live", F.lit(1)))
     e, _ = fixpoint(e, contract, max_iterations, changed=F.col("seen") == 1)
     e = e.filter(F.col("live") == 1)
     # converged: e is a star forest (child, root). Roots label themselves.

@@ -22,6 +22,7 @@ at any partition count.
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -29,18 +30,18 @@ from pyspark.sql import functions as F
 from big_data_programming_spark.functions.canonical import dsum, dsum_sql
 
 
-def cut(df: DataFrame, **metrics: Column):
+def cut(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict[str, Any]]:
     """Cut ``df``'s lineage: later consumers (each round of a loop, each
     alias of a self-join) read its materialized rows instead of
-    re-executing or re-planning it.
+    re-executing or re-planning it. Returns ``(frame, values)``.
 
     A cut runs a job of its own only when it must. Without ``metrics``
-    it is lazy: adaptive execution runs the shuffle stages above the
-    cut while it is built, and the last stage runs in the first job
-    that reads it. With ``metrics`` (name → aggregate Column) it runs
-    at once and returns ``(frame, values)``: the aggregates ride that
-    job through a fresh unnamed :class:`Observation` (so two builds of
-    one query never share an observation key), read after it returns.
+    it is lazy and ``values`` is empty: adaptive execution runs the
+    shuffle stages above the cut while it is built, and the last stage
+    runs in the first job that reads it. With ``metrics`` (name →
+    aggregate Column) it runs at once: the aggregates ride that job
+    through a fresh unnamed :class:`Observation` (so two builds of one
+    query never share an observation key), read after it returns.
     Either way building a query that cuts executes part of it, so scan
     audits must wrap construction.
 
@@ -48,11 +49,11 @@ def cut(df: DataFrame, **metrics: Column):
     driver GC rather than ``catalog.clearCache`` and do not survive
     executor loss: at cluster scale this is the one call to turn into a
     reliable ``checkpoint``."""
-    obs = Observation() if metrics else None
     if metrics:
+        obs = Observation()
         df = df.observe(obs, *(c.alias(k) for k, c in metrics.items()))
     out = df.localCheckpoint(eager=bool(metrics))
-    return (out, obs.get) if metrics else out
+    return out, obs.get if metrics else {}
 
 
 def fixpoint(
@@ -66,15 +67,13 @@ def fixpoint(
     (a boolean Column over the step's output) its true-count rides
     each round's cut job, and the loop stops after the first round in
     which it is 0, or after ``max_rounds``."""
+    metrics = {} if changed is None else {"changed": F.count_if(changed)}
     rounds = 0
     while rounds < max_rounds:
         rounds += 1
-        if changed is None:
-            state = cut(step(state))
-        else:
-            state, seen = cut(step(state), changed=F.count_if(changed))
-            if seen["changed"] == 0:
-                break
+        state, seen = cut(step(state), **metrics)
+        if seen.get("changed") == 0:
+            break
     return state, rounds
 
 
@@ -168,7 +167,7 @@ def triangle_counts(
     # the disk with shuffle spill before ENOSPC). The second cut
     # materializes the small oriented relation once for the three
     # self-join aliases, and counts it for the broadcast gate below.
-    e0 = cut(canonical_undirected(edges, src, dst))
+    e0, _ = cut(canonical_undirected(edges, src, dst))
     e, seen = cut(degree_oriented(e0), n_edges=F.count(F.lit(1)))
     ab, ac = e.alias("ab"), e.alias("ac")
     bc = e.select(F.col("u").alias("_bu"), F.col("v").alias("_bv"))
@@ -276,7 +275,8 @@ def pagerank(
     # Cut the static relations once, or each round would re-run the
     # upstream pipeline that produced the edge list.
     dedges = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    wedges = cut(dedges.withColumn("outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))))
+    outdeg = F.count(F.lit(1)).over(Window.partitionBy("src"))
+    wedges, _ = cut(dedges.withColumn("outdeg", outdeg))
     nodes, seen = cut(
         wedges.select(F.col("src").alias("node"))
         .unionAll(wedges.select(F.col("dst").alias("node")))
@@ -349,10 +349,11 @@ def kcore_peel(edges: DataFrame, k: int) -> tuple[DataFrame, int]:
     surviving (node, degree) frame and the number of peel rounds
     executed — the round count is what tests pin against the oracle's
     fixed unroll depth (g4's docstring contract). Each round is one
-    degree aggregate over two semi-joins of the edge list against
-    survivors; the count of nodes still below ``k`` rides its cut job.
-    Rounds are bounded by peeling depth (max degree), not diameter."""
-    edges = cut(edges)
+    degree aggregate over two semi-joins of the whole edge list (cut
+    once) against the survivors; the count of nodes still below ``k``
+    rides its cut job. Rounds are bounded by peeling depth (max
+    degree), not diameter."""
+    edges, _ = cut(edges)
 
     def degrees(e: DataFrame) -> DataFrame:
         return (
@@ -371,7 +372,8 @@ def kcore_peel(edges: DataFrame, k: int) -> tuple[DataFrame, int]:
 
     low = F.col("degree") < k
     deg, seen = cut(degrees(edges), low=F.count_if(low), n=F.count(F.lit(1)))
-    # each productive peel drops a node, so n rounds always reach the fixpoint
+    # each round but the last peels a node, so n rounds reach the fixpoint;
+    # fixpoint runs at least one round, and a graph that is its own k-core needs none
     deg, rounds = fixpoint(deg, peel, seen["n"], changed=low) if seen["low"] else (deg, 0)
     return (
         deg.filter(F.col("degree") >= k).select(
@@ -406,7 +408,7 @@ def label_propagation(
     scans). Returns (node, label)."""
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    und = cut(und.filter(F.col("a") != F.col("b")).distinct())
+    und, _ = cut(und.filter(F.col("a") != F.col("b")).distinct())
 
     def vote(labels: DataFrame) -> DataFrame:
         nl = und.join(

@@ -81,6 +81,14 @@ def _drain_listener_bus(spark) -> None:
         bus.waitUntilEmpty()
 
 
+def newest_job_id(spark) -> int:
+    """Newest job id in the status store, -1 if none: the "jobs started
+    since" watermark (the store prunes old jobs; its size is not one)."""
+    _drain_listener_bus(spark)
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
 def executed_parquet_scan_count(df: DataFrame) -> int:
     """How many parquet scans a query EXECUTES, post runtime reuse —
     fully evaluates ``df`` (noop sink, see :func:`evaluate_fully`) and

@@ -112,7 +112,7 @@ def g3_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard inverted-index pipeline 5+ times — the exact mistake g1's
     r10 rewrite fixed one file over (operators/graph.py e0 cut), and
     the dominant share of g3's 545 s r10 sf0.1 spot-run."""
-    pairs = cut(
+    pairs, _ = cut(
         jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.8).select("doc_a", "doc_b")
     )
     return spark.sql(_BFS_SQL.format(edges="{edges}"), edges=pairs)

@@ -309,7 +309,7 @@ def lm5_incremental_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     # (doc_id, sig) table of 16 bytes/row; every downstream join reads
     # the materialized rows. Per-call, inside the timed region — not
     # cross-run caching.
-    sigs = cut(_simhash_int(docs))
+    sigs, _ = cut(_simhash_int(docs))
     banded = sigs.select(
         "doc_id",
         "sig",

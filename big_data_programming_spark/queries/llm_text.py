@@ -171,7 +171,7 @@ def l4c_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut is built, so both consumers read that one corpus pass.
     # Accepted cost (r11 advisor): plan-only consumers (explain,
     # profilers) pay the corpus pass at construction.
-    lang_token = cut(
+    lang_token, _ = cut(
         per_doc.groupBy("lang", "token").agg(
             F.sum("cnt").alias("term_freq"),
             F.count(F.lit(1)).alias("slice_docs"),
@@ -1930,8 +1930,9 @@ def l4m3_bpe_merge_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
     theoretical) — so the vocab relation and each round's 1-row
     argmax are cut (one operators/graph.py ``fixpoint`` round each):
     lineage truncates at every round boundary, the exact
-    bounded-state-per-step shape a production iterative trainer uses. Determinism end to end: integer counts,
-    binary string ordering, no floats anywhere."""
+    bounded-state-per-step shape a production iterative trainer uses.
+    Determinism end to end: integer counts, binary string ordering, no
+    floats anywhere."""
     merges, _ = _l4m3_train(spark, sf_dir)
     out = merges[0]
     for m in merges[1:]:
@@ -1965,7 +1966,7 @@ def _l4m3_train(
             .groupBy("pair")
             .agg(F.sum("cnt").cast("bigint").alias("pair_count"))
         )
-        best = cut(
+        best, _ = cut(
             pc.orderBy(F.col("pair_count").desc(), F.col("pair"))
             .limit(1)
             .select(
@@ -1990,7 +1991,7 @@ def _l4m3_train(
             bpe_apply_merge(F.col("sym"), a, b).alias("sym"),
         )
 
-    cur = cut(wc.select("word", "cnt", bpe_symbolize("word").alias("sym")))
+    cur, _ = cut(wc.select("word", "cnt", bpe_symbolize("word").alias("sym")))
     cur, _ = fixpoint(cur, merge_round, _L4M3_MERGES)
     return merges, cur
 

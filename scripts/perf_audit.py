@@ -6,7 +6,7 @@ protocol; this sweep exists to catch a *regression or pathological
 plan anywhere in the catalog* before a round closes.
 
 Usage:
-    python scripts/perf_audit.py [--scans | --build] [--only a,b] [sf_dir] [out.json]
+    python scripts/perf_audit.py [--scans | --build] [sf_dir] [out.json]
 
 Defaults: /root/testdata/sf0.01, stdout summary only. Caches are
 cleared between queries (session.release_caches) so materialize=True
@@ -15,12 +15,10 @@ operators are measured cold and cannot pin memory across the sweep.
 ``--build`` splits each query into its build (``q.fn(spark, sf_dir)``)
 and its drain (the noop sink) and records, per query, build seconds,
 drain seconds, the Spark jobs started while building (newest-job
-watermark in the status store, as
-tests/test_plans.py::test_dedup_pair_queries_build_without_jobs reads
-it), the jobs the drain starts, and the driver's non-``m`` py4j
+watermark, ``plans.explain.newest_job_id``, as tests/test_plans.py
+reads it), the jobs the drain starts, and the driver's non-``m`` py4j
 commands while building (``m`` commands are memory releases whose
 timing follows the collector).
-``--only`` restricts any mode to the named queries.
 """
 
 from __future__ import annotations
@@ -50,9 +48,8 @@ def _job_probe(spark):
     import py4j.clientserver as cs
     from py4j.protocol import MEMORY_COMMAND_NAME
 
-    from big_data_programming_spark.plans.explain import _drain_listener_bus
+    from big_data_programming_spark.plans.explain import newest_job_id
 
-    store = spark.sparkContext._jsc.sc().statusStore()
     sent = [0]
     send = cs.ClientServerConnection.send_command
 
@@ -61,15 +58,8 @@ def _job_probe(spark):
             sent[0] += 1
         return send(self, command)
 
-    def last_job_id() -> int:
-        # newest job id, not jobsList().size(): the store prunes
-        # retained jobs once a long session passes its cap
-        _drain_listener_bus(spark)
-        jobs = store.jobsList(None)  # newest first
-        return jobs.apply(0).jobId() if jobs.size() else -1
-
     def measure(fn):
-        before = last_job_id()
+        before = newest_job_id(spark)
         cs.ClientServerConnection.send_command = counting
         sent[0] = 0
         t0 = time.time()
@@ -79,7 +69,7 @@ def _job_probe(spark):
             secs = time.time() - t0
             cs.ClientServerConnection.send_command = send
         commands = sent[0]
-        return out, secs, last_job_id() - before, commands
+        return out, secs, newest_job_id(spark) - before, commands
 
     return measure
 
@@ -94,11 +84,6 @@ def main() -> int:
     # nodes, executes 2).
     scans_mode = _flag("--scans")
     build_mode = _flag("--build")
-    only = None
-    if "--only" in sys.argv:
-        i = sys.argv.index("--only")
-        only = set(sys.argv[i + 1].split(","))
-        del sys.argv[i:i + 2]
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
     spark = S.get_spark("perf-audit", cpus=S.DEFAULT_CPUS)
@@ -107,8 +92,6 @@ def main() -> int:
     # JVM/scan warm-up so the first measured query isn't charged for it
     cat = catalog()
     next(iter(cat.values())).fn(spark, sf_dir).count()
-    if only is not None:
-        cat = {name: q for name, q in cat.items() if name in only}
     measure = _job_probe(spark) if build_mode else None
 
     times: dict[str, float] = {}

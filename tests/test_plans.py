@@ -1092,24 +1092,15 @@ def test_grouped_map_boundaries_prune_columns():
 def _build_jobs(spark, names) -> dict[str, int]:
     """Spark jobs each named query starts while it is only being built
     (``q.fn(spark, SF_DIR)``, no action)."""
-    from big_data_programming_spark.plans.explain import _drain_listener_bus
+    from big_data_programming_spark.plans.explain import newest_job_id
     from big_data_programming_spark.registry import catalog
-
-    store = spark.sparkContext._jsc.sc().statusStore()
-
-    def last_job_id() -> int:
-        # watermark on the newest job id, not jobsList().size(): the
-        # store prunes retained jobs once a long session passes the cap
-        _drain_listener_bus(spark)
-        jobs = store.jobsList(None)  # newest first
-        return jobs.apply(0).jobId() if jobs.size() else -1
 
     cat = catalog()
     jobs = {}
     for name in names:
-        before = last_job_id()
+        before = newest_job_id(spark)
         cat[name].fn(spark, SF_DIR)
-        jobs[name] = last_job_id() - before
+        jobs[name] = newest_job_id(spark) - before
     return jobs
 
 
